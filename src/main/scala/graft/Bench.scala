@@ -100,26 +100,6 @@ object Bench {
 
     // SPARK_GRAFT_ONLY=q01,q03 limits the run (profiling); default = all.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // Mixed-mode misread guard (round-15, ADVICE): naming a BUILD entry
-    // and a query together warms the shared chain before the query runs,
-    // so the query's reps are warm-chain numbers while still looking like
-    // an isolated cold profile. Legal (the scaled rehearsals do it on
-    // purpose) — but say so, so a profile reader can't misfile the number.
-    val buildNames = Set("cache_build", "fit_build", "model_load", "dedup_build",
-      "daily_rebuild", "daily_build_fix", "daily_build_bal")
-    only.foreach { names =>
-      val builds = names.intersect(buildNames)
-      val qs = names.filter(SparkEntry.queries.contains)
-      if (builds.nonEmpty && qs.nonEmpty)
-        System.err.println(s"[bench] WARNING: SPARK_GRAFT_ONLY mixes build " +
-          s"entries (${builds.toSeq.sorted.mkString(",")}) with queries " +
-          s"(${qs.toSeq.sorted.mkString(",")}): the builds warm shared state " +
-          "first, so the query numbers are WARM-chain, not isolated-cold.")
-    }
-    // deterministic name order: numbers are comparable across runs (Map
-    // hash order made warm-cache attribution depend on the run)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     // Round-14: the three build entries were the bench's last SINGLE-RUN
     // numbers — a driver-sweep swing (round 13: dedup_build 0.95 → 15.5 s)
     // could not be separated from host contention. Each now carries
@@ -127,108 +107,92 @@ object Bench {
     // COLD build (the entry's meaning, comparable across rounds); reps 2+
     // release the entry's own cached state and rebuild it, leaving the
     // warm state in place for the query entries that follow.
-    // Warm entries are skipped in ONLY mode (so a single-query profile
-    // includes its own chain build) UNLESS explicitly named — the
-    // scaled-SF rehearsals need daily_rebuild et al. without the sweep.
-    def warmOn(n: String): Boolean = only.forall(_.contains(n))
-    val warm =
-      (if (only.isEmpty)
-        Seq(
-          "cache_build" -> timedColdReps("cache_build")(
-            materialize(operators.CciPipeline.strategyAgg(spark, sfDir))) {
-            operators.CciPipeline.dropChainCaches(spark, sfDir)
-            materialize(operators.CciPipeline.strategyAgg(spark, sfDir))
-          },
-          // model fits (ALS / KMeans / LBFGS) land here, not in ml01–ml04:
-          // a testdata regen invalidates the model workspace and would
-          // otherwise move ~25 s of refit into whichever ml query runs
-          // first (the round-7 ml04 anomaly).
-          // MEASUREMENT FIX (round-17, VERDICT r16 "what's wrong" #1):
-          // rep 1 used to be warmFit — a LOAD when a prior run on the
-          // same host left /tmp/graft_models warm, a full refit on a
-          // fresh host, so the entry measured /tmp state, not code
-          // (round 15: 1.93 s load; round 16: 23.93 s fits, charged as a
-          // 12× "regression"). Every rep now clears this corpus's model
-          // workspace and re-pays the four real fits (rebuildFit), so
-          // the number is the same work on every host every round. The
-          // load path the old rep-1 sometimes measured is its own
-          // `model_load` entry below (additive).
-          "fit_build" -> timedMin("fit_build")(
-            ml.Features.rebuildFit(spark, sfDir)),
-          // serve startup: drop in-memory memos, reload the persisted
-          // models through MLlib's readers (the fit_build reps above
-          // leave the workspace warm — deterministic setup)
-          "model_load" -> timedMin("model_load") {
-            ml.Features.clearMemos()
-            ml.Features.warmFit(spark, sfDir)
-          },
-          // the dedup block's shared doc-shingle cache, warmed as its own
-          // entry for the same reason (the round-9 d02↔d07 swap)
-          "dedup_build" -> timedColdReps("dedup_build")(
-            materialize(graft.dedup.Dedup.sharedShingles(spark, sfDir))) {
-            graft.dedup.Dedup.sharedShingles(spark, sfDir).unpersist(true)
-            materialize(graft.dedup.Dedup.sharedShingles(spark, sfDir))
-          },
-          // the composed daily product's two orchestrated week runs
-          // (fixed-slice and balance-fed sizing), shared by the r32/r34/
-          // r36 gates — warmed here so the bootstrap + day-loop
-          // orchestration cost is its own entry instead of landing on
-          // whichever daily gate happens to run first. SPLIT entries
-          // (round-12): the combined daily_build was 41% of the headline
-          // and single-run — a swing could not be localized to a mode.
-          // The memoized builds still run once each (a 2nd call returns
-          // the memo), but daily_rebuild re-runs the fresh-workspace
-          // fixed-mode orchestration under the min-of-N protocol, so the
-          // orchestration cost that actually swung is now adjudicable.
-          "daily_build_fix" -> timedColdReps("daily_build_fix")(
-            Daily.sharedDailyRun(spark, sfDir, balanceFed = false): Unit)(
-            Daily.rebuildDailyRun(spark, sfDir, balanceFed = false)),
-          "daily_build_bal" -> timedColdReps("daily_build_bal")(
-            Daily.sharedDailyRun(spark, sfDir, balanceFed = true): Unit)(
-            Daily.rebuildDailyRun(spark, sfDir, balanceFed = true)),
-          "daily_rebuild" -> timedMin("daily_rebuild")(
-            Daily.rebuildDailyRun(spark, sfDir)))
-      else Seq.empty) ++
-        (if (only.isEmpty) Seq.empty
-         else Seq(
-           // ADVICE round-14: keep the DEFAULT-mode order (builds first,
-           // daily_rebuild last) — the rebuild reads the CCI chain, so
-           // running it before cache_build pre-warmed the chain and
-           // cache_build's rep-1 stopped being the cross-round cold build
-           ("cache_build", () => timedColdReps("cache_build")(
-             materialize(operators.CciPipeline.strategyAgg(spark, sfDir))) {
-             operators.CciPipeline.dropChainCaches(spark, sfDir)
-             materialize(operators.CciPipeline.strategyAgg(spark, sfDir))
-           }),
-           ("fit_build", () => timedMin("fit_build")(
-             ml.Features.rebuildFit(spark, sfDir))),
-           ("model_load", () => {
-             // ensure the workspace exists (untimed) — in ONLY mode
-             // fit_build may not have run first
-             ml.Features.warmFit(spark, sfDir)
-             timedMin("model_load") {
-               ml.Features.clearMemos()
-               ml.Features.warmFit(spark, sfDir)
-             }
-           }),
-           ("dedup_build", () => timedColdReps("dedup_build")(
-             materialize(graft.dedup.Dedup.sharedShingles(spark, sfDir))) {
-             graft.dedup.Dedup.sharedShingles(spark, sfDir).unpersist(true)
-             materialize(graft.dedup.Dedup.sharedShingles(spark, sfDir))
-           }),
-           // the two orchestrated build modes, reachable in ONLY mode
-           // (round-17, VERDICT r16 task 1: the contested daily_build_fix
-           // needed an isolatable same-host pair) — cold rep 1 + fresh-
-           // workspace rebuild reps, exactly as in the default sweep
-           ("daily_build_fix", () => timedColdReps("daily_build_fix")(
-             Daily.sharedDailyRun(spark, sfDir, balanceFed = false): Unit)(
-             Daily.rebuildDailyRun(spark, sfDir, balanceFed = false))),
-           ("daily_build_bal", () => timedColdReps("daily_build_bal")(
-             Daily.sharedDailyRun(spark, sfDir, balanceFed = true): Unit)(
-             Daily.rebuildDailyRun(spark, sfDir, balanceFed = true))),
-           ("daily_rebuild", () => timedMin("daily_rebuild")(
-             Daily.rebuildDailyRun(spark, sfDir)))).collect {
-           case (n, f) if warmOn(n) => n -> f() })
+    // One ordered table serves both modes: the sweep runs every entry;
+    // ONLY mode runs the named ones (so a single-query profile includes
+    // its own chain build) — the scaled-SF rehearsals need daily_rebuild
+    // et al. without the sweep. Order matters (ADVICE round-14): builds
+    // first, daily_rebuild last — the rebuild reads the CCI chain, so
+    // running it before cache_build pre-warms the chain and cache_build's
+    // rep 1 stops being the cross-round cold build.
+    val builds: Seq[(String, () => Double)] = Seq(
+      "cache_build" -> (() => timedColdReps("cache_build")(
+        materialize(operators.CciPipeline.strategyAgg(spark, sfDir))) {
+        operators.CciPipeline.dropChainCaches(spark, sfDir)
+        materialize(operators.CciPipeline.strategyAgg(spark, sfDir))
+      }),
+      // model fits (ALS / KMeans / LBFGS) land here, not in ml01–ml04:
+      // a testdata regen invalidates the model workspace and would
+      // otherwise move ~25 s of refit into whichever ml query runs
+      // first (the round-7 ml04 anomaly).
+      // MEASUREMENT FIX (round-17, VERDICT r16 "what's wrong" #1):
+      // rep 1 used to be warmFit — a LOAD when a prior run on the
+      // same host left /tmp/graft_models warm, a full refit on a
+      // fresh host, so the entry measured /tmp state, not code
+      // (round 15: 1.93 s load; round 16: 23.93 s fits, charged as a
+      // 12× "regression"). Every rep now clears this corpus's model
+      // workspace and re-pays the four real fits (rebuildFit), so
+      // the number is the same work on every host every round. The
+      // load path the old rep-1 sometimes measured is its own
+      // `model_load` entry below (additive).
+      "fit_build" -> (() => timedMin("fit_build")(
+        ml.Features.rebuildFit(spark, sfDir))),
+      // serve startup: drop in-memory memos, reload the persisted
+      // models through MLlib's readers. The untimed warmFit first makes
+      // sure the workspace exists — in ONLY mode fit_build may not have
+      // run first.
+      "model_load" -> { () =>
+        ml.Features.warmFit(spark, sfDir)
+        timedMin("model_load") {
+          ml.Features.clearMemos()
+          ml.Features.warmFit(spark, sfDir)
+        }
+      },
+      // the dedup block's shared doc-shingle cache, warmed as its own
+      // entry for the same reason (the round-9 d02↔d07 swap)
+      "dedup_build" -> (() => timedColdReps("dedup_build")(
+        materialize(graft.dedup.Dedup.sharedShingles(spark, sfDir))) {
+        graft.dedup.Dedup.sharedShingles(spark, sfDir).unpersist(true)
+        materialize(graft.dedup.Dedup.sharedShingles(spark, sfDir))
+      }),
+      // the composed daily product's two orchestrated week runs
+      // (fixed-slice and balance-fed sizing), shared by the r32/r34/
+      // r36 gates — warmed here so the bootstrap + day-loop
+      // orchestration cost is its own entry instead of landing on
+      // whichever daily gate happens to run first. SPLIT entries
+      // (round-12): the combined daily_build was 41% of the headline
+      // and single-run — a swing could not be localized to a mode.
+      // The memoized builds still run once each (a 2nd call returns
+      // the memo), but daily_rebuild re-runs the fresh-workspace
+      // fixed-mode orchestration under the min-of-N protocol, so the
+      // orchestration cost that actually swung is now adjudicable.
+      "daily_build_fix" -> (() => timedColdReps("daily_build_fix")(
+        Daily.sharedDailyRun(spark, sfDir, balanceFed = false): Unit)(
+        Daily.rebuildDailyRun(spark, sfDir, balanceFed = false))),
+      "daily_build_bal" -> (() => timedColdReps("daily_build_bal")(
+        Daily.sharedDailyRun(spark, sfDir, balanceFed = true): Unit)(
+        Daily.rebuildDailyRun(spark, sfDir, balanceFed = true))),
+      "daily_rebuild" -> (() => timedMin("daily_rebuild")(
+        Daily.rebuildDailyRun(spark, sfDir))))
+    // Mixed-mode misread guard (round-15, ADVICE): naming a BUILD entry
+    // and a query together warms the shared chain before the query runs,
+    // so the query's reps are warm-chain numbers while still looking like
+    // an isolated cold profile. Legal (the scaled rehearsals do it on
+    // purpose) — but say so, so a profile reader can't misfile the number.
+    only.foreach { names =>
+      val named = names.intersect(builds.map(_._1).toSet)
+      val qs = names.filter(SparkEntry.queries.contains)
+      if (named.nonEmpty && qs.nonEmpty)
+        System.err.println(s"[bench] WARNING: SPARK_GRAFT_ONLY mixes build " +
+          s"entries (${named.toSeq.sorted.mkString(",")}) with queries " +
+          s"(${qs.toSeq.sorted.mkString(",")}): the builds warm shared state " +
+          "first, so the query numbers are WARM-chain, not isolated-cold.")
+    }
+    // deterministic name order: numbers are comparable across runs (Map
+    // hash order made warm-cache attribution depend on the run)
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val warm = builds.collect {
+      case (n, f) if only.forall(_.contains(n)) => n -> f() }
     val queryResults = selected.map { case (name, fn) =>
       name -> timedMin(name)(materialize(fn(spark, sfDir)))
     }

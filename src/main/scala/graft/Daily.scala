@@ -636,8 +636,8 @@ object Daily {
     *   - `spark.graft.daily.adaptive` = auto (default) | true | false —
     *     auto disables AQE for a day whose latest committed STATE
     *     partition (the loop's dimension-scale anchor; the delta is the
-    *     same order) is under `spark.graft.daily.adaptiveOffBytes`
-    *     (default 256 MB); true/false force.
+    *     same order) is under [[DayScaleBytes]] (256 MB); true/false
+    *     force.
     * Bootstrap always keeps the session's AQE — it is the one
     * corpus-scale pass in the loop. Threshold sizing: SURVEY §5
     * "Sizing a real deployment".
@@ -647,24 +647,21 @@ object Daily {
     * static shuffle partitioning (32 at bench geometry) on every
     * dimension-scale exchange — ~32 near-empty reduce tasks per job and
     * up to 32 tiny files per day-partition write, which the next day's
-    * read-back then pays again. The SAME plan-stat signal now also sizes
-    * the static partitioning: a day whose state anchor is under the
-    * threshold runs its tail at `spark.graft.daily.smallDayPartitions`
-    * (default 4; 0 = leave the session value). Above the threshold the
-    * session partitioning stands, so a 100-TB day's delta keeps full
-    * parallelism — the knob is gated on measured size, not on the local
-    * core count. Measured (sf0.1, local[32], ONLY-mode daily_rebuild
-    * min-of-N): fresh-workspace re-orchestration 9.86 s → 5.37 s at 4
-    * partitions (−46%); 2 and 8 partitions measured 5.61/6.00, so 4 is
-    * the flat minimum. The shrink applies whenever the day is
-    * delta-scale regardless of the AQE mode, so the `dailyjobs` probe's
-    * forced-AQE baseline and its noaqe twin still differ only in AQE
-    * state. */
+    * read-back then pays again. The SAME committed-bytes signal now also
+    * sizes the static partitioning: a day whose state anchor is under the
+    * threshold runs its tail at [[SmallDayPartitions]] shuffle
+    * partitions. Above the threshold the session partitioning stands, so
+    * a 100-TB day's delta keeps full parallelism — the shrink is gated on
+    * measured size, not on the local core count. Measured (sf0.1,
+    * local[32], ONLY-mode daily_rebuild min-of-N): fresh-workspace
+    * re-orchestration 9.86 s → 5.37 s at 4 partitions (−46%); 2 and 8
+    * partitions measured 5.61/6.00, so 4 is the flat minimum. The
+    * shrink applies whenever the day is delta-scale regardless of the
+    * AQE mode, so the `dailyjobs` probe's forced-AQE baseline and its
+    * noaqe twin still differ only in AQE state. */
   private[graft] val DailyAdaptiveConf = "spark.graft.daily.adaptive"
-  private[graft] val DailyAdaptiveOffBytesConf =
-    "spark.graft.daily.adaptiveOffBytes"
-  private[graft] val DailySmallDayPartitionsConf =
-    "spark.graft.daily.smallDayPartitions"
+  private val DayScaleBytes = 256L << 20
+  private val SmallDayPartitions = 4
 
   private def latestStateBytes(spark: SparkSession, ws: Workspace,
       s: java.sql.Date): Long = {
@@ -682,20 +679,17 @@ object Daily {
 
   private def withDayAqe[T](spark: SparkSession, ws: Workspace,
       s: java.sql.Date)(body: => T): T = {
-    val thr = spark.conf
-      .get(DailyAdaptiveOffBytesConf, (256L << 20).toString).toLong
     // one filesystem probe serves both gates: the AQE switch and the
-    // small-day static-partitioning shrink (see the conf scaladoc above)
-    lazy val small = latestStateBytes(spark, ws, s) < thr
+    // small-day static-partitioning shrink (see the scaladoc above)
+    lazy val small = latestStateBytes(spark, ws, s) < DayScaleBytes
     val off = spark.conf.get(DailyAdaptiveConf, "auto") match {
       case "auto" => small
       case m => !java.lang.Boolean.parseBoolean(m)
     }
-    val shrinkTo = spark.conf.get(DailySmallDayPartitionsConf, "4").toInt
     val overrides =
       (if (off) Seq("spark.sql.adaptive.enabled" -> "false") else Seq.empty) ++
-        (if (shrinkTo > 0 && small)
-          Seq("spark.sql.shuffle.partitions" -> shrinkTo.toString)
+        (if (small)
+          Seq("spark.sql.shuffle.partitions" -> SmallDayPartitions.toString)
         else Seq.empty)
     if (overrides.isEmpty) body
     else {

@@ -666,7 +666,7 @@ object ScalingProbe {
       try {
         // Force the day-tail AQE gate ON for the baseline modes (ADVICE
         // round-15): Daily.runDay's auto gate already runs probe-scale
-        // day tails with AQE OFF (state < adaptiveOffBytes), so without
+        // day tails with AQE OFF (state < 256 MB), so without
         // the override "fix"/"bal" and their _noaqe twins measured the
         // SAME adaptive state and the delta stopped being AQE ceremony.
         spark.conf.set(Daily.DailyAdaptiveConf, "true")

@@ -550,7 +550,7 @@ object Dedup {
     // THROUGH the cache (populating it for the exact-Jaccard verify
     // branches the d03/d08 callers join below) instead of deriving it
     // once for the checkpoint and again per verify branch. Measured at
-    // sf1 (D03Probe, BENCH_SF1's d03 rep-1 gap): cold-first d03 45.5 s →
+    // sf1 (a cold-first d03 profile, BENCH_SF1's d03 rep-1 gap): 45.5 s →
     // the staged-cache 14 s shape, warm unchanged. Registration alone is
     // lazy — a bands-only caller that never verifies pays only the
     // storage of what its own job computed anyway.

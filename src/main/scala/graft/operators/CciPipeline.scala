@@ -1365,14 +1365,7 @@ object CciPipeline {
   private val LedgerDefaultMinBytes: Long = 1L << 30
   private val LedgerDefaultHotRows: Long = 2000000L
   /** |hot| <= fills/hotRows by construction; guard the broadcast anyway. */
-  private val LedgerMaxHotAccounts = 100000L
-
-  /** Hot-account detection memo, the q47 `detectMemo` discipline: the
-    * bounds collect runs once per (canonicalized fills plan, chunks,
-    * hotRows) — SQL-surface views reconstruct operators repeatedly. */
-  private val ledgerDetectMemo = scala.collection.concurrent.TrieMap.empty[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Long),
-    Array[org.apache.spark.sql.Row]]
+  private val LedgerMaxHotAccounts = 100000
 
   /** [[positionLedger]] over any fills frame.
     *
@@ -1406,27 +1399,20 @@ object CciPipeline {
       .withColumn("cash_balance", sum($"cash_delta").over(w))
     val chunks =
       spark.conf.get(LedgerChunksConf, LedgerDefaultChunks.toString).toInt
-    val minBytes =
-      spark.conf.get(LedgerMinBytesConf, LedgerDefaultMinBytes.toString).toLong
     val armed = chunks > 1 &&
-      fills.queryExecution.optimizedPlan.stats.sizeInBytes >= minBytes
+      graft.plans.ScaleGate.armed(fills, LedgerMinBytesConf, LedgerDefaultMinBytes)
     val hot = if (!armed) Array.empty[org.apache.spark.sql.Row] else {
       val hotRows =
         spark.conf.get(LedgerHotRowsConf, LedgerDefaultHotRows.toString).toLong
-      ledgerDetectMemo.getOrElseUpdate(
-        (fills.queryExecution.optimizedPlan.canonicalized, chunks, hotRows), {
-          if (ledgerDetectMemo.size > 64) ledgerDetectMemo.clear()
-          val rows = fills.groupBy($"cust_id")
-            .agg(count(lit(1)).as("n"),
-              min($"event_date").as("d0"), max($"event_date").as("d1"),
-              min($"order_no").as("o0"), max($"order_no").as("o1"))
-            .filter($"n" >= hotRows)
-            .limit((LedgerMaxHotAccounts + 1).toInt).collect()
-          require(rows.length <= LedgerMaxHotAccounts,
-            s"ledger split: > $LedgerMaxHotAccounts hot accounts — raise " +
-              s"$LedgerHotRowsConf instead of broadcasting an unbounded bounds table")
-          rows
-        })
+      val rows = graft.plans.HotKeys.detect(fills.groupBy($"cust_id")
+        .agg(count(lit(1)).as("n"),
+          min($"event_date").as("d0"), max($"event_date").as("d1"),
+          min($"order_no").as("o0"), max($"order_no").as("o1"))
+        .filter($"n" >= hotRows), LedgerMaxHotAccounts)
+      require(rows.length <= LedgerMaxHotAccounts,
+        s"ledger split: > $LedgerMaxHotAccounts hot accounts — raise " +
+          s"$LedgerHotRowsConf instead of broadcasting an unbounded bounds table")
+      rows
     }
     if (hot.isEmpty) plainOver(fills)
         .orderBy($"cust_id", $"event_date", $"order_no", $"side")

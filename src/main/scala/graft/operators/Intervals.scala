@@ -148,7 +148,7 @@ object Intervals {
         val b = v.toInt
         require(b > 0, s"$BinDaysConf must be positive, got $b"); b
       case None =>
-        val bytes = gate.queryExecution.optimizedPlan.stats.sizeInBytes
+        val bytes = graft.plans.ScaleGate.bytes(gate)
         val decades =
           if (bytes <= BinDaysAutoAnchorBytes) 0
           else math.min(4, math.ceil(math.log10(
@@ -160,59 +160,31 @@ object Intervals {
     require(s > 0, s"$SaltBucketsConf must be positive, got $s"); s
   }
 
-  /** Detection memo (round-14, the as-of detectMemo discipline applied
-    * here): detection is EAGER at DataFrame construction once the plan-
-    * stat gate is crossed, and SqlSurface.registerOperators reconstructs
-    * the rangeJoin/intervalJoin views on every sqlXX entry — without a
-    * memo a large session re-pays the corpus-scale bin-count scan per
-    * reconstruction. Keyed by the canonicalized binned plan's
-    * semanticHash (+ binDays, hotRows) — NOT the plan object itself
-    * (ADVICE round-14): a retained LocalRelation key holds the relation's
-    * full row data alive for up to 64 entries, and the hash key costs
-    * nothing to keep. The geometry is result-invariant either way (both
-    * join sides read the same map; sub-salts only move rows between
-    * tasks), so a hash collision or a stale entry can skew a task, never
-    * an answer. Bounded: cleared wholesale past 64 entries; paths whose
-    * backing data is regenerated in-session should call
-    * [[dropHotBinMemo]] (the ZoneMap.dropZoneMemo discipline) so the
-    * re-detection sees the new distribution. */
-  private val hotBinMemo = scala.collection.concurrent.TrieMap.empty[
-    (Int, Int, Long), Seq[(Long, Int)]]
-
-  /** Drop all memoized hot-bin detections — for sessions that regenerate
-    * a memoized input path's data in place (the memo is keyed on the
-    * PLAN, which does not change when the files under it do). */
-  private[graft] def dropHotBinMemo(): Unit = hotBinMemo.clear()
-
   /** Hot bins of the REPLICATING side: (bin, subSalts) for every bin whose
     * row count crosses [[HotBinRowsConf]], subSalts = ceil(count/hotRows)
     * capped at [[MaxSubSalts]]. One partial-aggregable scan collapsed to
     * the bin dimension (bins grow with the TIME SPAN, not the corpus), a
     * bounded top-[[MaxHotBins]] collect. Gated on `gate`'s plan-stat size
     * (the un-exploded side) so small inputs never pay the scan; EAGER at
-    * construction time when it runs, like the as-of split's detection;
-    * memoized per (canonicalized plan, geometry) so repeated construction
-    * of the same join never re-pays it. */
+    * construction time when it runs, like the as-of split's detection,
+    * and memoized the same way ([[graft.plans.HotKeys]]). Over the bound,
+    * the densest [[MaxHotBins]] bins split and the rest stay unsplit.
+    * `binned`'s plan already carries the bin width `b`, so `b` plays no
+    * part in the memo. */
   private[graft] def hotBins(spark: SparkSession, binned: DataFrame,
       gate: DataFrame, b: Int): Seq[(Long, Int)] = {
-    val minBytes = spark.conf
-      .get(HotBinMinDetectBytesConf, DefaultMinDetectBytes.toString).toLong
-    if (gate.queryExecution.optimizedPlan.stats.sizeInBytes < minBytes)
-      return Seq.empty
+    if (!graft.plans.ScaleGate.armed(gate, HotBinMinDetectBytesConf,
+        DefaultMinDetectBytes)) return Seq.empty
     val hotRows = spark.conf.get(HotBinRowsConf, DefaultHotBinRows.toString).toLong
     require(hotRows > 0, s"$HotBinRowsConf must be positive, got $hotRows")
-    if (hotBinMemo.size > 64) hotBinMemo.clear()
-    hotBinMemo.getOrElseUpdate(
-      (binned.queryExecution.analyzed.canonicalized.semanticHash(),
-        b, hotRows),
+    graft.plans.HotKeys.detect(
       binned.groupBy(col("bin")).agg(count(lit(1)).as("__n"))
         .filter(col("__n") > hotRows)
-        .orderBy(col("__n").desc, col("bin"))
-        .limit(MaxHotBins)
-        .collect()
-        .map(r => (r.getLong(0),
-          math.min(MaxSubSalts.toLong, (r.getLong(1) + hotRows - 1) / hotRows).toInt))
-        .filter(_._2 > 1).toSeq)
+        .orderBy(col("__n").desc, col("bin")), MaxHotBins)
+      .take(MaxHotBins)
+      .map(r => (r.getLong(0),
+        math.min(MaxSubSalts.toLong, (r.getLong(1) + hotRows - 1) / hotRows).toInt))
+      .filter(_._2 > 1).toSeq
   }
 
   /** Attach each row's sub-salt count (`name`, default 1) from the tiny

@@ -247,7 +247,7 @@ object AsOf {
   private val DefaultHotKeyRows: Long = 2000000L
   /** Hot keys are collected into a broadcast bounds table; by construction
     * |hot| <= buildRows / hotKeyRows, but guard the broadcast anyway. */
-  private val MaxHotKeys: Long = 100000L
+  private val MaxHotKeys = 100000
 
   /** Tie types the split's carried-winner heap can order EXACTLY: the heap
     * maps the tiebreak onto a long via bitwise NOT (order-reversing for all
@@ -259,17 +259,6 @@ object AsOf {
     * row-for-row exactness contract unconditional. */
   private def integralTie(dt: DataType): Boolean =
     dt == LongType || dt == IntegerType || dt == ShortType || dt == ByteType
-
-  /** Hot-key detection memo: the collected bounds table per (canonicalized
-    * child plans, keys, times, chunks, hotRows). `join` is EAGER when the
-    * split arms — detection (two corpus-scan aggregations + a bounded
-    * collect) runs at DataFrame-construction time — so callers that build
-    * the same join repeatedly must not pay the scans each time. Bounded:
-    * cleared wholesale past 64 entries (a session building >64 distinct
-    * large as-of joins re-detects; it never grows without bound). */
-  private val detectMemo = scala.collection.concurrent.TrieMap.empty[
-    (LogicalPlan, LogicalPlan, Seq[(String, String)], String, String, Int, Long),
-    Array[org.apache.spark.sql.Row]]
 
   /** As-of join `left` to `right`.
     *
@@ -293,10 +282,9 @@ object AsOf {
     * size >= [[SplitMinBuildBytesConf]] and splitting is enabled), hot-key
     * DETECTION — two corpus-scan aggregations plus a bounded collect —
     * executes HERE, at DataFrame-construction time, not at the first
-    * action. The detection result is memoized per (canonicalized child
-    * plans, keys, times, chunks, hotRows), so repeated construction of the
-    * same join pays the scans once per session; distinct inputs or changed
-    * split confs re-detect. Callers that only want the plan (explain,
+    * action. The detection result is memoized ([[HotKeys]]), so repeated
+    * construction of the same join pays the scans once; distinct inputs or
+    * changed split confs re-detect. Callers that only want the plan (explain,
     * plan-shape tests) on large inputs can set [[SplitChunksConf]] <= 1 to
     * keep construction lazy.
     */
@@ -307,8 +295,6 @@ object AsOf {
     require(on.nonEmpty, "as-of join needs at least one equi-key")
     val spark = left.sparkSession
     val chunks = spark.conf.get(SplitChunksConf, DefaultChunks.toString).toInt
-    val minBytes =
-      spark.conf.get(SplitMinBuildBytesConf, DefaultMinBuildBytes.toString).toLong
     // streaming frames can't run the hot-key count action; tie types the
     // heap can't order EXACTLY (anything non-integral — see [[integralTie]])
     // fall back too. EITHER side's size can arm the gate: a probe-side hot
@@ -317,8 +303,8 @@ object AsOf {
       rightTieBreak.forall(t => right.schema.find(f =>
         spark.sessionState.conf.resolver(f.name, t))
         .exists(f => integralTie(f.dataType))) &&
-      (right.queryExecution.optimizedPlan.stats.sizeInBytes >= minBytes ||
-        left.queryExecution.optimizedPlan.stats.sizeInBytes >= minBytes)
+      (ScaleGate.armed(right, SplitMinBuildBytesConf, DefaultMinBuildBytes) ||
+        ScaleGate.armed(left, SplitMinBuildBytesConf, DefaultMinBuildBytes))
     if (splittable) {
       val hotRows =
         spark.conf.get(SplitHotKeyRowsConf, DefaultHotKeyRows.toString).toLong
@@ -443,16 +429,8 @@ object AsOf {
     // Without this, the count job plus each downstream broadcast re-ran
     // the two corpus-scan aggregations — the left/right projections
     // differ, so ReuseExchange can't fire across them — i.e. up to six
-    // corpus scans for detection instead of one per side. Memoized per
-    // (canonicalized inputs, keys, times, chunks, hotRows): construction
-    // is eager when the split arms (see join()), so repeated construction
-    // of the same join must not re-pay the detection scans.
-    if (detectMemo.size > 64) detectMemo.clear()
-    val hotCollected = detectMemo.getOrElseUpdate(
-      (lhs.queryExecution.analyzed.canonicalized,
-        rhs.queryExecution.analyzed.canonicalized,
-        on, leftTime, rightTime, chunks, hotRows),
-      hotDist.limit(MaxHotKeys.toInt + 1).collect())
+    // corpus scans for detection instead of one per side.
+    val hotCollected = HotKeys.detect(hotDist, MaxHotKeys)
     if (hotCollected.isEmpty)
       return joinPlain(lhs, rhs, on, leftTime, rightTime, toleranceUs,
         forward, rightTieBreak)

@@ -1,0 +1,58 @@
+package graft.plans
+
+import java.lang.ref.SoftReference
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
+/** The one size signal behind every scale-armed path (as-of time-split,
+  * range hot bins and bin width, ledger whale split, LSH member cap): the
+  * optimizer's plan-stat size of the frame. Each caller keeps its own
+  * threshold conf; sizing per knob lives in SURVEY §5 "Sizing a real
+  * deployment". */
+object ScaleGate {
+  def bytes(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** `df`'s plan-stat size reaches the byte threshold set in `conf`
+    * (`default` when unset). */
+  def armed(df: DataFrame, conf: String, default: Long): Boolean =
+    bytes(df) >= df.sparkSession.conf.get(conf, default.toString).toLong
+}
+
+/** Bounded driver collect of a hot-key detection frame. Detection is EAGER
+  * where it runs (callers decide the plan shape from the collected keys
+  * at DataFrame-construction time), and SQL-surface views reconstruct the
+  * same operators repeatedly, so the result is memoized JVM-wide per
+  * bounded detection plan. The plan already encodes the inputs, keys,
+  * thresholds and geometry, so it is the whole key.
+  *
+  * The memo never answers for a plan it did not scan: an entry holds its
+  * canonicalized plan only softly (a retained LocalRelation would pin its
+  * row data), and a hit needs that reference live AND equal to the new
+  * plan — a hash collision or a collected reference costs a re-scan.
+  * Bounded: cleared wholesale at 64 entries. Plans over files do not see
+  * the files change under them; sessions that rewrite an input path in
+  * place must build a new path. */
+object HotKeys {
+  private val MaxEntries = 64
+  private val memo = scala.collection.concurrent.TrieMap.empty[
+    Int, (SoftReference[LogicalPlan], Array[Row])]
+
+  /** At most `maxRows + 1` rows of `detection`: a caller that sees more
+    * than `maxRows` applies its own over-bound policy. */
+  def detect(detection: DataFrame, maxRows: Int): Array[Row] = {
+    val bounded = detection.limit(maxRows + 1)
+    val plan = bounded.queryExecution.analyzed
+    val canon = plan.canonicalized
+    val key = plan.semanticHash()
+    memo.get(key) match {
+      case Some((ref, rows)) if ref.get == canon => rows
+      case _ =>
+        val rows = bounded.collect()
+        if (memo.size >= MaxEntries) memo.clear()
+        memo.put(key, (new SoftReference(canon), rows))
+        rows
+    }
+  }
+}

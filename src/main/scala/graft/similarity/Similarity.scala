@@ -349,10 +349,8 @@ object Similarity {
     // above, so ENSURE_REQUIREMENTS reuses that exchange — the cap adds
     // no shuffle, only the bounded per-bucket heap.
     val cap = spark.conf.get(LshMaxBucketConf, LshMaxBucket.toString).toInt
-    val capMinBytes =
-      spark.conf.get(LshCapMinBytesConf, LshCapMinBytes.toString).toLong
     val capOn = cap > 0 &&
-      e.queryExecution.optimizedPlan.stats.sizeInBytes >= capMinBytes
+      graft.plans.ScaleGate.armed(e, LshCapMinBytesConf, LshCapMinBytes)
     val members =
       if (!capOn) bucketed.toDF("neighbor_id", "tbl", "bucket")
       else bucketed
