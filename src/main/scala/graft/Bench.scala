@@ -54,16 +54,16 @@ object Bench {
     // Min-of-N protocol (round-11): one run per entry per sweep was below
     // this host's noise floor — identical code swung single entries 2.9 →
     // 28.6 s across same-day sweeps, so a bench that runs each entry once
-    // cannot adjudicate its own regressions. Each query entry now runs
-    // `SPARK_GRAFT_REPS` times (default 3; always ≥ 2; reps beyond the
-    // 2nd are skipped once an entry has spent > 30 s so the heavy tail
-    // doesn't triple the sweep) and reports the per-entry MINIMUM — the
-    // protocol BASELINE.md already adopted for the replica/engine pair.
+    // cannot adjudicate its own regressions. Each query entry now runs 3
+    // times (reps beyond the 2nd are skipped once an entry has spent
+    // > 30 s so the heavy tail doesn't triple the sweep) and reports the
+    // per-entry MINIMUM — the protocol BASELINE.md already adopted for
+    // the replica/engine pair.
     // All reps land in BENCH_LOCAL.json ("reps") for spread inspection.
     // Warm-up entries can't just re-run (a 2nd call returns the session
     // memo, not the build) — they use timedColdReps below, whose reps 2+
     // drop the entry's own memo/caches and rebuild for real.
-    val maxReps = math.max(2, sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(3))
+    val maxReps = 3
     val repBudgetSec = 30.0
     val allReps = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     def timedMin(name: String)(fn: => Unit): Double = {
@@ -197,91 +197,16 @@ object Bench {
       name -> timedMin(name)(materialize(fn(spark, sfDir)))
     }
 
-    // ---- x01–x03: Zipf-skew join demo (bench-only; correctness of the
-    // variants' equality is asserted in SkewSpec, PERF.md records the
-    // comparison). Generated data, so no Verify/oracle row.
-    def withConf(pairs: (String, String)*)(fn: => Unit): Unit = {
-      val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try fn
-      finally olds.foreach { case (k, ov) =>
-        ov.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    }
-    val skewOff = "spark.sql.adaptive.skewJoin.enabled" -> "false"
-    val skewNames = Seq("x01_skew_join_naive", "x02_skew_join_aqe", "x03_skew_join_salted")
-      .filter(n => only.forall(_.contains(n)))
-    val skewResults = if (skewNames.isEmpty) Seq.empty[(String, Double)] else {
-      import operators.Skew
-      // trades cached once: the three entries time the JOIN strategy, not
-      // the (identical) generation
-      val trades = Skew.zipfTrades(spark, Skew.SkewTradeRows, Skew.SkewSymbols)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val stats = Skew.symbolStats(spark, Skew.SkewSymbols)
-      trades.count()
-      val out = skewNames.map {
-        case n @ "x01_skew_join_naive" =>
-          // hot symbol (~15% of rows) lands in ONE reducer of the forced
-          // sort-merge join: the un-mitigated straggler baseline
-          n -> timedMin(n)(withConf(skewOff)(
-            materialize(Skew.skewedFeeTotals(trades, stats, salted = false))))
-        case n @ "x02_skew_join_aqe" =>
-          // AQE skew-split, thresholds sized to the demo corpus (the
-          // 256 MB default targets cluster-scale partitions)
-          n -> timedMin(n)(withConf(
-            "spark.sql.adaptive.skewJoin.enabled" -> "true",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64m",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32m")(
-            materialize(Skew.skewedFeeTotals(trades, stats, salted = false))))
-        case n =>
-          // static salting: hot key spread over SkewSalts reducers with
-          // AQE's skew handling off — the no-AQE mitigation
-          n -> timedMin(n)(withConf(skewOff)(
-            materialize(Skew.skewedFeeTotals(trades, stats, salted = true))))
-      }
-      trades.unpersist()
-      out
-    }
-    // x04/x05: the CCI chain itself on Zipf-length series — window form
-    // (hot series = one sort task) vs the chunked bit-equal rewrite.
-    val cciSkewNames = Seq("x04_cci_window_skew", "x05_cci_chunked_skew")
-      .filter(n => only.forall(_.contains(n)))
-    val cciSkewResults = if (cciSkewNames.isEmpty) Seq.empty[(String, Double)] else {
-      import operators.{CciPipeline, Skew}
-      val bars = Skew.zipfBars(spark, Skew.SkewBarRows, Skew.SkewBarSeries)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      bars.count()
-      val cfg = CciPipeline.GridConfig()
-      val out = cciSkewNames.map {
-        case n @ "x04_cci_window_skew" =>
-          n -> timedMin(n)(materialize(CciPipeline.cciFromBars(bars, cfg)))
-        case n =>
-          // chunkRows sized so the hot series (~3.8M bars) splits into ~40
-          // bounded tasks, not 380: at 10k rows/chunk the per-task overhead
-          // (shuffle write, window setup) ate the straggler win and the
-          // demo flickered around the crossover (r6 6.9 s win, r7 12.8 s
-          // loss, both sweep-tail noise). 100k rows/task is still far under
-          // executor memory at any series length — the BOUND is the point.
-          n -> timedMin(n)(materialize(
-            CciPipeline.cciChunkedFromBars(bars, cfg, chunkRows = 100000)))
-      }
-      bars.unpersist()
-      out
-    }
-    // Headline = the real query surface (+ cache build). The x-entries are
-    // deliberately-naive DEMO baselines (x01/x04 EXIST to be slow) — kept
-    // under a separate "demos" key so a contended demo run can never read
-    // as a headline regression (the round-5 lesson: x04 recorded 53.8 s in
-    // a contended driver run and inflated the total by 44 s).
+    // Headline = the query surface plus the build entries. The output
+    // keeps its "demos"/"demos_total" keys (an empty map and zero) so
+    // consumers of the format see the same key set.
     val headline = warm ++ queryResults
-    val demos = skewResults ++ cciSkewResults
     // total sums SUCCESSFUL entries only: a failed query's -1 marker stays
     // visible in the per-query map but must not subtract from the total
     // (round 7: 39 × -1 made per-query times "sum past" the total and the
     // top-40 fallback printed "other": -13.07)
     val total = headline.map(_._2).filter(_ >= 0).sum
     val nFailed = headline.count(_._2 < 0)
-    val demosTotal = demos.map(_._2).filter(_ >= 0).sum
     // Self-adjudicating headline (round-15, VERDICT task 2): `value`
     // keeps its cross-round meaning (cold rep-1 for the build entries +
     // min-of-N for queries), but a single contended cold rep could make
@@ -312,18 +237,18 @@ object Bench {
     val sfName = new java.io.File(sfDir).getName
     def line(dec: Int): String = {
       def f(v: Double) = s"%.${dec}f".format(v)
-      s"""{"metric":"total","value":${totalJson(f)},"unit":"sec","failed":$nFailed,"cold_total":${f(total)},"steady_total":${f(steadyTotal)},"succeeded_total":${f(total)},"queries":${fmt(headline, dec)},"demos":${fmt(demos, dec)},"demos_total":${f(demosTotal)},"sf":"$sfName"}"""
+      s"""{"metric":"total","value":${totalJson(f)},"unit":"sec","failed":$nFailed,"cold_total":${f(total)},"steady_total":${f(steadyTotal)},"succeeded_total":${f(total)},"queries":${fmt(headline, dec)},"demos":{},"demos_total":${f(0.0)},"sf":"$sfName"}"""
     }
     // fit budget: 2000-char tail − ~81 sbt "[success]" trailer − 7 "[info] "
     // prefix, with a little slack
     val out = Seq(2, 1).map(line).find(_.length <= 1880).getOrElse {
       // last resort: top-40 slowest headline entries + the rest as one
-      // "other" bucket (demos are 5 entries — always included verbatim)
+      // "other" bucket
       val top = headline.sortBy(-_._2).take(40)
       // "other" buckets only SUCCESSFUL non-top entries (failed -1s would
       // drive it negative); top-40 keeps its -1 markers visible
       val other = total - top.map(_._2).filter(_ >= 0).sum
-      s"""{"metric":"total","value":${totalJson("%.2f".format(_))},"unit":"sec","failed":$nFailed,"cold_total":${"%.2f".format(total)},"steady_total":${"%.2f".format(steadyTotal)},"succeeded_total":${"%.2f".format(total)},"queries":${fmt(top :+ ("other" -> other), 2)},"demos":${fmt(demos, 2)},"demos_total":${"%.2f".format(demosTotal)},"sf":"$sfName"}"""
+      s"""{"metric":"total","value":${totalJson("%.2f".format(_))},"unit":"sec","failed":$nFailed,"cold_total":${"%.2f".format(total)},"steady_total":${"%.2f".format(steadyTotal)},"succeeded_total":${"%.2f".format(total)},"queries":${fmt(top :+ ("other" -> other), 2)},"demos":{},"demos_total":0.00,"sf":"$sfName"}"""
     }
     def full(qs: Seq[(String, Double)]): String =
       qs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -331,7 +256,7 @@ object Bench {
       .map { case (k, ts) => "\"" + k + "\":[" + ts.map("%.2f".format(_)).mkString(",") + "]" }
       .mkString("{", ",", "}")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-      s"""{"metric":"total","value":${totalJson(_.toString)},"unit":"sec","failed":$nFailed,"cold_total":$total,"steady_total":$steadyTotal,"succeeded_total":$total,"queries":${full(headline)},"demos":${full(demos)},"demos_total":$demosTotal,"reps":$repsJson,"sf":"$sfDir"}""" + "\n")
+      s"""{"metric":"total","value":${totalJson(_.toString)},"unit":"sec","failed":$nFailed,"cold_total":$total,"steady_total":$steadyTotal,"succeeded_total":$total,"queries":${full(headline)},"demos":{},"demos_total":0.0,"reps":$repsJson,"sf":"$sfDir"}""" + "\n")
     catch { case _: Throwable => () }
     println(out)
     spark.stop()

@@ -52,47 +52,29 @@ object GraftSession {
     s
   }
 
-  /** Caller-controlled caching for operators whose subtree is read by
+  /** Shared-subtree caching for operators whose subtree is read by
     * several downstream plans (the CCI chain, dedup indexes).
     *
-    *  - `spark.graft.cache.enabled=false` turns the persists off entirely —
-    *    a single-shot job should not pay cache-build overhead it never
-    *    amortizes;
-    *  - `spark.graft.cache.storageLevel` picks the level. The default is
-    *    MEMORY_AND_DISK_SER, switched from MEMORY_AND_DISK on a ScalingProbe
-    *    measurement: at 512× corpus the deserialized d02 inverted-index
-    *    cache overflowed the storage fraction and wall-clock went ×11.7 on
-    *    ×4 data; serialized, the same point is ×3.4 (bang on the linear
-    *    projection, 199.6 s → 65.5 s) and no probe entry got slower at any
-    *    multiple. Deserialized caching only wins when the working set
-    *    comfortably fits — which a 100 TB shuffle-heavy operator should
-    *    never bet on.
+    * Always MEMORY_AND_DISK_SER, switched from MEMORY_AND_DISK on a
+    * ScalingProbe measurement: at 512× corpus the deserialized d02
+    * inverted-index cache overflowed the storage fraction and wall-clock
+    * went ×11.7 on ×4 data; serialized, the same point is ×3.4 (bang on
+    * the linear projection, 199.6 s → 65.5 s) and no probe entry got
+    * slower at any multiple. Deserialized caching only wins when the
+    * working set comfortably fits — which a 100 TB shuffle-heavy operator
+    * should never bet on.
     *
     * Lifetime stays with the caller: `spark.catalog.clearCache()` (or
     * `unpersist` on the returned Dataset) releases storage. */
-  def maybeCache[T](ds: Dataset[T]): Dataset[T] = {
-    val conf = ds.sparkSession.conf
-    if (conf.get("spark.graft.cache.enabled", "true").toBoolean) {
-      // Re-invocations rebuild an identical plan; CacheManager canonicalizes
-      // and would reuse the existing entry but logs a WARN per call. Probe
-      // the storage level first so repeat callers are silent no-ops.
-      if (ds.storageLevel == StorageLevel.NONE)
-        ds.persist(StorageLevel.fromString(
-          conf.get("spark.graft.cache.storageLevel", "MEMORY_AND_DISK_SER")))
-      else ds
-    } else ds
-  }
+  def maybeCache[T](ds: Dataset[T]): Dataset[T] =
+    // Re-invocations rebuild an identical plan; CacheManager canonicalizes
+    // and would reuse the existing entry but logs a WARN per call. Probe
+    // the storage level first so repeat callers are silent no-ops.
+    if (ds.storageLevel == StorageLevel.NONE) ds.persist(StorageLevel.MEMORY_AND_DISK_SER)
+    else ds
 
-  /** Eager local checkpoint, gated the same way: truncates lineage and
-    * materializes NOW (needed when union/self-join branches would race a
-    * lazy cache). `spark.graft.eagerCheckpoint.enabled=false` falls back to
-    * [[maybeCache]] — on a multi-tenant cluster where executor loss is
-    * routine, prefer a reliable `checkpoint()` to an unrecoverable local
-    * one. */
-  def maybeEagerCheckpoint(ds: Dataset[_]): org.apache.spark.sql.DataFrame = {
-    val df = ds.toDF()
-    if (df.sparkSession.conf.get("spark.graft.eagerCheckpoint.enabled", "true").toBoolean)
-      df.localCheckpoint(true)
-    else maybeCache(df)
-  }
+  /** Eager local checkpoint: truncates lineage and materializes NOW
+    * (needed when union/self-join branches would race a lazy cache). */
+  def maybeEagerCheckpoint(ds: Dataset[_]): org.apache.spark.sql.DataFrame =
+    ds.toDF().localCheckpoint(true)
 }

@@ -542,8 +542,8 @@ object ScalingProbe {
       // date-partitioned (r16) and pays only the delta partitions.
       import graft.operators.{CciPipeline, Skew}
       val cfg = CciPipeline.GridConfig()
-      // Zipf-length series (the x04 corpus shape: one mega-series carries
-      // ~half the bars), scaled by mult × 100k rows: this is the regime
+      // Zipf-length series (Skew.SkewBarSeries of them: one mega-series
+      // carries ~half the bars), scaled by mult × 100k rows: this is the regime
       // where the full recompute's per-series window is a single giant
       // sort task — the cost r30 exists to avoid. Uniformly replicated
       // corpora (by series OR by history) keep every sort small and both

@@ -261,12 +261,11 @@ object CciPipeline {
       // latest-state) re-reads this subtree, often 3x inside one action:
       // persist it — Spark's CacheManager canonicalizes the plan, so all
       // callers share the materialization. Size: one row per (series, day).
-      // Level + on/off are caller config (graft.GraftSession.maybeCache).
       .transform(graft.GraftSession.maybeCache(_))
 
   /** The rolling-CCI computation over any OHLC bars frame
     * (user_id, d, open_pr, high_pr, low_pr, close_pr, volume) — the
-    * skew bench drives it with synthetic Zipf-length series. */
+    * ScalingProbe drives it with synthetic Zipf-length series. */
   def cciFromBars(bars: DataFrame, cfg: GridConfig): DataFrame = {
     import bars.sparkSession.implicits._
     val wOrd = Window.partitionBy($"user_id").orderBy($"d")
@@ -378,7 +377,7 @@ object CciPipeline {
       cfg: GridConfig = GridConfig(), chunkRows: Int = 10000): DataFrame =
     cciChunkedFromBars(ohlcBars(spark, dir), cfg, chunkRows)
 
-  /** [[cciChunked]] over any OHLC bars frame (skew bench / tests). */
+  /** [[cciChunked]] over any OHLC bars frame (tests drive it with synthetic bars). */
   def cciChunkedFromBars(barsIn: DataFrame, cfg: GridConfig,
       chunkRows: Int): DataFrame = {
     import barsIn.sparkSession.implicits._
@@ -542,16 +541,16 @@ object CciPipeline {
   // ---------------------------------------------------------------- r05
   /** Buy-signal crossover: prev CCI below threshold, current above
     * (daily_function.py:724-725). Thresholds are a broadcast literal grid. */
-  private def signalsDf(spark: SparkSession, dir: String,
-      cfg: GridConfig = GridConfig()): DataFrame = {
-    import spark.implicits._
+  private def crossover(c: DataFrame, buyThresholds: Seq[Double]): DataFrame = {
+    import c.sparkSession.implicits._
     val w = Window.partitionBy($"user_id").orderBy($"d")
-    val thr = cfg.buyThresholds.toDF("buy_thr")
-    cci(spark, dir, cfg)
-      .withColumn("prev_open_cci", lag($"open_cci", 1).over(w))
-      .crossJoin(broadcast(thr))
+    c.withColumn("prev_open_cci", lag($"open_cci", 1).over(w))
+      .crossJoin(broadcast(buyThresholds.toDF("buy_thr")))
       .filter($"prev_open_cci" < $"buy_thr" && $"open_cci" > $"buy_thr")
   }
+
+  private def signalsDf(spark: SparkSession, dir: String): DataFrame =
+    crossover(cci(spark, dir), BuyThresholds)
 
   private def valuesSql(name: String, col: String, vs: Seq[Any]): String =
     s"(VALUES ${vs.map(v => s"($v)").mkString(", ")}) $name($col)"
@@ -592,22 +591,11 @@ object CciPipeline {
   def trades(spark: SparkSession, dir: String): DataFrame =
     trades(spark, dir, GridConfig())
 
-  def trades(spark: SparkSession, dir: String, cfg: GridConfig): DataFrame = {
-    import spark.implicits._
-    val c = cci(spark, dir, cfg)
-    val sig = signalsDf(spark, dir, cfg)
-      .select($"user_id", $"d".as("buy_date"), $"idx", $"open_pr".as("buy_price"), $"buy_thr")
-    val grid = {
-      val hs = cfg.holdingDays.toDF("condition_holding_days")
-      val rs = cfg.targetReturns.toDF("condition_target_return")
-      val ss = cfg.stopThresholds.toDF("condition_stop_loss_cci_threshold")
-      hs.crossJoin(rs).crossJoin(ss)
-    }
-    tradeOutcomes(c, sig, grid, cfg.maxHolding, Nil)
+  def trades(spark: SparkSession, dir: String, cfg: GridConfig): DataFrame =
+    tradeChain(cci(spark, dir, cfg), cfg)
       // r06/r07/r11 and the ML features all read the trade grid; persisted
       // (plan-canonicalized) so one materialization serves every caller.
       .transform(graft.GraftSession.maybeCache(_))
-  }
 
   /** The r06 chain (CCI → signals → grid outcomes) over ANY OHLC bars
     * frame — the ScalingProbe `trade` entry drives it with replicated
@@ -615,23 +603,23 @@ object CciPipeline {
     * rows per signal) grows linearly in series count with the condition
     * grid held fixed. Same operators as [[trades]], minus the
     * parquet-source coupling. */
-  def tradesFromBars(bars: DataFrame, cfg: GridConfig): DataFrame = {
-    import bars.sparkSession.implicits._
-    val c = graft.GraftSession.maybeCache(cciFromBars(bars, cfg))
-    val w = Window.partitionBy($"user_id").orderBy($"d")
-    val sig = c
-      .withColumn("prev_open_cci", lag($"open_cci", 1).over(w))
-      .crossJoin(broadcast(cfg.buyThresholds.toDF("buy_thr")))
-      .filter($"prev_open_cci" < $"buy_thr" && $"open_cci" > $"buy_thr")
-      .select($"user_id", $"d".as("buy_date"), $"idx",
-        $"open_pr".as("buy_price"), $"buy_thr")
-    val grid = {
-      val hs = cfg.holdingDays.toDF("condition_holding_days")
-      val rs = cfg.targetReturns.toDF("condition_target_return")
-      val ss = cfg.stopThresholds.toDF("condition_stop_loss_cci_threshold")
-      hs.crossJoin(rs).crossJoin(ss)
-    }
-    tradeOutcomes(c, sig, grid, cfg.maxHolding, Nil)
+  def tradesFromBars(bars: DataFrame, cfg: GridConfig): DataFrame =
+    tradeChain(graft.GraftSession.maybeCache(cciFromBars(bars, cfg)), cfg)
+
+  /** CCI → crossover signals → the condition grid's outcomes. */
+  private def tradeChain(c: DataFrame, cfg: GridConfig): DataFrame = {
+    import c.sparkSession.implicits._
+    val sig = crossover(c, cfg.buyThresholds).select($"user_id",
+      $"d".as("buy_date"), $"idx", $"open_pr".as("buy_price"), $"buy_thr")
+    tradeOutcomes(c, sig, conditionGrid(c.sparkSession, cfg), cfg.maxHolding, Nil)
+  }
+
+  /** holding × target × stop-loss: the broadcast literal condition grid. */
+  private def conditionGrid(spark: SparkSession, cfg: GridConfig): DataFrame = {
+    import spark.implicits._
+    cfg.holdingDays.toDF("condition_holding_days")
+      .crossJoin(cfg.targetReturns.toDF("condition_target_return"))
+      .crossJoin(cfg.stopThresholds.toDF("condition_stop_loss_cci_threshold"))
   }
 
   /** The signal→outcome trade core shared by r06 (`trades`) and the
@@ -1739,13 +1727,8 @@ object CciPipeline {
       .filter($"prev_open_cci" < $"buy_thr" && $"open_cci" > $"buy_thr")
       .select($"user_id", $"d".as("buy_date"), $"idx",
         $"open_pr".as("buy_price"), $"buy_thr", $"search_history_days")
-    val grid = {
-      val hs = HoldingDays.toDF("condition_holding_days")
-      val rs = TargetReturns.toDF("condition_target_return")
-      val ss = StopThresholds.toDF("condition_stop_loss_cci_threshold")
-      hs.crossJoin(rs).crossJoin(ss)
-    }
-    tradeOutcomes(c, sig, grid, MaxHolding, Seq("search_history_days"))
+    tradeOutcomes(c, sig, conditionGrid(spark, GridConfig()), MaxHolding,
+      Seq("search_history_days"))
       .orderBy($"user_id" +: $"buy_date" +: $"search_history_days" +: tradeOrderCols.drop(2): _*)
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities (SURVEY.md §5).
@@ -28,49 +28,9 @@ object Skew {
       .drop("__salt")
   }
 
-  // ----------------------------------------------------- skew benchmark
-  /** Rows / symbols / salts for the bench's Zipf skew demo (x01–x03).
-    * [[zipfTrades]] draws symbol ranks from a Zipf(s≈1) law, the
-    * per-symbol fan-out shape of the reference's
-    * process_all_stocks_with_save_optimized (daily_function.py:905) in
-    * production: KOSPI large-caps trade ~100× small-caps, so a uniform
-    * synthetic corpus never exercises the skew path. Rank 1 carries
-    * ln(2)/ln([[SkewSymbols]]) ≈ 15% of all rows. */
-  val SkewTradeRows = 16000000L
-  val SkewSymbols = 40
-  val SkewSalts = 32
-
-  /** Deterministic Zipf-keyed synthetic trade table: symbol rank via the
-    * inverse CDF `floor(S^u)` on a hashed-uniform u (P(rank = r) ∝ ~1/r;
-    * u < 1 means ranks land in 1..S−1 — the `least` cap is a guard, and
-    * [[symbolStats]] row S is a deliberately tradeless symbol), plus a
-    * ~90-byte payload so the hot shuffle partition carries real bytes, as
-    * a trade row would. Pure codegen off `spark.range` — no driver-side
-    * data. */
-  def zipfTrades(spark: org.apache.spark.sql.SparkSession, n: Long,
-      symbols: Int): DataFrame = {
-    import spark.implicits._
-    val u = (pmod(xxhash64($"id", lit("zipf")), lit(1000000L)).cast("double") + 0.5) /
-      1000000.0
-    spark.range(n).select(
-      $"id".as("trade_id"),
-      least(floor(pow(lit(symbols.toDouble), u)), lit(symbols.toLong))
-        .cast("long").as("symbol_id"),
-      (pmod(xxhash64($"id", lit("qty")), lit(1000L)) + 1L).as("qty"),
-      concat(lit("trade-"), lpad($"id".cast("string"), 64, "0")).as("note"))
-  }
-
-  /** Per-symbol fee schedule (the join's dimension side). */
-  def symbolStats(spark: org.apache.spark.sql.SparkSession, symbols: Int): DataFrame = {
-    import spark.implicits._
-    spark.range(1, symbols + 1)
-      .select($"id".as("s_id"), (pmod($"id" * 7L, lit(100L)) + 1L).as("fee_bps"))
-  }
-
-  /** Bars / series for the CCI-chain skew bench (x04/x05): one
-    * rank-1 series carries ~ln(2)/ln(S) of all bars, so the window-form
-    * rolling CCI funnels it through one sort task. */
-  val SkewBarRows = 8000000L
+  /** Series count for [[zipfBars]] corpora: the rank-1 series carries
+    * ~half of all bars, so the window-form rolling CCI funnels it through
+    * one sort task. */
   val SkewBarSeries = 4
 
   /** Deterministic OHLC bars with Zipf-length series: per-series bar
@@ -98,25 +58,5 @@ object Skew {
         date_add(lit(java.sql.Date.valueOf("2000-01-01")), $"i").as("d"),
         $"close_pr".as("open_pr"), ($"close_pr" + 1.0).as("high_pr"),
         ($"close_pr" - 1.0).as("low_pr"), $"close_pr", lit(1L).as("volume"))
-  }
-
-  /** Fee totals per symbol over a trades ⋈ stats join — the skew-bench
-    * workload. The join is HINTED to sort-merge: at demo scale the
-    * 100-row dim would broadcast and no skew would exist, but at 100 TB
-    * the per-symbol reference data is itself large (both sides shuffle),
-    * which is exactly the shape where one hot symbol stalls a reducer.
-    * `salted = true` routes through [[saltedJoin]]; the plain path's
-    * mitigation is AQE's skew-split (toggled by the bench harness). */
-  def skewedFeeTotals(trades: DataFrame, stats: DataFrame,
-      salted: Boolean): DataFrame = {
-    val joined =
-      if (salted) saltedJoin(trades.hint("merge"), stats, "symbol_id", "s_id",
-        SkewSalts, saltFrom = Seq("trade_id"))
-      else trades.hint("merge").join(stats, col("symbol_id") === col("s_id"))
-    joined
-      .groupBy(col("symbol_id"))
-      .agg(sum(col("qty") * col("fee_bps")).as("fee_total"),
-        count(lit(1)).as("n_trades"))
-      .orderBy(col("symbol_id"))
   }
 }

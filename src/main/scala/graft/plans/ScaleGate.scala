@@ -31,13 +31,14 @@ object ScaleGate {
   * canonicalized plan only softly (a retained LocalRelation would pin its
   * row data), and a hit needs that reference live AND equal to the new
   * plan — a hash collision or a collected reference costs a re-scan.
-  * Bounded: cleared wholesale at 64 entries. Plans over files do not see
-  * the files change under them; sessions that rewrite an input path in
-  * place must build a new path. */
+  * A file-backed plan equals a later one over the same root path, so a
+  * hit also needs the same input file listing: files appended under an
+  * input directory re-run detection. Bounded: cleared wholesale at 64
+  * entries. */
 object HotKeys {
   private val MaxEntries = 64
   private val memo = scala.collection.concurrent.TrieMap.empty[
-    Int, (SoftReference[LogicalPlan], Array[Row])]
+    Int, (SoftReference[LogicalPlan], Seq[String], Array[Row])]
 
   /** At most `maxRows + 1` rows of `detection`: a caller that sees more
     * than `maxRows` applies its own over-bound policy. */
@@ -45,13 +46,14 @@ object HotKeys {
     val bounded = detection.limit(maxRows + 1)
     val plan = bounded.queryExecution.analyzed
     val canon = plan.canonicalized
+    val files = bounded.inputFiles.toSeq.sorted
     val key = plan.semanticHash()
     memo.get(key) match {
-      case Some((ref, rows)) if ref.get == canon => rows
+      case Some((ref, fs, rows)) if ref.get == canon && fs == files => rows
       case _ =>
         val rows = bounded.collect()
         if (memo.size >= MaxEntries) memo.clear()
-        memo.put(key, (new SoftReference(canon), rows))
+        memo.put(key, (new SoftReference(canon), files, rows))
         rows
     }
   }

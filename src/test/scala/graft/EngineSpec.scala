@@ -42,6 +42,30 @@ class EngineSpec extends AnyFunSuite {
     assert(plain == salted)
   }
 
+  test("maybeCache persists at MEMORY_AND_DISK_SER; a second call changes nothing") {
+    import org.apache.spark.storage.StorageLevel
+    def entries = org.apache.spark.sql.execution.CacheEntries.count(spark)
+    def frame = spark.range(0, 1013).selectExpr("id", "id % 7 AS k")
+    val before = entries
+    val df = GraftSession.maybeCache(frame)
+    try {
+      assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK_SER)
+      assert(entries == before + 1)
+      // the same Dataset again, and a rebuilt identical plan
+      Seq(GraftSession.maybeCache(df), GraftSession.maybeCache(frame)).foreach { again =>
+        assert(again.storageLevel == StorageLevel.MEMORY_AND_DISK_SER)
+        assert(entries == before + 1)
+      }
+    } finally df.unpersist(true)
+  }
+
+  test("maybeEagerCheckpoint returns a LogicalRDD-backed frame with the input's rows") {
+    val df = spark.range(0, 509).selectExpr("id", "id * 3 AS v")
+    val cp = GraftSession.maybeEagerCheckpoint(df)
+    assert(cp.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+    assert(cp.collect().sortBy(_.getLong(0)).toSeq == df.collect().sortBy(_.getLong(0)).toSeq)
+  }
+
   test("a01: sketches approximate the exact distinct counts within rsd") {
     val approx = operators.Typed.approxSketches(spark, sf)
       .select("l_returnflag", "approx_parts").collect()

@@ -60,6 +60,34 @@ class LedgerSplitSpec extends AnyFunSuite {
     } finally f.unpersist()
   }
 
+  test("ledger split: files appended under the input directory re-run detection") {
+    // Account 1's appended whale fills land on early dates with order
+    // numbers beyond the first file's range: bounds detected on the first
+    // file would linearize them out of (event_date, order_no) order.
+    def d(i: Long) = Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(i))
+    val extra = (0L until 500L).map { i =>
+      (1L, d(i % 5), 200000L + i, "buy", 1L + i % 3, -(1L + i % 3) * (400L + i % 29))
+    }.toDF("cust_id", "event_date", "order_no", "side", "qty_delta", "cash_delta")
+    val plainFirst = CciPipeline.positionLedgerFrom(spark, fills).collect().toSeq
+    val plain = CciPipeline.positionLedgerFrom(spark, fills.unionByName(extra))
+      .collect().toSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft-ledger-append").toString
+    try {
+      withConfs(
+        CciPipeline.LedgerMinBytesConf -> "0",
+        CciPipeline.LedgerHotRowsConf -> "1000",
+        CciPipeline.LedgerChunksConf -> "4") {
+        fills.write.mode("overwrite").parquet(dir)
+        assert(CciPipeline.positionLedgerFrom(spark, spark.read.parquet(dir))
+          .collect().toSeq == plainFirst)
+        extra.write.mode("append").parquet(dir)
+        val split = CciPipeline.positionLedgerFrom(spark, spark.read.parquet(dir))
+          .collect().toSeq
+        assert(split == plain, "split ledger over the appended directory != plain ledger")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("ledger split: the armed plan windows over (cust, chunk), never the bare account key") {
     withConfs(
       CciPipeline.LedgerMinBytesConf -> "0",

@@ -24,39 +24,6 @@ class SkewSpec extends AnyFunSuite {
     assert(salted.exceptAll(plain).count() == 0 && plain.exceptAll(salted).count() == 0)
   }
 
-  test("zipfTrades: deterministic Zipf law — rank 1 dominates, tail thins as ~1/r") {
-    import spark.implicits._
-    val n = 400000L
-    val t = Skew.zipfTrades(spark, n, Skew.SkewSymbols).cache()
-    val counts = t.groupBy($"symbol_id").count()
-      .orderBy($"symbol_id").collect()
-      .map(r => r.getAs[Long]("symbol_id") -> r.getAs[Long]("count")).toMap
-    // rank 1 carries ln(2)/ln(S) of the corpus (±2% absolute)
-    val expectedShare = math.log(2) / math.log(Skew.SkewSymbols)
-    val share = counts(1L).toDouble / n
-    assert(math.abs(share - expectedShare) < 0.02,
-      s"rank-1 share $share, expected ~$expectedShare")
-    // Zipf decay: rank 1 ≫ rank 4 ≫ rank 16 (factor ~4 each, loose bounds)
-    assert(counts(1L) > 2L * counts(4L) && counts(4L) > 2L * counts(16L))
-    // deterministic: regeneration is bit-identical
-    val again = Skew.zipfTrades(spark, n, Skew.SkewSymbols)
-    assert(t.exceptAll(again).count() == 0 && again.exceptAll(t).count() == 0)
-    t.unpersist()
-  }
-
-  test("skewedFeeTotals: salted variant equals the plain merge join on Zipf data") {
-    val trades = Skew.zipfTrades(spark, 200000L, Skew.SkewSymbols)
-    val stats = Skew.symbolStats(spark, Skew.SkewSymbols)
-    val plain = Skew.skewedFeeTotals(trades, stats, salted = false).collect()
-    val salted = Skew.skewedFeeTotals(trades, stats, salted = true).collect()
-    assert(plain.length == salted.length && plain.nonEmpty)
-    plain.zip(salted).foreach { case (p, s) =>
-      assert(p.getAs[Long]("symbol_id") == s.getAs[Long]("symbol_id"))
-      assert(p.getAs[Long]("fee_total") == s.getAs[Long]("fee_total"))
-      assert(p.getAs[Long]("n_trades") == s.getAs[Long]("n_trades"))
-    }
-  }
-
   test("zipfBars: Zipf series lengths, contiguous dates, chunked CCI equals window CCI") {
     import spark.implicits._
     val bars = Skew.zipfBars(spark, 20000L, 20).cache()
