@@ -122,142 +122,47 @@ object Daily {
   private def overwrite(df: DataFrame, dir: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(dir)
 
-  /** The bar fields a series' rolling-window context carries in the state
-    * table (everything [[CciPipeline.cciFromBars]] consumes). */
-  private val CtxFields = Seq("d", "open_pr", "high_pr", "low_pr", "close_pr", "volume")
-
-  /** Column order of the persisted cci delta partitions — pinned so every
-    * day's partition matches the bootstrap's full-recompute schema. */
-  private val CciCols = Seq("user_id", "d", "open_pr", "high_pr", "low_pr",
-    "close_pr", "volume", "idx", "tp_c", "tp_o", "cnt", "sma_c", "sma_o",
-    "mad_c", "mad_o", "close_cci", "open_cci")
-
-  /** Build the per-series state dimension from a full CCI table — the
-    * bootstrap's one-time O(history) pass. Context recovery uses the
-    * table's own `idx` position state (broadcast per-series max + filter),
-    * NOT a whole-series sort window. */
-  private def stateFromCci(cciState: DataFrame, cfg: GridConfig): DataFrame = {
-    import cciState.sparkSession.implicits._
-    val offs = cciState.groupBy($"user_id").agg(max($"idx").as("mi"))
-    // keep at least the last TWO rows even when the window context needs
-    // fewer (cciN <= 2): the yesterday_open_cci field below reads idx ==
-    // mi - 1, which a bare cciN-1 filter would exclude at cciN = 2 (and
-    // at cciN = 1 it would keep nothing, emptying the state table).
-    // Extra context rows are harmless to the delta windows — they are
-    // bounded at cciN-1 preceding rows — and updateState re-slices ctx
-    // to its steady width.
-    cciState
-      .join(broadcast(offs), Seq("user_id"))
-      .filter($"idx" > $"mi" - math.max(cfg.cciN - 1, 2))
-      .groupBy($"user_id")
-      .agg(
-        max($"d").as("watermark_d"),
-        max($"idx").cast("long").as("n_rows"),
-        sort_array(collect_list(struct(CtxFields.map(col): _*))).as("ctx"),
-        max(when($"idx" === $"mi", $"close_pr")).as("close_pr"),
-        max(when($"idx" === $"mi", $"close_cci")).as("close_cci"),
-        max(when($"idx" === $"mi", $"open_cci")).as("current_open_cci"),
-        max(when($"idx" === $"mi" - 1, $"open_cci")).as("yesterday_open_cci"))
+  /** One `<key>=<value>` partition directory of a workspace table, and
+    * whether its `_SUCCESS` marker exists (a torn write has none). */
+  private[graft] final case class RunPartition(value: String, path: Path,
+      committed: Boolean) {
+    def day: java.sql.Date = java.sql.Date.valueOf(value)
   }
 
-  /** The newest COMMITTED `run_d=` partition of `dir` strictly before `s`
-    * — one filesystem metadata listing plus a read of exactly that
-    * partition (dimension-scale). A crashed day-`s` attempt may have left
-    * its own partial `run_d=s` partition; the strict bound skips it, and
-    * the `_SUCCESS` marker skips any earlier torn write. */
-  private def latestCommitted(spark: SparkSession, dir: String,
-      s: java.sql.Date): Option[DataFrame] = {
+  /** The `<key>=` partitions of `dir` (none when `dir` does not exist) —
+    * one filesystem metadata listing plus one marker probe per partition.
+    * The one partition lister of the daily workspace (`run_d=`) and the
+    * v12 stream workspace (`run_b=`). */
+  private[graft] def runPartitions(spark: SparkSession, dir: String,
+      key: String = "run_d"): Seq[RunPartition] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed =
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.map(_.getPath)
-        .filter(c => c.getName.startsWith("run_d=") &&
-          fs.exists(new Path(c, "_SUCCESS")))
-        .map(c => java.sql.Date.valueOf(c.getName.stripPrefix("run_d=")))
-        .filter(_.before(s))
-    if (committed.isEmpty) None
-    else Some(spark.read.parquet(s"$dir/run_d=${committed.maxBy(_.getTime)}"))
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith(s"$key="))
+      .map(c => RunPartition(c.getName.stripPrefix(s"$key="), c,
+        fs.exists(new Path(c, "_SUCCESS"))))
   }
+
+  /** The newest COMMITTED `run_d=` partition of `dir` strictly before `s`.
+    * A crashed day-`s` attempt may have left its own partial `run_d=s`
+    * partition; the strict bound skips it, and the `_SUCCESS` marker skips
+    * any earlier torn write. */
+  private def latestCommittedPart(spark: SparkSession, dir: String,
+      s: java.sql.Date): Option[RunPartition] = {
+    val before = runPartitions(spark, dir).filter(c => c.committed && c.day.before(s))
+    if (before.isEmpty) None else Some(before.maxBy(_.day.getTime))
+  }
+
+  /** [[latestCommittedPart]] read back — exactly one partition
+    * (dimension-scale). */
+  private def latestCommitted(spark: SparkSession, dir: String,
+      s: java.sql.Date): Option[DataFrame] =
+    latestCommittedPart(spark, dir, s).map(c => spark.read.parquet(s"$dir/run_d=${c.value}"))
 
   private def stateAsOf(spark: SparkSession, ws: Workspace, s: java.sql.Date): DataFrame =
     latestCommitted(spark, ws.stateDir, s).getOrElse(throw new IllegalArgumentException(
       s"daily state: no committed state partition before $s — bootstrap first"))
-
-  /** The r30 incremental recompute driven from the STATE DIMENSION instead
-    * of the cci history: context bars come out of each touched series'
-    * stored `ctx` array, `idx` resumes from the stored position — same
-    * window content as [[CciPipeline.cciIncrementalFrom]], so bit-equal
-    * output, with zero history reads. The two variants share their ground
-    * truth rather than their code: each is independently gated against
-    * the one-shot [[CciPipeline.cciFromBars]] (r30's oracle; DailyRunSpec's
-    * incremental≡full equality), so an edit that forks one from the other
-    * turns a gate red instead of silently diverging. */
-  private def cciDeltaFromState(state: DataFrame, deltaBars: DataFrame,
-      cfg: GridConfig): DataFrame = {
-    import state.sparkSession.implicits._
-    val barCols = ("user_id" +: CtxFields).map(col)
-    val touched = deltaBars.select($"user_id").distinct()
-    val ctxBars = state
-      .join(touched, Seq("user_id"), "left_semi")
-      .select($"user_id", explode($"ctx").as("c"))
-      .select($"user_id" +: CtxFields.map(f => $"c.$f".as(f)): _*)
-      .withColumn("is_delta", lit(false))
-    CciPipeline.cciFromBars(
-        ctxBars.unionByName(
-          deltaBars.select(barCols: _*).withColumn("is_delta", lit(true))), cfg)
-      .filter($"is_delta")
-      // left join: a series new in the delta has no state row -> offset 0
-      .join(state.select($"user_id", $"n_rows", size($"ctx").as("nctx")),
-        Seq("user_id"), "left")
-      .withColumn("idx",
-        ($"idx" + coalesce($"n_rows", lit(0L)) - coalesce($"nctx", lit(0))).cast("int"))
-      .select(CciCols.map(col): _*)
-  }
-
-  /** Fold one day's cci delta into the state dimension: watermark and
-    * `idx` advance, the context window slides, the (current, yesterday)
-    * open-CCI pair shifts — all from a full-outer join of two dimension-/
-    * delta-scale frames. Series the delta never touched pass through
-    * unchanged; series new in the delta enter with no prior state. */
-  private def updateState(state: DataFrame, deltaCci: DataFrame,
-      cfg: GridConfig): DataFrame = {
-    import state.sparkSession.implicits._
-    val ctxLen = cfg.cciN - 1
-    val deltaAgg = deltaCci
-      .groupBy($"user_id")
-      .agg(
-        count(lit(1)).as("delta_n"),
-        max($"d").as("delta_max_d"),
-        sort_array(collect_list(struct(CtxFields.map(col): _*))).as("delta_ctx"),
-        // newest-two rows, idx-ordered: the new (current, yesterday) pair
-        sort_array(collect_list(struct($"idx", $"close_pr", $"close_cci",
-          $"open_cci"))).as("tail"))
-    val last1 = try_element_at($"da.tail", lit(-1))
-    val last2 = try_element_at($"da.tail", lit(-2))
-    val joined = state.as("st").join(deltaAgg.as("da"), Seq("user_id"), "full_outer")
-    val combined = when($"st.ctx".isNull, $"da.delta_ctx")
-      .when($"da.delta_ctx".isNull, $"st.ctx")
-      .otherwise(concat($"st.ctx", $"da.delta_ctx"))
-    joined.select(
-      $"user_id",
-      coalesce($"da.delta_max_d", $"st.watermark_d").as("watermark_d"),
-      (coalesce($"st.n_rows", lit(0L)) + coalesce($"da.delta_n", lit(0L))).as("n_rows"),
-      when(size(combined) <= ctxLen, combined)
-        .otherwise(slice(combined, size(combined) - ctxLen + 1, lit(ctxLen)))
-        .as("ctx"),
-      // no coalesce on the CCI fields: a delta row's null CCI (window not
-      // yet full) must REPLACE the stored value, not fall back to it
-      when($"da.delta_n".isNotNull, last1.getField("close_pr"))
-        .otherwise($"st.close_pr").as("close_pr"),
-      when($"da.delta_n".isNotNull, last1.getField("close_cci"))
-        .otherwise($"st.close_cci").as("close_cci"),
-      when($"da.delta_n".isNotNull, last1.getField("open_cci"))
-        .otherwise($"st.current_open_cci").as("current_open_cci"),
-      when($"da.delta_n" >= 2, last2.getField("open_cci"))
-        .when($"da.delta_n" === 1, $"st.current_open_cci")
-        .otherwise($"st.yesterday_open_cci").as("yesterday_open_cci"))
-  }
 
   /** Bootstrap the workspace from the connector: one bulk fetch of
     * everything up to and including `cutoff` (the reference's initial
@@ -292,7 +197,7 @@ object Daily {
       val cciFull = GraftSession.maybeCache(CciPipeline.cciFromBars(bars, cfg))
       try {
         overwrite(cciFull, s"${ws.cciDir}/run_d=$cutoff")
-        overwrite(stateFromCci(cciFull, cfg), s"${ws.stateDir}/run_d=$cutoff")
+        overwrite(CciPipeline.stateFromCci(cciFull, cfg), s"${ws.stateDir}/run_d=$cutoff")
       } finally cciFull.unpersist()
     } finally bars.unpersist()
   }
@@ -609,10 +514,10 @@ object Daily {
       try {
         overwrite(deltaBars, s"${ws.barsDir}/run_d=$s")
 
-        val deltaCci = GraftSession.maybeCache(cciDeltaFromState(state, deltaBars, cfg))
+        val deltaCci = GraftSession.maybeCache(CciPipeline.cciDeltaFromState(state, deltaBars, cfg))
         try {
           overwrite(deltaCci, s"${ws.cciDir}/run_d=$s")
-          val newState = GraftSession.maybeCache(updateState(state, deltaCci, cfg))
+          val newState = GraftSession.maybeCache(CciPipeline.updateState(state, deltaCci, cfg))
           try {
             overwrite(newState, s"${ws.stateDir}/run_d=$s")
 
@@ -663,19 +568,13 @@ object Daily {
   private val DayScaleBytes = 256L << 20
   private val SmallDayPartitions = 4
 
+  /** Bytes of the latest committed state partition before `s`; none
+    * committed is unknown → keep the session's AQE. */
   private def latestStateBytes(spark: SparkSession, ws: Workspace,
-      s: java.sql.Date): Long = {
-    val p = new Path(ws.stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Long.MaxValue
-    val parts = fs.listStatus(p).toSeq.map(_.getPath)
-      .filter(c => c.getName.startsWith("run_d=") &&
-        fs.exists(new Path(c, "_SUCCESS")))
-      .map(c => (java.sql.Date.valueOf(c.getName.stripPrefix("run_d=")), c))
-      .filter(_._1.before(s))
-    if (parts.isEmpty) Long.MaxValue // unknown → keep the session's AQE
-    else fs.listStatus(parts.maxBy(_._1.getTime)._2).map(_.getLen).sum
-  }
+      s: java.sql.Date): Long =
+    latestCommittedPart(spark, ws.stateDir, s).fold(Long.MaxValue)(c =>
+      c.path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(c.path).map(_.getLen).sum)
 
   private def withDayAqe[T](spark: SparkSession, ws: Workspace,
       s: java.sql.Date)(body: => T): T = {
@@ -769,14 +668,8 @@ object Daily {
     val fromD = java.sql.Date.valueOf(from)
     val dirs = Seq(ws.barsDir, ws.cciDir, ws.stateDir, ws.ordersDir,
       ws.positionsDir, ws.sellsDir, ws.balanceDir, ws.digestDir)
-    dirs.foreach { dir =>
-      val p = new Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p))
-        fs.listStatus(p).toSeq.map(_.getPath)
-          .filter(c => c.getName.startsWith("run_d=") &&
-            !java.sql.Date.valueOf(c.getName.stripPrefix("run_d=")).before(fromD))
-          .foreach(c => fs.delete(c, true))
+    dirs.flatMap(runPartitions(spark, _)).filterNot(_.day.before(fromD)).foreach { c =>
+      c.path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(c.path, true)
     }
     run(spark, conn, ws, from, to, cfg, withOrders, withBalance)
   }
@@ -827,7 +720,6 @@ object Daily {
   def sharedDailyRun(spark: SparkSession, dir: String,
       balanceFed: Boolean): (Workspace, java.sql.Date, LocalDate) =
     sharedRuns.computeIfAbsent((dir, balanceFed), _ => {
-      import spark.implicits._
       // the two sizing modes share ONE chain workspace: the
       // fetch→bars→CCI→state chain is mode-independent (spec-pinned by
       // the r32 piggyback test), so whichever mode runs second resolves
@@ -838,28 +730,39 @@ object Daily {
       val ws = Workspace(graft.operators.Extras.tempDir(
         if (balanceFed) "graft-daily-bal" else "graft-daily-fix"),
         Some(chainRoot))
-      val conn = new LocalFileEventConnector(dir)
-      val maxLd = Tables.events(spark, dir)
-        .agg(max(to_date($"ts"))).head().getDate(0).toLocalDate
-      val start = maxLd.minusDays(6)
-      val cutoff = java.sql.Date.valueOf(start.minusDays(1))
-      // Serialize the orchestration PER DIR, not just per (dir, mode):
-      // computeIfAbsent only locks this map entry, so concurrent first
-      // invocations of the two sizing modes would otherwise both build
-      // the shared chainRoot and could observe (or overwrite) each
-      // other's bars/cci/state partitions mid-commit. The map value
-      // (the interned chainRoot string, one instance per dir) is the
-      // lock; the second mode then always resumes a fully committed
-      // chain, exactly the sequential contract the design assumes.
-      chainRoot.synchronized {
-        bootstrap(spark, conn, ws, cutoff)
-        writeConditions(spark, dir, ws)
-        if (balanceFed) seedBalance(spark, ws, cutoff)
-        run(spark, conn, ws, start, maxLd,
-          withOrders = true, withBalance = balanceFed): Unit
-      }
+      val (cutoff, maxLd) = orchestrate(spark, dir, ws, chainRoot, balanceFed)
       (ws, cutoff, maxLd)
     })
+
+  /** The one orchestration body of [[sharedDailyRun]] and
+    * [[rebuildDailyRun]]: the last week of the events is the run window,
+    * everything before it the bootstrap; then bootstrap → conditions →
+    * balance seed → day loop into `ws`. Returns (cutoff, last day). */
+  private def orchestrate(spark: SparkSession, dir: String, ws: Workspace,
+      chainRoot: String, balanceFed: Boolean): (java.sql.Date, LocalDate) = {
+    import spark.implicits._
+    val conn = new LocalFileEventConnector(dir)
+    val maxLd = Tables.events(spark, dir)
+      .agg(max(to_date($"ts"))).head().getDate(0).toLocalDate
+    val start = maxLd.minusDays(6)
+    val cutoff = java.sql.Date.valueOf(start.minusDays(1))
+    // Serialize the orchestration PER DIR, not just per (dir, mode):
+    // computeIfAbsent only locks its map entry, so concurrent first
+    // invocations of the two sizing modes would otherwise both build
+    // the shared chainRoot and could observe (or overwrite) each
+    // other's bars/cci/state partitions mid-commit. The sharedChains
+    // value (the interned chainRoot string, one instance per dir) is the
+    // lock; the second mode then always resumes a fully committed
+    // chain, exactly the sequential contract the design assumes.
+    chainRoot.synchronized {
+      bootstrap(spark, conn, ws, cutoff)
+      writeConditions(spark, dir, ws)
+      if (balanceFed) seedBalance(spark, ws, cutoff)
+      run(spark, conn, ws, start, maxLd,
+        withOrders = true, withBalance = balanceFed): Unit
+    }
+    (cutoff, maxLd)
+  }
 
   /** The REPEATABLE portion of the daily product for the bench's min-of-N
     * protocol: a fresh-workspace fixed-sizing orchestration that resumes
@@ -880,25 +783,13 @@ object Daily {
     * single-run unadjudicable numbers. */
   def rebuildDailyRun(spark: SparkSession, dir: String,
       balanceFed: Boolean): Unit = {
-    import spark.implicits._
     sharedDailyRun(spark, dir, balanceFed): Unit // chain committed
     val chainRoot = sharedChains.get(dir)
     val ws = Workspace(
       graft.operators.Extras.tempDir(
         if (balanceFed) "graft-daily-rebuild-bal" else "graft-daily-rebuild"),
       Some(chainRoot))
-    val conn = new LocalFileEventConnector(dir)
-    val maxLd = Tables.events(spark, dir)
-      .agg(max(to_date($"ts"))).head().getDate(0).toLocalDate
-    val start = maxLd.minusDays(6)
-    val cutoff = java.sql.Date.valueOf(start.minusDays(1))
-    chainRoot.synchronized {
-      bootstrap(spark, conn, ws, cutoff)
-      writeConditions(spark, dir, ws)
-      if (balanceFed) seedBalance(spark, ws, cutoff)
-      run(spark, conn, ws, start, maxLd,
-        withOrders = true, withBalance = balanceFed): Unit
-    }
+    orchestrate(spark, dir, ws, chainRoot, balanceFed): Unit
   }
 
   /** The six r32-gated digest columns read back off a workspace — the
@@ -1001,17 +892,10 @@ object Daily {
     val conf = spark.sparkContext.hadoopConfiguration
     Seq(from.barsDir -> to.barsDir, from.cciDir -> to.cciDir,
       from.stateDir -> to.stateDir).foreach { case (srcDir, dstDir) =>
-      val sp = new Path(srcDir)
-      val fs = sp.getFileSystem(conf)
-      if (fs.exists(sp)) {
-        fs.mkdirs(new Path(dstDir)): Unit
-        fs.listStatus(sp).toSeq.map(_.getPath)
-          .filter(c => c.getName.startsWith("run_d=") &&
-            java.sql.Date.valueOf(c.getName.stripPrefix("run_d=")).before(x))
-          .foreach { c =>
-            org.apache.hadoop.fs.FileUtil.copy(fs, c,
-              fs, new Path(dstDir, c.getName), false, conf): Unit
-          }
+      runPartitions(spark, srcDir).filter(_.day.before(x)).foreach { c =>
+        val fs = c.path.getFileSystem(conf)
+        org.apache.hadoop.fs.FileUtil.copy(fs, c.path,
+          fs, new Path(dstDir, c.path.getName), false, conf): Unit
       }
     }
   }

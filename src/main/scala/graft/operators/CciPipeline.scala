@@ -438,66 +438,153 @@ object CciPipeline {
     *
     *  - base rows pass through UNTOUCHED (a trailing window never changes
     *    when rows are appended after it) — no window runs over the base;
-    *  - recompute work ∝ delta rows + (cciN−1)·touched series: per-series
-    *    context is recovered from the base TABLE itself (bar columns ride
-    *    along in the cci output precisely so the table is self-sufficient),
-    *    restricted to touched series by a semi join before the window;
-    *  - `idx` (whole-series ordinal) is restored from the base table's own
-    *    max(idx) — position state lives IN the table, not in a side store.
+    *  - recompute work ∝ delta rows + (cciN−1)·touched series: the base is
+    *    restricted to touched series by a semi join, folded into the daily
+    *    loop's per-series STATE rows ([[stateFromCci]]: last context bars +
+    *    `idx` position), and the delta is recomputed from that state by the
+    *    daily loop's own step ([[cciDeltaFromState]]).
     *
     * At 100 TB this is the difference between a daily job that windows the
     * full history (cost ∝ corpus, the naive rerun) and one whose shuffle
     * and window cost tracks the day's arrivals (cost ∝ delta). The fold is
     * the shared [[rollingCci]] via [[cciFromBars]], so equality with the
-    * full recompute is by construction — and driver-gated: r30 runs
-    * against r04's unchanged oracle. */
+    * full recompute is by construction — and driver-gated: r30 runs the
+    * daily loop's resume step against r04's unchanged oracle. */
   def cciIncrementalFrom(baseCci: DataFrame, deltaBars: DataFrame,
       cfg: GridConfig = GridConfig()): DataFrame =
     baseCci.unionByName(
       cciIncrementalDelta(baseCci, deltaBars, cfg).select(baseCci.columns.map(col): _*))
 
   /** The delta-only half of [[cciIncrementalFrom]]: just the recomputed CCI
-    * rows for the appended bars (same schema as `baseCci`), with whole-series
-    * `idx` restored from the base table's position state. This is what an
-    * append-only daily state table persists — the base partition files are
-    * never rewritten ([[graft.Daily]] writes exactly this frame to the day's
-    * `run_d=` partition). */
+    * rows for the appended bars, with whole-series `idx` restored from the
+    * base table's position state. This is what an append-only CCI table
+    * persists — the base partition files are never rewritten. */
   def cciIncrementalDelta(baseCci: DataFrame, deltaBars: DataFrame,
       cfg: GridConfig = GridConfig()): DataFrame = {
     import baseCci.sparkSession.implicits._
-    val barCols = Seq("user_id", "d", "open_pr", "high_pr", "low_pr",
-      "close_pr", "volume").map(col)
-    // Only series the delta touches participate in the recompute; the
-    // rest of the base is a pure pass-through union branch. baseTouched is
-    // read twice (offsets + context) but NOT persisted here: caching
-    // lifetime belongs to the caller (a daily loop persisting inside the
-    // operator would grow executor storage by one entry per run — each
-    // day's base table is a new plan CacheManager can't dedup).
+    // Only series the delta touches enter the state build; the rest of the
+    // base is a pure pass-through union branch. The base is NOT persisted
+    // here: caching lifetime belongs to the caller (a daily loop persisting
+    // inside the operator would grow executor storage by one entry per run
+    // — each day's base table is a new plan CacheManager can't dedup).
+    val baseTouched = baseCci.join(deltaBars.select($"user_id").distinct(),
+      Seq("user_id"), "left_semi")
+    cciDeltaFromState(stateFromCci(baseTouched, cfg), deltaBars, cfg)
+  }
+
+  /** The bar fields a series' rolling-window context carries in the state
+    * table (everything [[cciFromBars]] consumes). */
+  private[graft] val CtxFields = Seq("d", "open_pr", "high_pr", "low_pr", "close_pr", "volume")
+
+  /** Column order of the persisted cci delta partitions — pinned so every
+    * day's partition matches the bootstrap's full-recompute schema. */
+  private[graft] val CciCols = Seq("user_id", "d", "open_pr", "high_pr", "low_pr",
+    "close_pr", "volume", "idx", "tp_c", "tp_o", "cnt", "sma_c", "sma_o",
+    "mad_c", "mad_o", "close_cci", "open_cci")
+
+  /** Build the per-series state dimension from a full CCI table — the
+    * daily bootstrap's one-time O(history) pass, and the first half of
+    * [[cciIncrementalDelta]]. One row per series: `watermark_d`, `n_rows`
+    * (the `idx` position), the `ctx` context bars and the latest
+    * (current, yesterday) open-CCI pair with the latest close. Context
+    * recovery uses the table's own `idx` position state (broadcast
+    * per-series max + filter), NOT a whole-series sort window. */
+  private[graft] def stateFromCci(cciState: DataFrame, cfg: GridConfig): DataFrame = {
+    import cciState.sparkSession.implicits._
+    val offs = cciState.groupBy($"user_id").agg(max($"idx").as("mi"))
+    // keep at least the last TWO rows even when the window context needs
+    // fewer (cciN <= 2): the yesterday_open_cci field below reads idx ==
+    // mi - 1, which a bare cciN-1 filter would exclude at cciN = 2 (and
+    // at cciN = 1 it would keep nothing, emptying the state table).
+    // Extra context rows are harmless to the delta windows — they are
+    // bounded at cciN-1 preceding rows — and updateState re-slices ctx
+    // to its steady width.
+    cciState
+      .join(broadcast(offs), Seq("user_id"))
+      .filter($"idx" > $"mi" - math.max(cfg.cciN - 1, 2))
+      .groupBy($"user_id")
+      .agg(
+        max($"d").as("watermark_d"),
+        max($"idx").cast("long").as("n_rows"),
+        sort_array(collect_list(struct(CtxFields.map(col): _*))).as("ctx"),
+        max(when($"idx" === $"mi", $"close_pr")).as("close_pr"),
+        max(when($"idx" === $"mi", $"close_cci")).as("close_cci"),
+        max(when($"idx" === $"mi", $"open_cci")).as("current_open_cci"),
+        max(when($"idx" === $"mi" - 1, $"open_cci")).as("yesterday_open_cci"))
+  }
+
+  /** The ONE incremental recompute, driven from the STATE DIMENSION:
+    * context bars come out of each touched series' stored `ctx` array and
+    * `idx` resumes from the stored position, offset by `size(ctx)` — so
+    * the extra context rows [[stateFromCci]] keeps below width 3 shift
+    * nothing. The daily loop runs it on each day's stored state; r30, the
+    * v12 stream and ScalingProbe `inc` run it through
+    * [[cciIncrementalDelta]]. Gated against the one-shot [[cciFromBars]]
+    * (r30's oracle, DailyRunSpec's incremental≡full equality). */
+  private[graft] def cciDeltaFromState(state: DataFrame, deltaBars: DataFrame,
+      cfg: GridConfig): DataFrame = {
+    import state.sparkSession.implicits._
+    val barCols = ("user_id" +: CtxFields).map(col)
     val touched = deltaBars.select($"user_id").distinct()
-    val baseTouched = baseCci.join(touched, Seq("user_id"), "left_semi")
-    // Per-series resume state, from the table itself: n0 = rows so far,
-    // nctx = how many of them the window context replays.
-    val offsets = baseTouched.groupBy($"user_id").agg(max($"idx").as("n0"))
-      .withColumn("nctx", least($"n0", lit(cfg.cciN - 1)))
-    // Context = the last cciN−1 rows per touched series, recovered from the
-    // POSITION STATE the table already stores: idx > n0 − (N−1) via a
-    // broadcast join against the per-series max — NOT a row_number window,
-    // which would sort the whole base per series and cost as much as the
-    // full recompute it exists to avoid (caught by ScalingProbe `inc`).
-    val ctxBars = baseTouched
-      .join(broadcast(offsets.select($"user_id", $"n0")), Seq("user_id"))
-      .filter($"idx" > $"n0" - (cfg.cciN - 1))
-      .select(barCols: _*)
+    val ctxBars = state
+      .join(touched, Seq("user_id"), "left_semi")
+      .select($"user_id", explode($"ctx").as("c"))
+      .select($"user_id" +: CtxFields.map(f => $"c.$f".as(f)): _*)
       .withColumn("is_delta", lit(false))
     cciFromBars(
         ctxBars.unionByName(
           deltaBars.select(barCols: _*).withColumn("is_delta", lit(true))), cfg)
       .filter($"is_delta")
-      // left join: a series new in the delta has no base state -> offset 0
-      .join(offsets, Seq("user_id"), "left")
+      // left join: a series new in the delta has no state row -> offset 0
+      .join(state.select($"user_id", $"n_rows", size($"ctx").as("nctx")),
+        Seq("user_id"), "left")
       .withColumn("idx",
-        ($"idx" + coalesce($"n0", lit(0)) - coalesce($"nctx", lit(0))).cast("int"))
-      .drop("is_delta", "n0", "nctx")
+        ($"idx" + coalesce($"n_rows", lit(0L)) - coalesce($"nctx", lit(0))).cast("int"))
+      .select(CciCols.map(col): _*)
+  }
+
+  /** Fold one day's cci delta into the state dimension: watermark and
+    * `idx` advance, the context window slides, the (current, yesterday)
+    * open-CCI pair shifts — all from a full-outer join of two dimension-/
+    * delta-scale frames. Series the delta never touched pass through
+    * unchanged; series new in the delta enter with no prior state. */
+  private[graft] def updateState(state: DataFrame, deltaCci: DataFrame,
+      cfg: GridConfig): DataFrame = {
+    import state.sparkSession.implicits._
+    val ctxLen = cfg.cciN - 1
+    val deltaAgg = deltaCci
+      .groupBy($"user_id")
+      .agg(
+        count(lit(1)).as("delta_n"),
+        max($"d").as("delta_max_d"),
+        sort_array(collect_list(struct(CtxFields.map(col): _*))).as("delta_ctx"),
+        // newest-two rows, idx-ordered: the new (current, yesterday) pair
+        sort_array(collect_list(struct($"idx", $"close_pr", $"close_cci",
+          $"open_cci"))).as("tail"))
+    val last1 = try_element_at($"da.tail", lit(-1))
+    val last2 = try_element_at($"da.tail", lit(-2))
+    val joined = state.as("st").join(deltaAgg.as("da"), Seq("user_id"), "full_outer")
+    val combined = when($"st.ctx".isNull, $"da.delta_ctx")
+      .when($"da.delta_ctx".isNull, $"st.ctx")
+      .otherwise(concat($"st.ctx", $"da.delta_ctx"))
+    joined.select(
+      $"user_id",
+      coalesce($"da.delta_max_d", $"st.watermark_d").as("watermark_d"),
+      (coalesce($"st.n_rows", lit(0L)) + coalesce($"da.delta_n", lit(0L))).as("n_rows"),
+      when(size(combined) <= ctxLen, combined)
+        .otherwise(slice(combined, size(combined) - ctxLen + 1, lit(ctxLen)))
+        .as("ctx"),
+      // no coalesce on the CCI fields: a delta row's null CCI (window not
+      // yet full) must REPLACE the stored value, not fall back to it
+      when($"da.delta_n".isNotNull, last1.getField("close_pr"))
+        .otherwise($"st.close_pr").as("close_pr"),
+      when($"da.delta_n".isNotNull, last1.getField("close_cci"))
+        .otherwise($"st.close_cci").as("close_cci"),
+      when($"da.delta_n".isNotNull, last1.getField("open_cci"))
+        .otherwise($"st.current_open_cci").as("current_open_cci"),
+      when($"da.delta_n" >= 2, last2.getField("open_cci"))
+        .when($"da.delta_n" === 1, $"st.current_open_cci")
+        .otherwise($"st.yesterday_open_cci").as("yesterday_open_cci"))
   }
 
   /** r30 driver entry: split the corpus bars at max(d) − 6 days (the last
@@ -521,9 +608,9 @@ object CciPipeline {
     val cutoff = broadcast(bars.agg(date_sub(max($"d"), 6).as("cutoff")))
     val split = bars.crossJoin(cutoff)
     // The caller-side cache the operator's contract prescribes: the base
-    // CCI subtree is read 4× inside cciIncrementalFrom (pass-through union
-    // + offsets + context + offsets join); uncached, the full-corpus
-    // window would recompute each time. In the production daily loop the
+    // CCI subtree is read 3× inside cciIncrementalFrom (pass-through union
+    // + the state build's per-series max + its context filter); uncached,
+    // the full-corpus window would recompute each time. In the production daily loop the
     // base is a persisted TABLE (ScalingProbe lands it in parquet), so
     // this demo entry is the only place the cache is needed.
     val baseCci = graft.GraftSession.maybeCache(

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -24,15 +23,16 @@ import graft.operators.CciPipeline.GridConfig
   *
   * Fault tolerance: Structured Streaming replays a crashed micro-batch
   * from its checkpoint with the SAME batchId; both writes below overwrite
-  * exactly their own `run_b=<batchId>` partitions and the base read prunes
-  * to `run_b < batchId`, so a replay is file-for-file idempotent — the
-  * v10 lesson (never merge into state a crashed attempt may have touched)
+  * exactly their own `run_b=<batchId>` partitions and the base reads only
+  * the committed (`_SUCCESS`) `run_b < batchId` partitions, so a replay is
+  * file-for-file idempotent and a torn write is never read — the v10
+  * lesson (never merge into state a crashed attempt may have touched)
   * applied via partition isolation instead of a manifest.
   *
-  * Scale shape: identical to the batch loop — per-batch cost tracks the
-  * delta, the base is touched only through a series-pruned semi join +
-  * broadcast of per-series offsets, and state reads prune on the run_b
-  * partition column. */
+  * Scale shape: identical to the batch loop, whose resume step it runs
+  * ([[CciPipeline.cciIncrementalDelta]]) — per-batch cost tracks the
+  * delta, and the base is touched only through a series-pruned semi join
+  * into per-series state rows. */
 object DailyStream {
 
   /** Workspace for the streamed variant: same append-only layout as
@@ -53,11 +53,6 @@ object DailyStream {
       .option("maxFilesPerTrigger", "1") // one feed file per micro-batch
       .parquet(streamDir)
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Land one micro-batch: bars delta + incremental CCI delta, each to its
     * own `run_b=<batchId>` partition. Public so the spec can drive replay
     * semantics deterministically; the streaming query wires it into
@@ -76,13 +71,14 @@ object DailyStream {
         // batch bars.
         deltaBars.write.mode(SaveMode.Overwrite)
           .parquet(s"${ws.barsDir}/run_b=$batchId")
-        // base = every batch committed BEFORE this one; a replayed batch
-        // never sees its own crashed partition
+        // base = every batch COMMITTED before this one: a replayed batch
+        // never sees its own crashed partition, and a torn write (no
+        // _SUCCESS, possibly no files at all) is never read
+        val committed = graft.Daily.runPartitions(spark, ws.cciDir, "run_b")
+          .filter(c => c.committed && c.value.toLong < batchId)
         val base =
-          if (exists(spark, ws.cciDir))
-            spark.read.parquet(ws.cciDir)
-              .filter(col("run_b") < lit(batchId)).drop("run_b")
-          else CciPipeline.cciFromBars(deltaBars.limit(0), cfg) // schema-only
+          if (committed.isEmpty) CciPipeline.cciFromBars(deltaBars.limit(0), cfg) // schema-only
+          else spark.read.parquet(committed.map(c => s"${ws.cciDir}/run_b=${c.value}"): _*)
         CciPipeline.cciIncrementalDelta(base, deltaBars, cfg)
           .select(base.columns.map(col): _*)
           .write.mode(SaveMode.Overwrite)
