@@ -3,7 +3,7 @@ package graft
 import java.time.LocalDate
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.CciPipeline
@@ -18,7 +18,8 @@ import graft.sources.{EventConnector, LocalFileEventConnector, Tables}
   * Every stage exists as an oracle-gated operator (r21 watermark, r31
   * connector fetch, r02/r03 bars upsert, r30 incremental CCI, r05/r09
   * signals/recommendations, r13 orders, r22 holiday gate, r23 digest); this
-  * object composes them over a persisted workspace, day after day.
+  * object composes them over a persisted workspace, day after day; its
+  * order step is r13's own [[CciPipeline.orderRows]] over the state rows.
   *
   * == Workspace layout (append-only, partitioned by run day) ==
   * {{{
@@ -105,6 +106,19 @@ object Daily {
     * (daily_function.py:1466-1474; KRW has no decimals, cents are the
     * engine's exact-money convention, SURVEY §6). */
   val InitialBalanceCents: Long = (Budget * 100.0).toLong
+
+  /** r36's order size for [[CciPipeline.orderRows]], read off the
+    * `bal_cents` snapshot column (daily_function.py:1466-1474): >= 1M won
+    * sizes a 10% slice per order; a smaller positive balance places
+    * minimum qty-1 orders; a non-positive snapshot places nothing (the
+    * broker's insufficient-funds rejection, made deterministic). */
+  private[graft] val balanceQty: Column =
+    when(col("buy_order_price") =!= 0.0,
+      when(col("bal_cents") >= InitialBalanceCents,
+        floor(floor(col("bal_cents") / 1000.0) / col("buy_order_price") + 0.5))
+        .when(col("bal_cents") > 0, lit(1.0))
+        .otherwise(lit(0.0)))
+      .cast("long")
 
   /** One row per executed run day — the r23 digest, per day. */
   final case class DayDigest(
@@ -206,10 +220,7 @@ object Daily {
     * reference's stored strategy table, refreshed on its own cadence by the
     * r06–r08 grid sim — daily runs read it, they don't rebuild it). */
   def writeConditions(spark: SparkSession, dir: String, ws: Workspace): Unit =
-    overwrite(
-      CciPipeline.bestOf(spark, dir)
-        .filter(col("investment_target") === "win_rate")
-        .drop("investment_target"),
+    overwrite(CciPipeline.bestWinFrame(spark, dir).drop("investment_target"),
       ws.conditionsDir)
 
   /** The day's mode-dependent TAIL — the digest stats actions, the
@@ -234,8 +245,7 @@ object Daily {
     // makes the condition null and counts 0, exactly like the former
     // filter+count.
     val sigCnt = cfg.buyThresholds.map(t =>
-        sum(when($"yesterday_open_cci" < t &&
-          $"current_open_cci" >= t, 1L).otherwise(0L)))
+        sum(when(CciPipeline.buySignal(lit(t)), 1L).otherwise(0L)))
       .reduce(_ + _)
     val Seq(nBarsNew, nFetched, nCciNew, nCciTotal, nSeries, nSignals) =
       deltaBars
@@ -246,10 +256,10 @@ object Daily {
         .head().toSeq.map(_.asInstanceOf[Long])
 
     val latest = newState.select($"user_id",
-      $"watermark_d".as("state_d"), $"close_pr", $"close_cci",
+      $"watermark_d".as("d"), $"close_pr", $"close_cci",
       $"current_open_cci", $"yesterday_open_cci")
 
-    // r13's order sizing against the persisted conditions dim,
+    // r13's order step against the persisted conditions dim,
     // then the position carry (r34): yesterday's open lots are
     // scanned with today's state — the reference's daily sell scan
     // (daily_function.py:1713 create_sell_order_data, :1828 sell
@@ -268,53 +278,18 @@ object Daily {
           throw new IllegalArgumentException(
             s"daily balance: no committed balance partition before $s — seed the workspace"))
           .select($"bal_end_cents".as("bal_cents")))
-      val ordersBase = spark.read.parquet(ws.conditionsDir)
-        .join(latest, Seq("user_id"))
-        .filter($"yesterday_open_cci" < $"condition_buy_cci_threshold" &&
-          $"current_open_cci" >= $"condition_buy_cci_threshold")
-        .withColumn("order_date", $"state_d")
-        .withColumn("buy_order_price", $"close_pr")
-      val sized = balSnap match {
-        case None =>
-          // r13/r34 sizing: the fixed 10%-of-seed budget slice
-          ordersBase.withColumn("buy_order_qty",
-            when($"buy_order_price" =!= 0.0,
-              floor(floor(lit(Budget * BudgetFraction)) / $"buy_order_price" + 0.5))
-              .cast("long"))
-        case Some(bal) =>
-          // The reference's balance-driven sizing
-          // (daily_function.py:1466-1474): >= 1M won -> a 10%
-          // slice per order; a smaller positive balance places
-          // minimum qty-1 orders; a non-positive snapshot places
-          // nothing (the broker's insufficient-funds rejection,
-          // made deterministic)
-          ordersBase.crossJoin(broadcast(bal))
-            .withColumn("buy_order_qty",
-              when($"buy_order_price" =!= 0.0,
-                when($"bal_cents" >= InitialBalanceCents,
-                  floor(floor($"bal_cents" / 1000.0) / $"buy_order_price" + 0.5))
-                  .when($"bal_cents" > 0, lit(1.0))
-                  .otherwise(lit(0.0)))
-                .cast("long"))
-            .drop("bal_cents")
+      // r13/r34 size by the fixed 10%-of-seed budget slice, r36 by
+      // the balance snapshot, which rides each latest row
+      val (sizedOn, qty) = balSnap match {
+        case None => (latest, CciPipeline.fixedSliceQty)
+        case Some(bal) => (latest.crossJoin(broadcast(bal)), balanceQty)
       }
       // the orders plan feeds up to four consumers (its own
       // write, the fresh-buys gate into positions, the settlement
       // cost sum, the committed read-back) — cache it so the
       // conditions⨝latest sizing chain runs once, not per consumer
-      val orders = GraftSession.maybeCache(sized
-        .filter($"buy_order_qty" >= 1)
-        .withColumn("net_target_price",
-          floor(($"buy_order_price" * (lit(1.0) +
-            ($"condition_target_return" + TaxRate + FeeRate) / 100.0)) * 1.0 + 0.5) / 1.0)
-        .withColumn("sell_signal",
-          when($"close_pr" > $"net_target_price", lit("reach_target"))
-            .when($"close_cci" <= $"condition_stop_loss_cci_threshold", lit("stop_loss"))
-            .otherwise(lit("pending")))
-        .select($"user_id", $"order_date", $"buy_order_price", $"buy_order_qty",
-          $"condition_holding_days", $"condition_target_return",
-          $"condition_buy_cci_threshold", $"condition_stop_loss_cci_threshold",
-          $"win_rate", $"revenue_rate", $"net_target_price", $"sell_signal"))
+      val orders = GraftSession.maybeCache(CciPipeline.orderRows(
+        spark.read.parquet(ws.conditionsDir), sizedOn, qty))
       var scoredCache: Option[DataFrame] = None
       try {
       overwrite(orders, s"${ws.ordersDir}/run_d=$s")
@@ -344,7 +319,7 @@ object Daily {
           // cached like `orders`: the scan feeds the sells write,
           // the open carry and the settlement proceeds sum
           val scored = GraftSession.maybeCache(pos
-            .join(latest.select($"user_id", $"state_d",
+            .join(latest.select($"user_id", $"d".as("state_d"),
                 $"close_pr".as("day_close_pr"),
                 $"close_cci".as("day_close_cci")),
               Seq("user_id"))
@@ -687,16 +662,6 @@ object Daily {
   }
 
   // ---------------------------------------------------------------- r32
-  /** The driver-gated face of the daily run: bootstrap on everything before
-    * the last week, then run the week's trading days incrementally in a
-    * fresh workspace, and emit the per-day digests. The DuckDB oracle
-    * recomputes every digest from scratch on the raw events — the gate
-    * proves the persisted incremental chain (watermark → fetch → bars →
-    * incremental CCI → signal scan) is indistinguishable, day by day, from
-    * a full recompute. Key identities the oracle leans on: CCI state as of
-    * day s ≡ the full-corpus CCI restricted to d ≤ s (trailing windows
-    * never change under append), and each event row is fetched exactly once
-    * — on the first trading day ≥ its date. */
   /** One orchestrated run of the composed daily product per (events dir,
     * sizing mode), shared by the three daily gates: the reference runs ONE
     * daily app (app.py:49 execute_pipeline) whose single cron invocation
@@ -806,6 +771,16 @@ object Daily {
       .orderBy($"d")
   }
 
+  /** The driver-gated face of the daily run: bootstrap on everything before
+    * the last week, then run the week's trading days incrementally in a
+    * fresh workspace, and emit the per-day digests. The DuckDB oracle
+    * recomputes every digest from scratch on the raw events — the gate
+    * proves the persisted incremental chain (watermark → fetch → bars →
+    * incremental CCI → signal scan) is indistinguishable, day by day, from
+    * a full recompute. Key identities the oracle leans on: CCI state as of
+    * day s ≡ the full-corpus CCI restricted to d ≤ s (trailing windows
+    * never change under append), and each event row is fetched exactly once
+    * — on the first trading day ≥ its date. */
   def dailyRunQuery(spark: SparkSession, dir: String): DataFrame = {
     val (ws, cutoff, _) = sharedDailyRun(spark, dir, balanceFed = true)
     digestFace(spark, ws, cutoff)

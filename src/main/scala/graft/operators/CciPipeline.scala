@@ -1023,19 +1023,34 @@ object CciPipeline {
   private[graft] def bestWinFrame(spark: SparkSession, dir: String): DataFrame =
     bestOf(spark, dir).filter(col("investment_target") === "win_rate")
 
+  /** Per series, the last CCI row and the lagged open CCI: the latest
+    * crossover state r09's recommendations and r13's orders read. The
+    * daily state row carries the same columns (its watermark as `d`), so
+    * the daily order step feeds [[orderRows]] the same shape. */
+  private[graft] def latestState(c: DataFrame): DataFrame = {
+    import c.sparkSession.implicits._
+    val w = Window.partitionBy($"user_id").orderBy($"d")
+    val wDesc = Window.partitionBy($"user_id").orderBy($"d".desc)
+    c.withColumn("prev_open_cci", lag($"open_cci", 1).over(w))
+      .withColumn("rrn", row_number().over(wDesc))
+      .filter($"rrn" === 1)
+      .select($"user_id", $"d", $"open_pr", $"close_pr", $"close_cci",
+        $"open_cci".as("current_open_cci"), $"prev_open_cci".as("yesterday_open_cci"))
+  }
+
+  /** The buy rule on a latest-state row: yesterday's open CCI below the
+    * threshold, today's at or above it (a null CCI is no signal). */
+  private[graft] def buySignal(thr: Column): Column =
+    col("yesterday_open_cci") < thr && col("current_open_cci") >= thr
+
   /** r09 body over a caller-supplied best-win frame — semantics single-
     * sourced with [[recommendations]] (which is gated by the r09 oracle). */
   private[graft] def recommendationsFrom(spark: SparkSession, dir: String,
       bw: DataFrame): DataFrame = {
     import spark.implicits._
-    val w = Window.partitionBy($"user_id").orderBy($"d")
-    val wDesc = Window.partitionBy($"user_id").orderBy($"d".desc)
-    val latest = cci(spark, dir)
-      .withColumn("prev_open_cci", lag($"open_cci", 1).over(w))
-      .withColumn("rrn", row_number().over(wDesc))
-      .filter($"rrn" === 1)
-      .select($"user_id", $"open_pr".as("buy_price"),
-        $"open_cci".as("current_open_cci"), $"prev_open_cci".as("yesterday_open_cci"))
+    val latest = latestState(cci(spark, dir))
+      .select($"user_id", $"open_pr".as("buy_price"), $"current_open_cci",
+        $"yesterday_open_cci")
     val bestWin = bw
       .select($"user_id", $"condition_holding_days", $"condition_target_return",
         $"condition_buy_cci_threshold", $"condition_stop_loss_cci_threshold",
@@ -1044,8 +1059,7 @@ object CciPipeline {
     bestWin
       .join(latest, Seq("user_id"))
       .withColumn("has_buy_signal",
-        when($"yesterday_open_cci" < $"condition_buy_cci_threshold" &&
-          $"current_open_cci" >= $"condition_buy_cci_threshold", 1).otherwise(0))
+        when(buySignal($"condition_buy_cci_threshold"), 1).otherwise(0))
       .select($"user_id", $"buy_price",
         (floor(($"current_open_cci") * 10000.0 + 0.5) / 10000.0).as("current_open_cci"),
         (floor(($"yesterday_open_cci") * 10000.0 + 0.5) / 10000.0).as("yesterday_open_cci"),
@@ -1116,34 +1130,42 @@ object CciPipeline {
   val Budget = 1000000.0
   val BudgetFraction = 0.1
 
+  /** r13's order size: the fixed 10%-of-budget slice at the buy price. */
+  private[graft] val fixedSliceQty: Column =
+    when(col("buy_order_price") =!= 0.0, // ANSI divide-by-zero guard
+      floor(floor(lit(Budget * BudgetFraction)) / col("buy_order_price") + 0.5).cast("long"))
+
+  /** The target price net of tax and fee (reference
+    * daily_function.py:1743-1744), whole won, half up. */
+  private[graft] def netTargetPrice(price: Column): Column =
+    floor((price * (lit(1.0) + (col("condition_target_return") + TaxRate + FeeRate) / 100.0)) * 1.0 + 0.5) / 1.0
+
   /** Order lifecycle (reference create_buy_order_data /
     * create_sell_order_data, daily_function.py:1335-1584,1713-1824):
     * best-condition series with a live crossover signal get a sized buy
     * order (10% of budget at the latest close), and the same day's state
     * decides the sell signal — target price net of tax+fee, or stop-loss
     * CCI — otherwise the position is pending. */
-  def orderLifecycle(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val w = Window.partitionBy($"user_id").orderBy($"d")
-    val wDesc = Window.partitionBy($"user_id").orderBy($"d".desc)
-    val latest = cci(spark, dir)
-      .withColumn("prev_open_cci", lag($"open_cci", 1).over(w))
-      .withColumn("rrn", row_number().over(wDesc))
-      .filter($"rrn" === 1)
-      .select($"user_id", $"d".as("order_date"), $"close_pr", $"close_cci",
-        $"open_cci".as("current_open_cci"), $"prev_open_cci".as("yesterday_open_cci"))
-    val bestWin = bestOf(spark, dir).filter($"investment_target" === "win_rate")
+  def orderLifecycle(spark: SparkSession, dir: String): DataFrame =
+    orderRows(bestWinFrame(spark, dir), latestState(cci(spark, dir)), fixedSliceQty)
+      .orderBy(col("user_id"))
+
+  /** The one order step, shared by r13 and the daily product: best
+    * conditions joined to each series' [[latestState]], the buy signal,
+    * the order at the latest close sized by `qty` (orders under one share
+    * drop), the net target price and the sell signal. `latest` may carry
+    * extra columns `qty` reads (the daily balance snapshot); the result
+    * is the 12 order columns. */
+  private[graft] def orderRows(bestWin: DataFrame, latest: DataFrame,
+      qty: Column): DataFrame = {
+    import bestWin.sparkSession.implicits._
     bestWin
-      .join(latest, Seq("user_id"))
-      .filter($"yesterday_open_cci" < $"condition_buy_cci_threshold" &&
-        $"current_open_cci" >= $"condition_buy_cci_threshold")
+      .join(latest.withColumnRenamed("d", "order_date"), Seq("user_id"))
+      .filter(buySignal($"condition_buy_cci_threshold"))
       .withColumn("buy_order_price", $"close_pr")
-      .withColumn("buy_order_qty",
-        when($"buy_order_price" =!= 0.0, // ANSI divide-by-zero guard
-          floor(floor(lit(Budget * BudgetFraction)) / $"buy_order_price" + 0.5).cast("long")))
+      .withColumn("buy_order_qty", qty)
       .filter($"buy_order_qty" >= 1)
-      .withColumn("net_target_price",
-        floor(($"buy_order_price" * (lit(1.0) + ($"condition_target_return" + TaxRate + FeeRate) / 100.0)) * 1.0 + 0.5) / 1.0)
+      .withColumn("net_target_price", netTargetPrice($"buy_order_price"))
       .withColumn("sell_signal",
         when($"close_pr" > $"net_target_price", lit("reach_target"))
           .when($"close_cci" <= $"condition_stop_loss_cci_threshold", lit("stop_loss"))
@@ -1152,7 +1174,6 @@ object CciPipeline {
         $"condition_holding_days", $"condition_target_return",
         $"condition_buy_cci_threshold", $"condition_stop_loss_cci_threshold",
         $"win_rate", $"revenue_rate", $"net_target_price", $"sell_signal")
-      .orderBy($"user_id")
   }
 
   val orderLifecycleSql: String =
@@ -1243,8 +1264,7 @@ object CciPipeline {
         when($"buy_price" =!= 0.0,
           floor((($"sell_price" - $"buy_price" - $"sell_price" * TaxRate -
             ($"buy_price" + $"sell_price") * FeeRate) / $"buy_price" * 100.0) * 100.0 + 0.5) / 100.0))
-      .withColumn("net_target_price",
-        floor(($"buy_price" * (lit(1.0) + ($"condition_target_return" + TaxRate + FeeRate) / 100.0)) * 1.0 + 0.5) / 1.0)
+      .withColumn("net_target_price", netTargetPrice($"buy_price"))
       .orderBy(tradeOrderCols: _*)
   }
 

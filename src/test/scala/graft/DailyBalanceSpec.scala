@@ -2,6 +2,7 @@ package graft
 
 import java.time.Instant
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -126,6 +127,31 @@ class DailyBalanceSpec extends AnyFunSuite {
     assert(digs.map(_.n_positions).sum == 0, "no lot ever opens")
     val t = trajectory(ws)
     assert(t.forall { case (_, b0, c, p, b1) => b0 == 0 && c == 0 && p == 0 && b1 == 0 })
+  }
+
+  test("a crossover at a zero close price places no order under any sizing") {
+    import spark.implicits._
+    import graft.operators.CciPipeline
+    val conds = Seq(1L, 2L).map(u => (u, 5, 2.0, 0.0, -100.0, 0.6, 3.5))
+      .toDF("user_id", "condition_holding_days", "condition_target_return",
+        "condition_buy_cci_threshold", "condition_stop_loss_cci_threshold",
+        "win_rate", "revenue_rate")
+    // both series cross the 0 threshold today; series 1 closes at 0.0
+    val d = java.sql.Date.valueOf("2024-03-05")
+    val latest = Seq((1L, 0.0), (2L, 120.0))
+      .map { case (u, px) => (u, d, px, 20.0, 50.0, -50.0) }
+      .toDF("user_id", "d", "close_pr", "close_cci", "current_open_cci",
+        "yesterday_open_cci")
+    def qtys(lat: DataFrame, qty: Column): Map[Long, Long] =
+      CciPipeline.orderRows(conds, lat, qty).collect()
+        .map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("buy_order_qty")).toMap
+    def withBal(cents: Long) = latest.crossJoin(Seq(cents).toDF("bal_cents"))
+    // floor(100,000 / 120 + 0.5): the 10% slice of the 1M-won budget
+    assert(qtys(latest, CciPipeline.fixedSliceQty) == Map(2L -> 833L))
+    assert(qtys(withBal(Daily.InitialBalanceCents), Daily.balanceQty) == Map(2L -> 833L))
+    assert(qtys(withBal(5000000L), Daily.balanceQty) == Map(2L -> 1L))
+    Seq(0L, -100L).foreach(c =>
+      assert(qtys(withBal(c), Daily.balanceQty).isEmpty, s"balance $c cents"))
   }
 
   test("mode upgrade: a week committed WITHOUT orders re-runs its days when orders+balance are requested") {

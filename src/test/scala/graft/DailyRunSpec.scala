@@ -44,10 +44,37 @@ class DailyRunSpec extends AnyFunSuite {
 
   /** One-shot full recompute truncated at `lastDay` — the state the
     * incremental chain must be indistinguishable from. */
-  private def oneShotCci(lastDay: java.sql.Date): DataFrame =
+  private def oneShotCci(lastDay: java.sql.Date, dir: String = sf): DataFrame =
     CciPipeline.cciFromBars(
-      CciPipeline.ohlcBars(spark, sf).filter(col("d") <= lit(lastDay)),
+      CciPipeline.ohlcBars(spark, dir).filter(col("d") <= lit(lastDay)),
       GridConfig())
+
+  private val CraftedUser = 1000000L
+
+  /** The sf events plus one crafted series whose last bar, on `lastDay`,
+    * is an order on which the sell-signal precedence and the `>=` of the
+    * buy rule both decide. Each day's high and low are 14 and 6, so the
+    * typical open price is exactly (20 + open) / 3. Over the last five bars
+    * it is 11, 9, 11, 9, 10: the open CCI is exactly 0.0 today and below 0
+    * yesterday. The closes step from ~10.5 down to 10.2, so the close CCI
+    * is about -167, and a 10.2 buy rounds its 2% net target down to 10. */
+  private def withCraftedSeries(lastDay: LocalDate): String = {
+    import spark.implicits._
+    val opens = Seq(10.0, 10.0, 10.0, 10.0, 10.0, 13.0, 7.0, 13.0, 7.0, 10.0)
+    val closes = opens.indices.map(i => if (i == 9) 10.2 else if (i % 2 == 0) 10.5 else 10.6)
+    val rows = for {
+      i <- opens.indices
+      ((hh, v), k) <- Seq("09" -> opens(i), "10" -> 14.0, "11" -> 6.0,
+        "15" -> closes(i)).zipWithIndex
+    } yield (CraftedUser * 100 + i * 4 + k, java.sql.Timestamp.from(
+        java.time.Instant.parse(s"${lastDay.minusDays(9 - i)}T$hh:00:00Z")),
+      CraftedUser, "px", v, "{}")
+    val dir = java.nio.file.Files.createTempDirectory("graft-daily-crafted").toString
+    Tables.events(spark, sf).unionByName(
+        rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"))
+      .write.parquet(s"$dir/events.parquet")
+    dir
+  }
 
   test("daily loop: ten incremental days == one-shot full recompute, bit-equal") {
     val ws = newWs()
@@ -222,18 +249,34 @@ class DailyRunSpec extends AnyFunSuite {
 
   test("daily orders: final-day order table matches an independent one-shot r13 formulation") {
     val ws = newWs()
-    val conn = new LocalFileEventConnector(sf)
     val start = maxLd.minusDays(6)
+    val tradingDay = Iterator.iterate(maxLd)(_.minusDays(1))
+      .find(CciPipeline.isTradingDayLocal).get
+    val dir = withCraftedSeries(tradingDay)
+    val conn = new LocalFileEventConnector(dir)
     Daily.bootstrap(spark, conn, ws, java.sql.Date.valueOf(start.minusDays(1)))
     Daily.writeConditions(spark, sf, ws)
+    // the crafted series' strategy: buy on an open-CCI cross of 0, stop
+    // at -100, 2% target; its other columns copy an sf condition row
+    val conds = spark.read.parquet(ws.conditionsDir)
+    spark.createDataFrame(
+        java.util.Arrays.asList(conds.limit(1)
+          .withColumn("user_id", lit(CraftedUser))
+          .withColumn("condition_target_return", lit(2.0))
+          .withColumn("condition_buy_cci_threshold", lit(0.0))
+          .withColumn("condition_stop_loss_cci_threshold", lit(-100.0))
+          .head()),
+        conds.schema)
+      .write.mode("append").parquet(ws.conditionsDir)
     val digs = Daily.run(spark, conn, ws, start, maxLd, withOrders = true)
     val lastDay = digs.last.d
+    assert(lastDay.toLocalDate == tradingDay)
 
     // independent latest-state mechanism: lag window + row_number desc
     // (the daily path recovers it from idx position state instead)
     val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
     val wDesc = Window.partitionBy(col("user_id")).orderBy(col("d").desc)
-    val latest = oneShotCci(lastDay)
+    val latest = oneShotCci(lastDay, dir)
       .withColumn("yesterday_open_cci", lag(col("open_cci"), 1).over(w))
       .withColumn("rrn", row_number().over(wDesc))
       .filter(col("rrn") === 1)
@@ -241,6 +284,10 @@ class DailyRunSpec extends AnyFunSuite {
         col("close_cci"), col("open_cci").as("current_open_cci"),
         col("yesterday_open_cci"))
     val b = CciPipeline.Budget * CciPipeline.BudgetFraction
+    val orderCols = Seq("user_id", "order_date", "buy_order_price", "buy_order_qty",
+      "condition_holding_days", "condition_target_return",
+      "condition_buy_cci_threshold", "condition_stop_loss_cci_threshold",
+      "win_rate", "revenue_rate", "net_target_price", "sell_signal").map(col)
     val expect = spark.read.parquet(ws.conditionsDir)
       .join(latest, Seq("user_id"))
       .filter(col("yesterday_open_cci") < col("condition_buy_cci_threshold") &&
@@ -249,19 +296,28 @@ class DailyRunSpec extends AnyFunSuite {
       .withColumn("buy_order_qty", when(col("buy_order_price") =!= 0.0,
         floor(floor(lit(b)) / col("buy_order_price") + 0.5).cast("long")))
       .filter(col("buy_order_qty") >= 1)
-      .select(col("user_id"), col("order_date"), col("buy_order_price"),
-        col("buy_order_qty"))
+      // whole-won target net of tax and fee, half up
+      .withColumn("net_target_price", floor(col("buy_order_price") *
+        (lit(1.0) + (col("condition_target_return") + CciPipeline.TaxRate +
+          CciPipeline.FeeRate) / 100.0) + 0.5).cast("double"))
+      .withColumn("sell_signal",
+        when(col("close_pr") > col("net_target_price"), "reach_target")
+          .when(col("close_cci") <= col("condition_stop_loss_cci_threshold"), "stop_loss")
+          .otherwise("pending"))
+      .select(orderCols: _*)
       .orderBy(col("user_id"))
       .collect()
 
     val got = spark.read.parquet(s"${ws.ordersDir}/run_d=$lastDay")
-      .select(col("user_id"), col("order_date"), col("buy_order_price"),
-        col("buy_order_qty"))
+      .select(orderCols: _*)
       .orderBy(col("user_id"))
       .collect()
     assert(digs.last.n_orders == got.length)
     assert(got.length == expect.length)
     got.zip(expect).foreach { case (a, e) => assert(a == e, s"\n$a\n$e") }
+    assert(got.exists(r => r.getAs[Long]("user_id") == CraftedUser &&
+      r.getAs[String]("sell_signal") == "reach_target"),
+      "the crafted crossover orders at 10.2 and reaches its target")
   }
 
   test("daily reads are ∝ delta: a day runs bit-identically with the ENTIRE bars+cci history deleted") {
