@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session-scoped memoizer for expensive derived state (fitted models,
-  * converged fixpoints, trained codebooks).
+  * trained codebooks and merge tables, registered views).
   *
   * Reachability contract (the round-4 review found the previous
   * WeakHashMap-of-strong-values ineffective — a cached DataFrame/model

@@ -320,9 +320,6 @@ object SparkEntry {
     // algorithm whose exact support counts a SQL oracle can pin
     "ml05_frequent_pairs" -> (graft.ml.Features.frequentPairs _),
     "p05b_stratified_presplit" -> (Curation.stratifiedSamplePresplitQuery _),
-    // d07b: the large-star/small-star CC core — same clusters, same
-    // oracle as d07; the long-chain swap-in pinned under the driver gate
-    "d07b_dedup_clusters_stars" -> (graft.dedup.Dedup.dedupClustersStars _),
     // s05b: PQ serving with an external request batch (own id space) ->
     // rows-only like s05; rank-1 self-recall asserted in LlmOpsSpec
     "s05b_ann_pq_served" -> (graft.similarity.Similarity.pqServe _),
@@ -529,7 +526,6 @@ object SparkEntry {
     "t15_doc_chunk" -> TextAnalysis.docChunkSql,
     "v14b_chunk_ingest" -> graft.streaming.DocStream.chunkIngestBatchSql,
     "p12_manifest_diff" -> Curation.manifestDiffSql,
-    "d07b_dedup_clusters_stars" -> graft.dedup.Dedup.dedupClustersSql,
     "p05b_stratified_presplit" -> Curation.stratifiedSamplePresplitSql,
     "v02b_windowed_counts" -> graft.streaming.EventStream.windowedCountsBatchSql,
     "v04b_cohort_join" -> graft.streaming.EventStream.streamStaticJoinBatchSql,

@@ -586,8 +586,17 @@ object Dedup {
       .join(bands.toDF("doc_b", "band", "bkey"), Seq("band", "bkey"))
       .filter($"doc_a" < $"doc_b")
       .select($"doc_a", $"doc_b").distinct()
-    // Verify ONLY the LSH candidates (never the full pair space): join the
-    // per-doc shingle arrays and intersect — codegen'd, bounded per pair.
+    verifiedJaccard(docs, cand)
+      .select($"doc_a", $"doc_b", F.fr($"jaccard", 4).as("jaccard"))
+      .orderBy($"doc_a", $"doc_b")
+  }
+
+  /** Verify ONLY the LSH candidates (never the full pair space): join the
+    * per-doc shingle arrays and intersect — codegen'd, bounded per pair.
+    * Keeps the (doc_a, doc_b) candidates at or above [[JaccardThreshold]]
+    * with their raw jaccard; shared by d03 and d08. */
+  private def verifiedJaccard(docs: DataFrame, cand: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
     val ds = graft.GraftSession.maybeCache(docShinglesFrom(docs))
     cand
       .join(ds.toDF("doc_a", "sha"), Seq("doc_a"))
@@ -596,8 +605,6 @@ object Dedup {
       .withColumn("jaccard",
         $"common".cast("double") / (size($"sha") + size($"shb") - $"common"))
       .filter($"jaccard" >= JaccardThreshold)
-      .select($"doc_a", $"doc_b", F.fr($"jaccard", 4).as("jaccard"))
-      .orderBy($"doc_a", $"doc_b")
   }
 
   /** jaccardCtes + the minhash signature / band-key CTEs (`sig`, `bands`)
@@ -667,14 +674,7 @@ object Dedup {
       .join(deltaBands, Seq("band", "bkey"))
       .filter($"doc_a" < $"doc_b")
       .select($"doc_a", $"doc_b").distinct()
-    val ds = graft.GraftSession.maybeCache(docShinglesFrom(docs))
-    val dups = cand
-      .join(ds.toDF("doc_a", "sha"), Seq("doc_a"))
-      .join(ds.toDF("doc_b", "shb"), Seq("doc_b"))
-      .withColumn("common", size(array_intersect($"sha", $"shb")))
-      .withColumn("jaccard",
-        $"common".cast("double") / (size($"sha") + size($"shb") - $"common"))
-      .filter($"jaccard" >= JaccardThreshold)
+    val dups = verifiedJaccard(docs, cand)
       .groupBy($"doc_b")
       .agg(min($"doc_a").as("dup_of"), min_by($"jaccard", $"doc_a").as("jacc"))
     docs.crossJoin(broadcast(cutoff))
@@ -832,7 +832,7 @@ object Dedup {
   /** The d05 pair core WITHOUT the final rounding/sort — d14's component
     * fixpoint consumes this directly (materializing the sorted form would
     * pay a range-sampling pass + global sort the unordered loop discards,
-    * the same trap nearDupPairs documents for d07). */
+    * the same trap dedupClusters documents for d07). */
   private[graft] def embeddingCosineRaw(spark: SparkSession, dir: String,
       threshold: Double): DataFrame = {
     import spark.implicits._
@@ -882,24 +882,19 @@ object Dedup {
     * blocking key is the coarse quantizer cell, so candidates never leave
     * their cell and the component loop runs over near-dup vectors only —
     * a sliver of the corpus). Output mirrors d07:
-    * (vec_id, cluster_id, cluster_size, is_canonical). */
-  /** Memoized like d07's clusterMemo: the iterative fixpoint's per-round
-    * checkpoints can't be shared via plan canonicalization, so composing
-    * callers reuse one convergence run per (session, dir). */
-  private val semanticMemo = new graft.SessionMemo[String, DataFrame]
-
-  def semanticClusters(spark: SparkSession, dir: String): DataFrame =
-    semanticMemo.getOrElseUpdate(spark, dir) {
-      import spark.implicits._
-      val pairs = graft.GraftSession.maybeEagerCheckpoint(
-        embeddingCosineRaw(spark, dir, CosineThreshold)
-          .select($"vec_a".as("doc_a"), $"vec_b".as("doc_b")))
-      clustersFromPairs(
-        Tables.embeddings(spark, dir).select($"vec_id".as("doc_id")), pairs)
-        .select($"doc_id".as("vec_id"), $"cluster_id", $"cluster_size",
-          $"is_canonical")
-        .orderBy($"vec_id")
-    }
+    * (vec_id, cluster_id, cluster_size, is_canonical). Like d07, every
+    * call runs its own fixpoint and returns a fresh frame. */
+  def semanticClusters(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val pairs = graft.GraftSession.maybeEagerCheckpoint(
+      embeddingCosineRaw(spark, dir, CosineThreshold)
+        .select($"vec_a".as("doc_a"), $"vec_b".as("doc_b")))
+    clustersFromPairs(
+      Tables.embeddings(spark, dir).select($"vec_id".as("doc_id")), pairs)
+      .select($"doc_id".as("vec_id"), $"cluster_id", $"cluster_size",
+        $"is_canonical")
+      .orderBy($"vec_id")
+  }
 
   val semanticClustersSql: String = {
     val dot = S.foldSum("list_transform(range(1, len(va) + 1), i -> va[i] * vb[i])")
@@ -939,63 +934,35 @@ object Dedup {
     * labeled with its own id; each round every doc takes the min of its
     * own label and its neighbors' labels. Each round is one join + one
     * aggregation, both shuffling on doc_id; the label table is
-    * eager-checkpointed per round so lineage stays flat. Rounds needed =
-    * component diameter — near-dup clusters are shallow (a handful of
-    * rounds), and the loop's pointer jumping brings chains to O(log d);
-    * for adversarially long chains the large-star/small-star rule is
-    * IMPLEMENTED as [[clustersFromPairsStars]] and driver-gated as d07b
-    * against the same oracle. `MaxCcRounds` bounds both loops.
+    * eager-checkpointed per round so lineage stays flat. Plain propagation
+    * needs rounds = component diameter; the loop's pointer jumping brings
+    * a chain of diameter d to ⌈log₂(d+2)⌉−1 rounds plus one check round
+    * (10 at d = 999, 14 at d = 9999), inside `MaxCcRounds`.
     *
     * Output: every document with its cluster id (= min doc_id reachable),
     * the cluster size, and whether it is the kept canonical doc. */
   val MaxCcRounds = 20
 
-  /** The converged fixpoint is deterministic, and the iterative loop's
-    * checkpoints cannot be shared via plan canonicalization the way lazy
-    * caches are — memoize the cluster table per (session, dir) so
-    * composing operators (p03) reuse one convergence run.
-    * [[graft.SessionMemo]] holds the DataFrame through a SOFT reference
-    * under a weak session key — the fix the round-4 review asked for: a
-    * strongly-held DataFrame references its session via queryExecution,
-    * which made the previous WeakHashMap-of-strong-values unreclaimable. */
-  private val clusterMemo = new graft.SessionMemo[String, DataFrame]
-
-  /** The thresholded near-dup pair set, memoized per (session, dir): both
-    * cluster cores (d07 propagation, d07b stars) consume the SAME
-    * materialized pairs, so running both costs one d02 chain. The raw
+  /** Every call runs its own fixpoint and returns a fresh frame; the
+    * caller owns its lifetime (the same contract as `maybeCache`), so
+    * `clearCache` and `refreshByPath` reach everything it built. The raw
     * (unsorted, unrounded) pairs are materialized ONCE before the
     * symmetric union: union branches get no cross-branch CSE, and
     * ngramJaccard's final orderBy would add a range-sampling pass — both
     * would re-execute the whole d02 chain per branch. */
-  private val pairsMemo = new graft.SessionMemo[String, DataFrame]
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val pairs = graft.GraftSession.maybeEagerCheckpoint(
+      jaccardPairs(spark, dir)
+        .filter($"jaccard" >= JaccardThreshold)
+        .select($"doc_a", $"doc_b"))
+    clustersFromPairs(Tables.documents(spark, dir).select($"doc_id"), pairs)
+  }
 
-  private def nearDupPairs(spark: SparkSession, dir: String): DataFrame =
-    pairsMemo.getOrElseUpdate(spark, dir) {
-      import spark.implicits._
-      graft.GraftSession.maybeEagerCheckpoint(
-        jaccardPairs(spark, dir)
-          .filter($"jaccard" >= JaccardThreshold)
-          .select($"doc_a", $"doc_b"))
-    }
-
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
-    clusterMemo.getOrElseUpdate(spark, dir) {
-      import spark.implicits._
-      clustersFromPairs(Tables.documents(spark, dir).select($"doc_id"),
-        nearDupPairs(spark, dir))
-    }
-
-  /** d07b: the SAME clusters through the large-star/small-star core —
-    * driver-gated against the identical recursive-CTE oracle, so the
-    * long-chain swap-in is pinned as correct, not just documented. */
-  private val starMemo = new graft.SessionMemo[String, DataFrame]
-
-  def dedupClustersStars(spark: SparkSession, dir: String): DataFrame =
-    starMemo.getOrElseUpdate(spark, dir) {
-      import spark.implicits._
-      clustersFromPairsStars(Tables.documents(spark, dir).select($"doc_id"),
-        nearDupPairs(spark, dir))
-    }
+  /** Rounds the last [[clustersFromPairs]] run took, the check round
+    * included (test hook: the adversarial-chain spec asserts the
+    * logarithmic bound actually holds). */
+  private[graft] val lastCcRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** The cluster fixpoint over an explicit (doc_a, doc_b) pair table —
     * exposed so tests can drive it with adversarial graph shapes (long
@@ -1034,97 +1001,10 @@ object Dedup {
       labels = next
       round += 1
     }
+    lastCcRounds.set(round)
     require(changed == 0, s"component labels did not converge in $MaxCcRounds rounds")
     val withSingletons = labels.unionByName(
       docs.join(nodes, Seq("doc_id"), "left_anti").select($"doc_id", $"doc_id".as("lbl")))
-    val sizes = withSingletons.groupBy($"lbl").agg(count(lit(1)).as("cluster_size"))
-    withSingletons
-      .join(sizes, Seq("lbl"))
-      .select($"doc_id", $"lbl".as("cluster_id"), $"cluster_size",
-        ($"doc_id" === $"lbl").as("is_canonical"))
-      .orderBy($"doc_id")
-  }
-
-  /** Rounds the last [[clustersFromPairsStars]] run took (test hook: the
-    * adversarial-chain spec asserts the O(log²) bound actually holds). */
-  private[graft] val lastStarRounds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** The large-star/small-star connected-components core (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond" — the public
-    * alternating algorithm), d07's long-chain swap-in. Where min-label
-    * propagation needs rounds ∝ component diameter (path halving brings
-    * that to O(log d), but each round still drags the full label table
-    * through the join), the star rules RESTRUCTURE the edge set itself:
-    *
-    *  - large-star: every neighbor LARGER than the center links to the
-    *    center's minimum — long tails fold onto local minima;
-    *  - small-star: orient each edge at its larger endpoint; the center
-    *    and its smaller neighbors all link to the smallest — stars
-    *    flatten.
-    *
-    * Alternating the two converges in O(log² n) rounds to one star per
-    * component, centered at the component minimum; every round is two
-    * groupBy-min + join shuffles over the CURRENT edge set (which only
-    * shrinks toward star form — no label table ride-along). Checkpointed
-    * per round like the propagation core; same output contract. */
-  private[graft] def clustersFromPairsStars(docsIn: DataFrame,
-      pairsIn: DataFrame): DataFrame = {
-    import docsIn.sparkSession.implicits._
-    val docs = docsIn.select($"doc_id")
-    def sym(e: DataFrame): DataFrame =
-      e.unionByName(e.select($"v".as("u"), $"u".as("v")))
-    var edges = graft.GraftSession.maybeEagerCheckpoint(
-      sym(pairsIn.select($"doc_a".as("u"), $"doc_b".as("v"))
-        .filter($"u" =!= $"v")).distinct())
-    // Convergence probe: one partial-aggregable pass (count + xor of a
-    // 64-bit edge hash — xor is order-free and the edge set is distinct),
-    // instead of the TWO exceptAll().count() actions (four shuffles) per
-    // round the first cut ran. Equal fingerprints on consecutive rounds
-    // signal the fixpoint; ONE exact exceptAll pass then confirms it, so
-    // a hash collision can only fail loudly, never return early wrong.
-    def fingerprint(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(u, v))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    var round = 0
-    var prevFp = fingerprint(edges)
-    var stable = prevFp._1 == 0L
-    while (!stable && round < MaxCcRounds) {
-      // large-star: neighbors larger than the center adopt the center's min
-      val minsL = edges.groupBy($"u").agg(min($"v").as("mv"))
-        .select($"u", least($"u", $"mv").as("m"))
-      val large = sym(edges.filter($"v" > $"u").join(minsL, Seq("u"))
-        .select($"v".as("u"), $"m".as("v")).filter($"u" =!= $"v")).distinct()
-      // small-star: orient at the larger endpoint; center and smaller
-      // neighbors all link to the minimum neighbor
-      val or = large.filter($"v" < $"u")
-      val minsS = or.groupBy($"u").agg(min($"v").as("mv"))
-      val small = or.join(minsS, Seq("u"))
-        .filter($"v" =!= $"mv").select($"v".as("u"), $"mv".as("v"))
-        .unionByName(minsS.select($"u", $"mv".as("v")))
-      val next = graft.GraftSession.maybeEagerCheckpoint(sym(small).distinct())
-      val fp = fingerprint(next)
-      if (fp == prevFp) {
-        val residual =
-          next.exceptAll(edges).count() + edges.exceptAll(next).count()
-        require(residual == 0,
-          "edge-set fingerprint collision: probe matched but sets differ")
-        stable = true
-      }
-      edges = next
-      prevFp = fp
-      round += 1
-    }
-    lastStarRounds.set(round)
-    require(stable, s"star rounds did not converge in $MaxCcRounds rounds")
-    // converged: each component is one star centered at its minimum, so a
-    // node's label is its smallest neighbor (or itself, at the center)
-    val labels = edges.groupBy($"u").agg(min($"v").as("mv"))
-      .select($"u".as("doc_id"), least($"u", $"mv").as("lbl"))
-    val withSingletons = labels.unionByName(
-      docs.join(labels.select($"doc_id"), Seq("doc_id"), "left_anti")
-        .select($"doc_id", $"doc_id".as("lbl")))
     val sizes = withSingletons.groupBy($"lbl").agg(count(lit(1)).as("cluster_size"))
     withSingletons
       .join(sizes, Seq("lbl"))

@@ -289,19 +289,27 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(hit.toDouble / total >= 0.8, s"recall ${hit.toDouble / total}")
   }
 
-  test("d07: pointer jumping converges a 300-long chain within MaxCcRounds") {
+  test("d07: pointer jumping converges 300-, 1k- and 10k-long chains in logarithmic rounds") {
     import TestSpark.spark.implicits._
-    // worst-case shape for plain min-label propagation (needs ~300 rounds);
+    // worst-case shape for plain min-label propagation (needs ~n rounds);
     // pointer jumping must close it in O(log n) <= MaxCcRounds
-    val n = 300L
-    val docs = TestSpark.spark.range(0, n + 50).select($"id".as("doc_id"))
-    val chain = TestSpark.spark.range(0, n - 1)
-      .select($"id".as("doc_a"), ($"id" + 1).as("doc_b"))
-    val cl = dedup.Dedup.clustersFromPairs(docs, chain)
-    val comp = cl.filter($"doc_id" < n)
-    assert(comp.filter($"cluster_id" =!= 0 || $"cluster_size" =!= n).count() == 0)
-    assert(cl.filter($"doc_id" >= n)
-      .filter(!$"is_canonical" || $"cluster_size" =!= 1).count() == 0)
+    def chainRounds(n: Long): Int = {
+      val docs = TestSpark.spark.range(0, n + 50).select($"id".as("doc_id"))
+      val chain = TestSpark.spark.range(0, n - 1)
+        .select($"id".as("doc_a"), ($"id" + 1).as("doc_b"))
+      val cl = dedup.Dedup.clustersFromPairs(docs, chain)
+      val comp = cl.filter($"doc_id" < n)
+      assert(comp.filter($"cluster_id" =!= 0 || $"cluster_size" =!= n).count() == 0)
+      assert(cl.filter($"doc_id" >= n)
+        .filter(!$"is_canonical" || $"cluster_size" =!= 1).count() == 0)
+      dedup.Dedup.lastCcRounds.get()
+    }
+    val Seq(_, r1k, r10k) = Seq(300L, 1000L, 10000L).map(chainRounds)
+    // diameter grew 10x (999 -> 9999); a diameter-bound walk would need
+    // 10x the rounds — path halving pays ~log₂ 10, and MaxCcRounds must
+    // stay comfortable (10 -> 14 by the loop's recurrence)
+    assert(r10k <= dedup.Dedup.MaxCcRounds - 3, s"rounds = $r10k on the 10k chain")
+    assert(r10k - r1k <= 5, s"rounds grew $r1k -> $r10k on a 10x diameter")
   }
 
   test("p03: curated corpus keeps only canonical docs above the quality and length gates") {
@@ -311,14 +319,14 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(cur.filter($"quality_score" < operators.Curation.MinQuality ||
       $"n_tokens" < operators.Curation.MinTokens).count() == 0)
     // curated docs are exactly canonical in the cluster table
-    val canon = dedup.Dedup.dedupClusters(spark, sf)
-      .filter($"is_canonical").select("doc_id")
+    val cl = dedup.Dedup.dedupClusters(spark, sf).cache()
+    val canon = cl.filter($"is_canonical").select("doc_id")
     assert(cur.join(canon, Seq("doc_id"), "left_anti").count() == 0)
     // no two curated docs share a near-dup cluster
-    val cl = dedup.Dedup.dedupClusters(spark, sf).select("doc_id", "cluster_id")
-    val perCluster = cur.join(cl, Seq("doc_id"))
+    val perCluster = cur.join(cl.select("doc_id", "cluster_id"), Seq("doc_id"))
       .groupBy("cluster_id").count().filter($"count" > 1)
     assert(perCluster.count() == 0)
+    cl.unpersist()
     cur.unpersist()
   }
 

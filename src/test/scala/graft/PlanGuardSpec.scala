@@ -33,7 +33,6 @@ class PlanGuardSpec extends AnyFunSuite with PredicateHelper {
     "d05_" -> "eager checkpoint of the embedding-bucket candidates",
     "d07_" -> "connected-components fixpoint loop runs jobs on construction",
     "d14_" -> "connected-components fixpoint loop runs jobs on construction",
-    "d07b_" -> "large-star/small-star fixpoint loop runs jobs on construction",
     "d08_" -> "incremental-dedup workspace write + eager checkpoint",
     "d13_" -> "bloom sketch build aggregates the corpus on construction",
     "d09_" -> "IVF centroid training collects a bounded sample on construction",
