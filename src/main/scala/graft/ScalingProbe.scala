@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling probe for the reshaped/bounded operators: replicate the sf
@@ -39,15 +39,7 @@ object ScalingProbe {
     val mult = sys.env.getOrElse("SPARK_GRAFT_MULT", "8").toInt
     val probes = sys.env.getOrElse("SPARK_GRAFT_PROBE", "linear,pairs")
       .split(",").map(_.trim).toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // k-bounded typed aggregates: see GraftSession.builder
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.plainBuilder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

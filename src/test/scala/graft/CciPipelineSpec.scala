@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -228,5 +232,30 @@ class CciPipelineSpec extends AnyFunSuite {
       .filter(col("tot_qty") =!= col("last_pos") || col("tot_cash") =!= col("last_cash"))
     assert(bad.count() == 0)
     l.unpersist()
+  }
+
+  test("grid refresh: a warm refresh over a fresh copy of the input compiles no class") {
+    // Spark's codegen cache (GraftSession.CodegenCacheEntries) keeps every
+    // class a cold refresh compiled, so a second refresh over the same
+    // events in a new directory finds them all: the perfbench grid shape
+    def copyOfEvents(): String = {
+      val dir = Files.createTempDirectory("graft-refresh").toString
+      Files.copy(Paths.get(s"$sf/events.parquet"), Paths.get(s"$dir/events.parquet"))
+      dir
+    }
+    def refresh(dir: String): Unit = {
+      Seq(CciPipeline.bestOf(spark, dir), CciPipeline.recommendations(spark, dir),
+          CciPipeline.candidateFilter(spark, dir))
+        .foreach(_.write.format("noop").mode("overwrite").save())
+      CciPipeline.dropChainCaches(spark, dir)
+    }
+    val (cold, warm) = (copyOfEvents(), copyOfEvents())
+    refresh(cold)
+    val (ns, compiles) = (CodeGenerator.compileTime,
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+    refresh(warm)
+    assert(CodeGenerator.compileTime == ns,
+      s"the warm refresh compiled ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles} " +
+        f"classes in ${(CodeGenerator.compileTime - ns) / 1e6}%.1f ms")
   }
 }

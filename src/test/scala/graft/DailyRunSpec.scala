@@ -2,6 +2,7 @@ package graft
 
 import java.time.LocalDate
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -102,29 +103,62 @@ class DailyRunSpec extends AnyFunSuite {
       "every event in the window fetched exactly once")
   }
 
+  private lazy val lastTradingDay: LocalDate = Iterator.iterate(maxLd)(_.minusDays(1))
+    .find(CciPipeline.isTradingDayLocal).get
+
+  /** The r32 week: a bootstrap, then the trading days up to `maxLd`, the
+    * last one in a call of its own. Returns the digests and the number of
+    * classes Spark compiled during that last day. */
+  private def r32Week(orders: Boolean, balance: Boolean): (Seq[Daily.DayDigest], Long) = {
+    val conn = new LocalFileEventConnector(sf)
+    val start = maxLd.minusDays(6)
+    val cutoff = java.sql.Date.valueOf(start.minusDays(1))
+    val ws = newWs()
+    Daily.bootstrap(spark, conn, ws, cutoff)
+    if (orders) Daily.writeConditions(spark, sf, ws)
+    if (balance) Daily.seedBalance(spark, ws, cutoff)
+    def days(from: LocalDate, to: LocalDate) =
+      Daily.run(spark, conn, ws, from, to, withOrders = orders, withBalance = balance)
+    val before = days(start, lastTradingDay.minusDays(1))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val last = days(lastTradingDay, maxLd)
+    (before ++ last, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles)
+  }
+
+  /** The balance-fed (orders and balance) r32 week, run once for the two
+    * cases that read it. */
+  private lazy val balanceFedWeek = r32Week(orders = true, balance = true)
+
   test("r32 piggyback soundness: digests are bit-identical across sizing modes") {
     // r32's gated columns come from the fetch→bars→CCI→state chain BEFORE
     // the orders branch, so reading them off the shared balance-fed run
     // (Daily.sharedDailyRun) must be indistinguishable from an order-less
     // run — the claim that lets r32/r34/r36 share two orchestrations
-    val conn = new LocalFileEventConnector(sf)
-    val start = maxLd.minusDays(6)
-    val cutoff = java.sql.Date.valueOf(start.minusDays(1))
-    def digestsFor(orders: Boolean, balance: Boolean) = {
-      val ws = newWs()
-      Daily.bootstrap(spark, conn, ws, cutoff)
-      if (orders) Daily.writeConditions(spark, sf, ws)
-      if (balance) Daily.seedBalance(spark, ws, cutoff)
-      Daily.run(spark, conn, ws, start, maxLd,
-          withOrders = orders, withBalance = balance)
-        .map(g => (g.d, g.n_fetched, g.n_cci_new, g.n_cci_total,
-          g.n_series, g.n_buy_signals))
-    }
-    val plain = digestsFor(orders = false, balance = false)
-    val balanceFed = digestsFor(orders = true, balance = true)
+    def chainCols(digs: Seq[Daily.DayDigest]) = digs.map(g => (g.d, g.n_fetched,
+      g.n_cci_new, g.n_cci_total, g.n_series, g.n_buy_signals))
+    val plain = chainCols(r32Week(orders = false, balance = false)._1)
+    val balanceFed = chainCols(balanceFedWeek._1)
     assert(plain.nonEmpty)
     assert(plain == balanceFed,
       "order/balance branches must not leak into the r32 digest columns")
+  }
+
+  test("steady day: the last day of the r32 week compiles only its date-literal classes") {
+    // A steady day reuses the classes of the days before it from Spark's
+    // codegen cache; only the classes that embed the day's own dates (the
+    // run day as a literal, the fetch's pushed-down ts bounds) are new,
+    // each compiled under the driver's and the executor's class loader.
+    // Measured: 12 here, against 155 when the cache held Spark's default
+    // 100 entries and its 25-entry segments evicted the day's classes.
+    // The margin leaves room for two more date-literal stages.
+    val (measured, margin) = (12, 5)
+    val (digs, compiles) = balanceFedWeek
+    assert(digs.last.d.toLocalDate == lastTradingDay)
+    assert(compiles <= measured + margin,
+      s"the steady day compiled $compiles classes, over $measured + $margin")
+    // the count means something only if the session carries the cache size
+    assert(spark.sparkContext.getConf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
   }
 
   test("daily loop: crash rerun of a committed day is a state no-op") {
@@ -250,9 +284,7 @@ class DailyRunSpec extends AnyFunSuite {
   test("daily orders: final-day order table matches an independent one-shot r13 formulation") {
     val ws = newWs()
     val start = maxLd.minusDays(6)
-    val tradingDay = Iterator.iterate(maxLd)(_.minusDays(1))
-      .find(CciPipeline.isTradingDayLocal).get
-    val dir = withCraftedSeries(tradingDay)
+    val dir = withCraftedSeries(lastTradingDay)
     val conn = new LocalFileEventConnector(dir)
     Daily.bootstrap(spark, conn, ws, java.sql.Date.valueOf(start.minusDays(1)))
     Daily.writeConditions(spark, sf, ws)
@@ -270,7 +302,7 @@ class DailyRunSpec extends AnyFunSuite {
       .write.mode("append").parquet(ws.conditionsDir)
     val digs = Daily.run(spark, conn, ws, start, maxLd, withOrders = true)
     val lastDay = digs.last.d
-    assert(lastDay.toLocalDate == tradingDay)
+    assert(lastDay.toLocalDate == lastTradingDay)
 
     // independent latest-state mechanism: lag window + row_number desc
     // (the daily path recovers it from idx position state instead)
