@@ -231,8 +231,8 @@ object Daily {
       cfg: GridConfig, withOrders: Boolean, withBalance: Boolean,
       deltaBars: DataFrame, deltaCci: DataFrame, newState: DataFrame): DayDigest = {
     import spark.implicits._
-    // ONE stats action for the whole digest (round-15, the dailyjobs
-    // probe's first merge): the two delta aggregates AND the state-
+    // ONE stats action for the whole digest (round-15, the job-budget
+    // cut's first merge): the two delta aggregates AND the state-
     // dimension totals are all 1-row aggregates over already-materialized
     // frames (fresh-path writes populated the caches, resume-path reads
     // are committed parquet), so they cross-join into a single scheduled
@@ -365,7 +365,7 @@ object Daily {
       // columns losslessly). Credits land in the NEXT day's snapshot
       // (D+2 settlement collapsed to D+1 at daily granularity).
       //
-      // Round-15 (dailyjobs probe, second merge): the settlement
+      // Round-15 (job-budget cut, second merge): the settlement
       // aggregates UNION into the committed-count frame as one tagged
       // row, so the day's digest counts and its balance row come out of
       // ONE collect instead of two scheduled actions.
@@ -427,8 +427,8 @@ object Daily {
       s: java.sql.Date, cfg: GridConfig = GridConfig(),
       withOrders: Boolean = false, withBalance: Boolean = false): DayDigest = {
     require(!withBalance || withOrders, "withBalance requires withOrders")
-    // the whole day (delta chain + mode tail) runs under the AQE gate —
-    // see [[DailyAdaptiveConf]]; bootstrap is the corpus-scale exception
+    // the whole day (delta chain + mode tail) runs under the small-day
+    // gate — see [[withDayAqe]]; bootstrap is the corpus-scale exception
     withDayAqe(spark, ws, s) {
       runDayBody(spark, conn, ws, s, cfg, withOrders, withBalance)
     }
@@ -504,47 +504,41 @@ object Daily {
     } finally state.unpersist()
   }
 
-  /** AQE gate for the day loop (round-15, the `dailyjobs` probe): under
-    * AQE every materialized exchange is its own scheduled job, so the
-    * day tail's ~7 delta/dimension-scale actions billed 28 (fix) / 37
-    * (bal) jobs per day — measured 32% of the per-day job count is
-    * adaptive-stage ceremony that buys nothing at delta scale (AQE
-    * coalescing/skew-split need data big enough to matter), and turning
-    * it off cut the rebuild wall ~10% at sf0.1. At 100 TB a day's delta
-    * IS big enough to matter (~40 GB/day for a 10-year corpus), so the
-    * gate is plan-stat-sized, not hard-off:
-    *   - `spark.graft.daily.adaptive` = auto (default) | true | false —
-    *     auto disables AQE for a day whose latest committed STATE
-    *     partition (the loop's dimension-scale anchor; the delta is the
-    *     same order) is under [[DayScaleBytes]] (256 MB); true/false
-    *     force.
-    * Bootstrap always keeps the session's AQE — it is the one
-    * corpus-scale pass in the loop. Threshold sizing: SURVEY §5
-    * "Sizing a real deployment".
+  /** Small-day gate for the day loop (round-15, PERF.md "the daily
+    * loop's job budget"): under AQE every materialized exchange is its
+    * own scheduled job, so the day tail's ~7 delta/dimension-scale
+    * actions billed 28 (fix) / 37 (bal) jobs per day — measured 32% of
+    * the per-day job count is adaptive-stage ceremony that buys nothing
+    * at delta scale (AQE coalescing/skew-split need data big enough to
+    * matter), and turning it off cut the rebuild wall ~10% at sf0.1. At
+    * 100 TB a day's delta IS big enough to matter (~40 GB/day for a
+    * 10-year corpus), so the gate is sized, not hard-off: a day whose
+    * latest committed STATE partition (the loop's dimension-scale
+    * anchor; the delta is the same order) is under [[DayScaleBytes]]
+    * (256 MB) runs with AQE off; any other day keeps the session's
+    * settings. Bootstrap always keeps the session's AQE — it is the one
+    * corpus-scale pass in the loop. Threshold sizing: SURVEY §5 "Sizing
+    * a real deployment".
     *
     * Round-16 (optimization, guide §2.2/§6): turning AQE off at delta
     * scale removed the adaptive-job ceremony but LEFT the session's
     * static shuffle partitioning (32 at bench geometry) on every
     * dimension-scale exchange — ~32 near-empty reduce tasks per job and
     * up to 32 tiny files per day-partition write, which the next day's
-    * read-back then pays again. The SAME committed-bytes signal now also
-    * sizes the static partitioning: a day whose state anchor is under the
-    * threshold runs its tail at [[SmallDayPartitions]] shuffle
-    * partitions. Above the threshold the session partitioning stands, so
-    * a 100-TB day's delta keeps full parallelism — the shrink is gated on
-    * measured size, not on the local core count. Measured (sf0.1,
-    * local[32], ONLY-mode daily_rebuild min-of-N): fresh-workspace
-    * re-orchestration 9.86 s → 5.37 s at 4 partitions (−46%); 2 and 8
-    * partitions measured 5.61/6.00, so 4 is the flat minimum. The
-    * shrink applies whenever the day is delta-scale regardless of the
-    * AQE mode, so the `dailyjobs` probe's forced-AQE baseline and its
-    * noaqe twin still differ only in AQE state. */
-  private[graft] val DailyAdaptiveConf = "spark.graft.daily.adaptive"
+    * read-back then pays again. So the same small day also runs at
+    * [[SmallDayPartitions]] shuffle partitions. Above the threshold the
+    * session partitioning stands, so a 100-TB day's delta keeps full
+    * parallelism — the shrink is gated on measured size, not on the
+    * local core count. Measured (sf0.1, local[32], ONLY-mode
+    * daily_rebuild min-of-N): fresh-workspace re-orchestration 9.86 s →
+    * 5.37 s at 4 partitions (−46%); 2 and 8 partitions measured
+    * 5.61/6.00, so 4 is the flat minimum. DailyRunSpec "small-day gate"
+    * pins both overrides and their restore. */
   private val DayScaleBytes = 256L << 20
   private val SmallDayPartitions = 4
 
   /** Bytes of the latest committed state partition before `s`; none
-    * committed is unknown → keep the session's AQE. */
+    * committed is unknown → keep the session's settings. */
   private def latestStateBytes(spark: SparkSession, ws: Workspace,
       s: java.sql.Date): Long =
     latestCommittedPart(spark, ws.stateDir, s).fold(Long.MaxValue)(c =>
@@ -552,27 +546,16 @@ object Daily {
         .listStatus(c.path).map(_.getLen).sum)
 
   private def withDayAqe[T](spark: SparkSession, ws: Workspace,
-      s: java.sql.Date)(body: => T): T = {
-    // one filesystem probe serves both gates: the AQE switch and the
-    // small-day static-partitioning shrink (see the scaladoc above)
-    lazy val small = latestStateBytes(spark, ws, s) < DayScaleBytes
-    val off = spark.conf.get(DailyAdaptiveConf, "auto") match {
-      case "auto" => small
-      case m => !java.lang.Boolean.parseBoolean(m)
-    }
-    val overrides =
-      (if (off) Seq("spark.sql.adaptive.enabled" -> "false") else Seq.empty) ++
-        (if (small)
-          Seq("spark.sql.shuffle.partitions" -> SmallDayPartitions.toString)
-        else Seq.empty)
-    if (overrides.isEmpty) body
+      s: java.sql.Date)(body: => T): T =
+    if (latestStateBytes(spark, ws, s) >= DayScaleBytes) body
     else {
+      val overrides = Seq("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> SmallDayPartitions.toString)
       val prevs = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
       overrides.foreach { case (k, v) => spark.conf.set(k, v) }
       try body finally prevs.foreach { case (k, ov) =>
         ov.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
-  }
 
   /** All three chain tables committed for day `s` — the resume predicate
     * shared by [[runDay]] and [[bootstrap]]. */
@@ -611,8 +594,7 @@ object Daily {
         val s = java.sql.Date.valueOf(ld)
         // tag the day's jobs (thread-local job group): operators watching
         // the cluster see which run day a straggling job belongs to, and
-        // the job-budget probe (ScalingProbe `dailyjobs`) attributes the
-        // per-day bill from the same tag
+        // a listener can attribute the per-day job bill from the same tag
         spark.sparkContext.setJobGroup(s"graft-day-$s",
           s"daily run day $s", interruptOnCancel = false)
         try {

@@ -32,7 +32,7 @@ object GraftSession {
   val CodegenCacheEntries = 1000
 
   /** The static defaults every graft session carries, with or without
-    * graft's extensions. `Bench`, `Verify` and `ScalingProbe` run on this
+    * graft's extensions. `Bench`, `Verify` and `MakeScaledSf` run on this
     * bare builder, so their sessions stay extension-less like a plain
     * driver's; `builder` adds the extensions and AQE. */
   def plainBuilder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -86,13 +86,13 @@ object GraftSession {
     * several downstream plans (the CCI chain, dedup indexes).
     *
     * Always MEMORY_AND_DISK_SER, switched from MEMORY_AND_DISK on a
-    * ScalingProbe measurement: at 512× corpus the deserialized d02
-    * inverted-index cache overflowed the storage fraction and wall-clock
-    * went ×11.7 on ×4 data; serialized, the same point is ×3.4 (bang on
-    * the linear projection, 199.6 s → 65.5 s) and no probe entry got
-    * slower at any multiple. Deserialized caching only wins when the
-    * working set comfortably fits — which a 100 TB shuffle-heavy operator
-    * should never bet on.
+    * round-6 scaling measurement (PERF.md "Cache storage level"): at 512×
+    * corpus the deserialized d02 inverted-index cache overflowed the
+    * storage fraction and wall-clock went ×11.7 on ×4 data; serialized,
+    * the same point is ×3.4 (bang on the linear projection, 199.6 s →
+    * 65.5 s) and no measured operator got slower at any multiple.
+    * Deserialized caching only wins when the working set comfortably
+    * fits — which a 100 TB shuffle-heavy operator should never bet on.
     *
     * Lifetime stays with the caller: `spark.catalog.clearCache()` (or
     * `unpersist` on the returned Dataset) releases storage. */

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Land a mult×-replicated copy of an sf dir (default: sf0.1 × 10 ≈ sf1)
@@ -15,12 +15,12 @@ import org.apache.spark.sql.functions._
   *    per-series history fixed (the bars/CCI/as-of shape).
   *  - `orders`/`lineitem`: order keys shifted; values verbatim (quantile
   *    answers stay comparable across sf, group-key set identical).
-  *  - `documents`: doc ids shifted AND every token replica-suffixed (the
-  *    probe's "uniq" shape): shingles stay replica-local so true near-dup
-  *    pair volume grows ∝ corpus — verbatim replication would grow d03's
-  *    OUTPUT quadratically (dup sets 10× deeper ⇒ 100× pairs), which is
-  *    a property of the corpus, not the operator; ScalingProbe's hot/cap
-  *    entries measure that shape separately.
+  *  - `documents`: doc ids shifted AND every token replica-suffixed:
+  *    shingles stay replica-local so true near-dup pair volume grows ∝
+  *    corpus — verbatim replication would grow d03's OUTPUT
+  *    quadratically (dup sets 10× deeper ⇒ 100× pairs), which is a
+  *    property of the corpus, not the operator; LlmOpsSpec's bucket-cap
+  *    cases gate that hot shape separately.
   *  - `embeddings` + small dims: copied verbatim (the swept entries
   *    don't read them; kept so the dir is a complete table set).
   */
@@ -30,13 +30,7 @@ object MakeScaledSf {
     val outDir = args.lift(1).getOrElse("/tmp/graft_sf1")
     val mult = args.lift(2).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.plainBuilder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -531,7 +531,7 @@ object Dedup {
     * over the cap to the linear-per-doc cluster form (d01/d10 exact hash
     * groups, or d07's components) instead of emitting their pairs; the
     * driver-gated d03/d08 rows keep the cap OFF (full pair contract,
-    * oracle-exact). ScalingProbe measures both shapes. */
+    * oracle-exact). LlmOpsSpec's d03 mega-bucket cases gate the cap. */
   private[graft] def minhashBandsFrom(docs: DataFrame,
       bucketCap: Int = Int.MaxValue): DataFrame = {
     import docs.sparkSession.implicits._
@@ -576,7 +576,7 @@ object Dedup {
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
     minhashLshFrom(Tables.documents(spark, dir))
 
-  /** [[minhashLsh]] over any documents frame (ScalingProbe / tests);
+  /** [[minhashLsh]] over any documents frame (specs feed their own);
     * `bucketCap` engages the mega-bucket guard (see [[minhashBandsFrom]]). */
   private[graft] def minhashLshFrom(docs: DataFrame,
       bucketCap: Int = Int.MaxValue): DataFrame = {
@@ -659,7 +659,7 @@ object Dedup {
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame =
     incrementalDedupFrom(Tables.documents(spark, dir))
 
-  /** [[incrementalDedup]] over any documents frame (ScalingProbe / tests);
+  /** [[incrementalDedup]] over any documents frame (specs feed their own);
     * `bucketCap` engages the mega-bucket guard (see [[minhashBandsFrom]]). */
   private[graft] def incrementalDedupFrom(docs: DataFrame,
       bucketCap: Int = Int.MaxValue): DataFrame = {

@@ -972,7 +972,8 @@ object Multimodal {
     * 100 TB deployment routes buckets over the cap to the linear-per-doc
     * exact-hash group form instead of emitting their pairs; the
     * driver-gated row keeps the cap OFF (full pair contract,
-    * oracle-exact). ScalingProbe's `phash` entries measure both shapes. */
+    * oracle-exact). LlmOpsSpec "m06: the mega-bucket cap bounds dup-set
+    * pair enumeration" gates the capped shape. */
   private[graft] def imagePhashFrom(df: DataFrame,
       bucketCap: Int = Int.MaxValue): DataFrame = {
     val spark = df.sparkSession

@@ -52,7 +52,7 @@ object AsOfNative {
         $"m.event_id".as("view_id"), $"m.value".as("view_value"))
   }
 
-  /** The native-operator core over any events frame (probe/spec entry):
+  /** The native-operator core over any events frame (SQL/spec entry):
     * raw views straight into the merge — ONE exchange per side, no
     * pre-aggregation anywhere, duplicates resolved by the tiebreak. */
   private[graft] def asofNativeFrom(ev: DataFrame): DataFrame = {
@@ -75,8 +75,7 @@ object AsOfNative {
     * one user-keyed stream, running-max window recovers the matched
     * view ts, then an equi-join back on (user_id, ts) recovers the
     * payload. Two passes over the combined stream + a second join — kept
-    * for the spec's independent-equality gate and the ScalingProbe
-    * native-vs-composed measurement; never a queries row. */
+    * for AsOfJoinSpec's independent-equality gate; never a queries row. */
   private[graft] def asofComposedFrom(ev: DataFrame): DataFrame = {
     import ev.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window

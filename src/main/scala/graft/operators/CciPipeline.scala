@@ -265,7 +265,8 @@ object CciPipeline {
 
   /** The rolling-CCI computation over any OHLC bars frame
     * (user_id, d, open_pr, high_pr, low_pr, close_pr, volume) — the
-    * ScalingProbe drives it with synthetic Zipf-length series. */
+    * daily loop and the v12 stream feed it their own bars, SkewSpec
+    * synthetic Zipf-length series. */
   def cciFromBars(bars: DataFrame, cfg: GridConfig): DataFrame = {
     import bars.sparkSession.implicits._
     val wOrd = Window.partitionBy($"user_id").orderBy($"d")
@@ -517,10 +518,10 @@ object CciPipeline {
     * context bars come out of each touched series' stored `ctx` array and
     * `idx` resumes from the stored position, offset by `size(ctx)` — so
     * the extra context rows [[stateFromCci]] keeps below width 3 shift
-    * nothing. The daily loop runs it on each day's stored state; r30, the
-    * v12 stream and ScalingProbe `inc` run it through
-    * [[cciIncrementalDelta]]. Gated against the one-shot [[cciFromBars]]
-    * (r30's oracle, DailyRunSpec's incremental≡full equality). */
+    * nothing. The daily loop runs it on each day's stored state; r30 and
+    * the v12 stream run it through [[cciIncrementalDelta]]. Gated against
+    * the one-shot [[cciFromBars]] (r30's oracle, DailyRunSpec's
+    * incremental≡full equality). */
   private[graft] def cciDeltaFromState(state: DataFrame, deltaBars: DataFrame,
       cfg: GridConfig): DataFrame = {
     import state.sparkSession.implicits._
@@ -611,8 +612,8 @@ object CciPipeline {
     // CCI subtree is read 3× inside cciIncrementalFrom (pass-through union
     // + the state build's per-series max + its context filter); uncached,
     // the full-corpus window would recompute each time. In the production daily loop the
-    // base is a persisted TABLE (ScalingProbe lands it in parquet), so
-    // this demo entry is the only place the cache is needed.
+    // base is a persisted TABLE, so this demo entry is the only place the
+    // cache is needed.
     val baseCci = graft.GraftSession.maybeCache(
       cciFromBars(split.filter($"d" < $"cutoff").drop("cutoff"), GridConfig()))
     val deltaBars = split.filter($"d" >= $"cutoff").drop("cutoff")
@@ -685,11 +686,10 @@ object CciPipeline {
       .transform(graft.GraftSession.maybeCache(_))
 
   /** The r06 chain (CCI → signals → grid outcomes) over ANY OHLC bars
-    * frame — the ScalingProbe `trade` entry drives it with replicated
-    * series to measure that the bounded futures join (fan-out ≤ maxHolding
-    * rows per signal) grows linearly in series count with the condition
-    * grid held fixed. Same operators as [[trades]], minus the
-    * parquet-source coupling. */
+    * frame. Same operators as [[trades]], minus the parquet-source
+    * coupling; CciPipelineSpec pins it equal to r06 row for row. The
+    * bounded futures join (fan-out ≤ maxHolding rows per signal) grew
+    * linearly in series count on replicated bars (PERF.md round 7). */
   def tradesFromBars(bars: DataFrame, cfg: GridConfig): DataFrame =
     tradeChain(graft.GraftSession.maybeCache(cciFromBars(bars, cfg)), cfg)
 

@@ -34,8 +34,8 @@ object GraphRank {
     * across iterations instead of coalescing to one task. The output is
     * layout-independent — integer arithmetic commutes over any partition
     * assignment — so q43b gates against the IDENTICAL tradeRankSql oracle,
-    * proving the layout a 1M-node domain needs (probed in ScalingProbe
-    * `rank`) computes the same ranks the small-domain idiom does. */
+    * proving the layout a 1M-node domain needs (PERF.md round 7) computes
+    * the same ranks the small-domain idiom does. */
   def tradeRankPartitioned(spark: SparkSession, dir: String): DataFrame =
     tradeRankWith(spark, dir, rankPartitions = 8)
 

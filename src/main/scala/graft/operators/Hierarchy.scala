@@ -32,10 +32,8 @@ object Hierarchy {
     * 1M levels — far past any real tree; the loop stops at fixpoint). */
   val MaxDoublingRounds = 20
 
-  /** The pointer-doubling fixpoint over an arbitrary `(node, anc, dist)`
-    * parent-edge frame — q45's engine, edge-source-parameterized so the
-    * scaling probe can feed synthetic deep trees. Unordered; callers
-    * sort. */
+  /** The pointer-doubling fixpoint over a `(node, anc, dist)` parent-edge
+    * frame — q45's engine. Unordered; callers sort. */
   def closureFrom(edges: DataFrame): DataFrame = {
     import edges.sparkSession.implicits._
     var closure = graft.GraftSession.maybeEagerCheckpoint(edges)
@@ -67,32 +65,6 @@ object Hierarchy {
     }
     require(done, s"hierarchy closure did not converge in $MaxDoublingRounds rounds")
     closure
-  }
-
-  /** The level-at-a-time frontier recursion — the naive port of the
-    * oracle's `WITH RECURSIVE` evaluation, kept as the probe's comparison
-    * baseline (never a gated query): one keyed shuffle AND one
-    * driver-synchronized round per LEVEL, so a depth-d tree pays d
-    * barriers where [[closureFrom]] pays ceil(log2 d). Total joined
-    * volume is LOWER than doubling's (each path extends exactly once;
-    * no distinct over the growing closure) — the probe measures which
-    * effect wins, and by how much, as depth grows. */
-  def frontierClosureFrom(edges: DataFrame): DataFrame = {
-    import edges.sparkSession.implicits._
-    val base = edges.toDF("mid", "anc2", "dist2")
-    var paths = graft.GraftSession.maybeEagerCheckpoint(edges)
-    var frontier = paths
-    var rounds = 0
-    while (frontier.limit(1).count() > 0) {
-      require(rounds < (1 << MaxDoublingRounds),
-        "frontier closure did not converge (cyclic parent pointers?)")
-      frontier = graft.GraftSession.maybeEagerCheckpoint(
-        frontier.join(base, $"anc" === $"mid")
-          .select($"node", $"anc2".as("anc"), ($"dist" + lit(1L)).as("dist")))
-      paths = graft.GraftSession.maybeEagerCheckpoint(paths.unionByName(frontier))
-      rounds += 1
-    }
-    paths
   }
 
   // ---------------------------------------------------------------- q45

@@ -206,8 +206,8 @@ object Intervals {
   def rangeJoin(spark: SparkSession, dir: String): DataFrame =
     rangeJoinFromOrders(Tables.orders(spark, dir))
 
-  /** q48 core, input-parameterized (specs and the scaling probe feed
-    * synthetic/skewed orders frames). */
+  /** q48 core, input-parameterized (RangeHotBinSpec feeds synthetic,
+    * skewed orders frames). */
   private[graft] def rangeJoinFromOrders(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
     import spark.implicits._
@@ -235,16 +235,17 @@ object Intervals {
         unix_date(to_date($"o_orderdate")).cast("long").as("pd"))
       .withColumn("bin", floor($"pd" / B))
       .withColumn("salt", pmod(xxhash64($"o_orderkey"), lit(S.toLong)).cast("int"))
-    // POINT-side hot-bin defense (round-14, measured in the `rangepts`
-    // probe): a day hot in POINTS only is invisible to the interval-side
-    // detection above, and its per-task bound ptsPerBin/S can only be
-    // tightened by raising S globally — which multiplies interval
-    // replication EVERYWHERE (probe: S 8→64 cut wall 55→40 s but grew the
-    // join stage's max task records 63k→228k on the uniform mass). The
-    // symmetric fix: a bin whose POINT count crosses the same threshold
-    // hashes its points into psub sub-salts while its intervals replicate
-    // across them — per-task input falls to ivPerBin + ptsPerBin/(S·psub)
-    // with the replication cost confined to the hot bins.
+    // POINT-side hot-bin defense (round-14, PERF.md "the points-hot
+    // range-join geometry"): a day hot in POINTS only is invisible to
+    // the interval-side detection above, and its per-task bound
+    // ptsPerBin/S can only be tightened by raising S globally — which
+    // multiplies interval replication EVERYWHERE (measured: S 8→64 cut
+    // wall 55→40 s but grew the join stage's max task records 63k→228k
+    // on the uniform mass). The symmetric fix: a bin whose POINT count
+    // crosses the same threshold hashes its points into psub sub-salts
+    // while its intervals replicate across them — per-task input falls
+    // to ivPerBin + ptsPerBin/(S·psub) with the replication cost
+    // confined to the hot bins.
     val hotP = hotBins(spark, pt0, pt0, B)
     // the (bin, salt[, isalt][, psalt]) hash exchange IS the operator's
     // distribution: the pair-streaming join+aggregate stage must fan out
@@ -356,8 +357,8 @@ object Intervals {
   def intervalJoin(spark: SparkSession, dir: String): DataFrame =
     intervalJoinFrom(Tables.orders(spark, dir), Tables.lineitem(spark, dir))
 
-  /** q49 core, input-parameterized (specs and the scaling probe feed
-    * synthetic/skewed frames). The REPLICATING side here is the order
+  /** q49 core, input-parameterized (RangeHotBinSpec feeds synthetic,
+    * skewed frames). The REPLICATING side here is the order
     * windows (they fan out across the ship side's salts), so hot-bin
     * detection watches THAT side: a hot ow bin hashes into sub-salts and
     * the ship side replicates across them — per-task input falls to

@@ -28,11 +28,6 @@ object Skew {
       .drop("__salt")
   }
 
-  /** Series count for [[zipfBars]] corpora: the rank-1 series carries
-    * ~half of all bars, so the window-form rolling CCI funnels it through
-    * one sort task. */
-  val SkewBarSeries = 4
-
   /** Deterministic OHLC bars with Zipf-length series: per-series bar
     * counts follow 1/r (driver-computed — S values, planner-scale), rows
     * come off `spark.range` joined to the broadcast (series, lo, hi)

@@ -305,8 +305,8 @@ object Similarity {
       planes: Int, tables: Int): DataFrame =
     lshTopKFrom(graft.GraftSession.maybeCache(vecs(spark, dir)), planes, tables)
 
-  /** [[lshTopKParam]] over any (vec_id, v, norm) frame (duplicate-heavy
-    * synthetic corpora in the ScalingProbe / specs). */
+  /** [[lshTopKParam]] over any (vec_id, v, norm) frame (LlmOpsSpec's
+    * duplicate-heavy synthetic corpus). */
   private[graft] def lshTopKFrom(e: DataFrame,
       planes: Int, tables: Int): DataFrame = {
     val spark = e.sparkSession

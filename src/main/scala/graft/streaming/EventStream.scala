@@ -28,25 +28,14 @@ object EventStream {
     * engine-deterministic (SURVEY.md §6). */
   def sessionize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    sessionAggs(spark, dir).orderBy($"user_id", $"session_id")
-  }
-
-  /** [[sessionize]] minus its final corpus-wide orderBy — probe-only
-    * (ScalingProbe `v01attr`): the pair attributes how much of v01's
-    * per-decade growth is the deterministic output sort (a range
-    * exchange + full sort over every session row) vs the user-keyed
-    * session computation itself. The declared v01 row stays
-    * [[sessionize]], ordered. */
-  private[graft] def sessionAggs(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val cum = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
       .rowsBetween(Window.unboundedPreceding, 0)
-    // RANGE-partition the one corpus exchange (round-17, guide §2.4; the
-    // round-16 v01attr probe measured v01's final deterministic orderBy
-    // at 87% of sf100 wall). The session window only needs user_id
+    // RANGE-partition the one corpus exchange (round-17, guide §2.4;
+    // PERF.md round 16 measured v01's final deterministic orderBy at 87%
+    // of sf100 wall). The session window only needs user_id
     // CLUSTERING, which RangePartitioning(user_id) satisfies — and the
-    // declared row's global Sort(user_id, session_id) is then
+    // final global Sort(user_id, session_id) is then
     // prefix-satisfied by the SAME partitioning, so the planner drops the
     // second corpus-wide exchange entirely (2 Exchanges → 1; the sort
     // runs partition-local over range-contiguous user_ids). Equal keys
@@ -69,6 +58,7 @@ object EventStream {
         sum(floor($"value" * 100.0 + 0.5).cast("long")).as("value_cents"))
       .withColumn("total_value", $"value_cents".cast("double") / 100.0)
       .drop("value_cents")
+      .orderBy($"user_id", $"session_id")
   }
 
   val sessionizeSql: String =

@@ -130,7 +130,7 @@ class CciPipelineSpec extends AnyFunSuite {
     assert(all.exceptAll(r06).count() == 0 && r06.exceptAll(all).count() == 0)
   }
 
-  test("r06 from bars: the probe's bars-driven chain equals the gated r06 row-for-row") {
+  test("r06 from bars: the bars-driven chain equals the gated r06 row-for-row") {
     val fromBars = CciPipeline.tradesFromBars(
       CciPipeline.ohlcBars(spark, sf), CciPipeline.GridConfig())
     val r06 = CciPipeline.trades(spark, sf).select(fromBars.columns.map(col): _*)

@@ -1,8 +1,12 @@
 package graft
 
 import java.time.LocalDate
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -159,6 +163,58 @@ class DailyRunSpec extends AnyFunSuite {
     // the count means something only if the session carries the cache size
     assert(spark.sparkContext.getConf.get("spark.sql.codegen.cache.maxEntries") ==
       GraftSession.CodegenCacheEntries.toString)
+  }
+
+  test("small-day gate: a delta-scale day runs AQE off at 4 partitions, then restores both") {
+    // A day whose latest committed state partition is under 256 MB (a few
+    // kB here) runs every query with AQE off and 4 shuffle partitions,
+    // seen in the SQL confs each query's jobs carry; the session's own
+    // values come back after the day. Partitions start at 7, not the test
+    // session's 4, so neither the shrink nor the restore can pass by
+    // coincidence. The only other jobs are the one-stage parquet schema
+    // reads of `spark.read`, which run no query and carry no SQL conf.
+    val (aqeKey, partsKey) = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val conn = new LocalFileEventConnector(sf)
+    val day = Iterator.iterate(maxLd.minusDays(6))(_.plusDays(1))
+      .find(CciPipeline.isTradingDayLocal).get
+    val ws = newWs()
+    Daily.bootstrap(spark, conn, ws, java.sql.Date.valueOf(day.minusDays(1)))
+    val sc = spark.sparkContext
+    val sessionParts = spark.conf.get(partsKey)
+    assert(spark.conf.get(aqeKey) == "true")
+    // the listener bus delivers events in order: once a fence job run
+    // after the day starts, every job of the day has been seen
+    val FenceProp = "graft.test.fence"
+    val fenced = new CountDownLatch(1)
+    val seen = new ConcurrentLinkedQueue[(Int, Int, Option[(String, String)])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties).getOrElse(new java.util.Properties)
+        if (p.getProperty(FenceProp) != null) fenced.countDown()
+        else seen.add((e.jobId, e.stageInfos.size,
+          Option(p.getProperty("spark.sql.execution.id"))
+            .map(_ => (p.getProperty(aqeKey), p.getProperty(partsKey)))))
+      }
+    }
+    spark.conf.set(partsKey, "7")
+    sc.addSparkListener(listener)
+    try {
+      Daily.runDay(spark, conn, ws, java.sql.Date.valueOf(day))
+      assert(spark.conf.get(aqeKey) == "true", "AQE not restored after the day")
+      assert(spark.conf.get(partsKey) == "7", "shuffle partitions not restored after the day")
+      sc.setLocalProperty(FenceProp, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(FenceProp, null)
+      assert(fenced.await(60, TimeUnit.SECONDS), "fence job start never arrived")
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.conf.set(partsKey, sessionParts)
+    }
+    val (queries, others) = seen.asScala.toSeq.partition(_._3.nonEmpty)
+    assert(queries.nonEmpty, "the day ran no query")
+    val off = queries.filterNot(_._3.contains(("false", "4")))
+    assert(off.isEmpty, s"${off.size} of ${queries.size} query jobs ran outside the gate " +
+      s"(job, stages, (AQE, partitions)): ${off.take(5).mkString(", ")}")
+    assert(others.forall(_._2 == 1), s"a job outside any query shuffles: $others")
   }
 
   test("daily loop: crash rerun of a committed day is a state no-op") {

@@ -21,7 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * learned about it). Denylisted operators execute real work while
   * being BUILT (jobs, fits, filesystem round-trips, driver collects);
   * re-running their actions here would double the suite's runtime for
-  * no added coverage — each is audited by its own spec/PlanCheck. */
+  * no added coverage — each is audited by its own spec. */
 class PlanGuardSpec extends AnyFunSuite with PredicateHelper {
   import TestSpark._
 
@@ -192,8 +192,8 @@ class PlanGuardSpec extends AnyFunSuite with PredicateHelper {
   test("plan guard: every NON-EQUI join has a bounded side (no unbounded nested-loop)") {
     // the class the cross-join guard does not reach: a condition-bearing
     // join with no equi conjunct physically plans as a per-probe-row
-    // BroadcastNestedLoopJoin — the NljAudit sweep this test pins
-    // same allowlist as the cross-join guard: s01's all-pairs join IS
+    // BroadcastNestedLoopJoin, so this sweeps every guarded entry for one.
+    // Same allowlist as the cross-join guard: s01's all-pairs join IS
     // the declared brute-force baseline, condition or no condition
     var seen = 0
     val offenders = lazyQueries.filterNot(crossJoinBaselines).flatMap { name =>
