@@ -5,7 +5,7 @@ import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, ClusteringEvaluator}
+import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -32,22 +32,20 @@ object Features {
     * below the gate, so gated/spec'd model outputs are bit-identical to
     * the former constant. ABOVE the gate (the scaled rehearsals, a real
     * deployment) partitions grow with the input ([[FitRowsPerPartition]]
-    * rows each, capped at defaultParallelism) instead of pinning a
-    * corpus-scale Lloyd/LBFGS/ALS pass to 4 cores. Row count, not
-    * plan-stat bytes, drives the gate: two of the fit inputs are
-    * join/aggregate plans whose size-only stats are products of their
-    * children — useless as a gate signal — and each input is either
-    * already counted (FP), cached (LR), or a metadata-cheap scan. */
-  val FitCompactRowsConf = "spark.graft.ml.fitCompactRows"
-  private val DefaultFitCompactRows = 1000000L
+    * rows each, capped at max(defaultParallelism, shuffle partitions))
+    * instead of pinning a corpus-scale Lloyd/LBFGS/ALS pass to 4 cores.
+    * Row count, not plan-stat bytes, drives the gate: two of the fit
+    * inputs are join/aggregate plans whose size-only stats are products
+    * of their children — useless as a gate signal — and each input is
+    * either already counted (FP), cached (LR), or a metadata-cheap scan —
+    * so [[graft.plans.ScaleGate.ForceConf]] does not move this gate. */
+  private val FitCompactRows = 1000000L
   private val FitCompactSmall = 4
   private val FitRowsPerPartition = 100000L
 
   private[graft] def fitCompact(df: DataFrame, rows: Long): DataFrame = {
     val spark = df.sparkSession
-    val gate = spark.conf
-      .get(FitCompactRowsConf, DefaultFitCompactRows.toString).toLong
-    if (rows <= gate) df.coalesce(FitCompactSmall)
+    if (rows <= FitCompactRows) df.coalesce(FitCompactSmall)
     else {
       // cap at max(defaultParallelism, shuffle.partitions) — on a
       // dynamic-allocation cluster defaultParallelism reflects the cores
@@ -255,16 +253,6 @@ object Features {
       .withColumn("features", array_to_vector($"arr"))
     fittedKmeans(spark, dir, k).transform(vecs)
       .select($"vec_id", $"label", $"prediction".as("cell"))
-  }
-
-  /** Silhouette of [[kmeansCells]] (test hook). */
-  def kmeansSilhouette(spark: SparkSession, dir: String): Double = {
-    import spark.implicits._
-    val vecs = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("arr"))
-      .withColumn("features", array_to_vector($"arr"))
-    new ClusteringEvaluator().setFeaturesCol("features")
-      .evaluate(fittedKmeans(spark, dir, 10).transform(vecs))
   }
 
   /** The fitted ALS factorization, memoized per (session, dir). ALS is

@@ -1449,15 +1449,13 @@ object CciPipeline {
   def positionLedger(spark: SparkSession, dir: String): DataFrame =
     positionLedgerFrom(spark, orderFills(spark, dir))
 
-  /** Chunks per hot account for the running-sum split; <= 1 disables. */
-  val LedgerChunksConf = "spark.graft.ledger.split.chunks"
-  /** Fills plan-stat bytes below which the split never arms (detection is
-    * an extra aggregation scan — don't pay it on small ledgers). */
-  val LedgerMinBytesConf = "spark.graft.ledger.split.minBytes"
   /** Fills per account above which the account counts as hot. */
   val LedgerHotRowsConf = "spark.graft.ledger.split.hotRows"
-  private val LedgerDefaultChunks = 16
-  private val LedgerDefaultMinBytes: Long = 1L << 30
+  /** Chunks per hot account for the running-sum split. */
+  private val LedgerChunks = 16
+  /** Fills plan-stat bytes below which the split never arms (detection is
+    * an extra aggregation scan — don't pay it on small ledgers). */
+  private val LedgerMinBytes: Long = 1L << 30
   private val LedgerDefaultHotRows: Long = 2000000L
   /** |hot| <= fills/hotRows by construction; guard the broadcast anyway. */
   private val LedgerMaxHotAccounts = 100000
@@ -1469,10 +1467,11 @@ object CciPipeline {
     * a whale account at 100× is a single sorted task by construction,
     * the q47/r29 hot-key straggler class, and §5's own rule ("no
     * aggregate windows over unbounded keys") flags it. When the fills
-    * plan-stat size passes [[LedgerMinBytesConf]], a one-scan detection
-    * aggregate finds accounts above [[LedgerHotRowsConf]] fills and
-    * broadcasts their (account, date/order extents); each hot account's
-    * fills are then range-split into [[LedgerChunksConf]] chunks on the
+    * plan-stat size passes [[LedgerMinBytes]] ([[graft.plans.ScaleGate]]),
+    * a one-scan detection aggregate finds accounts above
+    * [[LedgerHotRowsConf]] fills and broadcasts their (account,
+    * date/order extents); each hot account's
+    * fills are then range-split into [[LedgerChunks]] chunks on the
     * LEXICOGRAPHIC (event_date, order_no) linearization — monotonic in
     * the ledger's sort order, so chunk boundaries never cut a tie group
     * (side, the last key, never crosses chunks), and a whale whose fills
@@ -1492,10 +1491,7 @@ object CciPipeline {
     def plainOver(f: DataFrame): DataFrame = f
       .withColumn("position_qty", sum($"qty_delta").over(w))
       .withColumn("cash_balance", sum($"cash_delta").over(w))
-    val chunks =
-      spark.conf.get(LedgerChunksConf, LedgerDefaultChunks.toString).toInt
-    val armed = chunks > 1 &&
-      graft.plans.ScaleGate.armed(fills, LedgerMinBytesConf, LedgerDefaultMinBytes)
+    val armed = graft.plans.ScaleGate.armed(fills, LedgerMinBytes)
     val hot = if (!armed) Array.empty[org.apache.spark.sql.Row] else {
       val hotRows =
         spark.conf.get(LedgerHotRowsConf, LedgerDefaultHotRows.toString).toLong
@@ -1544,7 +1540,7 @@ object CciPipeline {
       val lin = datediff($"event_date", $"d0").cast("long") * ordSpan +
         ($"order_no" - $"o0")
       val linSpan = (datediff($"d1", $"d0").cast("long") + 1L) * ordSpan
-      val step = ldiv(linSpan + (chunks - 1).toLong, lit(chunks.toLong))
+      val step = ldiv(linSpan + (LedgerChunks - 1).toLong, lit(LedgerChunks.toLong))
       val hotF = tagged.filter($"d0".isNotNull)
         .withColumn("chunk", ldiv(lin, step).cast("int"))
         .drop("d0", "d1", "o0", "o1")

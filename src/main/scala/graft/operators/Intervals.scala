@@ -98,7 +98,7 @@ object Intervals {
   // (sizing recipe: SURVEY §5 "Sizing a real deployment") — at
   // 100× the data (or a different date density) the operator re-tunes
   // without a recompile, the same discipline as the as-of split's
-  // spark.graft.asof.split.* knobs. Defaults equal the former constants.
+  // hot-key threshold. Defaults equal the former constants.
   /** Days per bin: smaller = more bins = less data per bin, at the cost
     * of more interval replication (≤ span/B+1 bins per interval). */
   val BinDaysConf = "spark.graft.range.binDays"
@@ -110,15 +110,14 @@ object Intervals {
     * the sub-salts. Bounds per-task pair volume by
     * hotBinRows·(otherPerBin/S) however dense one DAY gets. */
   val HotBinRowsConf = "spark.graft.range.hotBinRows"
-  /** Replicating-side plan-stat bytes below which hot-bin detection is
-    * skipped entirely (detection is one bin-grouped aggregation scan —
-    * don't pay it on small inputs; the sf gates run un-detected). */
-  val HotBinMinDetectBytesConf = "spark.graft.range.minDetectBytes"
 
   private val DefaultBinDays = 16
   private val DefaultSaltBuckets = 8
   private val DefaultHotBinRows = 4000000L
-  private val DefaultMinDetectBytes: Long = 1L << 30 // 1 GiB
+  /** Replicating-side plan-stat bytes below which hot-bin detection is
+    * skipped entirely (detection is one bin-grouped aggregation scan —
+    * don't pay it on small inputs; the sf gates run un-detected). */
+  private val MinDetectBytes: Long = 1L << 30 // 1 GiB
   /** Broadcast bound on the hot-bin table (bins above it stay unsplit —
     * graceful degradation, never an abort) and on one bin's sub-salt
     * fan-out (the other side replicates subI×). */
@@ -165,16 +164,16 @@ object Intervals {
     * capped at [[MaxSubSalts]]. One partial-aggregable scan collapsed to
     * the bin dimension (bins grow with the TIME SPAN, not the corpus), a
     * bounded top-[[MaxHotBins]] collect. Gated on `gate`'s plan-stat size
-    * (the un-exploded side) so small inputs never pay the scan; EAGER at
-    * construction time when it runs, like the as-of split's detection,
-    * and memoized the same way ([[graft.plans.HotKeys]]). Over the bound,
-    * the densest [[MaxHotBins]] bins split and the rest stay unsplit.
+    * (the un-exploded side; [[graft.plans.ScaleGate]] at [[MinDetectBytes]])
+    * so small inputs never pay the scan; EAGER at construction time when
+    * it runs, like the as-of split's detection, and memoized the same way
+    * ([[graft.plans.HotKeys]]). Over the bound, the densest
+    * [[MaxHotBins]] bins split and the rest stay unsplit.
     * `binned`'s plan already carries the bin width `b`, so `b` plays no
     * part in the memo. */
   private[graft] def hotBins(spark: SparkSession, binned: DataFrame,
       gate: DataFrame, b: Int): Seq[(Long, Int)] = {
-    if (!graft.plans.ScaleGate.armed(gate, HotBinMinDetectBytesConf,
-        DefaultMinDetectBytes)) return Seq.empty
+    if (!graft.plans.ScaleGate.armed(gate, MinDetectBytes)) return Seq.empty
     val hotRows = spark.conf.get(HotBinRowsConf, DefaultHotBinRows.toString).toLong
     require(hotRows > 0, s"$HotBinRowsConf must be positive, got $hotRows")
     graft.plans.HotKeys.detect(

@@ -229,21 +229,19 @@ object AsOf {
   // each chunk's final-instant right row into every LATER chunk so the
   // backward merge's boundary candidate is present locally — the stitch
   // is exact, proven by AsOfSplitSpec's row-for-row equality against the
-  // unsplit plan. Engages automatically when the build (right) side's
-  // plan-stat size exceeds [[SplitMinBuildBytesConf]] AND a runtime
+  // unsplit plan. Engages automatically when either side's plan-stat
+  // size reaches [[MinBuildBytes]] (the [[ScaleGate]]) AND a runtime
   // per-key count pass finds keys above [[SplitHotKeyRowsConf]] rows.
 
-  // sizing recipe for the three knobs: SURVEY §5 "Sizing a real deployment"
-  /** Time chunks per hot key; <= 1 disables splitting entirely. */
-  val SplitChunksConf = "spark.graft.asof.split.chunks"
-  /** Build-side plan-stat bytes below which the split never engages (the
-    * per-key count pass is an extra scan — don't pay it on small builds). */
-  val SplitMinBuildBytesConf = "spark.graft.asof.split.minBuildBytes"
+  // sizing recipe: SURVEY §5 "Sizing a real deployment"
   /** Right-side rows per key above which the key counts as hot. */
   val SplitHotKeyRowsConf = "spark.graft.asof.split.hotKeyRows"
 
-  private val DefaultChunks = 16
-  private val DefaultMinBuildBytes: Long = 1L << 30 // 1 GiB
+  /** Time chunks per hot key. */
+  private val Chunks = 16
+  /** Plan-stat bytes below which the split never engages (the per-key
+    * count pass is an extra scan — don't pay it on small inputs). */
+  private val MinBuildBytes: Long = 1L << 30 // 1 GiB
   private val DefaultHotKeyRows: Long = 2000000L
   /** Hot keys are collected into a broadcast bounds table; by construction
     * |hot| <= buildRows / hotKeyRows, but guard the broadcast anyway. */
@@ -279,14 +277,14 @@ object AsOf {
     * collisions are the caller's to avoid (rename before joining).
     *
     * EAGERNESS: when the hot-key time-split arms (either side's plan-stat
-    * size >= [[SplitMinBuildBytesConf]] and splitting is enabled), hot-key
+    * size >= [[MinBuildBytes]], or [[ScaleGate.ForceConf]] `arm`), hot-key
     * DETECTION — two corpus-scan aggregations plus a bounded collect —
     * executes HERE, at DataFrame-construction time, not at the first
     * action. The detection result is memoized ([[HotKeys]]), so repeated
     * construction of the same join pays the scans once; distinct inputs or
-    * changed split confs re-detect. Callers that only want the plan (explain,
-    * plan-shape tests) on large inputs can set [[SplitChunksConf]] <= 1 to
-    * keep construction lazy.
+    * a changed [[SplitHotKeyRowsConf]] re-detect. Callers that only want
+    * the plan (explain, plan-shape tests) on large inputs can set
+    * [[ScaleGate.ForceConf]] to `off` to keep construction lazy.
     */
   def join(left: DataFrame, right: DataFrame, on: Seq[(String, String)],
       leftTime: String, rightTime: String,
@@ -294,22 +292,20 @@ object AsOf {
       rightTieBreak: Option[String] = None): DataFrame = {
     require(on.nonEmpty, "as-of join needs at least one equi-key")
     val spark = left.sparkSession
-    val chunks = spark.conf.get(SplitChunksConf, DefaultChunks.toString).toInt
     // streaming frames can't run the hot-key count action; tie types the
     // heap can't order EXACTLY (anything non-integral — see [[integralTie]])
     // fall back too. EITHER side's size can arm the gate: a probe-side hot
     // key stalls the merge's sorted task just as surely as a build-side one.
-    val splittable = chunks > 1 && !left.isStreaming && !right.isStreaming &&
+    val splittable = !left.isStreaming && !right.isStreaming &&
       rightTieBreak.forall(t => right.schema.find(f =>
         spark.sessionState.conf.resolver(f.name, t))
         .exists(f => integralTie(f.dataType))) &&
-      (ScaleGate.armed(right, SplitMinBuildBytesConf, DefaultMinBuildBytes) ||
-        ScaleGate.armed(left, SplitMinBuildBytesConf, DefaultMinBuildBytes))
+      (ScaleGate.armed(right, MinBuildBytes) || ScaleGate.armed(left, MinBuildBytes))
     if (splittable) {
       val hotRows =
         spark.conf.get(SplitHotKeyRowsConf, DefaultHotKeyRows.toString).toLong
       joinTimeSplit(left, right, on, leftTime, rightTime, toleranceUs,
-        forward, rightTieBreak, chunks, hotRows)
+        forward, rightTieBreak, Chunks, hotRows)
     } else joinPlain(left, right, on, leftTime, rightTime, toleranceUs,
       forward, rightTieBreak)
   }

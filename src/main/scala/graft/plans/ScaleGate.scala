@@ -7,17 +7,27 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The one size signal behind every scale-armed path (as-of time-split,
   * range hot bins and bin width, ledger whale split, LSH member cap): the
-  * optimizer's plan-stat size of the frame. Each caller keeps its own
-  * threshold conf; sizing per knob lives in SURVEY §5 "Sizing a real
-  * deployment". */
+  * optimizer's plan-stat size of the frame. Each caller passes its own
+  * fixed byte threshold; one conf, [[ForceConf]], overrides them all:
+  * `auto` (the default) compares the size with the threshold, `arm` arms
+  * every gate and `off` keeps every gated operator on its plain plan.
+  * Sizing: SURVEY §5 "Sizing a real deployment". */
 object ScaleGate {
+  val ForceConf = "spark.graft.gates.force"
+
   def bytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
 
-  /** `df`'s plan-stat size reaches the byte threshold set in `conf`
-    * (`default` when unset). */
-  def armed(df: DataFrame, conf: String, default: Long): Boolean =
-    bytes(df) >= df.sparkSession.conf.get(conf, default.toString).toLong
+  /** `df`'s plan-stat size reaches `thresholdBytes`, unless [[ForceConf]]
+    * says `arm` or `off`; any other value fails naming the conf. */
+  def armed(df: DataFrame, thresholdBytes: Long): Boolean =
+    df.sparkSession.conf.get(ForceConf, "auto") match {
+      case "auto" => bytes(df) >= thresholdBytes
+      case "arm" => true
+      case "off" => false
+      case v => throw new IllegalArgumentException(
+        s"$ForceConf must be auto, arm or off, got '$v'")
+    }
 }
 
 /** Bounded driver collect of a hot-key detection frame. Detection is EAGER

@@ -291,15 +291,14 @@ object Similarity {
     * heap — deterministic across runs/engines), while the QUERY side
     * stays uncapped so every query still probes. Per-query candidates are
     * then ≤ tables·cap regardless of corpus duplication. Gated on the
-    * corpus plan-stat size ([[LshCapMinBytes]], the hot-bin discipline)
-    * so gate-SF plans — and the ShuffleGuard 5-exchange pin — are
-    * byte-identical to the uncapped form; when the cap branch IS armed
-    * but no bucket exceeds the cap, capped ≡ plain row-for-row
-    * (LlmOpsSpec pins this). */
+    * corpus plan-stat size ([[graft.plans.ScaleGate]] at
+    * [[LshCapMinBytes]], the hot-bin discipline) so gate-SF plans — and
+    * the ShuffleGuard 5-exchange pin — are byte-identical to the
+    * uncapped form; when the cap branch IS armed but no bucket exceeds
+    * the cap, capped ≡ plain row-for-row (LlmOpsSpec pins this). */
   val LshMaxBucket = 4096
   val LshMaxBucketConf = "spark.graft.ann.lshMaxBucket"
-  val LshCapMinBytes: Long = 1L << 28 // 256 MiB
-  val LshCapMinBytesConf = "spark.graft.ann.lshCapMinBytes"
+  private val LshCapMinBytes: Long = 1L << 28 // 256 MiB
 
   def lshTopKParam(spark: SparkSession, dir: String,
       planes: Int, tables: Int): DataFrame =
@@ -349,8 +348,7 @@ object Similarity {
     // above, so ENSURE_REQUIREMENTS reuses that exchange — the cap adds
     // no shuffle, only the bounded per-bucket heap.
     val cap = spark.conf.get(LshMaxBucketConf, LshMaxBucket.toString).toInt
-    val capOn = cap > 0 &&
-      graft.plans.ScaleGate.armed(e, LshCapMinBytesConf, LshCapMinBytes)
+    val capOn = cap > 0 && graft.plans.ScaleGate.armed(e, LshCapMinBytes)
     val members =
       if (!capOn) bucketed.toDF("neighbor_id", "tbl", "bucket")
       else bucketed

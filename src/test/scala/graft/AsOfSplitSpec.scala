@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.AsOf
+import graft.plans.{AsOf, ScaleGate}
 
 /** The as-of hot-key time-split (VERDICT r11 task 1): range-split hot keys
   * on time into chunks, carry each chunk's boundary winner across the cut,
@@ -15,8 +15,8 @@ import graft.plans.AsOf
   * the unsplit plan on a Zipf-headed corpus — including right-side
   * (key, time) duplicates resolved by the tiebreak, null times, tolerance,
   * and the forward direction. Plus the plan guard (task 4): when the
-  * build side exceeds the configured threshold, the planned as-of MUST be
-  * the chunked one — the mitigation may not silently regress to prose. */
+  * scale gate arms, the planned as-of MUST be the chunked one — the
+  * mitigation may not silently regress to prose. */
 class AsOfSplitSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -145,13 +145,12 @@ class AsOfSplitSpec extends AnyFunSuite {
   test("non-integral tiebreak falls back to joinPlain (heap can't order it exactly)") {
     // A double tie would collapse through the carried-winner heap's long
     // order (NaN / ±Inf / >53-bit ties); the gate must keep such joins on
-    // the unsplit plan even with every threshold armed.
+    // the unsplit plan even with the gate armed.
     val on = Seq("user_id" -> "v_user_id")
-    val keys = Seq(AsOf.SplitChunksConf, AsOf.SplitMinBuildBytesConf, AsOf.SplitHotKeyRowsConf)
+    val keys = Seq(ScaleGate.ForceConf, AsOf.SplitHotKeyRowsConf)
     val saved = keys.map(k => k -> spark.conf.getOption(k))
     try {
-      spark.conf.set(AsOf.SplitChunksConf, Chunks.toString)
-      spark.conf.set(AsOf.SplitMinBuildBytesConf, "1")
+      spark.conf.set(ScaleGate.ForceConf, "arm")
       spark.conf.set(AsOf.SplitHotKeyRowsConf, HotRows.toString)
       val dblTie = AsOf.join(purchases, views, on, "purchase_ts", "view_ts",
         rightTieBreak = Some("view_value")) // double column
@@ -170,18 +169,17 @@ class AsOfSplitSpec extends AnyFunSuite {
 
   test("plan guard: AsOf.join auto-splits past the build-size threshold, stays plain under it") {
     val on = Seq("user_id" -> "v_user_id")
-    val keys = Seq(AsOf.SplitChunksConf, AsOf.SplitMinBuildBytesConf, AsOf.SplitHotKeyRowsConf)
+    val keys = Seq(ScaleGate.ForceConf, AsOf.SplitHotKeyRowsConf)
     val saved = keys.map(k => k -> spark.conf.getOption(k))
     try {
-      spark.conf.set(AsOf.SplitChunksConf, Chunks.toString)
-      spark.conf.set(AsOf.SplitMinBuildBytesConf, "1")
+      spark.conf.set(ScaleGate.ForceConf, "arm")
       spark.conf.set(AsOf.SplitHotKeyRowsConf, HotRows.toString)
       val auto = AsOf.join(purchases, views, on, "purchase_ts", "view_ts",
         rightTieBreak = Some("view_id"))
       assert(auto.queryExecution.executedPlan.toString.contains("__asof_chunk_l"),
-        "build side above threshold must plan the time-split")
-      // under the threshold: plain plan, no chunk key anywhere
-      spark.conf.set(AsOf.SplitMinBuildBytesConf, Long.MaxValue.toString)
+        "an armed gate must plan the time-split")
+      // the default (auto) gate at test scale: plain plan, no chunk key
+      spark.conf.unset(ScaleGate.ForceConf)
       val plain = AsOf.join(purchases, views, on, "purchase_ts", "view_ts",
         rightTieBreak = Some("view_id"))
       assert(!plain.queryExecution.executedPlan.toString.contains("__asof_chunk_l"))
@@ -233,11 +231,10 @@ class AsOfSplitSpec extends AnyFunSuite {
       }: _*), views.schema)
     def build(right: DataFrame): DataFrame = AsOf.join(purchases, right, on,
       "purchase_ts", "view_ts", rightTieBreak = Some("view_id"))
-    val keys = Seq(AsOf.SplitChunksConf, AsOf.SplitMinBuildBytesConf, AsOf.SplitHotKeyRowsConf)
+    val keys = Seq(ScaleGate.ForceConf, AsOf.SplitHotKeyRowsConf)
     val saved = keys.map(k => k -> spark.conf.getOption(k))
     try {
-      spark.conf.set(AsOf.SplitChunksConf, Chunks.toString)
-      spark.conf.set(AsOf.SplitMinBuildBytesConf, "1")
+      spark.conf.set(ScaleGate.ForceConf, "arm")
       spark.conf.set(AsOf.SplitHotKeyRowsConf, HotRows.toString)
       var splitA: DataFrame = null
       var splitB: DataFrame = null

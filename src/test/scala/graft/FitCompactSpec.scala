@@ -3,8 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The round-16 fit-input compaction gate (ml.Features.fitCompact):
-  * below the row gate every fit input compacts to the former constant
-  * 4 partitions (gated model outputs bit-identical); above it the
+  * at or below the 1M-row gate every fit input compacts to the former
+  * constant 4 partitions (gated model outputs bit-identical); above it the
   * partition count must GROW with the input — and must grow even when
   * the input's scan has fewer splits than the target, which is why the
   * above-gate branch is a repartition (coalesce can only merge; the
@@ -21,39 +21,25 @@ class FitCompactSpec extends AnyFunSuite {
 
   test("at the gate boundary (rows == gate) the small path still applies") {
     val df = spark.range(0, 100, 1, 8).toDF("x")
-    val old = spark.conf.getOption(ml.Features.FitCompactRowsConf)
-    spark.conf.set(ml.Features.FitCompactRowsConf, "100")
-    try assert(ml.Features.fitCompact(df, 100).rdd.getNumPartitions == 4)
-    finally old.fold(spark.conf.unset(ml.Features.FitCompactRowsConf))(
-      spark.conf.set(ml.Features.FitCompactRowsConf, _))
+    assert(ml.Features.fitCompact(df, 1000000L).rdd.getNumPartitions == 4)
   }
 
   test("above the gate partitions grow past the input's own split count") {
     // 1-split input: the old coalesce(n) could NEVER grow this past 1
     val df = spark.range(0, 1000, 1, 1).toDF("x")
-    val old = spark.conf.getOption(ml.Features.FitCompactRowsConf)
-    spark.conf.set(ml.Features.FitCompactRowsConf, "10")
-    try {
-      // claimed corpus of 500k rows -> ceil(500k/100k)=5 target, capped
-      // at defaultParallelism (4 in this suite) -> exactly 4, and > the
-      // input's 1 split, proving the repartition branch engaged
-      val n = ml.Features.fitCompact(df, 500000L).rdd.getNumPartitions
-      assert(n == spark.sparkContext.defaultParallelism, s"got $n")
-      assert(n > df.rdd.getNumPartitions)
-    } finally old.fold(spark.conf.unset(ml.Features.FitCompactRowsConf))(
-      spark.conf.set(ml.Features.FitCompactRowsConf, _))
+    // claimed corpus of 5M rows -> ceil(5M/100k)=50 target, capped at
+    // defaultParallelism (4 in this suite) -> exactly 4, and > the
+    // input's 1 split, proving the repartition branch engaged
+    val n = ml.Features.fitCompact(df, 5000000L).rdd.getNumPartitions
+    assert(n == spark.sparkContext.defaultParallelism, s"got $n")
+    assert(n > df.rdd.getNumPartitions)
   }
 
   test("the compaction never changes the rows, only their placement") {
     val df = spark.range(0, 1000, 1, 8).toDF("x")
-    val old = spark.conf.getOption(ml.Features.FitCompactRowsConf)
-    spark.conf.set(ml.Features.FitCompactRowsConf, "10")
-    try {
-      val small = ml.Features.fitCompact(df, 5L).select("x")
-      val grown = ml.Features.fitCompact(df, 500000L).select("x")
-      assert(small.except(grown).isEmpty && grown.except(small).isEmpty)
-      assert(grown.count() == 1000)
-    } finally old.fold(spark.conf.unset(ml.Features.FitCompactRowsConf))(
-      spark.conf.set(ml.Features.FitCompactRowsConf, _))
+    val small = ml.Features.fitCompact(df, 1000000L).select("x")
+    val grown = ml.Features.fitCompact(df, 5000000L).select("x")
+    assert(small.except(grown).isEmpty && grown.except(small).isEmpty)
+    assert(grown.count() == 1000)
   }
 }

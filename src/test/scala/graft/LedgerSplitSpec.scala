@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.CciPipeline
+import graft.plans.ScaleGate
 
 /** The r26 whale-account running-sum split (VERDICT r15 #2): a hot
   * account's ledger is range-split on the lexicographic
@@ -51,9 +52,8 @@ class LedgerSplitSpec extends AnyFunSuite {
       val plain = CciPipeline.positionLedgerFrom(spark, f).collect().toSeq
       assert(plain.size == 2500 * 2 + 2000 + 30)
       withConfs(
-        CciPipeline.LedgerMinBytesConf -> "0",
-        CciPipeline.LedgerHotRowsConf -> "1000",
-        CciPipeline.LedgerChunksConf -> "4") {
+        ScaleGate.ForceConf -> "arm",
+        CciPipeline.LedgerHotRowsConf -> "1000") {
         val split = CciPipeline.positionLedgerFrom(spark, f).collect().toSeq
         assert(split == plain, "split ledger != plain ledger")
       }
@@ -74,9 +74,8 @@ class LedgerSplitSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-ledger-append").toString
     try {
       withConfs(
-        CciPipeline.LedgerMinBytesConf -> "0",
-        CciPipeline.LedgerHotRowsConf -> "1000",
-        CciPipeline.LedgerChunksConf -> "4") {
+        ScaleGate.ForceConf -> "arm",
+        CciPipeline.LedgerHotRowsConf -> "1000") {
         fills.write.mode("overwrite").parquet(dir)
         assert(CciPipeline.positionLedgerFrom(spark, spark.read.parquet(dir))
           .collect().toSeq == plainFirst)
@@ -90,9 +89,8 @@ class LedgerSplitSpec extends AnyFunSuite {
 
   test("ledger split: the armed plan windows over (cust, chunk), never the bare account key") {
     withConfs(
-      CciPipeline.LedgerMinBytesConf -> "0",
-      CciPipeline.LedgerHotRowsConf -> "1000",
-      CciPipeline.LedgerChunksConf -> "4") {
+      ScaleGate.ForceConf -> "arm",
+      CciPipeline.LedgerHotRowsConf -> "1000") {
       val plan = CciPipeline.positionLedgerFrom(spark, fills)
         .queryExecution.optimizedPlan
       val wins = plan.collect {

@@ -95,18 +95,17 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("s02: the armed mega-bucket cap is plan-invisible when no bucket exceeds it") {
     // Round-16 (VERDICT r15 task 2): the cap path must be a pure
-    // degradation guard — with the cap branch FORCED on (plan-stat gate
-    // dropped to 0) but the default cap far above every test-SF bucket
-    // population, the capped result must equal the plain result
-    // row-for-row. A drift here means the member-side heap reordered or
-    // dropped sub-cap candidates.
+    // degradation guard — with the cap branch FORCED on (gates.force=arm)
+    // but the default cap far above every test-SF bucket population, the
+    // capped result must equal the plain result row-for-row. A drift here
+    // means the member-side heap reordered or dropped sub-cap candidates.
     val plain = similarity.Similarity.lshTopKParam(spark, sf, 4, 2).collect()
-    spark.conf.set(similarity.Similarity.LshCapMinBytesConf, "0")
+    spark.conf.set(plans.ScaleGate.ForceConf, "arm")
     try {
       val capped = similarity.Similarity.lshTopKParam(spark, sf, 4, 2).collect()
       assert(plain.nonEmpty)
       assert(capped.toSeq == plain.toSeq, "capped != plain under a non-engaging cap")
-    } finally spark.conf.unset(similarity.Similarity.LshCapMinBytesConf)
+    } finally spark.conf.unset(plans.ScaleGate.ForceConf)
   }
 
   test("s02: an engaging cap bounds a duplicate-heavy corpus's candidates and keeps exact top-k") {
@@ -126,7 +125,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val e = (dup ++ rest).toDF("vec_id", "v")
       .withColumn("norm", sqrt(functions.TextFunctions.foldSum(
         transform($"v", x => x * x))))
-    spark.conf.set(similarity.Similarity.LshCapMinBytesConf, "0")
+    spark.conf.set(plans.ScaleGate.ForceConf, "arm")
     spark.conf.set(similarity.Similarity.LshMaxBucketConf, "8")
     try {
       val out = similarity.Similarity.lshTopKFrom(e, 4, 2)
@@ -139,7 +138,7 @@ class LlmOpsSpec extends AnyFunSuite {
         .filter($"query_id" === 0L && $"rnk" === 1).collect()
       assert(dupTop.nonEmpty && dupTop.head.getAs[Double]("cosine") >= 0.999999)
     } finally {
-      spark.conf.unset(similarity.Similarity.LshCapMinBytesConf)
+      spark.conf.unset(plans.ScaleGate.ForceConf)
       spark.conf.unset(similarity.Similarity.LshMaxBucketConf)
     }
   }

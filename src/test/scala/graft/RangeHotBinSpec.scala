@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Intervals
+import graft.plans.ScaleGate
 
 /** The interval family's runtime geometry (VERDICT r12 task 1): bin width
   * and salt fan-out are session confs, and a HOT BIN — one day's interval
@@ -39,7 +40,7 @@ class RangeHotBinSpec extends AnyFunSuite {
     }.toDF("l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice", "l_shipdate")
 
   private val geomKeys = Seq(Intervals.BinDaysConf, Intervals.SaltBucketsConf,
-    Intervals.HotBinRowsConf, Intervals.HotBinMinDetectBytesConf)
+    Intervals.HotBinRowsConf, ScaleGate.ForceConf)
 
   private def withConf(pairs: (String, String)*)(fn: => Unit): Unit = {
     val saved = geomKeys.map(k => k -> spark.conf.getOption(k))
@@ -55,13 +56,13 @@ class RangeHotBinSpec extends AnyFunSuite {
   test("q48 hot-bin split ≡ plain row-for-row on a Zipf-day corpus, and really sub-salts") {
     val orders = skewedOrders
     var plain: Seq[org.apache.spark.sql.Row] = null
-    withConf(Intervals.HotBinMinDetectBytesConf -> Long.MaxValue.toString) {
+    withConf(ScaleGate.ForceConf -> "off") {
       val df = Intervals.rangeJoinFromOrders(orders)
       assert(!df.queryExecution.executedPlan.toString.contains("isalt"),
         "detection off must keep the unsalted plan")
       plain = rows(df)
     }
-    withConf(Intervals.HotBinMinDetectBytesConf -> "0",
+    withConf(ScaleGate.ForceConf -> "arm",
         Intervals.HotBinRowsConf -> "500") {
       val df = Intervals.rangeJoinFromOrders(orders)
       val phys = df.queryExecution.executedPlan.toString
@@ -79,12 +80,12 @@ class RangeHotBinSpec extends AnyFunSuite {
     val orders = skewedOrders
     val li = skewedLineitem
     var plain: Seq[org.apache.spark.sql.Row] = null
-    withConf(Intervals.HotBinMinDetectBytesConf -> Long.MaxValue.toString) {
+    withConf(ScaleGate.ForceConf -> "off") {
       plain = rows(Intervals.intervalJoinFrom(orders, li))
     }
     // the replicating side here is the every-10th order-window subset
     // (~400 rows on the hot day), so the threshold sits below that
-    withConf(Intervals.HotBinMinDetectBytesConf -> "0",
+    withConf(ScaleGate.ForceConf -> "arm",
         Intervals.HotBinRowsConf -> "100") {
       val df = Intervals.intervalJoinFrom(orders, li)
       assert(df.queryExecution.executedPlan.toString.contains("isalt"))
@@ -106,13 +107,13 @@ class RangeHotBinSpec extends AnyFunSuite {
       (i, d, 1000.0 + (i % 97).toDouble)
     }.toDF("o_orderkey", "o_orderdate", "o_totalprice")
     var plain: Seq[org.apache.spark.sql.Row] = null
-    withConf(Intervals.HotBinMinDetectBytesConf -> Long.MaxValue.toString) {
+    withConf(ScaleGate.ForceConf -> "off") {
       val df = Intervals.rangeJoinFromOrders(orders)
       assert(!df.queryExecution.executedPlan.toString.contains("psalt"),
         "detection off must keep the unsalted plan")
       plain = rows(df)
     }
-    withConf(Intervals.HotBinMinDetectBytesConf -> "0",
+    withConf(ScaleGate.ForceConf -> "arm",
         Intervals.HotBinRowsConf -> "300") {
       val df = Intervals.rangeJoinFromOrders(orders)
       val phys = df.queryExecution.executedPlan.toString
@@ -131,10 +132,10 @@ class RangeHotBinSpec extends AnyFunSuite {
     val orders = skewedOrders
     val li = skewedLineitem
     var plain: Seq[org.apache.spark.sql.Row] = null
-    withConf(Intervals.HotBinMinDetectBytesConf -> Long.MaxValue.toString) {
+    withConf(ScaleGate.ForceConf -> "off") {
       plain = rows(Intervals.intervalJoinFrom(orders, li))
     }
-    withConf(Intervals.HotBinMinDetectBytesConf -> "0",
+    withConf(ScaleGate.ForceConf -> "arm",
         Intervals.HotBinRowsConf -> "50") {
       val df = Intervals.intervalJoinFrom(orders, li)
       val phys = df.queryExecution.executedPlan.toString
@@ -170,7 +171,7 @@ class RangeHotBinSpec extends AnyFunSuite {
   test("sub-salt fan-out is bounded: subI = ceil(count/hotRows), capped") {
     // one bin of 4000 intervals at hotRows=500 → subI 8; at 150 → capped
     // growth but never an abort; cold bins get subI 1 (absent)
-    withConf(Intervals.HotBinMinDetectBytesConf -> "0",
+    withConf(ScaleGate.ForceConf -> "arm",
         Intervals.HotBinRowsConf -> "500") {
       val iv = skewedOrders.select(
         $"o_orderkey".as("ikey"),
