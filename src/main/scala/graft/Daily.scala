@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.CciPipeline
 import graft.operators.CciPipeline.{Budget, BudgetFraction, BuyThresholds, FeeRate, GridConfig, TaxRate}
+import graft.plans.ZoneMapFileIndex
 import graft.sources.{EventConnector, LocalFileEventConnector, Tables}
 
 /** The daily orchestrated run — the reference's actual *product*
@@ -172,7 +173,21 @@ object Daily {
     * (dimension-scale). */
   private def latestCommitted(spark: SparkSession, dir: String,
       s: java.sql.Date): Option[DataFrame] =
-    latestCommittedPart(spark, dir, s).map(c => spark.read.parquet(s"$dir/run_d=${c.value}"))
+    latestCommittedPart(spark, dir, s).map(c => readPartition(spark, s"$dir/run_d=${c.value}"))
+
+  /** One workspace partition read back under the schema graft wrote into
+    * its parquet footers — a driver metadata read, where a bare
+    * `spark.read.parquet` runs a schema-inference job per read. A
+    * partition without a data file falls back to that plain read. */
+  private def readPartition(spark: SparkSession, dir: String): DataFrame = {
+    val p = new Path(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    ZoneMapFileIndex.listParquet(p.getFileSystem(conf), p).headOption
+      .fold(spark.read.parquet(dir)) { f =>
+        spark.read.schema(ZoneMapFileIndex.readFooters(conf, Seq(f.getPath), Nil)._1)
+          .parquet(dir)
+      }
+  }
 
   private def stateAsOf(spark: SparkSession, ws: Workspace, s: java.sql.Date): DataFrame =
     latestCommitted(spark, ws.stateDir, s).getOrElse(throw new IllegalArgumentException(
@@ -350,7 +365,7 @@ object Daily {
         "positions" -> s"${ws.positionsDir}/run_d=$s") ++
         sells.map(_ => "sells" -> s"${ws.sellsDir}/run_d=$s")
       val cntFrame = tagged.map { case (t, p) =>
-        spark.read.parquet(p).select(lit(t).as("t")) }
+        readPartition(spark, p).select(lit(t).as("t")) }
         .reduce(_ unionByName _)
         .groupBy($"t").count()
         .select($"t", $"count".cast("double").as("a"),
@@ -448,11 +463,11 @@ object Daily {
     // broker window and re-deriving the CCI fold.
     if (chainCommitted(spark, ws, s)) {
       val deltaBars = GraftSession.maybeCache(
-        spark.read.parquet(s"${ws.barsDir}/run_d=$s"))
+        readPartition(spark, s"${ws.barsDir}/run_d=$s"))
       try {
-        val deltaCci = spark.read.parquet(s"${ws.cciDir}/run_d=$s")
+        val deltaCci = readPartition(spark, s"${ws.cciDir}/run_d=$s")
         val newState = GraftSession.maybeCache(
-          spark.read.parquet(s"${ws.stateDir}/run_d=$s"))
+          readPartition(spark, s"${ws.stateDir}/run_d=$s"))
         try return finishDay(spark, ws, s, cfg, withOrders, withBalance,
           deltaBars, deltaCci, newState)
         finally newState.unpersist()
@@ -599,7 +614,7 @@ object Daily {
           s"daily run day $s", interruptOnCancel = false)
         try {
           if (digestCommitted(spark, ws, s, withOrders, withBalance))
-            spark.read.parquet(s"${ws.digestDir}/run_d=$s").as[DayDigest].head()
+            readPartition(spark, s"${ws.digestDir}/run_d=$s").as[DayDigest].head()
           else runDay(spark, conn, ws, s, cfg, withOrders, withBalance)
         } finally spark.sparkContext.clearJobGroup()
       }

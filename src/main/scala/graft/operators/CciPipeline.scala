@@ -333,13 +333,16 @@ object CciPipeline {
          |         THEN (tp_o - sma_o) / (0.015 * mad_o) END AS open_cci
          |  FROM madw)""".stripMargin
 
-  def cciQuery(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    cci(spark, dir)
-      .select($"user_id", $"d", $"idx", $"open_pr", $"close_pr",
-        (floor(($"sma_c") * 10000.0 + 0.5) / 10000.0).as("sma_close"), (floor(($"mad_c") * 10000.0 + 0.5) / 10000.0).as("mad_close"),
-        (floor(($"close_cci") * 10000.0 + 0.5) / 10000.0).as("close_cci"), (floor(($"open_cci") * 10000.0 + 0.5) / 10000.0).as("open_cci"))
-      .orderBy($"user_id", $"d")
+  def cciQuery(spark: SparkSession, dir: String): DataFrame = cciRounded(cci(spark, dir))
+
+  /** r04's output projection: the four derived columns rounded to 1e-4
+    * (as [[cciSql]] rounds them), ordered by series and day. */
+  private def cciRounded(df: DataFrame): DataFrame = {
+    def r4(c: String) = floor(col(c) * 10000.0 + 0.5) / 10000.0
+    df.select(col("user_id"), col("d"), col("idx"), col("open_pr"), col("close_pr"),
+        r4("sma_c").as("sma_close"), r4("mad_c").as("mad_close"),
+        r4("close_cci").as("close_cci"), r4("open_cci").as("open_cci"))
+      .orderBy(col("user_id"), col("d"))
   }
 
   val cciSql: String =
@@ -414,16 +417,8 @@ object CciPipeline {
 
   /** [[cciChunked]] through [[cciQuery]]'s projection (spec equality vs
     * the window form's oracle-checked output). */
-  def cciChunkedQuery(spark: SparkSession, dir: String, chunkRows: Int): DataFrame = {
-    import spark.implicits._
-    cciChunked(spark, dir, GridConfig(), chunkRows)
-      .select($"user_id", $"d", $"idx", $"open_pr", $"close_pr",
-        (floor(($"sma_c") * 10000.0 + 0.5) / 10000.0).as("sma_close"),
-        (floor(($"mad_c") * 10000.0 + 0.5) / 10000.0).as("mad_close"),
-        (floor(($"close_cci") * 10000.0 + 0.5) / 10000.0).as("close_cci"),
-        (floor(($"open_cci") * 10000.0 + 0.5) / 10000.0).as("open_cci"))
-      .orderBy($"user_id", $"d")
-  }
+  def cciChunkedQuery(spark: SparkSession, dir: String, chunkRows: Int): DataFrame =
+    cciRounded(cciChunked(spark, dir, GridConfig(), chunkRows))
 
   // ---------------------------------------------------------------- r30
   /** Incremental CCI: yesterday's CCI TABLE + today's delta bars → today's

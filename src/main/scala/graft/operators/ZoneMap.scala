@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DateType, StructType, TimestampType}
 
+import graft.plans.ZoneMapFileIndex
 import graft.sources.Tables
 
 /** File-level zone-map data skipping — min/max statistics pruning on a
@@ -13,30 +16,31 @@ import graft.sources.Tables
   * only. A range predicate on an ordinary column still scans every file —
   * unless the layout is value-CLUSTERED and a per-file [min, max] "zone
   * map" lets the planner drop files whose range cannot intersect the
-  * predicate. Two pieces:
+  * predicate. Three pieces, one of each:
   *
-  *   1. CLUSTER-THEN-SKIP layout: `repartitionByRange` on the skip column
-  *      before the write gives each file a narrow, near-disjoint value
-  *      range (the 1-D special case of Z-ordering). Skipping only bites
-  *      when values are clustered — a random layout's zones all span the
-  *      full domain.
-  *   2. The zone map itself is READ FROM PARQUET FOOTERS — the write
-  *      already persisted per-file column statistics, so recovering
-  *      (file, min, max, rows) is file-count-scale driver metadata I/O
-  *      (one row per FILE — at 100 TB with 1 GiB files that is ~10^5
-  *      rows, a dimension), ZERO Spark jobs and zero data-column reads
-  *      even in a fresh session. [[appendZorder]] maintains the memoized
-  *      map incrementally from the new files' footers; the scan-based
-  *      [[zoneMap]]/[[zoneMap2]] remain as the derivation spec that the
-  *      footer rows are tested against.
-  *
-  * A range query then: (a) filters the zone map on the driver (a
-  * file-count-scale metadata op, the same class as r19's max-partition
-  * listing), (b) reads ONLY the overlapping files, with the residual
-  * predicate still pushed to those scans (zones overlap at file
-  * boundaries, so the filter stays — skipping is an optimization, never a
-  * semantics change). The construction asserts the skip actually bit:
-  * strictly fewer files read than the layout holds.
+  *   1. CLUSTER-THEN-SKIP layouts: `repartitionByRange` on the skip
+  *      column (r40's price, the events' ts) or on a Morton code of two
+  *      (r46/r47's price × quantity) before the write gives each file a
+  *      narrow value range. Skipping only bites when values are
+  *      clustered — a random layout's zones all span the full domain.
+  *   2. The zone map is READ FROM PARQUET FOOTERS
+  *      ([[graft.plans.ZoneMapFileIndex.readFooters]]) — the write already
+  *      persisted per-file column statistics and the Spark schema, so a
+  *      layout's metadata is file-count-scale driver I/O (one row per
+  *      FILE — at 100 TB with 1 GiB files that is ~10^5 rows, a
+  *      dimension), ZERO Spark jobs and zero data-column reads even in a
+  *      fresh session. One memo ([[layouts]]) holds each layout's path,
+  *      schema and zone rows; [[appendZorder]] maintains it incrementally
+  *      from the new files' footers; the scan-based [[zoneMap]] remains as
+  *      the derivation spec the footer rows are tested against.
+  *   3. Pruning happens in ONE place, the planner: every query reads its
+  *      layout through [[graft.plans.ZoneMapFileIndex]], whose listing
+  *      drops the files the query's own pushed filters exclude. The
+  *      residual predicate still reaches the parquet reader (zones overlap
+  *      at file boundaries, so the filter stays — skipping is an
+  *      optimization, never a semantics change). r40 and r46 assert the
+  *      skip actually bit: strictly fewer files listed than the layout
+  *      holds.
   *
   * The DuckDB oracle runs the same predicate over the ORIGINAL unclustered
   * table, so the gate proves pruned-read ≡ full-scan semantics.
@@ -49,136 +53,124 @@ object ZoneMap {
   val PriceLo = 30000.0
   val PriceHi = 36000.0
 
-  /** Clustered layout per source dir, built once per JVM (the bench sweep
-    * and the verify gate both call the query; the layout is immutable
-    * derived state, same memoization discipline as the ANN index
-    * workspace). Shutdown-hook cleaned via Extras.tempDir. */
-  private[graft] val layouts = scala.collection.concurrent.TrieMap.empty[String, String]
+  /** A zone-mapped layout: its path, the Spark schema its footers carry,
+    * its skip columns and one footer zone row per file. */
+  private[graft] final case class Layout(path: String, schema: StructType,
+      cols: Seq[String], zones: Array[Row])
 
-  private def clusteredLayout(spark: SparkSession, dir: String): String =
-    layouts.getOrElseUpdate(dir, {
-      val out = Extras.tempDir("graft_zonemap")
-      Tables.lineitem(spark, dir)
-        .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
-          col("l_extendedprice"), col("l_discount"))
-        .repartitionByRange(ZoneFiles, col("l_extendedprice"))
-        .write.mode("overwrite").parquet(out)
-      out
+  /** The one layout memo, keyed by layout path. Layouts are immutable
+    * derived state built once per JVM (the bench sweep and the verify gate
+    * both call the queries; same memoization discipline as the ANN index
+    * workspace) under one shutdown-hook-cleaned root (Extras.tempDir). */
+  private[graft] val layouts = scala.collection.concurrent.TrieMap.empty[String, Layout]
+
+  private lazy val layoutRoot = Extras.tempDir("graft_zonemap")
+
+  /** The layout at `path` from its footers, memoized. */
+  private[graft] def layoutAt(spark: SparkSession, path: String,
+      cols: Seq[String]): Layout =
+    layouts.getOrElseUpdate(path, {
+      val root = new Path(path)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val files = ZoneMapFileIndex.listParquet(root.getFileSystem(conf), root).map(_.getPath)
+      val (schema, zones) = ZoneMapFileIndex.readFooters(conf, files, cols)
+      Layout(path, schema, cols, zones)
     })
 
-  /** The zone-map metadata table: one row per file with the skip column's
-    * [min, max] and the row count. One partial-aggregable scan. */
-  def zoneMap(spark: SparkSession, layout: String): DataFrame =
-    spark.read.parquet(layout)
-      .select(col("_metadata.file_path").as("file"), col("l_extendedprice"))
+  /** The `kind` layout of source dir `dir`: written once by `write` (under
+    * a path derived from both, so a dropped memo entry re-reads the
+    * committed layout's footers instead of rebuilding it), then read
+    * through [[layoutAt]]. Synchronized: two first callers must not write
+    * the same path. */
+  private def built(spark: SparkSession, kind: String, dir: String,
+      cols: Seq[String])(write: String => Unit): Layout = synchronized {
+    val path = s"$layoutRoot/$kind-" +
+      java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8"))
+    val done = new Path(path, "_SUCCESS")
+    if (!layouts.contains(path) &&
+        !done.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(done))
+      write(path)
+    layoutAt(spark, path, cols)
+  }
+
+  /** The layout as a PLANNER-INTEGRATED table: the scan's file listing
+    * applies the footer zone map to the query's own pushed data filters
+    * ([[graft.plans.ZoneMapFileIndex]]) — the partition-pruning analogue
+    * for non-partition columns. Schema and zones come from the memo, so
+    * building the table runs no Spark job. */
+  private[graft] def table(spark: SparkSession, l: Layout): DataFrame =
+    ZoneMapFileIndex.table(spark, l.path, l.zones, l.schema, l.cols)
+
+  private val lineitemCols = Seq("l_orderkey", "l_returnflag", "l_quantity",
+    "l_extendedprice", "l_discount").map(col)
+
+  private[graft] def zonemapLayout(spark: SparkSession, dir: String): Layout =
+    built(spark, "zonemap", dir, Seq("l_extendedprice")) { out =>
+      Tables.lineitem(spark, dir).select(lineitemCols: _*)
+        .repartitionByRange(ZoneFiles, col("l_extendedprice"))
+        .write.mode("overwrite").parquet(out)
+    }
+
+  /** The scan-based derivation of [[layoutAt]]'s zone rows over `cols`:
+    * one partial-aggregable file-grouped scan with the same row shape
+    * (long zones as integral values, day numbers or micros). The
+    * derivation spec footer rows are tested against, per file. */
+  def zoneMap(spark: SparkSession, layout: String, cols: Seq[String]): DataFrame = {
+    val df = spark.read.parquet(layout)
+    def asZone(c: Column, dt: DataType): Column = dt match {
+      case TimestampType => unix_micros(c)
+      case DateType => unix_date(c).cast("long")
+      case _ => c.cast(if (ZoneMapFileIndex.longZone(dt)) "long" else "double")
+    }
+    val bounds = cols.flatMap { c =>
+      val dt = df.schema(c).dataType
+      Seq(asZone(min(col(c)), dt).as(ZoneMapFileIndex.minField(c)),
+        asZone(max(col(c)), dt).as(ZoneMapFileIndex.maxField(c)))
+    }
+    df.select(col("_metadata.file_path").as("file") +: cols.map(col): _*)
       .groupBy(col("file"))
-      .agg(min(col("l_extendedprice")).as("zmin"),
-        max(col("l_extendedprice")).as("zmax"),
-        count(lit(1)).as("n_rows"))
-
-  // ---- persisted zone-map metadata (round-13): the per-file [min, max]
-  // the query planner needs is ALREADY persisted — parquet writes it into
-  // every file's FOOTER as column-chunk statistics. zoneRows therefore
-  // reads footers (file-count-scale driver I/O, a few KB each — the same
-  // metadata read Delta/Iceberg pay from their catalogs), NEVER the data
-  // columns: a FRESH session's first zone-mapped query plans with ZERO
-  // Spark jobs (ZoneMapIntervalSpec pins this), where it previously paid
-  // a corpus-scale 2-column scan per JVM. The scan-based zoneMap/zoneMap2
-  // remain as the DERIVATION SPEC — tests prove footer ≡ scan per file.
-
-  /** One file's zones over the two skip columns; a column with absent
-    * footer statistics gets an UNBOUNDED zone (±∞ — it matches every
-    * band, so pruning stays sound and only skip ratio is lost). */
-  private[graft] def footerZones(spark: SparkSession,
-      files: Seq[org.apache.hadoop.fs.Path]): Array[org.apache.spark.sql.Row] = {
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    files.sortBy(_.toString).map { p =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala.toSeq
-        val nRows = blocks.map(_.getRowCount).sum
-        def bounds(colName: String): (Double, Double) = {
-          val perBlock = blocks.map { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == colName)
-              .map(_.getStatistics)
-              .filter(s => s != null && s.hasNonNullValue)
-              .map(s => (s.genericGetMin.asInstanceOf[Number].doubleValue,
-                s.genericGetMax.asInstanceOf[Number].doubleValue))
-          }
-          if (perBlock.isEmpty || perBlock.exists(_.isEmpty))
-            (Double.NegativeInfinity, Double.PositiveInfinity)
-          else (perBlock.map(_.get._1).min, perBlock.map(_.get._2).max)
-        }
-        val (pmin, pmax) = bounds("l_extendedprice")
-        val (qmin, qmax) = bounds("l_quantity")
-        // Hadoop Path.toString renders exactly as `_metadata.file_path`
-        // does (file:/tmp/...), so footer- and scan-derived rows are
-        // interchangeable keys — the parity spec pins this
-        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-          Array[Any](p.toString, pmin, pmax, qmin, qmax, nRows), zoneSchema)
-      } finally reader.close()
-    }.toArray
+      .agg(bounds.head, bounds.tail :+ count(lit(1)).as("n_rows"): _*)
   }
 
-  /** Shared shape of footer- and scan-derived zone rows. */
-  private val zoneSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("file",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("pmin",
-      org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("pmax",
-      org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("qmin",
-      org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("qmax",
-      org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("n_rows",
-      org.apache.spark.sql.types.LongType)))
+  /** The conjunction of inclusive bands, left-nested in argument order. */
+  private def band(bands: (String, Double, Double)*): Column =
+    bands.flatMap { case (c, lo, hi) => Seq(col(c) >= lo, col(c) <= hi) }.reduce(_ && _)
 
-  private def listParquet(spark: SparkSession,
-      layout: String): Seq[org.apache.hadoop.fs.Path] = {
-    val hPath = new org.apache.hadoop.fs.Path(layout)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(hPath).toSeq.map(_.getPath)
-      .filter(_.getName.endsWith(".parquet"))
-  }
+  /** The band summary per return flag in exact integer cents. */
+  private def bandSummary(table: DataFrame, pred: Column): DataFrame =
+    table.filter(pred)
+      .groupBy(col("l_returnflag"))
+      .agg(count(lit(1)).as("n_lines"),
+        (sum(graft.functions.Money.cents(col("l_quantity"))).cast("double") / 100.0)
+          .as("sum_qty"),
+        (sum(graft.functions.Money.cents(col("l_extendedprice"))).cast("double") / 100.0)
+          .as("sum_price"))
+      .orderBy(col("l_returnflag"))
 
-  /** The files whose zones intersect [lo, hi], and the layout's total file
-    * count — a driver-side metadata op over the footer-backed zone map. */
-  private[graft] def planSkip(spark: SparkSession, layout: String,
-      lo: Double, hi: Double): (Seq[String], Int) = {
-    val zones = zoneRows(spark, layout)
-    val matched = zones.filter { r =>
-      r.getAs[Double]("pmax") >= lo && r.getAs[Double]("pmin") <= hi
-    }.map(_.getAs[String]("file")).toSeq.sorted
-    (matched, zones.length)
+  /** `query` after asserting its zone map bit: the index lists at least
+    * one file, and strictly fewer than the layout holds, under the
+    * query's own pushed filters (planning only — no Spark job). */
+  private def requireSkips(query: DataFrame, what: String): DataFrame = {
+    val scan = query.queryExecution.sparkPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.get
+    val index = scan.relation.location
+    val listed = index.listFiles(Nil, scan.dataFilters).map(_.files.size).sum
+    val total = index.inputFiles.length
+    require(listed > 0, s"$what matched no file for a non-empty band")
+    require(listed < total,
+      s"$what failed to skip: $listed of $total files matched — layout not clustered?")
+    query
   }
 
   // ---------------------------------------------------------------- r40
-  /** Range-band revenue summary answered through the zone map: read only
-    * the files whose zones intersect the predicate, keep the residual
-    * filter (pushed to the pruned scans), aggregate per return flag in
-    * exact integer cents. */
-  def zonemapSkip(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val layout = clusteredLayout(spark, dir)
-    val (files, total) = planSkip(spark, layout, PriceLo, PriceHi)
-    require(files.nonEmpty, "zone map matched no file for a non-empty band")
-    require(files.length < total,
-      s"zone map failed to skip: ${files.length} of $total files matched " +
-        s"[$PriceLo, $PriceHi] — layout not clustered?")
-    spark.read.parquet(files: _*)
-      .filter($"l_extendedprice" >= PriceLo && $"l_extendedprice" <= PriceHi)
-      .groupBy($"l_returnflag")
-      .agg(count(lit(1)).as("n_lines"),
-        (sum(graft.functions.Money.cents($"l_quantity")).cast("double") / 100.0)
-          .as("sum_qty"),
-        (sum(graft.functions.Money.cents($"l_extendedprice")).cast("double") / 100.0)
-          .as("sum_price"))
-      .orderBy($"l_returnflag")
-  }
+  /** Range-band revenue summary over the price-clustered layout: the naive
+    * filter over the index-backed table, so only the files whose price
+    * zones intersect the band are read. */
+  def zonemapSkip(spark: SparkSession, dir: String): DataFrame =
+    requireSkips(bandSummary(table(spark, zonemapLayout(spark, dir)),
+      band(("l_extendedprice", PriceLo, PriceHi))),
+      s"zone map [$PriceLo, $PriceHi]")
 
   val zonemapSkipSql: String =
     s"""SELECT l_returnflag, count(*) AS n_lines,
@@ -232,14 +224,11 @@ object ZoneMap {
     spread8(bucket(price, pMin, pMax))
       .bitwiseOR(shiftleft(spread8(bucket(qty, qMin, qMax)), 1))
 
-  private[graft] val zLayouts = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** The z-ordered layout per source dir, built once per JVM: one
-    * dimension-scale min/max pass for the bucket bounds, then ONE
+  /** Bounds pass + one range-shuffle z-ordered write of `df` into `out`:
+    * one dimension-scale min/max pass for the bucket bounds, then ONE
     * repartitionByRange on the Morton expression (each file = a
     * contiguous z-range by row count). The z-code is a partitioning
     * expression only — nothing extra is stored. */
-  /** Bounds pass + one range-shuffle z-ordered write of `df` into `out`. */
   private[graft] def writeZorder(df: DataFrame, out: String, files: Int,
       mode: String = "overwrite"): Unit = {
     val b = df.agg(min(col("l_extendedprice")), max(col("l_extendedprice")),
@@ -249,166 +238,77 @@ object ZoneMap {
       .write.mode(mode).parquet(out)
   }
 
-  private[graft] def zorderLayout(spark: SparkSession, dir: String): String =
-    zLayouts.getOrElseUpdate(dir, {
-      val out = Extras.tempDir("graft_zorder")
-      writeZorder(Tables.lineitem(spark, dir)
-        .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
-          col("l_extendedprice"), col("l_discount")), out, ZFiles)
-      out
-    })
+  /** The z-ordered layout's skip columns. */
+  private[graft] val ZCols = Seq("l_extendedprice", "l_quantity")
 
-  /** Two-column zone map: one partial-aggregable file-grouped scan →
-    * (file, price [min,max], qty [min,max], rows) — metadata-scale. */
-  def zoneMap2(spark: SparkSession, layout: String): DataFrame =
-    spark.read.parquet(layout)
-      .select(col("_metadata.file_path").as("file"),
-        col("l_extendedprice"), col("l_quantity"))
-      .groupBy(col("file"))
-      .agg(min(col("l_extendedprice")).as("pmin"),
-        max(col("l_extendedprice")).as("pmax"),
-        min(col("l_quantity")).as("qmin"),
-        max(col("l_quantity")).as("qmax"),
-        count(lit(1)).as("n_rows"))
+  /** The z-ordered layout per source dir, built once per JVM. */
+  private[graft] def zorderLayout(spark: SparkSession, dir: String): Layout =
+    built(spark, "zorder", dir, ZCols) { out =>
+      writeZorder(Tables.lineitem(spark, dir).select(lineitemCols: _*), out, ZFiles)
+    }
 
-  /** The zone rows as maintained METADATA: read from the layout's parquet
-    * FOOTERS (file-count-scale driver I/O, zero Spark jobs, zero data-
-    * column reads — the write itself persisted the statistics), memoized
-    * per (JVM, layout) and updated incrementally by [[appendZorder]].
-    * This is the production shape: a cold session pays a metadata read,
-    * never a corpus scan. */
-  private val zmMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Array[org.apache.spark.sql.Row]]
-  private[graft] def zoneRows(spark: SparkSession, layout: String): Array[org.apache.spark.sql.Row] =
-    zmMemo.getOrElseUpdate(layout, footerZones(spark, listParquet(spark, layout)))
-
-  /** Test hook: forget a layout's memoized metadata (simulates a fresh
-    * session over an existing layout). */
-  private[graft] def dropZoneMemo(layout: String): Unit = {
-    zmMemo.remove(layout): Unit
-  }
-
-  /** Files whose zones intersect BOTH bands, plus the total file count. */
-  private[graft] def planSkip2(spark: SparkSession, layout: String,
-      pLo: Double, pHi: Double, qLo: Double, qHi: Double): (Seq[String], Int) = {
-    val zones = zoneRows(spark, layout)
-    val matched = zones.filter { r =>
-      r.getAs[Double]("pmax") >= pLo && r.getAs[Double]("pmin") <= pHi &&
-        r.getAs[Double]("qmax") >= qLo && r.getAs[Double]("qmin") <= qHi
-    }.map(_.getAs[String]("file")).toSeq.sorted
-    (matched, zones.length)
-  }
-
-  /** r46: the conjunctive band summary answered through the 2-D zone map —
-    * read only files whose zones intersect BOTH bands, residual filter
-    * pushed to the pruned scans, exact-cent aggregation per return flag. */
-  def zorderSkip(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val layout = zorderLayout(spark, dir)
-    val (files, total) = planSkip2(spark, layout, PriceLo, PriceHi, QtyLo, QtyHi)
-    require(files.nonEmpty, "z-order zone map matched no file for a non-empty band")
-    require(files.length < total,
-      s"z-order zone map failed to skip: ${files.length} of $total files " +
-        s"matched [$PriceLo,$PriceHi]×[$QtyLo,$QtyHi] — layout not clustered?")
-    spark.read.parquet(files: _*)
-      .filter($"l_extendedprice" >= PriceLo && $"l_extendedprice" <= PriceHi &&
-        $"l_quantity" >= QtyLo && $"l_quantity" <= QtyHi)
-      .groupBy($"l_returnflag")
-      .agg(count(lit(1)).as("n_lines"),
-        (sum(graft.functions.Money.cents($"l_quantity")).cast("double") / 100.0)
-          .as("sum_qty"),
-        (sum(graft.functions.Money.cents($"l_extendedprice")).cast("double") / 100.0)
-          .as("sum_price"))
-      .orderBy($"l_returnflag")
-  }
+  /** r46: the conjunctive band summary through the 2-D zone map — r47's
+    * planner path plus the assertion that the skip bit. */
+  def zorderSkip(spark: SparkSession, dir: String): DataFrame =
+    requireSkips(zorderPlanned(spark, dir),
+      s"z-order zone map [$PriceLo,$PriceHi]×[$QtyLo,$QtyHi]")
 
   // --------------------------------------------------------------- r47
-  /** The z-ordered layout as a PLANNER-INTEGRATED table: the scan's file
-    * listing itself applies the footer zone map to the query's own pushed
-    * data filters ([[graft.plans.ZoneMapFileIndex]]) — the partition-
-    * pruning analogue for non-partition columns. Unlike [[zorderSkip]]'s
-    * driver-side `spark.read.parquet(matched: _*)` assembly, the pruning
-    * here lives INSIDE the plan: any predicate composed on top prunes
-    * automatically, joins/DPP over the table see the pruned relation, and
-    * the residual predicate still reaches the parquet reader as
-    * PushedFilters (spec-pinned). */
-  def zorderTable(spark: SparkSession, dir: String): DataFrame = {
-    val layout = zorderLayout(spark, dir)
-    // schema from one footer — a driver metadata read, not a scan
-    val schema = spark.read.parquet(layout).schema
-      .filterNot(_.name.startsWith("_"))
-    graft.plans.ZoneMapFileIndex.table(spark, layout,
-      zoneRows(spark, layout),
-      org.apache.spark.sql.types.StructType(schema),
-      Map("l_extendedprice" -> ("pmin", "pmax"),
-        "l_quantity" -> ("qmin", "qmax")),
-      // refresh() hands appended files here: footer reads only, the same
-      // per-new-file increment appendZorder pays
-      paths => footerZones(spark, paths))
-  }
+  /** The z-ordered layout as a planner-integrated table: any predicate
+    * composed on top prunes automatically, joins/DPP over the table see
+    * the pruned relation, and the residual predicate still reaches the
+    * parquet reader as PushedFilters (spec-pinned). */
+  def zorderTable(spark: SparkSession, dir: String): DataFrame =
+    table(spark, zorderLayout(spark, dir))
 
-  /** r47: r46's conjunctive band summary, answered through the planner-
-    * integrated index — the query is the NAIVE spelling (filter over the
-    * table, no file-list plumbing) and the zone-map skip happens at
-    * planning time. Same DuckDB oracle as r46. */
-  def zorderPlanned(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    zorderTable(spark, dir)
-      .filter($"l_extendedprice" >= PriceLo && $"l_extendedprice" <= PriceHi &&
-        $"l_quantity" >= QtyLo && $"l_quantity" <= QtyHi)
-      .groupBy($"l_returnflag")
-      .agg(count(lit(1)).as("n_lines"),
-        (sum(graft.functions.Money.cents($"l_quantity")).cast("double") / 100.0)
-          .as("sum_qty"),
-        (sum(graft.functions.Money.cents($"l_extendedprice")).cast("double") / 100.0)
-          .as("sum_price"))
-      .orderBy($"l_returnflag")
-  }
+  /** r47: r46's conjunctive band summary as the NAIVE spelling (filter
+    * over the table, no file-list plumbing) — the zone-map skip happens
+    * at planning time. Same DuckDB oracle as r46. */
+  def zorderPlanned(spark: SparkSession, dir: String): DataFrame =
+    bandSummary(zorderTable(spark, dir),
+      band(("l_extendedprice", PriceLo, PriceHi), ("l_quantity", QtyLo, QtyHi)))
 
   /** Incremental layout maintenance: append `delta` (same column set) as
     * NEW z-ordered files without touching existing ones, and return the
-    * new files' zone rows computed from a scan of ONLY those files — the
-    * write-time metadata update both zone-map rows promise. At 100 TB the
-    * full rebuild is a corpus scan; this path costs ∝ delta: the append
-    * is one range-shuffle write of the delta, and the zone-map increment
-    * reads back just the FOOTERS of the files the write produced (a
-    * per-new-file metadata read, no data columns). Bucket bounds are
-    * recomputed from the delta — bounds shape the LAYOUT of the new files
-    * only; zones stay honest per-file stats over real values either way
-    * (a delta clustered on its own range merely overlaps the base files'
-    * zones, costing skip ratio, never correctness). */
+    * new files' zone rows — the write-time metadata update both zone-map
+    * rows promise. At 100 TB the full rebuild is a corpus scan; this path
+    * costs ∝ delta: the append is one range-shuffle write of the delta,
+    * and the zone-map increment reads back just the FOOTERS of the files
+    * the write produced (a per-new-file metadata read, no data columns).
+    * Bucket bounds are recomputed from the delta — bounds shape the
+    * LAYOUT of the new files only; zones stay honest per-file stats over
+    * real values either way (a delta clustered on its own range merely
+    * overlaps the base files' zones, costing skip ratio, never
+    * correctness). */
   private[graft] def appendZorder(spark: SparkSession, layout: String,
-      delta: DataFrame): Array[org.apache.spark.sql.Row] = {
+      delta: DataFrame): Array[Row] = {
     // Hadoop FS listing, not java.io — the layout lives on HDFS/S3 in
     // production, and a listing is a metadata op either way
-    val hPath = new org.apache.hadoop.fs.Path(layout)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hPath = new Path(layout)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = hPath.getFileSystem(conf)
     // Keep the listStatus paths themselves (QUALIFIED — file:/tmp/...),
     // never re-derive them from the scheme-less layout string: zone-row
     // file keys must share one rendering with _metadata.file_path /
     // FileStatus or ZoneMapFileIndex.byPath lookups silently miss and
     // appended files lose pruning (round-13 advice, medium).
-    def files(): Map[String, org.apache.hadoop.fs.Path] =
-      fs.listStatus(hPath).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
-        .map(p => p.getName -> p).toMap
+    def files(): Map[String, Path] =
+      ZoneMapFileIndex.listParquet(fs, hPath).map(s => s.getPath.getName -> s.getPath).toMap
     val before = files().keySet
     writeZorder(delta, layout, math.max(1, ZFiles / 8), mode = "append")
     val after = files()
     val fresh = (after.keySet -- before).toSeq.sorted.map(after)
     require(fresh.nonEmpty, "append produced no new files")
-    val newRows = footerZones(spark, fresh)
+    val newRows = ZoneMapFileIndex.readFooters(conf, fresh, ZCols)._2
     // maintain the in-memory metadata incrementally — existing files are
     // immutable under append, so their zone rows stand verbatim
-    zmMemo.updateWith(layout)(prev => prev.map(_ ++ newRows))
+    layouts.updateWith(layout)(_.map(l => l.copy(zones = l.zones ++ newRows)))
     newRows
   }
 
   // ------------------------------------------- ts-zoned events (round-15)
-  // VERDICT r14 task 4: zones were stored as doubles, so only double
-  // columns could register as skip columns — but real 100-TB skipping
-  // bites hardest on date/timestamp/integral columns (the r48 chart
-  // window, r16's date layouts). Timestamp zones are stored as LONG
+  // Real 100-TB skipping bites hardest on date/timestamp/integral columns
+  // (the r48 chart window, r16's date layouts). Timestamp zones are LONG
   // MICROS (exact — no double-grid widening needed for timestamp
   // literals, which ARE long micros in Catalyst), and the events layout
   // below is ts-clustered so an r48-style window prunes files through
@@ -418,15 +318,12 @@ object ZoneMap {
     * time span, so a one-week window touches few of them). */
   val TsFiles = 16
 
-  private[graft] val tsLayouts = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Events clustered on `ts` — the 1-D zone layout for the time axis.
     * Written as TIMESTAMP_MICROS explicitly: INT96 (a possible session
     * default) persists no usable min/max statistics, and the zone rows
-    * below ARE those statistics. */
-  private def tsClusteredLayout(spark: SparkSession, dir: String): String =
-    tsLayouts.getOrElseUpdate(dir, {
-      val out = Extras.tempDir("graft_tszone")
+    * ARE those statistics. */
+  private[graft] def tsLayout(spark: SparkSession, dir: String): Layout =
+    built(spark, "tszone", dir, Seq("ts")) { out =>
       val key = "spark.sql.parquet.outputTimestampType"
       val prev = spark.conf.getOption(key)
       spark.conf.set(key, "TIMESTAMP_MICROS")
@@ -434,70 +331,13 @@ object ZoneMap {
         .repartitionByRange(TsFiles, col("ts"))
         .write.mode("overwrite").parquet(out)
       finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-      out
-    })
+    }
 
-  private val tsZoneSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("file",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("tmin",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("tmax",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("n_rows",
-      org.apache.spark.sql.types.LongType)))
-
-  /** Footer-derived LONG zones for the ts column (micros since epoch —
-    * the INT64 physical value parquet stores for TIMESTAMP(MICROS)).
-    * Absent statistics → an unbounded zone, as in [[footerZones]]. */
-  private[graft] def footerZonesTs(spark: SparkSession,
-      files: Seq[org.apache.hadoop.fs.Path]): Array[org.apache.spark.sql.Row] = {
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    files.sortBy(_.toString).map { p =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala.toSeq
-        val nRows = blocks.map(_.getRowCount).sum
-        val perBlock = blocks.map { b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == "ts")
-            .map(_.getStatistics)
-            .filter(s => s != null && s.hasNonNullValue)
-            .map(s => (s.genericGetMin.asInstanceOf[Number].longValue,
-              s.genericGetMax.asInstanceOf[Number].longValue))
-        }
-        val (tmin, tmax) =
-          if (perBlock.isEmpty || perBlock.exists(_.isEmpty))
-            (Long.MinValue, Long.MaxValue)
-          else (perBlock.map(_.get._1).min, perBlock.map(_.get._2).max)
-        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-          Array[Any](p.toString, tmin, tmax, nRows), tsZoneSchema)
-      } finally reader.close()
-    }.toArray
-  }
-
-  private val tzMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Array[org.apache.spark.sql.Row]]
-  private[graft] def tsZoneRows(spark: SparkSession, layout: String): Array[org.apache.spark.sql.Row] =
-    tzMemo.getOrElseUpdate(layout, footerZonesTs(spark, listParquet(spark, layout)))
-
-  /** The ts-clustered events layout as a PLANNER-INTEGRATED table: a
-    * plain `WHERE ts >= ... AND ts < ...` — including from pure SQL —
-    * prunes the file listing through the LONG-zone index. The r47
-    * double-zone twin's discipline applies verbatim: pruning only, the
-    * residual predicate still reaches the parquet reader. */
-  def eventsTsTable(spark: SparkSession, dir: String): DataFrame = {
-    val layout = tsClusteredLayout(spark, dir)
-    val schema = spark.read.parquet(layout).schema
-      .filterNot(_.name.startsWith("_"))
-    graft.plans.ZoneMapFileIndex.table(spark, layout,
-      tsZoneRows(spark, layout),
-      org.apache.spark.sql.types.StructType(schema),
-      Map.empty,
-      paths => footerZonesTs(spark, paths),
-      longCols = Map("ts" -> ("tmin", "tmax")))
-  }
+  /** The ts-clustered events layout as a planner-integrated table: a plain
+    * `WHERE ts >= ... AND ts < ...` — including from pure SQL — prunes
+    * the file listing through the LONG-zone index. */
+  def eventsTsTable(spark: SparkSession, dir: String): DataFrame =
+    table(spark, tsLayout(spark, dir))
 
   val zorderSkipSql: String =
     s"""SELECT l_returnflag, count(*) AS n_lines,

@@ -1,12 +1,16 @@
 package graft.plans
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, GenericRowWithSchema, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{Decimal, StructType}
+import org.apache.spark.sql.types._
 
 /** Zone-map data skipping INSIDE the planner (VERDICT r12 stretch task):
   * a [[FileIndex]] whose `listFiles` applies the footer-derived per-file
@@ -14,11 +18,10 @@ import org.apache.spark.sql.types.{Decimal, StructType}
   * partition-pruning analogue for NON-partition columns, the way
   * Delta/Iceberg surface their statistics to Spark.
   *
-  * The r40/r46 operators assemble `spark.read.parquet(files: _*)` from a
-  * driver-side plan step, which is correct but OUTSIDE the plan: nothing
-  * composes with it (a join over the skipped table re-plans from the full
-  * listing, DPP can't see it, and the predicate must be repeated by the
-  * caller). Here the listing itself is filter-aware: Catalyst pushes the
+  * This is graft's ONE pruning path (r40, r46, r47, sql09, sql11): the
+  * pruning lives INSIDE the plan, so any predicate composed on top
+  * prunes, and joins/DPP over the table see the pruned relation. The
+  * listing itself is filter-aware: Catalyst pushes the
   * scan's data filters into `listFiles` (`FileSourceScanExec` passes them
   * for exactly this hook), the index drops every file whose zones are
   * provably disjoint with the conjunctive bounds, and the residual
@@ -38,37 +41,37 @@ import org.apache.spark.sql.types.{Decimal, StructType}
   *
   * LIFECYCLE (round-14): files appended to the layout after construction
   * become visible through [[refresh]] — Spark's own hook (`REFRESH
-  * TABLE`, `DataFrame.refresh`): it re-lists the root and derives footer
-  * zones for ONLY the new files via the constructor's `zonesFor` callback
+  * TABLE`, `DataFrame.refresh`): it re-lists the root and reads footer
+  * zones for ONLY the new files through [[ZoneMapFileIndex.readFooters]]
   * (per-new-file metadata I/O, the same increment [[graft.operators
   * .ZoneMap.appendZorder]] pays); files that vanished (compaction) drop
   * out of both the listing and the zone set. Statuses and zones are
   * otherwise immutable snapshots — consistent for any one query.
   *
   * At 100 TB the index holds one (file, zones) row per file — the same
-  * file-count-scale metadata the operator path memoizes — and listing is
+  * file-count-scale metadata [[graft.operators.ZoneMap]] memoizes — and listing is
   * a driver-side filter over it: zero data reads, zero Spark jobs.
   */
 final class ZoneMapFileIndex(
     root: Path,
     zones0: Array[Row],
     statuses0: Seq[FileStatus],
-    /** skip column name -> (zone min field, zone max field) */
-    skipCols: Map[String, (String, String)],
-    hadoopConf: org.apache.hadoop.conf.Configuration,
-    /** footer-zone derivation for files discovered by [[refresh]] —
-      * must emit the same row shape as `zones0` (keyed by the QUALIFIED
-      * path rendering, matching `FileStatus.getPath.toString`). */
-    zonesFor: Seq[Path] => Array[Row],
-    /** skip columns whose zone fields are LONGS, not doubles (round-15):
-      * timestamp (micros), date and integral columns — the columns real
-      * 100-TB skipping bites hardest on. Long zones compare EXACTLY
-      * (TimestampType literals are Long micros, integral literals are
-      * integral), so no grid-widening is needed for them; only a
-      * fractional literal against a long zone rounds, OUTWARD onto the
-      * long grid (lo floors, hi ceils). Same (min field, max field)
-      * shape as `skipCols`; a column name must appear in only one map. */
-    longCols: Map[String, (String, String)] = Map.empty) extends FileIndex {
+    /** the skip columns: each zones as doubles or longs by its type in
+      * `dataSchema` ([[ZoneMapFileIndex.longZone]]) */
+    skipCols: Seq[String],
+    dataSchema: StructType,
+    hadoopConf: Configuration) extends FileIndex {
+  import ZoneMapFileIndex.{maxField, minField}
+
+  /** The skip columns whose zones are LONGS (round-15): timestamp
+    * (micros), date and integral columns — the columns real 100-TB
+    * skipping bites hardest on. Long zones compare EXACTLY (TimestampType
+    * literals are Long micros, integral literals are integral), so no
+    * grid-widening is needed for them; only a fractional literal against
+    * a long zone rounds, OUTWARD onto the long grid (lo floors, hi ceils).
+    * The rest zone as doubles. */
+  private val longZoned: Set[String] =
+    skipCols.filter(c => ZoneMapFileIndex.longZone(dataSchema(c).dataType)).toSet
 
   // snapshot state, replaced wholesale by refresh() (volatile: a refresh
   // from one thread must publish a consistent (statuses, zones, byPath)
@@ -90,14 +93,14 @@ final class ZoneMapFileIndex(
     * refreshes never double-derive a file's zones. */
   override def refresh(): Unit = synchronized {
     val fs = root.getFileSystem(hadoopConf)
-    val listed = fs.listStatus(root).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
+    val listed = ZoneMapFileIndex.listParquet(fs, root)
     val listedKeys = listed.map(_.getPath.toString).toSet
     val known = byPath.keySet
     val fresh = listed.filterNot(s => known.contains(s.getPath.toString))
     val keptZones = zones.filter(z => listedKeys.contains(z.getAs[String]("file")))
     val newZones =
-      if (fresh.isEmpty) Array.empty[Row] else zonesFor(fresh.map(_.getPath))
+      if (fresh.isEmpty) Array.empty[Row]
+      else ZoneMapFileIndex.readFooters(hadoopConf, fresh.map(_.getPath), skipCols)._2
     state = (listed, keptZones ++ newZones,
       listed.map(s => s.getPath.toString -> s).toMap)
   }
@@ -124,7 +127,7 @@ final class ZoneMapFileIndex(
     }
   }
 
-  /** Literal -> LONG bound for the [[longCols]] zones. Integral and
+  /** Literal -> LONG bound for the long zones. Integral and
     * timestamp/date literals (Long micros / Int days in Catalyst) are
     * exact on the long grid — no widening. A fractional literal rounds
     * OUTWARD (lo floors, hi ceils); out-of-domain bounds saturate toward
@@ -158,7 +161,7 @@ final class ZoneMapFileIndex(
     // consistent snapshot for this one planning pass
     val (snapStatuses, snapZones, snapByPath) = state
     // conservative per-column bounds from the recognizable conjuncts —
-    // doubles for skipCols zones, exact longs for longCols zones
+    // exact longs for long zones, doubles for the rest
     val lo = collection.mutable.Map.empty[String, Double]
     val hi = collection.mutable.Map.empty[String, Double]
     val loL = collection.mutable.Map.empty[String, Long]
@@ -166,23 +169,21 @@ final class ZoneMapFileIndex(
     // a lo bound must round DOWN (the used bound stays ≤ the true one),
     // a hi bound UP — both keep `zone ∩ bounds = ∅ ⇒ zone ∩ pred = ∅`
     def tightenLo(c: String, v: Any): Unit =
-      if (skipCols.contains(c))
-        asBound(v, up = false).foreach(d =>
-          lo.updateWith(c)(p => Some(p.fold(d)(math.max(_, d)))): Unit)
-      else
+      if (longZoned.contains(c))
         asLongBound(v, up = false).foreach(l =>
           loL.updateWith(c)(p => Some(p.fold(l)(math.max(_, l)))): Unit)
-    def tightenHi(c: String, v: Any): Unit =
-      if (skipCols.contains(c))
-        asBound(v, up = true).foreach(d =>
-          hi.updateWith(c)(p => Some(p.fold(d)(math.min(_, d)))): Unit)
       else
+        asBound(v, up = false).foreach(d =>
+          lo.updateWith(c)(p => Some(p.fold(d)(math.max(_, d)))): Unit)
+    def tightenHi(c: String, v: Any): Unit =
+      if (longZoned.contains(c))
         asLongBound(v, up = true).foreach(l =>
           hiL.updateWith(c)(p => Some(p.fold(l)(math.min(_, l)))): Unit)
+      else
+        asBound(v, up = true).foreach(d =>
+          hi.updateWith(c)(p => Some(p.fold(d)(math.min(_, d)))): Unit)
     def skip(a: Expression): Option[String] = a match {
-      case ar: AttributeReference
-          if skipCols.contains(ar.name) || longCols.contains(ar.name) =>
-        Some(ar.name)
+      case ar: AttributeReference if skipCols.contains(ar.name) => Some(ar.name)
       case _ => None
     }
     def visit(e: Expression): Unit = e match {
@@ -217,14 +218,14 @@ final class ZoneMapFileIndex(
         snapStatuses.toArray
       else {
         val zoned = snapZones.flatMap { z =>
-          val admits = skipCols.forall { case (col, (minF, maxF)) =>
-            val zmin = z.getAs[Double](minF)
-            val zmax = z.getAs[Double](maxF)
-            lo.get(col).forall(zmax >= _) && hi.get(col).forall(zmin <= _)
-          } && longCols.forall { case (col, (minF, maxF)) =>
-            val zmin = z.getAs[Long](minF)
-            val zmax = z.getAs[Long](maxF)
-            loL.get(col).forall(zmax >= _) && hiL.get(col).forall(zmin <= _)
+          val admits = skipCols.forall { c =>
+            if (longZoned.contains(c)) {
+              val (zmin, zmax) = (z.getAs[Long](minField(c)), z.getAs[Long](maxField(c)))
+              loL.get(c).forall(zmax >= _) && hiL.get(c).forall(zmin <= _)
+            } else {
+              val (zmin, zmax) = (z.getAs[Double](minField(c)), z.getAs[Double](maxField(c)))
+              lo.get(c).forall(zmax >= _) && hi.get(c).forall(zmin <= _)
+            }
           }
           if (admits) snapByPath.get(z.getAs[String]("file")) else None
         }
@@ -237,21 +238,96 @@ final class ZoneMapFileIndex(
 }
 
 object ZoneMapFileIndex {
-  /** Wrap a z-ordered parquet layout as a DataFrame whose scan prunes
-    * files through the footer zone map at PLANNING time. `zones` rows are
-    * [[graft.operators.ZoneMap]]'s footer rows (file, pmin, pmax, qmin,
-    * qmax, n_rows); `zonesFor` derives the same rows for files appended
-    * after construction (driven by [[ZoneMapFileIndex.refresh]]). */
+  /** Whether a skip column of type `dt` zones as exact LONGS (integral,
+    * date days, timestamp micros — the INT32/INT64 values parquet stores)
+    * or as DOUBLES (float, double). Other types cannot register. */
+  def longZone(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType | TimestampType => true
+    case FloatType | DoubleType => false
+    case other => throw new IllegalArgumentException(
+      s"zone maps cover integral, date, timestamp, float and double columns, not $other")
+  }
+
+  def minField(c: String): String = s"${c}_min"
+  def maxField(c: String): String = s"${c}_max"
+
+  /** The one zone-row shape over `cols`: (file, <c>_min, <c>_max per
+    * column, n_rows), each bound typed by [[longZone]]. */
+  private def zoneSchema(schema: StructType, cols: Seq[String]): StructType = {
+    val bounds = cols.flatMap { c =>
+      val t = if (longZone(schema(c).dataType)) LongType else DoubleType
+      Seq(StructField(minField(c), t), StructField(maxField(c), t))
+    }
+    StructType(StructField("file", StringType) +: bounds :+ StructField("n_rows", LongType))
+  }
+
+  /** The parquet data files directly under `root`. */
+  def listParquet(fs: FileSystem, root: Path): Seq[FileStatus] =
+    fs.listStatus(root).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
+
+  /** The one footer reader: the Spark schema the writer stored in the
+    * footers (the first file's; graft writes one schema per layout) and
+    * one zone row per file over `cols` — file-count-scale driver I/O, no
+    * Spark job and no data-column read. A column without usable footer
+    * statistics in some row group gets an UNBOUNDED zone (it matches
+    * every band, so pruning stays sound and only skip ratio is lost).
+    * Rows are keyed by the Hadoop `Path.toString` rendering, the one
+    * `FileStatus` and `_metadata.file_path` share (file:/tmp/...). */
+  def readFooters(conf: Configuration, files: Seq[Path],
+      cols: Seq[String]): (StructType, Array[Row]) = {
+    import scala.jdk.CollectionConverters._
+    val read = files.sortBy(_.toString).map { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      try {
+        val footer = reader.getFooter
+        val json = footer.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata")
+        require(json != null, s"$p carries no Spark schema in its footer")
+        // every column reads back nullable, as Spark's own reader makes it
+        val schema = StructType(DataType.fromJson(json).asInstanceOf[StructType]
+          .map(_.copy(nullable = true)))
+        val zSchema = zoneSchema(schema, cols)
+        val blocks = footer.getBlocks.asScala.toSeq
+        val bounds = cols.flatMap { c =>
+          val long = longZone(schema(c).dataType)
+          // timestamp zones are micros: statistics in another unit (millis,
+          // INT96) would prune unsoundly, so those zone unbounded
+          val usable = schema(c).dataType != TimestampType ||
+            footer.getFileMetaData.getSchema.getType(Array(c): _*).getLogicalTypeAnnotation ==
+              LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS)
+          val perBlock = blocks.map { b =>
+            b.getColumns.asScala.find(_.getPath.toDotString == c)
+              .map(_.getStatistics)
+              .filter(s => usable && s != null && s.hasNonNullValue)
+              .map(s => (s.genericGetMin.asInstanceOf[Number],
+                s.genericGetMax.asInstanceOf[Number]))
+          }
+          val unbounded = perBlock.isEmpty || perBlock.exists(_.isEmpty)
+          if (long) {
+            if (unbounded) Seq(Long.MinValue, Long.MaxValue)
+            else Seq(perBlock.map(_.get._1.longValue).min, perBlock.map(_.get._2.longValue).max)
+          } else {
+            if (unbounded) Seq(Double.NegativeInfinity, Double.PositiveInfinity)
+            else Seq(perBlock.map(_.get._1.doubleValue).min, perBlock.map(_.get._2.doubleValue).max)
+          }
+        }
+        schema -> (new GenericRowWithSchema(
+          (p.toString +: bounds :+ blocks.map(_.getRowCount).sum).toArray, zSchema): Row)
+      } finally reader.close()
+    }
+    (read.headOption.fold(StructType(Nil))(_._1), read.map(_._2).toArray)
+  }
+
+  /** Wrap a parquet layout as a DataFrame whose scan prunes files through
+    * the footer zone map at PLANNING time. `zones` are [[readFooters]]
+    * rows over `skipCols`; files appended after construction get theirs
+    * from their own footers on [[ZoneMapFileIndex.refresh]]. */
   def table(spark: SparkSession, layout: String, zones: Array[Row],
-      schema: StructType, skipCols: Map[String, (String, String)],
-      zonesFor: Seq[Path] => Array[Row],
-      longCols: Map[String, (String, String)] = Map.empty): DataFrame = {
+      schema: StructType, skipCols: Seq[String]): DataFrame = {
     val rootPath = new Path(layout)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statuses = fs.listStatus(rootPath).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-    val index = new ZoneMapFileIndex(rootPath, zones, statuses, skipCols,
-      spark.sparkContext.hadoopConfiguration, zonesFor, longCols)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val index = new ZoneMapFileIndex(rootPath, zones,
+      listParquet(rootPath.getFileSystem(conf), rootPath), skipCols, schema, conf)
     val relation = HadoopFsRelation(
       location = index,
       partitionSchema = StructType(Nil),

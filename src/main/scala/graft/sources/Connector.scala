@@ -83,7 +83,8 @@ final class LocalFileEventConnector(dir: String) extends EventConnector {
   * would inline every key into the plan tree AND bypass the runtime
   * pruning machinery the source itself implements. DailyRunSpec proves a
   * week over this transport is bit-identical to the local-file one. */
-final class Dsv2EventConnector(apiId: String) extends EventConnector {
+final class Dsv2EventConnector(apiId: String, maxRetries: Int = 5,
+    backoffMs: Long = 500L) extends EventConnector {
   import graft.sources.v2.GraftEventSource
   override def name: String = s"dsv2:$apiId"
 
@@ -91,7 +92,12 @@ final class Dsv2EventConnector(apiId: String) extends EventConnector {
     import spark.implicits._
     val api = GraftEventSource.apis.get(apiId)
     require(api != null, s"no API registered under '$apiId'")
-    new PagedEventConnector(api).listKeys(spark, asOf)
+    // The symbol-list endpoint is a dimension fetched once from the
+    // scheduler side (reference create_kr_symbol_list) — not worth a job.
+    // It speaks to the SAME flaky API as the page fetch, so it gets the
+    // same bounded retry/backoff session.
+    new ApiRetrySession(api, maxRetries, backoffMs)
+      .call(t => api.listKeys(t, asOf)).toDF("user_id")
   }
 
   override def fetch(spark: SparkSession, requests: DataFrame): DataFrame = {
@@ -117,6 +123,8 @@ final class Dsv2EventConnector(apiId: String) extends EventConnector {
         .option("api", apiId)
         .option("from", bounds.getDate(0).toLocalDate.toString)
         .option("to", bounds.getDate(1).toLocalDate.toString)
+        .option("maxRetries", maxRetries.toLong)
+        .option("backoffMs", backoffMs)
         .load()
         .withColumn("d", to_date($"ts"))
       // key restriction = the join itself; runtime filtering hands the

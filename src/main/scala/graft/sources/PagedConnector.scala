@@ -1,8 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** Transient server-side failure (the reference's HTTP 5xx / timeout path,
   * hankook_api.py:87-120 `_request`'s retry loop) — safe to retry. */
 final class TransientApiError(msg: String) extends RuntimeException(msg)
@@ -77,81 +74,5 @@ private[sources] final class ApiRetrySession(api: PagedEventApi,
       }
     }
     out.get
-  }
-}
-
-/** The executor-side paged transport behind the [[EventConnector]] seam —
-  * the production shape of the reference's fetch loop, distributed:
-  *
-  *  - **Fetch on executors, never a driver loop.** The dimension-scale
-  *    request batch is spread across partitions; each partition opens its
-  *    own API session (`issueToken`, per-partition mutable state exactly
-  *    like a connection pool) and pages through its keys' windows.
-  *  - **Page-resume.** A key's window is consumed page by page via the
-  *    `tr_cont`-style cursor; a transient failure retries THE PAGE, not the
-  *    key — work already fetched is never re-requested.
-  *  - **Bounded retry with exponential backoff.** `maxRetries` attempts per
-  *    page, sleeping `backoffMs << attempt` between them (the reference's
-  *    `_request` sleep-and-retry, with the exponent production transports
-  *    add); a token expiry re-issues the token and retries without
-  *    consuming the budget twice.
-  *  - **Idempotence by construction.** Pages are deterministic snapshots
-  *    keyed by (key, window, cursor), so retried pages cannot duplicate
-  *    rows; the daily watermark (graft.Daily) makes whole-day reruns
-  *    no-ops on top.
-  *
-  * At 100 TB scale the fetch parallelism is the executor count and the
-  * per-executor state is O(1) (token + one page buffer): nothing about
-  * this transport holds corpus-scale data. */
-final class PagedEventConnector(api: PagedEventApi, maxRetries: Int = 5,
-    backoffMs: Long = 500L) extends EventConnector {
-
-  override def name: String = "paged-api"
-
-  override def listKeys(spark: SparkSession, asOf: java.sql.Date): DataFrame = {
-    import spark.implicits._
-    // The symbol-list endpoint is a dimension fetched once from the
-    // scheduler side (reference create_kr_symbol_list) — not worth a job.
-    // It speaks to the SAME flaky API as the page fetch, so it gets the
-    // same bounded retry/backoff session: a transient 5xx on the token or
-    // symbol-list endpoint must not kill the whole daily run at its first
-    // call.
-    val session = new ApiRetrySession(api, maxRetries, backoffMs)
-    session.call(t => api.listKeys(t, asOf)).toDF("user_id")
-  }
-
-  override def fetch(spark: SparkSession, requests: DataFrame): DataFrame = {
-    import spark.implicits._
-    val retries = maxRetries
-    val backoff = backoffMs
-    val theApi = api
-    val fetched = requests
-      .select($"user_id", $"fetch_start", $"fetch_end")
-      .as[(Long, java.sql.Date, java.sql.Date)]
-      // requests are #keys rows (contract) — spread them so every executor
-      // fetches. The partition count is pinned EXPLICITLY: AQE coalesces by
-      // byte size, and a request batch is tiny in bytes while each row costs
-      // a network round-trip — size-based coalescing would collapse the
-      // fetch to one task. An explicit count is respected by AQE.
-      .repartition(math.max(1, spark.sparkContext.defaultParallelism), $"user_id")
-      .mapPartitions { it =>
-        // per-partition connection state: one token per "connection",
-        // re-issued on expiry — never serialized back to the driver
-        val session = new ApiRetrySession(theApi, retries, backoff)
-        it.flatMap { case (uid, from, to) =>
-          // tr_cont paging: consume the window page by page; a transient
-          // error retries the current page (cursor unchanged) only
-          Iterator.unfold(Option.empty[String] -> true) {
-            case (_, false) => None
-            case (cursor, true) =>
-              val page = session.call(t => theApi.fetchPage(t, uid, from, to, cursor))
-              Some(page.rows -> (page.next, page.next.isDefined))
-          }.flatten
-        }
-      }
-    fetched
-      .select(col("event_id"), timestamp_micros($"ts_micros").as("ts"),
-        $"user_id", $"event_type", $"value", $"props")
-      .withColumn("d", to_date($"ts"))
   }
 }

@@ -25,8 +25,7 @@ import graft.sources.{ApiRetrySession, PagedEventApi}
   *  - **Planning**: one driver-side `listKeys` call (the symbol-list
   *    endpoint, dimension-scale) partitioned round-robin into
   *    `partitions` [[InputPartition]]s — the fetch parallelism is the
-  *    executor count, exactly [[graft.sources.PagedEventConnector]]'s
-  *    contract, but now Catalyst owns the plan.
+  *    executor count, and Catalyst owns the plan.
   *  - **Filter pushdown to the WIRE** ([[SupportsPushDownFilters]]):
   *    `user_id = / IN` prunes keys out of the page plan ENTIRELY (exact —
   *    absorbed, no residual); `ts >=/>/<=/< T` narrows each key's fetch

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.CciPipeline
-import graft.sources.{LocalFileEventConnector, PagedEventConnector, Tables}
+import graft.sources.{Dsv2EventConnector, LocalFileEventConnector, Tables}
 
 /** The connector seam's resume invariant: rows already "saved" (before the
   * watermark) plus rows the connector fetches must partition the corpus —
@@ -76,11 +76,16 @@ class ConnectorSpec extends AnyFunSuite {
     .select($"event_id", $"ts", $"user_id", $"event_type", $"value", $"props", $"d")
     .orderBy($"event_id").collect()
 
-  /** Production default backoff is 500 ms (a real rate-limiting API wants
-    * real sleeps); these specs inject faults aggressively, so they pass
-    * the 1 ms test backoff explicitly to stay fast. */
-  private def paged(api: FakePagedApi, maxRetries: Int = 5) =
-    new PagedEventConnector(api, maxRetries, backoffMs = 1L)
+  /** The paged transport is the DSv2 source behind [[Dsv2EventConnector]]:
+    * register the fake API under a fresh id and connect to it. Production
+    * default backoff is 500 ms (a real rate-limiting API wants real
+    * sleeps); these specs inject faults aggressively, so they pass the
+    * 1 ms test backoff explicitly to stay fast. */
+  private def paged(api: FakePagedApi, maxRetries: Int = 5) = {
+    val id = s"connector-spec-${java.util.UUID.randomUUID()}"
+    graft.sources.v2.GraftEventSource.registerApi(id, api)
+    new Dsv2EventConnector(id, maxRetries, backoffMs = 1L)
+  }
 
   test("paged transport slots into the r31 seam: output equals the local-file transport") {
     FakePagedApi.register("clean", apiData)

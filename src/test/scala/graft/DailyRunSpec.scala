@@ -172,7 +172,9 @@ class DailyRunSpec extends AnyFunSuite {
     // values come back after the day. Partitions start at 7, not the test
     // session's 4, so neither the shrink nor the restore can pass by
     // coincidence. The only other jobs are the one-stage parquet schema
-    // reads of `spark.read`, which run no query and carry no SQL conf.
+    // reads of `spark.read` over input tables, which run no query and
+    // carry no SQL conf; workspace partitions are read under the schema
+    // in their footers, so no job's call site is a Daily parquet read.
     val (aqeKey, partsKey) = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     val conn = new LocalFileEventConnector(sf)
     val day = Iterator.iterate(maxLd.minusDays(6))(_.plusDays(1))
@@ -187,13 +189,20 @@ class DailyRunSpec extends AnyFunSuite {
     val FenceProp = "graft.test.fence"
     val fenced = new CountDownLatch(1)
     val seen = new ConcurrentLinkedQueue[(Int, Int, Option[(String, String)])]()
+    val callSites = new ConcurrentLinkedQueue[String]() // of jobs outside queries
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val p = Option(e.properties).getOrElse(new java.util.Properties)
         if (p.getProperty(FenceProp) != null) fenced.countDown()
-        else seen.add((e.jobId, e.stageInfos.size,
-          Option(p.getProperty("spark.sql.execution.id"))
-            .map(_ => (p.getProperty(aqeKey), p.getProperty(partsKey)))))
+        else {
+          seen.add((e.jobId, e.stageInfos.size,
+            Option(p.getProperty("spark.sql.execution.id"))
+              .map(_ => (p.getProperty(aqeKey), p.getProperty(partsKey)))))
+          // a schema inference runs outside any query; the workspace
+          // writes share its `parquet at` call site but are queries
+          if (p.getProperty("spark.sql.execution.id") == null)
+            e.stageInfos.foreach(st => callSites.add(st.name))
+        }
       }
     }
     spark.conf.set(partsKey, "7")
@@ -215,6 +224,8 @@ class DailyRunSpec extends AnyFunSuite {
     assert(off.isEmpty, s"${off.size} of ${queries.size} query jobs ran outside the gate " +
       s"(job, stages, (AQE, partitions)): ${off.take(5).mkString(", ")}")
     assert(others.forall(_._2 == 1), s"a job outside any query shuffles: $others")
+    val inferred = callSites.asScala.filter(_.startsWith("parquet at Daily.scala"))
+    assert(inferred.isEmpty, s"workspace reads inferred their schema in a job: $inferred")
   }
 
   test("daily loop: crash rerun of a committed day is a state no-op") {

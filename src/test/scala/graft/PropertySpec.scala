@@ -242,16 +242,16 @@ class PropertySpec extends AnyFunSuite {
     import org.apache.hadoop.fs.{FileStatus, Path}
     val spark = TestSpark.spark
     val zSchema = StructType(Seq(StructField("file", StringType),
-      StructField("vmin", LongType), StructField("vmax", LongType)))
+      StructField("v_min", LongType), StructField("v_max", LongType)))
     val f = "file:/tmp/zlprop/a.parquet"
+    // `v` is a LONG column of the relation, so its zones are longs
     def idx(mn: Long, mx: Long) = new graft.plans.ZoneMapFileIndex(
       new Path("file:/tmp/zlprop"),
       Array(new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
         Array[Any](f, mn, mx), zSchema)),
       Seq(new FileStatus(1L, false, 1, 1L, 0L, new Path(f))),
-      Map.empty,
-      spark.sparkContext.hadoopConfiguration, _ => Array.empty,
-      longCols = Map("v" -> ("vmin", "vmax")))
+      Seq("v"), StructType(Seq(StructField("v", LongType))),
+      spark.sparkContext.hadoopConfiguration)
     val attr = AttributeReference("v", LongType)()
     val near = Gen.chooseNum(-4L, 4L).flatMap(d =>
       Gen.oneOf((1L << 53) + d, -(1L << 53) + d, d * 1000000007L))
@@ -293,15 +293,16 @@ class PropertySpec extends AnyFunSuite {
     import org.apache.hadoop.fs.{FileStatus, Path}
     val spark = TestSpark.spark
     val zSchema = StructType(Seq(StructField("file", StringType),
-      StructField("vmin", DoubleType), StructField("vmax", DoubleType)))
+      StructField("v_min", DoubleType), StructField("v_max", DoubleType)))
     val f = "file:/tmp/zprop/a.parquet"
+    // `v` is a DOUBLE column of the relation, so its zones are doubles
     def idx(mn: Long, mx: Long) = new graft.plans.ZoneMapFileIndex(
       new Path("file:/tmp/zprop"),
       Array(new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
         Array[Any](f, mn.toDouble, mx.toDouble), zSchema)),
       Seq(new FileStatus(1L, false, 1, 1L, 0L, new Path(f))),
-      Map("v" -> ("vmin", "vmax")),
-      spark.sparkContext.hadoopConfiguration, _ => Array.empty)
+      Seq("v"), StructType(Seq(StructField("v", DoubleType))),
+      spark.sparkContext.hadoopConfiguration)
     val attr = AttributeReference("v", LongType)()
     val near = Gen.chooseNum(-4L, 4L).flatMap(d =>
       Gen.oneOf((1L << 53) + d, -(1L << 53) + d, d * 1000000007L))

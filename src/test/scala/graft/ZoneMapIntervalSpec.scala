@@ -12,9 +12,27 @@ class ZoneMapIntervalSpec extends AnyFunSuite {
   // all `file:/tmp/…`), so cross-source comparisons use raw strings;
   // the old test-side scheme normalization masked the appendZorder
   // rendering bug the round-13 advice flagged.
-  private def zstats(r: org.apache.spark.sql.Row) =
-    (r.getAs[Double]("pmin"), r.getAs[Double]("pmax"),
-      r.getAs[Double]("qmin"), r.getAs[Double]("qmax"), r.getAs[Long]("n_rows"))
+  private def zstats(r: org.apache.spark.sql.Row): Seq[Any] =
+    r.schema.fieldNames.toSeq.filterNot(_ == "file").map(r.getAs[Any](_))
+
+  private val ZM = operators.ZoneMap
+
+  /** The files `query`'s zone-map index lists under the query's own
+    * pushed filters (sorted), and the layout's total file count. */
+  private def listing(query: org.apache.spark.sql.DataFrame): (Seq[String], Int) = {
+    val scan = query.queryExecution.sparkPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.get
+    val idx = scan.relation.location
+    assert(idx.isInstanceOf[graft.plans.ZoneMapFileIndex], s"scan uses ${idx.getClass}")
+    (idx.listFiles(Nil, scan.dataFilters).flatMap(_.files).map(_.getPath.toString).sorted,
+      idx.inputFiles.length)
+  }
+
+  private val priceBand = col("l_extendedprice") >= ZM.PriceLo &&
+    col("l_extendedprice") <= ZM.PriceHi
+  private val bothBands = priceBand &&
+    col("l_quantity") >= ZM.QtyLo && col("l_quantity") <= ZM.QtyHi
 
   // ---------------------------------------------------------------- q44
 
@@ -155,22 +173,19 @@ class ZoneMapIntervalSpec extends AnyFunSuite {
 
   test("r40: every zone honestly bounds its file's values") {
     import spark.implicits._
-    // rebuild the layout through the public query path first (memoized)
-    operators.ZoneMap.zonemapSkip(spark, sf).count()
-    val layout = operators.ZoneMap.layouts(sf)
-    val zm = operators.ZoneMap.zoneMap(spark, layout).collect()
-    assert(zm.length == operators.ZoneMap.ZoneFiles)
+    val layout = ZM.zonemapLayout(spark, sf)
+    val zm = ZM.zoneMap(spark, layout.path, layout.cols).collect()
+    assert(zm.length == ZM.ZoneFiles)
     zm.foreach { z =>
       val file = z.getAs[String]("file")
       val vals = spark.read.parquet(file).select($"l_extendedprice")
         .agg(min($"l_extendedprice"), max($"l_extendedprice")).head()
-      assert(vals.getDouble(0) == z.getAs[Double]("zmin"), s"zmin lies for $file")
-      assert(vals.getDouble(1) == z.getAs[Double]("zmax"), s"zmax lies for $file")
+      assert(vals.getDouble(0) == z.getAs[Double]("l_extendedprice_min"), s"zmin lies for $file")
+      assert(vals.getDouble(1) == z.getAs[Double]("l_extendedprice_max"), s"zmax lies for $file")
     }
     // and the planner's file set is sound AND strictly skipping
-    val (files, total) = operators.ZoneMap.planSkip(spark, layout,
-      operators.ZoneMap.PriceLo, operators.ZoneMap.PriceHi)
-    assert(total == operators.ZoneMap.ZoneFiles)
+    val (files, total) = listing(ZM.zonemapSkip(spark, sf))
+    assert(total == ZM.ZoneFiles)
     assert(files.nonEmpty && files.length < total,
       s"expected real skipping, got ${files.length}/$total")
     // soundness: no excluded file may contain an in-band value
@@ -179,9 +194,7 @@ class ZoneMapIntervalSpec extends AnyFunSuite {
       .filterNot(matched.contains)
     assert(excluded.nonEmpty)
     excluded.foreach { file =>
-      val n = spark.read.parquet(file)
-        .filter($"l_extendedprice" >= operators.ZoneMap.PriceLo &&
-          $"l_extendedprice" <= operators.ZoneMap.PriceHi).count()
+      val n = spark.read.parquet(file).filter(priceBand).count()
       assert(n == 0L, s"skipped file $file holds $n in-band rows")
     }
   }
@@ -208,17 +221,13 @@ class ZoneMapIntervalSpec extends AnyFunSuite {
   }
 
   test("r46: excluded z-order files hold no row satisfying BOTH bands") {
-    import spark.implicits._
-    operators.ZoneMap.zorderSkip(spark, sf).count() // memoized layout
-    val layout = operators.ZoneMap.zLayouts(sf)
-    val zm = operators.ZoneMap.zoneMap2(spark, layout).collect()
+    val layout = ZM.zorderLayout(spark, sf)
+    val zm = ZM.zoneMap(spark, layout.path, layout.cols).collect()
     // empty range partitions write no file, so small corpora may land
     // under the target; the skip contract needs many files, not exactly 64
-    assert(zm.length <= operators.ZoneMap.ZFiles && zm.length >= operators.ZoneMap.ZFiles / 2,
-      s"z-order layout produced ${zm.length} files (target ${operators.ZoneMap.ZFiles})")
-    val (files, total) = operators.ZoneMap.planSkip2(spark, layout,
-      operators.ZoneMap.PriceLo, operators.ZoneMap.PriceHi,
-      operators.ZoneMap.QtyLo, operators.ZoneMap.QtyHi)
+    assert(zm.length <= ZM.ZFiles && zm.length >= ZM.ZFiles / 2,
+      s"z-order layout produced ${zm.length} files (target ${ZM.ZFiles})")
+    val (files, total) = listing(ZM.zorderSkip(spark, sf))
     assert(total == zm.length)
     assert(files.nonEmpty && files.length < total,
       s"expected real 2-D skipping, got ${files.length}/$total")
@@ -227,11 +236,7 @@ class ZoneMapIntervalSpec extends AnyFunSuite {
       .filterNot(matched.contains)
     assert(excluded.nonEmpty)
     excluded.foreach { file =>
-      val n = spark.read.parquet(file)
-        .filter($"l_extendedprice" >= operators.ZoneMap.PriceLo &&
-          $"l_extendedprice" <= operators.ZoneMap.PriceHi &&
-          $"l_quantity" >= operators.ZoneMap.QtyLo &&
-          $"l_quantity" <= operators.ZoneMap.QtyHi).count()
+      val n = spark.read.parquet(file).filter(bothBands).count()
       assert(n == 0L, s"skipped z-order file $file holds $n in-band rows")
     }
   }
@@ -247,68 +252,61 @@ class ZoneMapIntervalSpec extends AnyFunSuite {
     val delta = sources.Tables.lineitem(spark, sf).select(cols: _*)
       .filter($"l_partkey" % 3 === 0)
     val layout = operators.Extras.tempDir("graft_zorder_append")
-    operators.ZoneMap.writeZorder(base, layout, 16)
-    val prior = operators.ZoneMap.zoneMap2(spark, layout).collect()
+    ZM.writeZorder(base, layout, 16)
+    val prior = ZM.zoneMap(spark, layout, ZM.ZCols).collect()
     // seed the metadata memo pre-append so the incremental memo update
     // (not a lazy rebuild) is what the post-append plan reads
-    operators.ZoneMap.zoneRows(spark, layout)
+    ZM.layoutAt(spark, layout, ZM.ZCols)
     // the incremental path: append + zone rows from ONLY the new files
-    val newRows = operators.ZoneMap.appendZorder(spark, layout, delta)
+    val newRows = ZM.appendZorder(spark, layout, delta)
     assert(newRows.nonEmpty)
     // the maintained memo must now equal prior ∪ newRows (file-keyed)
-    val memoRows = operators.ZoneMap.zoneRows(spark, layout)
-    assert(memoRows.length == prior.length + newRows.length)
+    val memo = ZM.layouts(layout)
+    assert(memo.zones.length == prior.length + newRows.length)
     // prior zones are untouched by the append (existing files immutable)
     // and prior ∪ delta-rows must equal a full zone-map rebuild
-    val rebuilt = operators.ZoneMap.zoneMap2(spark, layout).collect()
+    val rebuilt = ZM.zoneMap(spark, layout, ZM.ZCols).collect()
     val key = (r: org.apache.spark.sql.Row) => r.getAs[String]("file")
     val union = (prior ++ newRows).map(r => key(r) -> zstats(r)).toMap
     val full = rebuilt.map(r => key(r) -> zstats(r)).toMap
     assert(union == full,
       s"incremental zone map diverged from rebuild: ${union.size} vs ${full.size}")
     // and the band query over the appended layout still matches the
-    // full scan over base+delta (2-D pruning through the merged map)
-    val (files, total) = operators.ZoneMap.planSkip2(spark, layout,
-      operators.ZoneMap.PriceLo, operators.ZoneMap.PriceHi,
-      operators.ZoneMap.QtyLo, operators.ZoneMap.QtyHi)
+    // full scan over base+delta (2-D pruning through the merged memo)
+    val banded = ZM.table(spark, memo).filter(bothBands)
+    val (files, total) = listing(banded)
+    assert(total == memo.zones.length)
     assert(files.nonEmpty && files.length < total)
-    val pruned = spark.read.parquet(files: _*)
-      .filter($"l_extendedprice" >= operators.ZoneMap.PriceLo &&
-        $"l_extendedprice" <= operators.ZoneMap.PriceHi &&
-        $"l_quantity" >= operators.ZoneMap.QtyLo &&
-        $"l_quantity" <= operators.ZoneMap.QtyHi).count()
-    val fullScan = base.unionByName(delta)
-      .filter($"l_extendedprice" >= operators.ZoneMap.PriceLo &&
-        $"l_extendedprice" <= operators.ZoneMap.PriceHi &&
-        $"l_quantity" >= operators.ZoneMap.QtyLo &&
-        $"l_quantity" <= operators.ZoneMap.QtyHi).count()
-    assert(pruned == fullScan, s"pruned $pruned vs full $fullScan")
+    val fullScan = base.unionByName(delta).filter(bothBands).count()
+    assert(banded.count() == fullScan, s"pruned ${banded.count()} vs full $fullScan")
   }
 
   test("r40/r46: footer-derived zone rows ≡ the scan-derived derivation spec, per file") {
-    operators.ZoneMap.zorderSkip(spark, sf).count() // memoized layout
-    val layout = operators.ZoneMap.zLayouts(sf)
-    val scanned = operators.ZoneMap.zoneMap2(spark, layout).collect()
-      .map(r => r.getAs[String]("file") -> zstats(r)).toMap
-    // force a cold rebuild so this compares FOOTERS, not a memo that may
-    // predate them
-    operators.ZoneMap.dropZoneMemo(layout)
-    val cold = operators.ZoneMap.zoneRows(spark, layout)
-      .map(r => r.getAs[String]("file") -> zstats(r)).toMap
-    assert(cold.nonEmpty && cold == scanned,
-      s"footer zones diverge from the scan spec:\n${cold.take(2)}\nvs\n${scanned.take(2)}")
+    // every built layout, double zones (price, price × quantity) and long
+    // zones (ts micros) alike
+    for (layout <- Seq(ZM.zonemapLayout(spark, sf), ZM.zorderLayout(spark, sf),
+        ZM.tsLayout(spark, sf))) {
+      val scanned = ZM.zoneMap(spark, layout.path, layout.cols).collect()
+        .map(r => r.getAs[String]("file") -> zstats(r)).toMap
+      // force a cold rebuild so this compares FOOTERS, not a memo that may
+      // predate them
+      ZM.layouts.remove(layout.path)
+      val cold = ZM.layoutAt(spark, layout.path, layout.cols).zones
+        .map(r => r.getAs[String]("file") -> zstats(r)).toMap
+      assert(cold.nonEmpty && cold == scanned,
+        s"footer zones diverge from the scan spec:\n${cold.take(2)}\nvs\n${scanned.take(2)}")
+    }
   }
 
   test("r40/r46: a FRESH session plans the pruned read with ZERO Spark jobs") {
     import java.util.concurrent.atomic.AtomicInteger
-    // layouts exist (memoized builds); drop the zone-map memos to
-    // simulate a cold session over an existing layout
-    operators.ZoneMap.zonemapSkip(spark, sf).count()
-    operators.ZoneMap.zorderSkip(spark, sf).count()
-    val l1 = operators.ZoneMap.layouts(sf)
-    val l2 = operators.ZoneMap.zLayouts(sf)
-    operators.ZoneMap.dropZoneMemo(l1)
-    operators.ZoneMap.dropZoneMemo(l2)
+    // the layouts exist (memoized builds); drop the memo to simulate a
+    // cold session over existing layouts: building the index-backed
+    // tables (schema and zones from footers) and planning r40, r46/r47
+    // and a ts window over eventsTsTable must run no Spark job
+    val built = Seq(ZM.zonemapLayout(spark, sf), ZM.zorderLayout(spark, sf),
+      ZM.tsLayout(spark, sf))
+    built.foreach(l => ZM.layouts.remove(l.path))
     val jobs = new AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -318,18 +316,19 @@ class ZoneMapIntervalSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val (f1, t1) = operators.ZoneMap.planSkip(spark, l1,
-        operators.ZoneMap.PriceLo, operators.ZoneMap.PriceHi)
-      val (f2, t2) = operators.ZoneMap.planSkip2(spark, l2,
-        operators.ZoneMap.PriceLo, operators.ZoneMap.PriceHi,
-        operators.ZoneMap.QtyLo, operators.ZoneMap.QtyHi)
-      assert(f1.nonEmpty && f1.length < t1)
-      assert(f2.nonEmpty && f2.length < t2)
+      val tsWindow = ZM.eventsTsTable(spark, sf).filter(
+        col("ts") >= lit(operators.CciPipeline.ChartFrom).cast("timestamp") &&
+          col("ts") < lit(operators.CciPipeline.ChartUntil).cast("timestamp"))
+      Seq(ZM.zonemapSkip(spark, sf), ZM.zorderSkip(spark, sf),
+          ZM.zorderPlanned(spark, sf), tsWindow).foreach { q =>
+        val (files, total) = listing(q)
+        assert(files.nonEmpty && files.length < total, s"listed ${files.length}/$total")
+      }
       // listener bus is async: give any stray job event time to land
       Thread.sleep(500)
       assert(jobs.get() == 0,
         s"cold zone-map planning ran ${jobs.get()} Spark job(s) — " +
-          "metadata must come from footers, never a corpus scan")
+          "metadata must come from footers, never a scan or a schema inference")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -390,13 +389,7 @@ class ZoneMapIntervalSpec extends AnyFunSuite {
       .filter($"l_partkey" % 3 === 0)
     val layout = operators.Extras.tempDir("graft_zorder_refresh")
     operators.ZoneMap.writeZorder(base, layout, 16)
-    val schema = org.apache.spark.sql.types.StructType(
-      spark.read.parquet(layout).schema.filterNot(_.name.startsWith("_")))
-    val df0 = graft.plans.ZoneMapFileIndex.table(spark, layout,
-      operators.ZoneMap.zoneRows(spark, layout), schema,
-      Map("l_extendedprice" -> ("pmin", "pmax"),
-        "l_quantity" -> ("qmin", "qmax")),
-      paths => operators.ZoneMap.footerZones(spark, paths))
+    val df0 = ZM.table(spark, ZM.layoutAt(spark, layout, ZM.ZCols))
     val scan0 = df0.queryExecution.sparkPlan.collect {
       case s: FileSourceScanExec => s }.head
     val idx = scan0.relation.location.asInstanceOf[graft.plans.ZoneMapFileIndex]
@@ -447,17 +440,18 @@ class ZoneMapIntervalSpec extends AnyFunSuite {
     val L = (1L << 53) + 3 // 9007199254740995; rounds UP on the grid:
     assert(L.toDouble == 9007199254740996.0)
     val zSchema = StructType(Seq(StructField("file", StringType),
-      StructField("vmin", DoubleType), StructField("vmax", DoubleType)))
+      StructField("v_min", DoubleType), StructField("v_max", DoubleType)))
     def zrow(f: String, mn: Double, mx: Double) =
       new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
         Array[Any](f, mn, mx), zSchema)
     val fA = "file:/tmp/zwiden/a.parquet"
     val fB = "file:/tmp/zwiden/b.parquet"
     def st(f: String) = new FileStatus(1L, false, 1, 1L, 0L, new Path(f))
+    // `v` is a DOUBLE column of the relation, so its zones are doubles
     val idx = new graft.plans.ZoneMapFileIndex(new Path("file:/tmp/zwiden"),
       Array(zrow(fA, 0.0, 9007199254740996.0), zrow(fB, 0.0, 9007199254740994.0)),
-      Seq(st(fA), st(fB)), Map("v" -> ("vmin", "vmax")),
-      spark.sparkContext.hadoopConfiguration, _ => Array.empty)
+      Seq(st(fA), st(fB)), Seq("v"), StructType(Seq(StructField("v", DoubleType))),
+      spark.sparkContext.hadoopConfiguration)
     val pred = GreaterThanOrEqual(
       AttributeReference("v", LongType)(), Literal(L, LongType))
     val listed = idx.listFiles(Nil, Seq(pred)).flatMap(_.files)
@@ -469,19 +463,13 @@ class ZoneMapIntervalSpec extends AnyFunSuite {
 
   test("r46: 2-D z-order prunes a strictly smaller file FRACTION than the 1-D layout") {
     // The point of the z-order layout: on the conjunctive predicate the
-    // 1-D price-clustered layout can only prune on price (its quantity
-    // zones all span the domain), so the z-layout's matched fraction must
-    // be strictly smaller. Fractions, not counts — the layouts hold a
-    // different number of files.
-    operators.ZoneMap.zonemapSkip(spark, sf).count()
-    operators.ZoneMap.zorderSkip(spark, sf).count()
-    val (f1, t1) = operators.ZoneMap.planSkip(spark,
-      operators.ZoneMap.layouts(sf),
-      operators.ZoneMap.PriceLo, operators.ZoneMap.PriceHi)
-    val (f2, t2) = operators.ZoneMap.planSkip2(spark,
-      operators.ZoneMap.zLayouts(sf),
-      operators.ZoneMap.PriceLo, operators.ZoneMap.PriceHi,
-      operators.ZoneMap.QtyLo, operators.ZoneMap.QtyHi)
+    // 1-D price-clustered layout can only prune on price (its index zones
+    // price alone), so the z-layout's matched fraction must be strictly
+    // smaller. Fractions, not counts — the layouts hold a different
+    // number of files. Both listings come from the same index under the
+    // same query predicate.
+    val (f1, t1) = listing(ZM.table(spark, ZM.zonemapLayout(spark, sf)).filter(bothBands))
+    val (f2, t2) = listing(ZM.zorderTable(spark, sf).filter(bothBands))
     val frac1 = f1.length.toDouble / t1
     val frac2 = f2.length.toDouble / t2
     assert(frac2 < frac1,
