@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.CciPipeline
 import graft.operators.CciPipeline.{Budget, BudgetFraction, BuyThresholds, FeeRate, GridConfig, TaxRate}
-import graft.plans.ZoneMapFileIndex
 import graft.sources.{EventConnector, LocalFileEventConnector, Tables}
 
 /** The daily orchestrated run — the reference's actual *product*
@@ -175,19 +174,11 @@ object Daily {
       s: java.sql.Date): Option[DataFrame] =
     latestCommittedPart(spark, dir, s).map(c => readPartition(spark, s"$dir/run_d=${c.value}"))
 
-  /** One workspace partition read back under the schema graft wrote into
-    * its parquet footers — a driver metadata read, where a bare
-    * `spark.read.parquet` runs a schema-inference job per read. A
-    * partition without a data file falls back to that plain read. */
-  private def readPartition(spark: SparkSession, dir: String): DataFrame = {
-    val p = new Path(dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    ZoneMapFileIndex.listParquet(p.getFileSystem(conf), p).headOption
-      .fold(spark.read.parquet(dir)) { f =>
-        spark.read.schema(ZoneMapFileIndex.readFooters(conf, Seq(f.getPath), Nil)._1)
-          .parquet(dir)
-      }
-  }
+  /** One workspace partition read back under its footer schema
+    * ([[Tables.readParquet]]) — a driver metadata read, where a bare
+    * `spark.read.parquet` runs a schema-inference job per read. */
+  private def readPartition(spark: SparkSession, dir: String): DataFrame =
+    Tables.readParquet(spark, dir)
 
   private def stateAsOf(spark: SparkSession, ws: Workspace, s: java.sql.Date): DataFrame =
     latestCommitted(spark, ws.stateDir, s).getOrElse(throw new IllegalArgumentException(
@@ -304,7 +295,7 @@ object Daily {
       // cost sum, the committed read-back) — cache it so the
       // conditions⨝latest sizing chain runs once, not per consumer
       val orders = GraftSession.maybeCache(CciPipeline.orderRows(
-        spark.read.parquet(ws.conditionsDir), sizedOn, qty))
+        Tables.readParquet(spark, ws.conditionsDir), sizedOn, qty))
       var scoredCache: Option[DataFrame] = None
       try {
       overwrite(orders, s"${ws.ordersDir}/run_d=$s")

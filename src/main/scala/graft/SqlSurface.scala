@@ -300,12 +300,6 @@ object SqlSurface {
     spark.sql("SELECT * FROM graft_interval_join ORDER BY o_orderkey")
   }
 
-  // ---------------------------------------------------------------- sql09
-  /** r47 through pure SQL: the band summary is written as an ORDINARY
-    * WHERE clause over the `graft_zorder` view — the client never names a
-    * file, and [[graft.plans.ZoneMapFileIndex]] prunes the listing from
-    * the pushed filters at planning time (SqlSurfaceSpec pins the index
-    * in the scan and the strict pruning). Gated on r46's oracle. */
   // ---------------------------------------------------------------- sql10
   /** r48's ranged intraday chart as pure Spark SQL — the k=1 heap
     * open/close picks go through the SQL-registered `graft_topk_ord`
@@ -357,6 +351,12 @@ object SqlSurface {
          |ORDER BY 1, 2""".stripMargin)
   }
 
+  // ---------------------------------------------------------------- sql09
+  /** r47 through pure SQL: the band summary is written as an ORDINARY
+    * WHERE clause over the `graft_zorder` view — the client never names a
+    * file, and [[graft.plans.ZoneMapFileIndex]] prunes the listing from
+    * the pushed filters at planning time (SqlSurfaceSpec pins the index
+    * in the scan and the strict pruning). Gated on r46's oracle. */
   def zorderViaSql(spark: SparkSession, dir: String): DataFrame = {
     registerOperators(spark, dir)
     spark.sql(

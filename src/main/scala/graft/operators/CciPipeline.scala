@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.sources.Tables
 
@@ -283,26 +284,30 @@ object CciPipeline {
     * Native codegen folds (same index-order left fold, 0.0 init, as the
     * aggregate/transform HOF reference semantics and the oracle's
     * list_reduce): the interpretive lambdas were the hot part of the
-    * chain's cache build at sf0.1. */
+    * chain's cache build at sf0.1.
+    *
+    * Two projections, one analyzer pass each: the typical prices and
+    * their window lists, then every derived column. A derived column
+    * that reads another repeats its expression; whole-stage codegen
+    * evaluates the repeat once (subexpression elimination), and the
+    * arithmetic, so every value, is unchanged. */
   private def rollingCci(df: DataFrame,
       wf: org.apache.spark.sql.expressions.WindowSpec, cciN: Int): DataFrame = {
-    import df.sparkSession.implicits._
     import graft.functions.catalyst.GraftColumns.{array_sum_f64, abs_dev_sum_f64}
-    df
-      .withColumn("tp_c", ($"high_pr" + $"low_pr" + $"close_pr") / 3.0)
-      .withColumn("tp_o", ($"high_pr" + $"low_pr" + $"open_pr") / 3.0)
-      .withColumn("tps_c", collect_list($"tp_c").over(wf))
-      .withColumn("tps_o", collect_list($"tp_o").over(wf))
-      .withColumn("cnt", size($"tps_c"))
-      .withColumn("sma_c", array_sum_f64($"tps_c") / $"cnt")
-      .withColumn("sma_o", array_sum_f64($"tps_o") / $"cnt")
-      .withColumn("mad_c", abs_dev_sum_f64($"tps_c", $"sma_c") / $"cnt")
-      .withColumn("mad_o", abs_dev_sum_f64($"tps_o", $"sma_o") / $"cnt")
-      .withColumn("close_cci",
-        when($"cnt" >= cciN && $"mad_c" =!= 0.0, ($"tp_c" - $"sma_c") / (lit(0.015) * $"mad_c")))
-      .withColumn("open_cci",
-        when($"cnt" >= cciN && $"mad_o" =!= 0.0, ($"tp_o" - $"sma_o") / (lit(0.015) * $"mad_o")))
-      .drop("tps_c", "tps_o")
+    val tpC = (col("high_pr") + col("low_pr") + col("close_pr")) / 3.0
+    val tpO = (col("high_pr") + col("low_pr") + col("open_pr")) / 3.0
+    val (tpsC, tpsO) = (col("tps_c"), col("tps_o"))
+    val cnt = size(tpsC)
+    val (smaC, smaO) = (array_sum_f64(tpsC) / cnt, array_sum_f64(tpsO) / cnt)
+    val (madC, madO) = (abs_dev_sum_f64(tpsC, smaC) / cnt, abs_dev_sum_f64(tpsO, smaO) / cnt)
+    df.select(col("*"), tpC.as("tp_c"), tpO.as("tp_o"),
+        collect_list(tpC).over(wf).as("tps_c"), collect_list(tpO).over(wf).as("tps_o"))
+      .select(df.columns.map(col).toSeq ++ Seq(col("tp_c"), col("tp_o"),
+        cnt.as("cnt"), smaC.as("sma_c"), smaO.as("sma_o"), madC.as("mad_c"), madO.as("mad_o"),
+        when(cnt >= cciN && madC =!= 0.0, (col("tp_c") - smaC) / (lit(0.015) * madC))
+          .as("close_cci"),
+        when(cnt >= cciN && madO =!= 0.0, (col("tp_o") - smaO) / (lit(0.015) * madO))
+          .as("open_cci")): _*)
   }
 
   /** Shared oracle CTE chain: events_us → bars → cci. */
@@ -696,12 +701,14 @@ object CciPipeline {
     tradeOutcomes(c, sig, conditionGrid(c.sparkSession, cfg), cfg.maxHolding, Nil)
   }
 
-  /** holding × target × stop-loss: the broadcast literal condition grid. */
+  /** holding × target × stop-loss: the broadcast literal condition grid,
+    * one local relation. */
   private def conditionGrid(spark: SparkSession, cfg: GridConfig): DataFrame = {
     import spark.implicits._
-    cfg.holdingDays.toDF("condition_holding_days")
-      .crossJoin(cfg.targetReturns.toDF("condition_target_return"))
-      .crossJoin(cfg.stopThresholds.toDF("condition_stop_loss_cci_threshold"))
+    (for (h <- cfg.holdingDays; r <- cfg.targetReturns; s <- cfg.stopThresholds)
+      yield (h, r, s))
+      .toDF("condition_holding_days", "condition_target_return",
+        "condition_stop_loss_cci_threshold")
   }
 
   /** The signal→outcome trade core shared by r06 (`trades`) and the
@@ -730,27 +737,23 @@ object CciPipeline {
         min(when($"fclose" >= $"buy_price" * (lit(1.0) + $"condition_target_return" / 100.0), $"fidx")).as("t_idx"),
         min(when($"fcci" <= $"condition_stop_loss_cci_threshold", $"fidx")).as("s_idx"),
         max($"fidx").as("m_idx"))
-    val sel = agg
-      .withColumn("trade_result",
-        when($"t_idx".isNotNull && ($"s_idx".isNull || $"t_idx" < $"s_idx"), lit("reach_target"))
-          .when($"s_idx".isNotNull, lit("stop_loss"))
-          .otherwise(lit("maturity")))
-      .withColumn("sell_idx",
-        when($"t_idx".isNotNull && ($"s_idx".isNull || $"t_idx" < $"s_idx"), $"t_idx")
-          .when($"s_idx".isNotNull, $"s_idx")
-          .otherwise($"m_idx"))
+    val targetFirst = $"t_idx".isNotNull && ($"s_idx".isNull || $"t_idx" < $"s_idx")
+    val sel = agg.select(col("*"),
+      when(targetFirst, lit("reach_target")).when($"s_idx".isNotNull, lit("stop_loss"))
+        .otherwise(lit("maturity")).as("trade_result"),
+      when(targetFirst, $"t_idx").when($"s_idx".isNotNull, $"s_idx")
+        .otherwise($"m_idx").as("sell_idx"))
     val sellRows = c.select($"user_id".as("s_user"), $"idx".as("s_idx2"),
       $"d".as("sell_date"), $"close_pr".as("sell_price"))
     sel
       .join(sellRows, $"user_id" === $"s_user" && $"sell_idx" === $"s_idx2")
-      .withColumn("days_held",
-        when($"trade_result" === "maturity", $"condition_holding_days")
-          .otherwise(datediff($"sell_date", $"buy_date")).cast("long"))
       .select(($"user_id" +: $"buy_date" +: $"buy_price" +: extraCols.map(col)) ++ Seq(
         $"condition_holding_days", $"condition_target_return",
         $"buy_thr".as("condition_buy_cci_threshold"),
         $"condition_stop_loss_cci_threshold",
-        $"trade_result", $"sell_date", $"sell_price", $"days_held"): _*)
+        $"trade_result", $"sell_date", $"sell_price",
+        when($"trade_result" === "maturity", $"condition_holding_days")
+          .otherwise(datediff($"sell_date", $"buy_date")).cast(LongType).as("days_held")): _*)
   }
 
   private val tradesCtes: String =
@@ -831,10 +834,17 @@ object CciPipeline {
         count(lit(1)).as("n1"),
         sum(when($"sell_price" > $"buy_price", 1).otherwise(0)).as("w1"),
         sum(when($"sell_price" < $"buy_price", 1).otherwise(0)).as("l1"),
-        sum(floor(((($"sell_price" - $"buy_price") / $"days_held") * 100.0 + 0.5)).cast("long")).as("rpdh1"),
+        sum(floor(((($"sell_price" - $"buy_price") / $"days_held") * 100.0 + 0.5)).cast(LongType)).as("rpdh1"),
         sum($"days_held").as("dh1"),
-        sum(floor($"buy_price" * 100.0 + 0.5).cast("long")).as("bc1"),
-        sum(floor($"sell_price" * 100.0 + 0.5).cast("long")).as("sc1"))
+        sum(floor($"buy_price" * 100.0 + 0.5).cast(LongType)).as("bc1"),
+        sum(floor($"sell_price" * 100.0 + 0.5).cast(LongType)).as("sc1"))
+    // The cents sums become the four raw ratios inside the aggregate's
+    // result; the one projection above it rounds them, in the output's
+    // column order. total_revenue is rounded to 0 before revenue_rate
+    // divides it (the reference's chain).
+    def pct(n: String) = floor((col(n) / $"count_buy_date" * 100.0) * 100.0 + 0.5) / 100.0
+    val (buyRaw, sellRaw) = ($"total_buy_raw", $"total_sell_raw")
+    val totalRevenue = floor((sellRaw - buyRaw) * 1.0 + 0.5) / 1.0
     l1
       .groupBy(gk: _*)
       .agg(
@@ -844,44 +854,39 @@ object CciPipeline {
         count(when($"trade_result" === "maturity", 1)).as("count_maturity_date"),
         sum($"w1").as("count_win"),
         sum($"l1").as("count_lose"),
-        sum($"rpdh1").as("rpdh_cents"),
-        sum($"n1").as("n_trades"),
-        sum($"dh1").as("days_held_sum"),
-        sum($"bc1").as("buy_cents"),
-        sum($"sc1").as("sell_cents"))
-      .withColumn("avg_rpdh_raw", $"rpdh_cents".cast("double") / $"n_trades" / 100.0)
-      .withColumn("avg_days_held_raw", $"days_held_sum".cast("double") / $"n_trades")
-      .withColumn("total_buy_raw", $"buy_cents".cast("double") / 100.0)
-      .withColumn("total_sell_raw", $"sell_cents".cast("double") / 100.0)
-      .withColumn("win_rate", floor(($"count_win" / $"count_buy_date" * 100.0) * 100.0 + 0.5) / 100.0)
-      .withColumn("lose_rate", floor(($"count_lose" / $"count_buy_date" * 100.0) * 100.0 + 0.5) / 100.0)
-      .withColumn("total_revenue", floor(($"total_sell_raw" - $"total_buy_raw") * 1.0 + 0.5) / 1.0)
-      .withColumn("revenue_rate",
-        when($"total_buy_raw" =!= 0.0,
-          floor(($"total_revenue" / $"total_buy_raw" * 100.0) * 100.0 + 0.5) / 100.0))
-      .withColumn("reach_target_rate", floor(($"count_reach_target_date" / $"count_buy_date" * 100.0) * 100.0 + 0.5) / 100.0)
-      .withColumn("stop_loss_rate", floor(($"count_stop_loss_date" / $"count_buy_date" * 100.0) * 100.0 + 0.5) / 100.0)
-      .withColumn("maturity_rate", floor(($"count_maturity_date" / $"count_buy_date" * 100.0) * 100.0 + 0.5) / 100.0)
-      .withColumn("avg_revenue_per_days_held", floor(($"avg_rpdh_raw") * 10000.0 + 0.5) / 10000.0)
-      .withColumn("avg_days_held", floor(($"avg_days_held_raw") * 10000.0 + 0.5) / 10000.0)
-      .withColumn("total_buy_price", floor(($"total_buy_raw") * 100.0 + 0.5) / 100.0)
-      .withColumn("total_sell_price", floor(($"total_sell_raw") * 100.0 + 0.5) / 100.0)
-      .drop("avg_rpdh_raw", "avg_days_held_raw", "total_buy_raw", "total_sell_raw",
-        "rpdh_cents", "n_trades", "days_held_sum", "buy_cents", "sell_cents")
+        (sum($"rpdh1").cast(DoubleType) / sum($"n1") / 100.0).as("avg_rpdh_raw"),
+        (sum($"dh1").cast(DoubleType) / sum($"n1")).as("avg_days_held_raw"),
+        (sum($"bc1").cast(DoubleType) / 100.0).as("total_buy_raw"),
+        (sum($"sc1").cast(DoubleType) / 100.0).as("total_sell_raw"))
+      .select(gk ++ Seq($"count_buy_date", $"count_reach_target_date",
+        $"count_stop_loss_date", $"count_maturity_date", $"count_win", $"count_lose",
+        pct("count_win").as("win_rate"),
+        pct("count_lose").as("lose_rate"),
+        totalRevenue.as("total_revenue"),
+        when(buyRaw =!= 0.0,
+          floor((totalRevenue / buyRaw * 100.0) * 100.0 + 0.5) / 100.0).as("revenue_rate"),
+        pct("count_reach_target_date").as("reach_target_rate"),
+        pct("count_stop_loss_date").as("stop_loss_rate"),
+        pct("count_maturity_date").as("maturity_rate"),
+        (floor(($"avg_rpdh_raw") * 10000.0 + 0.5) / 10000.0).as("avg_revenue_per_days_held"),
+        (floor(($"avg_days_held_raw") * 10000.0 + 0.5) / 10000.0).as("avg_days_held"),
+        (floor(buyRaw * 100.0 + 0.5) / 100.0).as("total_buy_price"),
+        (floor(sellRaw * 100.0 + 0.5) / 100.0).as("total_sell_price")): _*)
       // r07-r10 each read the strategy table; share one build. Cached
-      // AFTER the helper-column drop (round-14): the returned frame IS
-      // the cached node — fewer columns in storage, and callers can
+      // after the final projection (round-14): the returned frame IS
+      // the cached node — no helper column in storage, and callers can
       // release it with a plain `strategyAgg(...).unpersist()` (the
       // bench's rebuild rep needs exactly that handle).
       .transform(graft.GraftSession.maybeCache(_))
   }
 
-  /** Bench rebuild hook: release the CCI chain's three cached nodes
+  /** Bench rebuild hook: release the CCI chain's four cached nodes
     * (blocking) so the next materialization re-pays the full build — the
     * cold `cache_build` entry's repeatable twin. Each call site returns a
     * frame whose plan canonicalizes to the cached entry, so `unpersist`
     * resolves through the CacheManager without holding handles. */
   private[graft] def dropChainCaches(spark: SparkSession, dir: String): Unit = {
+    bestRows(spark, dir).unpersist(true)
     strategyAgg(spark, dir).unpersist(true)
     trades(spark, dir).unpersist(true)
     cci(spark, dir).unpersist(true): Unit
@@ -964,8 +969,17 @@ object CciPipeline {
     * no sort anywhere. Metrics are floors of finite ratios with positive
     * denominators, so no NaN can disturb the ordering; `revenue_rate` is
     * the one nullable metric and nulls-last is preserved by the +Inf
-    * mapping. */
-  def bestOf(spark: SparkSession, dir: String): DataFrame = {
+    * mapping.
+    *
+    * r08 is [[bestRows]] in (investment_target, user_id) order. */
+  def bestOf(spark: SparkSession, dir: String): DataFrame =
+    bestRows(spark, dir).orderBy(col("investment_target"), col("user_id"))
+
+  /** [[bestOf]]'s rows, unsorted and cached: r08 sorts them, and r09,
+    * r10, r13 and r39 filter the win-rate slice ([[bestWinFrame]]) and
+    * sort their own output, so one heap aggregation serves the whole
+    * refresh. Dimension-scale: three rows per series. */
+  private[graft] def bestRows(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val strat = strategyAgg(spark, dir) // already cached inside strategyAgg
     val cols = strat.columns.toSeq
@@ -985,7 +999,7 @@ object CciPipeline {
     }: _*))
     best.select(rows.as("e"))
       .select(cols.map(c => col(s"e.r.$c").as(c)) :+ $"e.investment_target".as("investment_target"): _*)
-      .orderBy($"investment_target", $"user_id")
+      .transform(graft.GraftSession.maybeCache(_))
   }
 
   private[graft] def bestCte(metric: String): String =
@@ -1010,13 +1024,14 @@ object CciPipeline {
   def recommendations(spark: SparkSession, dir: String): DataFrame =
     recommendationsFrom(spark, dir, bestWinFrame(spark, dir))
 
-  /** The best-win slice of [[bestOf]] — the frame r09/r10/r39 all rank and
-    * filter. Factored out (round-16 optimization) so a composed consumer
-    * (r39's feed derives four outputs from it) can materialize it ONCE and
-    * pass it to [[recommendationsFrom]]/[[candidateFilterFrom]] instead of
-    * re-running the bestOf heap aggregation per output branch. */
+  /** The best-win slice of [[bestRows]], unsorted — the frame r09/r10/r13/
+    * r39 all rank and filter. Factored out (round-16 optimization) so a
+    * composed consumer (r39's feed derives four outputs from it) can
+    * materialize it ONCE and pass it to [[recommendationsFrom]]/
+    * [[candidateFilterFrom]]; every caller reads the one cached heap
+    * aggregation. */
   private[graft] def bestWinFrame(spark: SparkSession, dir: String): DataFrame =
-    bestOf(spark, dir).filter(col("investment_target") === "win_rate")
+    bestRows(spark, dir).filter(col("investment_target") === "win_rate")
 
   /** Per series, the last CCI row and the lagged open CCI: the latest
     * crossover state r09's recommendations and r13's orders read. The

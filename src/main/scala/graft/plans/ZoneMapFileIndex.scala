@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, GenericRowWithSchema, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Zone-map data skipping INSIDE the planner (VERDICT r12 stretch task):
@@ -265,10 +266,10 @@ object ZoneMapFileIndex {
   def listParquet(fs: FileSystem, root: Path): Seq[FileStatus] =
     fs.listStatus(root).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
 
-  /** The one footer reader: the Spark schema the writer stored in the
-    * footers (the first file's; graft writes one schema per layout) and
-    * one zone row per file over `cols` — file-count-scale driver I/O, no
-    * Spark job and no data-column read. A column without usable footer
+  /** The one zone reader: the first file's footer schema
+    * ([[graft.sources.Tables.footerSchema]]; graft writes one schema per
+    * layout) and one zone row per file over `cols` — file-count-scale
+    * driver I/O, no Spark job and no data-column read. A column without usable footer
     * statistics in some row group gets an UNBOUNDED zone (it matches
     * every band, so pruning stays sound and only skip ratio is lost).
     * Rows are keyed by the Hadoop `Path.toString` rendering, the one
@@ -280,12 +281,7 @@ object ZoneMapFileIndex {
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
       try {
         val footer = reader.getFooter
-        val json = footer.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata")
-        require(json != null, s"$p carries no Spark schema in its footer")
-        // every column reads back nullable, as Spark's own reader makes it
-        val schema = StructType(DataType.fromJson(json).asInstanceOf[StructType]
-          .map(_.copy(nullable = true)))
+        val schema = graft.sources.Tables.footerSchema(footer.getFileMetaData, SQLConf.get)
         val zSchema = zoneSchema(schema, cols)
         val blocks = footer.getBlocks.asScala.toSeq
         val bounds = cols.flatMap { c =>

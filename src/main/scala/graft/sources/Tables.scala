@@ -1,12 +1,26 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.FileMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+
+import graft.plans.ZoneMapFileIndex
 
 /** Typed access to the driver-generated parquet tables.
   *
-  * All loads are plain `spark.read.parquet` so Catalyst keeps full pushdown
-  * (filters + column pruning reach the scan). Case classes model the fixed
-  * schemas for `Dataset[T]` call sites that want compile-time field checks.
+  * Every load is `spark.read.schema(<footer schema>).parquet`: the schema
+  * comes from the first data file's footer ([[parquetSchema]]), read on the
+  * driver, so a load runs no Spark job, where a bare `spark.read.parquet`
+  * runs a schema-inference job per call. The footer schema is the type
+  * Spark's own inference yields, so Catalyst keeps full pushdown (filters +
+  * column pruning reach the scan) and [[normalizeEventTs]] still keys off
+  * each table's own `ts` encoding. Case classes model the fixed schemas for
+  * `Dataset[T]` call sites that want compile-time field checks.
   */
 object Tables {
   final case class Region(r_regionkey: Int, r_name: String)
@@ -30,7 +44,47 @@ object Tables {
   final case class Embedding(vec_id: Long, embedding: Array[Float], label: Int)
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
+
+  /** The schema Spark's parquet inference yields for one file's footer,
+    * without its job: the Spark schema the writer stored in the footer when
+    * there is one, else the footer's parquet schema converted under `conf`
+    * (which carries the session's `nanosAsLong`, NTZ inference and binary
+    * flags). Every field reads back nullable, as Spark's reader makes it. */
+  private[graft] def footerSchema(meta: FileMetaData, conf: SQLConf): StructType = {
+    def nullable(dt: DataType): DataType = dt match {
+      case s: StructType => StructType(s.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    val stored = Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
+    nullable(stored.getOrElse(new ParquetToSparkSchemaConverter(conf).convert(meta.getSchema)))
+      .asInstanceOf[StructType]
+  }
+
+  /** The schema of the parquet table at `path` (one file, or a directory of
+    * files sharing one schema) from its first data file's footer — a driver
+    * metadata read under the session's own conf; `None` when `path` holds
+    * no data file. */
+  private[graft] def parquetSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val p = new Path(path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    ZoneMapFileIndex.listParquet(p.getFileSystem(conf), p).map(_.getPath)
+      .sortBy(_.toString).headOption.map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        try footerSchema(reader.getFooter.getFileMetaData,
+          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf)
+        finally reader.close()
+      }
+  }
+
+  /** A parquet table read under its [[parquetSchema]], with no job; a path
+    * without a data file falls back to the plain read (and its error). */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
+    parquetSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   /** DuckDB-side view of `events` with `ts` truncated from nanos to micros,
     * matching [[events]]. Prepend to any oracle SQL touching events. */

@@ -91,7 +91,7 @@ object EventStream {
     // same defensive conf as Tables.events: a TIMESTAMP(NANOS) encoding is
     // only readable (as int64) under nanosAsLong on a caller-built session
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(streamDir).schema
+    val schema = Tables.readParquet(spark, streamDir).schema
     Tables.normalizeEventTs(
       spark.readStream
         .schema(schema)

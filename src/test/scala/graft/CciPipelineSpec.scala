@@ -1,8 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -234,19 +236,67 @@ class CciPipelineSpec extends AnyFunSuite {
     l.unpersist()
   }
 
+  /** A fresh directory holding a copy of the sf events: the perfbench
+    * grid refresh's input, with no chain cache of an earlier refresh. */
+  private def copyOfEvents(): String = {
+    val dir = Files.createTempDirectory("graft-refresh").toString
+    Files.copy(Paths.get(s"$sf/events.parquet"), Paths.get(s"$dir/events.parquet"))
+    dir
+  }
+
+  /** The strategy refresh's three outputs over `dir`, constructed only. */
+  private def refreshFrames(dir: String) =
+    Seq(CciPipeline.bestOf(spark, dir), CciPipeline.recommendations(spark, dir),
+      CciPipeline.candidateFilter(spark, dir))
+
+  test("grid refresh: constructing best-of, recommendations and candidates runs no Spark job") {
+    // every table schema comes from a parquet footer read on the driver
+    // (Tables.parquetSchema), so a refresh over a fresh input launches
+    // its first job only at an action. Jobs are told apart by the job
+    // group of the constructing thread; a fence job after it flushes the
+    // in-order listener bus.
+    val (group, fence) = ("graft.test.construct", "graft.test.fence")
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val fenced = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group) jobs.add(e.stageInfos.map(_.name).mkString(", "))
+        else if (g == fence) fenced.countDown()
+      }
+    }
+    val (sc, dir) = (spark.sparkContext, copyOfEvents())
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "construct the refresh")
+      try refreshFrames(dir) finally sc.clearJobGroup()
+      sc.setJobGroup(fence, "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, TimeUnit.SECONDS), "fence job start never arrived")
+    } finally {
+      sc.removeSparkListener(listener)
+      CciPipeline.dropChainCaches(spark, dir)
+    }
+    assert(jobs.isEmpty, s"construction ran ${jobs.size} job(s): ${jobs.toArray.mkString("; ")}")
+  }
+
+  test("dropChainCaches: the cache-entry count returns to its baseline, best-of rows included") {
+    def entries = org.apache.spark.sql.execution.CacheEntries.count(spark)
+    val (dir, before) = (copyOfEvents(), entries)
+    refreshFrames(dir)
+    // cci, trades, strategyAgg and the unsorted best-of rows
+    assert(entries == before + 4)
+    assert(CciPipeline.bestRows(spark, dir).storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    CciPipeline.dropChainCaches(spark, dir)
+    assert(entries == before)
+  }
+
   test("grid refresh: a warm refresh over a fresh copy of the input compiles no class") {
     // Spark's codegen cache (GraftSession.CodegenCacheEntries) keeps every
     // class a cold refresh compiled, so a second refresh over the same
     // events in a new directory finds them all: the perfbench grid shape
-    def copyOfEvents(): String = {
-      val dir = Files.createTempDirectory("graft-refresh").toString
-      Files.copy(Paths.get(s"$sf/events.parquet"), Paths.get(s"$dir/events.parquet"))
-      dir
-    }
     def refresh(dir: String): Unit = {
-      Seq(CciPipeline.bestOf(spark, dir), CciPipeline.recommendations(spark, dir),
-          CciPipeline.candidateFilter(spark, dir))
-        .foreach(_.write.format("noop").mode("overwrite").save())
+      refreshFrames(dir).foreach(_.write.format("noop").mode("overwrite").save())
       CciPipeline.dropChainCaches(spark, dir)
     }
     val (cold, warm) = (copyOfEvents(), copyOfEvents())

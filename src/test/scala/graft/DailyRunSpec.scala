@@ -171,16 +171,17 @@ class DailyRunSpec extends AnyFunSuite {
     // seen in the SQL confs each query's jobs carry; the session's own
     // values come back after the day. Partitions start at 7, not the test
     // session's 4, so neither the shrink nor the restore can pass by
-    // coincidence. The only other jobs are the one-stage parquet schema
-    // reads of `spark.read` over input tables, which run no query and
-    // carry no SQL conf; workspace partitions are read under the schema
-    // in their footers, so no job's call site is a Daily parquet read.
+    // coincidence. Every parquet read of the day (input tables, the
+    // conditions table, workspace partitions) takes its schema from a
+    // footer, so no job outside a query has a `parquet at` call site: a
+    // schema inference would.
     val (aqeKey, partsKey) = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     val conn = new LocalFileEventConnector(sf)
     val day = Iterator.iterate(maxLd.minusDays(6))(_.plusDays(1))
       .find(CciPipeline.isTradingDayLocal).get
     val ws = newWs()
     Daily.bootstrap(spark, conn, ws, java.sql.Date.valueOf(day.minusDays(1)))
+    Daily.writeConditions(spark, sf, ws)
     val sc = spark.sparkContext
     val sessionParts = spark.conf.get(partsKey)
     assert(spark.conf.get(aqeKey) == "true")
@@ -208,7 +209,8 @@ class DailyRunSpec extends AnyFunSuite {
     spark.conf.set(partsKey, "7")
     sc.addSparkListener(listener)
     try {
-      Daily.runDay(spark, conn, ws, java.sql.Date.valueOf(day))
+      // with orders, so the day also reads the conditions table
+      Daily.runDay(spark, conn, ws, java.sql.Date.valueOf(day), withOrders = true)
       assert(spark.conf.get(aqeKey) == "true", "AQE not restored after the day")
       assert(spark.conf.get(partsKey) == "7", "shuffle partitions not restored after the day")
       sc.setLocalProperty(FenceProp, "1")
@@ -224,8 +226,8 @@ class DailyRunSpec extends AnyFunSuite {
     assert(off.isEmpty, s"${off.size} of ${queries.size} query jobs ran outside the gate " +
       s"(job, stages, (AQE, partitions)): ${off.take(5).mkString(", ")}")
     assert(others.forall(_._2 == 1), s"a job outside any query shuffles: $others")
-    val inferred = callSites.asScala.filter(_.startsWith("parquet at Daily.scala"))
-    assert(inferred.isEmpty, s"workspace reads inferred their schema in a job: $inferred")
+    val inferred = callSites.asScala.filter(_.startsWith("parquet at "))
+    assert(inferred.isEmpty, s"parquet reads inferred their schema in a job: $inferred")
   }
 
   test("daily loop: crash rerun of a committed day is a state no-op") {

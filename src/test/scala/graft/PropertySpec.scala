@@ -320,4 +320,31 @@ class PropertySpec extends AnyFunSuite {
         s"dropped [$mn,$mx] under v = $l")
     }
   }
+
+  test("footer schema: equals Spark's inferred schema for every sf table and ts encoding") {
+    import org.apache.spark.sql.functions.{lit, timestamp_micros}
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val sfTables = new java.io.File(TestSpark.sf).listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).sorted.toSeq
+    assert(sfTables.size >= 10, sfTables)
+    // the events `ts` encodings the loader specs write: int64 nanos,
+    // timestamp[us] (the session's default output type) and timestamp_ntz
+    val us = 1709296496789123L
+    val encoded = Seq(lit(us * 1000L), timestamp_micros(lit(us)),
+        timestamp_micros(lit(us)).cast("timestamp_ntz")).map { ts =>
+      val path = java.nio.file.Files.createTempDirectory("graft_footer").toString + "/events.parquet"
+      Seq((1L, 7L, "view", 1.5, "{}")).toDF("event_id", "user_id", "event_type", "value", "props")
+        .select($"event_id", ts.as("ts"), $"user_id", $"event_type", $"value", $"props")
+        .write.parquet(path)
+      path
+    }
+    assert(encoded.map(p => spark.read.parquet(p).schema("ts").dataType.typeName) ==
+      Seq("long", "timestamp", "timestamp_ntz"))
+    (sfTables ++ encoded).foreach { path =>
+      val inferred = spark.read.parquet(path).schema
+      assert(sources.Tables.parquetSchema(spark, path).contains(inferred), path)
+      assert(sources.Tables.readParquet(spark, path).schema == inferred, path)
+    }
+  }
 }
