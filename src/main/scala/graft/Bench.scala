@@ -18,20 +18,6 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.plainBuilder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Rehearsal hook (round-15): scaled sweeps retune the runtime
-    // geometry confs (spark.graft.ann.lshPlanes, spark.graft.range.*,
-    // ...) without a recompile — SPARK_GRAFT_CONF="k=v,k=v".
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.nonEmpty)
-      .foreach { kv =>
-        // warn-and-skip malformed entries (ADVICE round-15): an
-        // irrefutable Array(k, v) destructure threw a MatchError on any
-        // entry missing '=', killing the whole bench before any timing
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k, v)
-          case _ => System.err.println(
-            s"[bench] WARNING: skipping malformed SPARK_GRAFT_CONF entry '$kv' (no '=')")
-        }
-      })
 
     def materialize(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

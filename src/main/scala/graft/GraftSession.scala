@@ -67,6 +67,11 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       // static: read once, when the first session in the JVM compiles
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // static: the SQL status store keeps each execution's UI data (plan
+      // graph, metrics) on the heap even with the UI off, up to this many
+      // executions (default 1000), and nothing in graft reads it. A long
+      // session's retained heap then grew with every query it had run.
+      .config("spark.sql.ui.retainedExecutions", "1")
 
   def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
     plainBuilder(master, shufflePartitions)

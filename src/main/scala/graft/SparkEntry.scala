@@ -111,8 +111,7 @@ object SparkEntry {
     "p05_stratified_sample" -> (Curation.stratifiedSample _),
     "m02_payload_features" -> (graft.multimodal.Multimodal.payloadFeatures _),
     "m03_frame_sample" -> (graft.multimodal.Multimodal.frameSamples _),
-    "s04_ann_ivf_trained" -> ((s: SparkSession, d: String) =>
-      graft.similarity.Similarity.ivfTrainedTopK(s, d)),
+    "s04_ann_ivf_trained" -> (graft.similarity.Similarity.ivfTrainedTopK _),
     "t08_repetition" -> (TextAnalysis.repetitionScore _),
     "p06_domain_mix" -> (Curation.domainMix _),
     "r23_run_digest" -> (CciPipeline.runDigest _),
@@ -258,8 +257,7 @@ object SparkEntry {
     // s07: corpus-wide k-NN graph (every vector, mutual-kNN flag) on the
     // s03 IVF core — the SemDeDup/graph-ANN entry artifact
     "s07_knn_graph" -> (graft.similarity.Similarity.knnGraph _),
-    "s07b_knn_graph_trained" ->
-      ((s, d) => graft.similarity.Similarity.knnGraphTrained(s, d)),
+    "s07b_knn_graph_trained" -> (graft.similarity.Similarity.knnGraphTrained _),
     // d14: SemDeDup-style semantic clusters — components over the d05
     // embedding near-dup graph, canonical-per-cluster kept
     "d14_semantic_clusters" -> (graft.dedup.Dedup.semanticClusters _),

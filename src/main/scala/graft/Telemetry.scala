@@ -61,31 +61,33 @@ object Telemetry {
     }
   }
 
+  private val QuietMs = 300L
+  private val MaxWaitMs = 10000L
+
   /** Run `df` to completion under a fresh listener and return its
     * telemetry digest. The listener bus is asynchronous, so after the
     * action returns we wait for the event stream to go QUIESCENT (no new
-    * job/stage event for `quietMs`, bounded by `maxWaitMs`) — the public
-    * equivalent of the private `listenerBus.waitUntilEmpty` that Spark's
-    * own tests use. */
-  def measure(spark: SparkSession, df: DataFrame,
-      quietMs: Long = 300L, maxWaitMs: Long = 10000L): DataFrame = {
+    * job/stage event for [[QuietMs]], bounded by [[MaxWaitMs]]) — the
+    * public equivalent of the private `listenerBus.waitUntilEmpty` that
+    * Spark's own tests use. */
+  def measure(spark: SparkSession, df: DataFrame): DataFrame = {
     import spark.implicits._
     val l = new RunListener
     spark.sparkContext.addSparkListener(l)
     try {
       df.write.format("noop").mode("overwrite").save()
       // quiescence needs a FLOOR: the action above always schedules at
-      // least one job, so "no new event for quietMs" only counts once a
+      // least one job, so "no new event for QuietMs" only counts once a
       // job-end has actually been observed — otherwise a listener bus
-      // lagging more than quietMs behind save() would yield an all-zero
+      // lagging more than QuietMs behind save() would yield an all-zero
       // digest. The deadline still bounds the wait if delivery stalls.
-      val deadline = System.nanoTime() + maxWaitMs * 1000000L
+      val deadline = System.nanoTime() + MaxWaitMs * 1000000L
       var last = -1L
       var stable = false
       while (!stable && System.nanoTime() < deadline) {
         val seen = l.events.get()
         if (seen == last && l.jobs.get() > 0) stable = true
-        else { last = seen; Thread.sleep(quietMs) }
+        else { last = seen; Thread.sleep(QuietMs) }
       }
     } finally spark.sparkContext.removeSparkListener(l)
     Seq(

@@ -473,18 +473,12 @@ object Dedup {
         |  FROM common JOIN cnt x ON x.doc_id = doc_a JOIN cnt y ON y.doc_id = doc_b)""".stripMargin
 
   // ---------------------------------------------------------------- d02
-  /** n-gram Jaccard near-dup pairs through the inverted shingle index.
-    * Threshold and stop-shingle cap are caller-tunable (the oracle-checked
-    * query runs the defaults); a 100 TB deployment raises the threshold
-    * for precision or lowers the cap for hotter corpora. */
-  def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
-    ngramJaccard(spark, dir, JaccardThreshold, MaxShingleDf)
-
-  def ngramJaccard(spark: SparkSession, dir: String,
-      threshold: Double, maxDf: Int): DataFrame = {
+  /** n-gram Jaccard near-dup pairs through the inverted shingle index,
+    * at [[JaccardThreshold]] with the [[MaxShingleDf]] stop-shingle cap. */
+  def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    jaccardPairsFrom(Tables.documents(spark, dir), maxDf)
-      .filter($"jaccard" >= threshold)
+    jaccardPairsFrom(Tables.documents(spark, dir), MaxShingleDf)
+      .filter($"jaccard" >= JaccardThreshold)
       .select($"doc_a", $"doc_b", $"common", $"na", $"nb",
         F.fr($"jaccard", 4).as("jaccard"))
       .orderBy($"doc_a", $"doc_b")
@@ -818,13 +812,9 @@ object Dedup {
     * the blocking key is whatever coarse clustering/partition is available;
     * never the full cross product). Dot/norm folds are explicit so the
     * oracle's arithmetic is identical. */
-  def embeddingCosine(spark: SparkSession, dir: String): DataFrame =
-    embeddingCosine(spark, dir, CosineThreshold)
-
-  def embeddingCosine(spark: SparkSession, dir: String,
-      threshold: Double): DataFrame = {
+  def embeddingCosine(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    embeddingCosineRaw(spark, dir, threshold)
+    embeddingCosineRaw(spark, dir)
       .select($"vec_a", $"vec_b", $"label", F.fr($"cosine_raw", 4).as("cosine"))
       .orderBy($"vec_a", $"vec_b")
   }
@@ -833,8 +823,8 @@ object Dedup {
     * fixpoint consumes this directly (materializing the sorted form would
     * pay a range-sampling pass + global sort the unordered loop discards,
     * the same trap dedupClusters documents for d07). */
-  private[graft] def embeddingCosineRaw(spark: SparkSession, dir: String,
-      threshold: Double): DataFrame = {
+  private[graft] def embeddingCosineRaw(spark: SparkSession,
+      dir: String): DataFrame = {
     import spark.implicits._
     // Norms are per-vector: compute them once before the pair join (the
     // oracle's per-pair sqrt(na)*sqrt(nb) sees the identical values).
@@ -850,7 +840,7 @@ object Dedup {
         // ANSI zero-norm guard, mirrored by the oracle's CASE
         when($"norm_a" * $"norm_b" =!= 0.0,
           graft.functions.catalyst.GraftColumns.dot_f64($"va", $"vb") / ($"norm_a" * $"norm_b")))
-      .filter($"cosine_raw" >= threshold)
+      .filter($"cosine_raw" >= CosineThreshold)
   }
 
   val embeddingCosineSql: String = {
@@ -887,7 +877,7 @@ object Dedup {
   def semanticClusters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val pairs = graft.GraftSession.maybeEagerCheckpoint(
-      embeddingCosineRaw(spark, dir, CosineThreshold)
+      embeddingCosineRaw(spark, dir)
         .select($"vec_a".as("doc_a"), $"vec_b".as("doc_b")))
     clustersFromPairs(
       Tables.embeddings(spark, dir).select($"vec_id".as("doc_id")), pairs)

@@ -69,17 +69,18 @@ object Intervals {
     * requires the join itself, which Spark would otherwise plan as
     * BroadcastNestedLoopJoin (per-probe-row scans of the whole fact).
     *
-    * The scalable spelling: bins of [[BinDaysConf]] days partition the
-    * time axis; each interval replicates into its ≤ span/B+1 covering
-    * bins, each point lands in exactly ONE bin, and an EQUI-join on the
+    * The scalable spelling: bins of B days partition the time axis;
+    * each interval replicates into its ≤ span/B+1 covering bins, each
+    * point lands in exactly ONE bin, and an EQUI-join on the
     * bin key carries the residual `s <= p < e` predicate — every
     * qualifying pair meets exactly once (bins partition days), so no
     * dedup pass. Shuffle volume is N·(span/B+1) + N instead of N²; the
     * bin-key cardinality is days/B — it grows with the TIME RANGE, not
     * the corpus, so per-bin volume grows with data density. Three
-    * RUNTIME knobs bound the task size: B itself (smaller B = more bins
-    * = less data per bin, at the cost of more interval replication),
-    * point-side SALTING — points spread over [[SaltBucketsConf]]
+    * things bound the task size: B itself (derived from the interval
+    * side's plan-stat size, [[BinDaysAutoAnchorBytes]]; smaller B = more
+    * bins = less data per bin, at the cost of more interval replication),
+    * point-side SALTING — points spread over [[SaltBuckets]]
     * sub-keys of their bin by key-hash while intervals replicate into
     * every sub-key, so a task's input is ivPerBin + ptsPerBin/S — and
     * the HOT-BIN sub-salt ([[HotBinRowsConf]]): a bin whose interval
@@ -93,26 +94,20 @@ object Intervals {
     * Output per order: how many order windows cover its date, their
     * exact-cent price mass, and the covering order with the highest
     * totalprice (ties to the higher key — mirrored in the oracle). */
-  // ---- runtime geometry (round-13): the bin width, salt fan-out and
-  // hot-bin handling are SESSION CONFS, not compile-time constants
-  // (sizing recipe: SURVEY §5 "Sizing a real deployment") — at
-  // 100× the data (or a different date density) the operator re-tunes
-  // without a recompile, the same discipline as the as-of split's
-  // hot-key threshold. Defaults equal the former constants.
-  /** Days per bin: smaller = more bins = less data per bin, at the cost
-    * of more interval replication (≤ span/B+1 bins per interval). */
-  val BinDaysConf = "spark.graft.range.binDays"
-  /** Hash-salt buckets on the point/hashing side: per-task share of that
-    * side is 1/S of its bin. */
-  val SaltBucketsConf = "spark.graft.range.saltBuckets"
+  // ---- geometry (sizing recipe: SURVEY §5 "Sizing a real deployment")
   /** REPLICATING-side rows per bin above which the bin is HOT and that
     * side sub-salts (see [[hotBins]]); the other side replicates across
     * the sub-salts. Bounds per-task pair volume by
     * hotBinRows·(otherPerBin/S) however dense one DAY gets. */
   val HotBinRowsConf = "spark.graft.range.hotBinRows"
 
-  private val DefaultBinDays = 16
-  private val DefaultSaltBuckets = 8
+  /** Days per bin at gate scale: smaller = more bins = less data per
+    * bin, at the cost of more interval replication (≤ span/B+1 bins per
+    * interval). Wider at scale, see [[BinDaysAutoAnchorBytes]]. */
+  private val BaseBinDays = 16
+  /** Hash-salt buckets on the point/hashing side: per-task share of that
+    * side is 1/S of its bin. */
+  private val SaltBuckets = 8
   private val DefaultHotBinRows = 4000000L
   /** Replicating-side plan-stat bytes below which hot-bin detection is
     * skipped entirely (detection is one bin-grouped aggregation scan —
@@ -124,9 +119,9 @@ object Intervals {
   private val MaxHotBins = 10000
   private val MaxSubSalts = 1024
 
-  /** Auto-derivation anchor for [[BinDaysConf]] (round-17, VERDICT r16
-    * task 6): when the conf is UNSET, days-per-bin doubles per decade of
-    * the interval source's plan-stat bytes above this anchor. Measured
+  /** Auto-derivation anchor for the bin width (round-17, VERDICT r16
+    * task 6): days-per-bin doubles per decade of the interval source's
+    * plan-stat bytes above this anchor. Measured
     * basis (PERF.md round-16 "binDays curve"): MakeScaledSf's verbatim
     * dates grow per-day density ∝ corpus, and the re-derived sweet spot
     * moved 16 → ~32 at sf1 (1.5× wall win: wider bins cut the interval
@@ -137,26 +132,17 @@ object Intervals {
     * must hug the gate corpus), so every gated SF derives the former
     * constant (plan byte-identical, proven in plans/r17) and each scaled
     * decade doubles it. Geometry is result-invariant (both sides read the
-    * same bin map) — only task shape moves. An explicitly-set conf always
-    * wins; the cap (×16) bounds the widest auto bin at 256 days. */
+    * same bin map) — only task shape moves. The cap (×16) bounds the
+    * widest bin at 256 days. */
   private val BinDaysAutoAnchorBytes = 4L << 20
 
-  private def binDays(spark: SparkSession, gate: DataFrame): Int =
-    spark.conf.getOption(BinDaysConf) match {
-      case Some(v) =>
-        val b = v.toInt
-        require(b > 0, s"$BinDaysConf must be positive, got $b"); b
-      case None =>
-        val bytes = graft.plans.ScaleGate.bytes(gate)
-        val decades =
-          if (bytes <= BinDaysAutoAnchorBytes) 0
-          else math.min(4, math.ceil(math.log10(
-            bytes.toDouble / BinDaysAutoAnchorBytes)).toInt)
-        DefaultBinDays << decades
-    }
-  private def saltBuckets(spark: SparkSession): Int = {
-    val s = spark.conf.get(SaltBucketsConf, DefaultSaltBuckets.toString).toInt
-    require(s > 0, s"$SaltBucketsConf must be positive, got $s"); s
+  private def binDays(gate: DataFrame): Int = {
+    val bytes = graft.plans.ScaleGate.bytes(gate)
+    val decades =
+      if (bytes <= BinDaysAutoAnchorBytes) 0
+      else math.min(4, math.ceil(math.log10(
+        bytes.toDouble / BinDaysAutoAnchorBytes)).toInt)
+    BaseBinDays << decades
   }
 
   /** Hot bins of the REPLICATING side: (bin, subSalts) for every bin whose
@@ -207,11 +193,15 @@ object Intervals {
 
   /** q48 core, input-parameterized (RangeHotBinSpec feeds synthetic,
     * skewed orders frames). */
-  private[graft] def rangeJoinFromOrders(orders: DataFrame): DataFrame = {
+  private[graft] def rangeJoinFromOrders(orders: DataFrame): DataFrame =
+    rangeJoinFromOrders(orders, binDays(orders), SaltBuckets)
+
+  /** q48 core at an explicit bin width `B` and salt count `S`
+    * (RangeHotBinSpec checks the rows do not depend on them). */
+  private[graft] def rangeJoinFromOrders(orders: DataFrame,
+      B: Int, S: Int): DataFrame = {
     val spark = orders.sparkSession
     import spark.implicits._
-    val B = binDays(spark, orders)
-    val S = saltBuckets(spark)
     val iv = orders.select(
       $"o_orderkey".as("ikey"),
       unix_date(to_date($"o_orderdate")).cast("long").as("sd"),
@@ -366,8 +356,8 @@ object Intervals {
       lineitem: DataFrame): DataFrame = {
     val spark = orders.sparkSession
     import spark.implicits._
-    val B = binDays(spark, orders)
-    val S = saltBuckets(spark)
+    val B = binDays(orders)
+    val S = SaltBuckets
     val ow = orders
       .filter(pmod($"o_orderkey", lit(RangeProbeMod)) === 0)
       .select($"o_orderkey",

@@ -27,20 +27,16 @@ object Similarity {
     * that more planes costs). Both are parameters of [[lshTopKParam]];
     * these defaults suit the sf corpora.
     *
-    * SESSION CONFS (round-15, the graphCells discipline): the sf100
-    * rehearsal PROVED the ceiling the scaladoc predicted — at 2M vectors
-    * the default 2^8 buckets put ~7.8k vectors in each, the candidate
-    * pair stream hit ~3×10^8 rows carrying two 64-dim arrays each, and
-    * the entry died spilling (the s07 label-cell failure shape, one
-    * family over). Candidates per query ≈ tables · N/2^planes, so planes
-    * must grow ~log₂(N) to hold per-bucket population: 12 planes at 2M
-    * vectors ran 51 s where 8 planes ENOSPC'd (PERF.md round-15 sf100
-    * table). The oracle gates run WITHOUT the confs (defaults), so the
-    * gated geometry is unchanged; scaled rehearsals retune at runtime. */
+    * The sf100 rehearsal (round 15) PROVED the ceiling the scaladoc
+    * predicted — at 2M vectors the default 2^8 buckets put ~7.8k vectors
+    * in each, the candidate pair stream hit ~3×10^8 rows carrying two
+    * 64-dim arrays each, and the entry died spilling (the s07 label-cell
+    * failure shape, one family over). Candidates per query ≈
+    * tables · N/2^planes, so planes must grow ~log₂(N) to hold
+    * per-bucket population: 12 planes at 2M vectors ran 51 s where 8
+    * planes ENOSPC'd (PERF.md round-15 sf100 table). */
   val NumPlanes = 8
   val LshTables = 2
-  val LshPlanesConf = "spark.graft.ann.lshPlanes"
-  val LshTablesConf = "spark.graft.ann.lshTables"
 
   /** Serving-path contract: the PQ/index topK entry points collect the
     * QUERY batch to the driver (the per-query LUT build wants the batch
@@ -395,9 +391,7 @@ object Similarity {
   }
 
   def lshTopK(spark: SparkSession, dir: String): DataFrame =
-    lshTopKParam(spark, dir,
-      spark.conf.get(LshPlanesConf, NumPlanes.toString).toInt,
-      spark.conf.get(LshTablesConf, LshTables.toString).toInt)
+    lshTopKParam(spark, dir, NumPlanes, LshTables)
 
   /** DuckDB twin of [[lshTopKParam]]: the planes are a deterministic
     * function of (global plane index, dimension), and the sign test runs
@@ -458,19 +452,8 @@ object Similarity {
     * rows-only in the driver; recall vs s01 asserted in tests. */
   val IvfCells = 10
   val IvfProbe = 4
-  /** Session confs for the trained-IVF geometry (the graphCells/range
-    * knob discipline): the scaled rehearsals retune k ∝ √N at runtime
-    * while the gated default geometry stays fixed. */
-  val IvfCellsConf = "spark.graft.ann.ivfCells"
-  val IvfProbeConf = "spark.graft.ann.ivfProbe"
 
-  def ivfTrainedTopK(spark: SparkSession, dir: String): DataFrame =
-    ivfTrainedTopK(spark, dir,
-      spark.conf.get(IvfCellsConf, IvfCells.toString).toInt,
-      spark.conf.get(IvfProbeConf, IvfProbe.toString).toInt)
-
-  def ivfTrainedTopK(spark: SparkSession, dir: String,
-      k: Int, nProbe: Int): DataFrame = {
+  def ivfTrainedTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.ml.functions.array_to_vector
     // cache the SHARED vecs plan (one CacheManager entry with s03/s05/
@@ -481,7 +464,7 @@ object Similarity {
       .withColumn("features", array_to_vector($"v"))
     // One quantizer per (session, dir, k): shared with ml03 and memoized,
     // so a session running both pays a single KMeans fit.
-    val model = graft.ml.Features.fittedKmeans(spark, dir, k)
+    val model = graft.ml.Features.fittedKmeans(spark, dir, IvfCells)
     val assigned = model.transform(e)
       .select($"vec_id", $"v", $"norm", $"prediction".as("cell"))
     // ||c||² precomputed ONCE per centroid on the driver (k values) —
@@ -509,7 +492,7 @@ object Similarity {
       .withColumn("score", $"cnorm2" -
         lit(2.0) * graft.functions.catalyst.GraftColumns.dot_f64($"vq", $"cv"))
       .groupBy($"query_id")
-      .agg(tk(-$"score", $"cell".cast("long"), nProbe).as("cells"))
+      .agg(tk(-$"score", $"cell".cast("long"), IvfProbe).as("cells"))
       .select($"query_id", explode($"cells.id").as("lbl"))
       .select($"query_id", $"lbl".cast("int").as("cell"))
     val members = assigned
@@ -950,12 +933,12 @@ object Similarity {
   // --------------------------------------------------------------- s07b
   /** s07b: the corpus-wide k-NN graph over TRAINED cells — s07's shape
     * with the label cells replaced by the s04 KMeans coarse quantizer, so
-    * the cell COUNT is a parameter (k ∝ √N) instead of a property of the
-    * data. This is the 100-TB member of the family (PERF.md round-14 sf10
-    * rehearsal): per-cell membership is N/k, candidate volume
-    * |q|·probes·N/k ∝ N^1.5 under k ∝ √N, and the partial top-k
-    * aggregate's per-task group count (queries probing one cell ≈
-    * |q|·probes/k) stays inside the hash path that s07's fixed label
+    * the cell COUNT is a constant sized k ∝ √N ([[TrainedGraphCells]])
+    * instead of a property of the data. This is the 100-TB member of the
+    * family (PERF.md round-14 sf10 rehearsal): per-cell membership is
+    * N/k, candidate volume |q|·probes·N/k ∝ N^1.5 under k ∝ √N, and the
+    * partial top-k aggregate's per-task group count (queries probing one
+    * cell ≈ |q|·probes/k) stays inside the hash path that s07's fixed label
     * cells overflow at 100×. Heap-first throughout — the probe ranking
     * and the final top-k both run the k-bounded aggregate, never a rank
     * window over a corpus-scale stream — and the query vectors attach
@@ -963,23 +946,16 @@ object Similarity {
     * born next to their partial heap and never materialize. Approximate
     * by construction (trained centroids) → rows-only in the driver;
     * recall vs brute force and mutual-flag symmetry are spec-asserted. */
-  /** Default trained-cell count, overridable per session (the range-join
-    * knob discipline): size k ∝ √N as the corpus grows — sizing recipe in
-    * SURVEY §5 "Sizing a real deployment". */
+  /** Trained-cell count: size k ∝ √N as the corpus grows — sizing
+    * recipe in SURVEY §5 "Sizing a real deployment". */
   val TrainedGraphCells = 16
-  val GraphCellsConf = "spark.graft.ann.graphCells"
 
-  def knnGraphTrained(spark: SparkSession, dir: String): DataFrame =
-    knnGraphTrained(spark, dir,
-      spark.conf.get(GraphCellsConf, TrainedGraphCells.toString).toInt)
-
-  def knnGraphTrained(spark: SparkSession, dir: String,
-      k: Int, nProbe: Int = IvfProbe): DataFrame = {
+  def knnGraphTrained(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.ml.functions.array_to_vector
     val e = graft.GraftSession.maybeCache(vecs(spark, dir))
       .withColumn("features", array_to_vector($"v"))
-    val model = graft.ml.Features.fittedKmeans(spark, dir, k)
+    val model = graft.ml.Features.fittedKmeans(spark, dir, TrainedGraphCells)
     val assigned = graft.GraftSession.maybeCache(
       model.transform(e).select($"vec_id", $"v", $"norm", $"prediction".as("cell")))
     // ||c||² precomputed ONCE per centroid on the driver (k values):
@@ -992,14 +968,14 @@ object Similarity {
       .toDF("ccell", "cv", "cnorm2") // "ccell": `assigned` carries "cell"
     val tk = graft.functions.catalyst.GraftColumns.topk_by _
     // probe ranking by L2 (||c||² − 2·q·c; the ||q||² term is constant
-    // per query) through the nProbe-bounded heap — negated because the
+    // per query) through the IvfProbe-bounded heap — negated because the
     // heap keeps the LARGEST scores and smaller L2 is better
     val probes = assigned
       .crossJoin(broadcast(centDf))
       .withColumn("score", $"cnorm2" -
         lit(2.0) * graft.functions.catalyst.GraftColumns.dot_f64($"v", $"cv"))
       .groupBy($"vec_id")
-      .agg(tk(-$"score", $"ccell".cast("long"), nProbe).as("cells"))
+      .agg(tk(-$"score", $"ccell".cast("long"), IvfProbe).as("cells"))
       .select($"vec_id".as("query_id"), explode($"cells.id").as("pcell"))
       .select($"query_id", $"pcell".cast("int").as("cell"))
     val q = assigned.select($"vec_id".as("query_id"), $"v".as("vq"), $"norm".as("nq"))

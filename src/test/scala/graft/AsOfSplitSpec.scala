@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -190,36 +187,6 @@ class AsOfSplitSpec extends AnyFunSuite {
     }
   }
 
-  /** Spark jobs `body` launches, counted by a [[Telemetry.RunListener]].
-    * The listener bus delivers events in order, so once the end of a
-    * one-job fence run after `body` arrives, every earlier job's has. */
-  private def jobsLaunchedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val FenceProp = "graft.test.fence"
-    val runs = new Telemetry.RunListener
-    val fenced = new CountDownLatch(1)
-    val fence = new SparkListener {
-      @volatile private var fenceJob = -1
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(FenceProp) != null)
-          fenceJob = e.jobId
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == fenceJob) fenced.countDown()
-    }
-    sc.addSparkListener(runs)
-    sc.addSparkListener(fence)
-    try {
-      body
-      sc.setLocalProperty(FenceProp, "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(FenceProp, null)
-      assert(fenced.await(60, TimeUnit.SECONDS), "fence job end never arrived")
-      runs.jobs.get() - 1
-    } finally {
-      sc.removeSparkListener(fence)
-      sc.removeSparkListener(runs)
-    }
-  }
-
   test("shared detector: an armed join detects once per input plan, each input gets its own") {
     val on = Seq("user_id" -> "v_user_id")
     // same schema as `views`, distinct data per shift; equal shifts build
@@ -238,9 +205,9 @@ class AsOfSplitSpec extends AnyFunSuite {
       spark.conf.set(AsOf.SplitHotKeyRowsConf, HotRows.toString)
       var splitA: DataFrame = null
       var splitB: DataFrame = null
-      val detectA = jobsLaunchedBy { splitA = build(viewsShifted(7L)) }
-      val rebuildA = jobsLaunchedBy { build(viewsShifted(7L)): Unit }
-      val detectB = jobsLaunchedBy { splitB = build(viewsShifted(30011L)) }
+      val detectA = JobRecorder.jobsOf(spark) { splitA = build(viewsShifted(7L)) }.size
+      val rebuildA = JobRecorder.jobsOf(spark)(build(viewsShifted(7L))).size
+      val detectB = JobRecorder.jobsOf(spark) { splitB = build(viewsShifted(30011L)) }.size
       assert(detectA > 0, "the armed join must detect at construction")
       assert(rebuildA == 0, s"rebuilding the same armed join re-ran detection ($rebuildA jobs)")
       assert(detectB > 0, "a different input with the same schema reused another input's detection")

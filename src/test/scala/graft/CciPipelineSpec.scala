@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -253,31 +251,16 @@ class CciPipelineSpec extends AnyFunSuite {
     // every table schema comes from a parquet footer read on the driver
     // (Tables.parquetSchema), so a refresh over a fresh input launches
     // its first job only at an action. Jobs are told apart by the job
-    // group of the constructing thread; a fence job after it flushes the
-    // in-order listener bus.
-    val (group, fence) = ("graft.test.construct", "graft.test.fence")
-    val jobs = new ConcurrentLinkedQueue[String]()
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == group) jobs.add(e.stageInfos.map(_.name).mkString(", "))
-        else if (g == fence) fenced.countDown()
-      }
-    }
+    // group of the constructing thread.
+    val group = "graft.test.construct"
     val (sc, dir) = (spark.sparkContext, copyOfEvents())
-    sc.addSparkListener(listener)
-    try {
+    val jobs = try JobRecorder.jobsOf(spark) {
       sc.setJobGroup(group, "construct the refresh")
       try refreshFrames(dir) finally sc.clearJobGroup()
-      sc.setJobGroup(fence, "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(fenced.await(60, TimeUnit.SECONDS), "fence job start never arrived")
-    } finally {
-      sc.removeSparkListener(listener)
-      CciPipeline.dropChainCaches(spark, dir)
-    }
-    assert(jobs.isEmpty, s"construction ran ${jobs.size} job(s): ${jobs.toArray.mkString("; ")}")
+    }.filter(_.property("spark.jobGroup.id").contains(group))
+      .map(_.stageNames.mkString(", "))
+    finally CciPipeline.dropChainCaches(spark, dir)
+    assert(jobs.isEmpty, s"construction ran ${jobs.size} job(s): ${jobs.mkString("; ")}")
   }
 
   test("dropChainCaches: the cache-entry count returns to its baseline, best-of rows included") {

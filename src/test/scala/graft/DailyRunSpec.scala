@@ -1,12 +1,8 @@
 package graft
 
 import java.time.LocalDate
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -182,51 +178,29 @@ class DailyRunSpec extends AnyFunSuite {
     val ws = newWs()
     Daily.bootstrap(spark, conn, ws, java.sql.Date.valueOf(day.minusDays(1)))
     Daily.writeConditions(spark, sf, ws)
-    val sc = spark.sparkContext
     val sessionParts = spark.conf.get(partsKey)
     assert(spark.conf.get(aqeKey) == "true")
-    // the listener bus delivers events in order: once a fence job run
-    // after the day starts, every job of the day has been seen
-    val FenceProp = "graft.test.fence"
-    val fenced = new CountDownLatch(1)
-    val seen = new ConcurrentLinkedQueue[(Int, Int, Option[(String, String)])]()
-    val callSites = new ConcurrentLinkedQueue[String]() // of jobs outside queries
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = Option(e.properties).getOrElse(new java.util.Properties)
-        if (p.getProperty(FenceProp) != null) fenced.countDown()
-        else {
-          seen.add((e.jobId, e.stageInfos.size,
-            Option(p.getProperty("spark.sql.execution.id"))
-              .map(_ => (p.getProperty(aqeKey), p.getProperty(partsKey)))))
-          // a schema inference runs outside any query; the workspace
-          // writes share its `parquet at` call site but are queries
-          if (p.getProperty("spark.sql.execution.id") == null)
-            e.stageInfos.foreach(st => callSites.add(st.name))
-        }
-      }
-    }
     spark.conf.set(partsKey, "7")
-    sc.addSparkListener(listener)
-    try {
+    val jobs = try JobRecorder.jobsOf(spark) {
       // with orders, so the day also reads the conditions table
       Daily.runDay(spark, conn, ws, java.sql.Date.valueOf(day), withOrders = true)
       assert(spark.conf.get(aqeKey) == "true", "AQE not restored after the day")
       assert(spark.conf.get(partsKey) == "7", "shuffle partitions not restored after the day")
-      sc.setLocalProperty(FenceProp, "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(FenceProp, null)
-      assert(fenced.await(60, TimeUnit.SECONDS), "fence job start never arrived")
-    } finally {
-      sc.removeSparkListener(listener)
-      spark.conf.set(partsKey, sessionParts)
-    }
-    val (queries, others) = seen.asScala.toSeq.partition(_._3.nonEmpty)
+    } finally spark.conf.set(partsKey, sessionParts)
+    val seen = jobs.map(j => (j.id, j.stageNames.size,
+      j.property("spark.sql.execution.id")
+        .map(_ => (j.properties.getProperty(aqeKey), j.properties.getProperty(partsKey)))))
+    // a schema inference runs outside any query; the workspace writes
+    // share its `parquet at` call site but are queries
+    val callSites = jobs.filter(_.property("spark.sql.execution.id").isEmpty)
+      .flatMap(_.stageNames)
+    val (queries, others) = seen.partition(_._3.nonEmpty)
     assert(queries.nonEmpty, "the day ran no query")
     val off = queries.filterNot(_._3.contains(("false", "4")))
     assert(off.isEmpty, s"${off.size} of ${queries.size} query jobs ran outside the gate " +
       s"(job, stages, (AQE, partitions)): ${off.take(5).mkString(", ")}")
     assert(others.forall(_._2 == 1), s"a job outside any query shuffles: $others")
-    val inferred = callSites.asScala.filter(_.startsWith("parquet at "))
+    val inferred = callSites.filter(_.startsWith("parquet at "))
     assert(inferred.isEmpty, s"parquet reads inferred their schema in a job: $inferred")
   }
 

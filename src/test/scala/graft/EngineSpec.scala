@@ -59,6 +59,16 @@ class EngineSpec extends AnyFunSuite {
     } finally df.unpersist(true)
   }
 
+  test("the SQL status store keeps at most one finished execution") {
+    // GraftSession.plainBuilder sets spark.sql.ui.retainedExecutions=1;
+    // the store trims its finished executions asynchronously, so wait
+    (1 to 20).foreach(i => spark.range(i).count())
+    val store = spark.sharedState.statusStore
+    val deadline = System.nanoTime() + 10000000000L
+    while (store.executionsCount() > 1 && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(store.executionsCount() <= 1)
+  }
+
   test("maybeEagerCheckpoint returns a LogicalRDD-backed frame with the input's rows") {
     val df = spark.range(0, 509).selectExpr("id", "id * 3 AS v")
     val cp = GraftSession.maybeEagerCheckpoint(df)

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Intervals
 import graft.plans.ScaleGate
 
-/** The interval family's runtime geometry (VERDICT r12 task 1): bin width
-  * and salt fan-out are session confs, and a HOT BIN — one day's interval
+/** The interval family's geometry (VERDICT r12 task 1): bin width and
+  * salt fan-out never change the rows, and a HOT BIN — one day's interval
   * count crossing the threshold — sub-salts its replicating side so the
   * per-task pair volume is bounded by the knobs instead of being capped at
   * bins×salts. The gate that matters is EXACT equality against the
@@ -39,8 +39,7 @@ class RangeHotBinSpec extends AnyFunSuite {
       (i / 4, (i % 4 + 1).toInt, i % 40, 10.0 + (i % 31).toDouble, d)
     }.toDF("l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice", "l_shipdate")
 
-  private val geomKeys = Seq(Intervals.BinDaysConf, Intervals.SaltBucketsConf,
-    Intervals.HotBinRowsConf, ScaleGate.ForceConf)
+  private val geomKeys = Seq(Intervals.HotBinRowsConf, ScaleGate.ForceConf)
 
   private def withConf(pairs: (String, String)*)(fn: => Unit): Unit = {
     val saved = geomKeys.map(k => k -> spark.conf.getOption(k))
@@ -148,24 +147,12 @@ class RangeHotBinSpec extends AnyFunSuite {
     }
   }
 
-  test("bin/salt geometry is runtime-tunable and result-invariant") {
+  test("bin/salt geometry is result-invariant") {
     val orders = skewedOrders
-    var base: Seq[org.apache.spark.sql.Row] = null
-    withConf() { base = rows(Intervals.rangeJoinFromOrders(orders)) }
+    val base = rows(Intervals.rangeJoinFromOrders(orders))
     // a different geometry must change the plan's fan-out, never the rows
-    withConf(Intervals.BinDaysConf -> "4", Intervals.SaltBucketsConf -> "3") {
-      val alt = rows(Intervals.rangeJoinFromOrders(orders))
-      assert(base == alt)
-    }
-    withConf(Intervals.BinDaysConf -> "64", Intervals.SaltBucketsConf -> "1") {
-      assert(base == rows(Intervals.rangeJoinFromOrders(orders)))
-    }
-    // invalid knobs fail loudly at construction, not mid-job
-    withConf(Intervals.BinDaysConf -> "0") {
-      val e = intercept[IllegalArgumentException](
-        Intervals.rangeJoinFromOrders(orders))
-      assert(e.getMessage.contains(Intervals.BinDaysConf))
-    }
+    assert(base == rows(Intervals.rangeJoinFromOrders(orders, 4, 3)))
+    assert(base == rows(Intervals.rangeJoinFromOrders(orders, 64, 1)))
   }
 
   test("sub-salt fan-out is bounded: subI = ceil(count/hotRows), capped") {

@@ -299,7 +299,6 @@ class ZoneMapIntervalSpec extends AnyFunSuite {
   }
 
   test("r40/r46: a FRESH session plans the pruned read with ZERO Spark jobs") {
-    import java.util.concurrent.atomic.AtomicInteger
     // the layouts exist (memoized builds); drop the memo to simulate a
     // cold session over existing layouts: building the index-backed
     // tables (schema and zones from footers) and planning r40, r46/r47
@@ -307,15 +306,7 @@ class ZoneMapIntervalSpec extends AnyFunSuite {
     val built = Seq(ZM.zonemapLayout(spark, sf), ZM.zorderLayout(spark, sf),
       ZM.tsLayout(spark, sf))
     built.foreach(l => ZM.layouts.remove(l.path))
-    val jobs = new AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = JobRecorder.jobsOf(spark) {
       val tsWindow = ZM.eventsTsTable(spark, sf).filter(
         col("ts") >= lit(operators.CciPipeline.ChartFrom).cast("timestamp") &&
           col("ts") < lit(operators.CciPipeline.ChartUntil).cast("timestamp"))
@@ -324,12 +315,10 @@ class ZoneMapIntervalSpec extends AnyFunSuite {
         val (files, total) = listing(q)
         assert(files.nonEmpty && files.length < total, s"listed ${files.length}/$total")
       }
-      // listener bus is async: give any stray job event time to land
-      Thread.sleep(500)
-      assert(jobs.get() == 0,
-        s"cold zone-map planning ran ${jobs.get()} Spark job(s) — " +
-          "metadata must come from footers, never a scan or a schema inference")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.isEmpty,
+      s"cold zone-map planning ran ${jobs.size} Spark job(s) — " +
+        "metadata must come from footers, never a scan or a schema inference")
   }
 
   test("r47: the planner-integrated index prunes in listFiles with PushedFilters intact") {
