@@ -67,6 +67,13 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       // static: read once, when the first session in the JVM compiles
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // a whole-stage pipeline's class is named after its codegen stage
+      // id, and AQE numbers stages in the order it creates them, which
+      // follows the order earlier stages finish in. Named so, the same
+      // pipeline under another id misses the codegen cache and compiles
+      // again: a warm grid refresh compiled 4 classes when one broadcast
+      // stage was created a step later than in the cold refresh.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // static: the SQL status store keeps each execution's UI data (plan
       // graph, metrics) on the heap even with the UI off, up to this many
       // executions (default 1000), and nothing in graft reads it. A long

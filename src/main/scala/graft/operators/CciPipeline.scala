@@ -685,14 +685,6 @@ object CciPipeline {
       // (plan-canonicalized) so one materialization serves every caller.
       .transform(graft.GraftSession.maybeCache(_))
 
-  /** The r06 chain (CCI → signals → grid outcomes) over ANY OHLC bars
-    * frame. Same operators as [[trades]], minus the parquet-source
-    * coupling; CciPipelineSpec pins it equal to r06 row for row. The
-    * bounded futures join (fan-out ≤ maxHolding rows per signal) grew
-    * linearly in series count on replicated bars (PERF.md round 7). */
-  def tradesFromBars(bars: DataFrame, cfg: GridConfig): DataFrame =
-    tradeChain(graft.GraftSession.maybeCache(cciFromBars(bars, cfg)), cfg)
-
   /** CCI → crossover signals → the condition grid's outcomes. */
   private def tradeChain(c: DataFrame, cfg: GridConfig): DataFrame = {
     import c.sparkSession.implicits._

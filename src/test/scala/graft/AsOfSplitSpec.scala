@@ -205,9 +205,9 @@ class AsOfSplitSpec extends AnyFunSuite {
       spark.conf.set(AsOf.SplitHotKeyRowsConf, HotRows.toString)
       var splitA: DataFrame = null
       var splitB: DataFrame = null
-      val detectA = JobRecorder.jobsOf(spark) { splitA = build(viewsShifted(7L)) }.size
-      val rebuildA = JobRecorder.jobsOf(spark)(build(viewsShifted(7L))).size
-      val detectB = JobRecorder.jobsOf(spark) { splitB = build(viewsShifted(30011L)) }.size
+      val detectA = Telemetry.record(spark) { splitA = build(viewsShifted(7L)) }.jobs.size
+      val rebuildA = Telemetry.record(spark)(build(viewsShifted(7L))).jobs.size
+      val detectB = Telemetry.record(spark) { splitB = build(viewsShifted(30011L)) }.jobs.size
       assert(detectA > 0, "the armed join must detect at construction")
       assert(rebuildA == 0, s"rebuilding the same armed join re-ran detection ($rebuildA jobs)")
       assert(detectB > 0, "a different input with the same schema reused another input's detection")

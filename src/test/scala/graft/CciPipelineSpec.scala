@@ -130,14 +130,6 @@ class CciPipelineSpec extends AnyFunSuite {
     assert(all.exceptAll(r06).count() == 0 && r06.exceptAll(all).count() == 0)
   }
 
-  test("r06 from bars: the bars-driven chain equals the gated r06 row-for-row") {
-    val fromBars = CciPipeline.tradesFromBars(
-      CciPipeline.ohlcBars(spark, sf), CciPipeline.GridConfig())
-    val r06 = CciPipeline.trades(spark, sf).select(fromBars.columns.map(col): _*)
-    assert(fromBars.count() > 0)
-    assert(fromBars.exceptAll(r06).count() == 0 && r06.exceptAll(fromBars).count() == 0)
-  }
-
   test("r21: watermark fetch plan covers exactly the unsaved suffix; new keys get the full-history default") {
     import spark.implicits._
     val wm = CciPipeline.fetchWatermark(spark, sf).cache()
@@ -254,10 +246,10 @@ class CciPipelineSpec extends AnyFunSuite {
     // group of the constructing thread.
     val group = "graft.test.construct"
     val (sc, dir) = (spark.sparkContext, copyOfEvents())
-    val jobs = try JobRecorder.jobsOf(spark) {
+    val jobs = try Telemetry.record(spark) {
       sc.setJobGroup(group, "construct the refresh")
       try refreshFrames(dir) finally sc.clearJobGroup()
-    }.filter(_.property("spark.jobGroup.id").contains(group))
+    }.jobs.filter(_.property("spark.jobGroup.id").contains(group))
       .map(_.stageNames.mkString(", "))
     finally CciPipeline.dropChainCaches(spark, dir)
     assert(jobs.isEmpty, s"construction ran ${jobs.size} job(s): ${jobs.mkString("; ")}")
@@ -274,21 +266,59 @@ class CciPipelineSpec extends AnyFunSuite {
     assert(entries == before)
   }
 
+  /** A cold and then a warm strategy refresh, each over its own fresh
+    * copy of the input: per output, the final executed plan of the cold
+    * and of the warm refresh, with the input directory blanked and
+    * expression, exchange, query-stage and codegen-stage ids renumbered
+    * in order of first use (AQE numbers its stages in the order it
+    * creates them, which follows the order earlier stages finish in).
+    * `warm` runs between the two refreshes. Each output is collected, so
+    * that its own QueryExecution runs and then holds its final adaptive
+    * plan. */
+  private def coldAndWarmPlans(warm: => Unit = ()): Seq[(String, String, String)] = {
+    val names = Seq("bestOf", "recommendations", "candidateFilter")
+    def refresh(dir: String): Seq[String] = {
+      val plans = refreshFrames(dir).map { df =>
+        df.collect()
+        val ids = scala.collection.mutable.Map[String, Int]()
+        "(#|plan_id=|QueryStage |\\*\\()(\\d+)".r.replaceAllIn(
+          df.queryExecution.executedPlan.toString.replace(dir, "<dir>"),
+          m => m.group(1) + ids.getOrElseUpdate(m.matched, ids.size))
+      }
+      CciPipeline.dropChainCaches(spark, dir)
+      plans
+    }
+    val (cold, warmDir) = (refresh(copyOfEvents()), copyOfEvents())
+    warm
+    names.lazyZip(cold).lazyZip(refresh(warmDir)).toSeq
+  }
+
+  /** The outputs whose two plans differ, each with its first differing
+    * line in both. */
+  private def planDiffs(plans: Seq[(String, String, String)]): Seq[String] =
+    plans.collect { case (name, c, w) if c != w =>
+      val (cl, wl) = c.linesIterator.zipAll(w.linesIterator, "", "").find(p => p._1 != p._2).get
+      s"$name: cold `$cl`, warm `$wl`"
+    }
+
+  test("grid refresh: a warm refresh over a fresh copy of the input runs the cold refresh's final plans") {
+    val diffs = planDiffs(coldAndWarmPlans())
+    assert(diffs.isEmpty, diffs.mkString("\n"))
+  }
+
   test("grid refresh: a warm refresh over a fresh copy of the input compiles no class") {
     // Spark's codegen cache (GraftSession.CodegenCacheEntries) keeps every
     // class a cold refresh compiled, so a second refresh over the same
     // events in a new directory finds them all: the perfbench grid shape
-    def refresh(dir: String): Unit = {
-      refreshFrames(dir).foreach(_.write.format("noop").mode("overwrite").save())
-      CciPipeline.dropChainCaches(spark, dir)
+    var (ns, compiles) = (0L, 0L)
+    val plans = coldAndWarmPlans {
+      ns = CodeGenerator.compileTime
+      compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     }
-    val (cold, warm) = (copyOfEvents(), copyOfEvents())
-    refresh(cold)
-    val (ns, compiles) = (CodeGenerator.compileTime,
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
-    refresh(warm)
+    val diffs = planDiffs(plans)
     assert(CodeGenerator.compileTime == ns,
       s"the warm refresh compiled ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles} " +
-        f"classes in ${(CodeGenerator.compileTime - ns) / 1e6}%.1f ms")
+        f"classes in ${(CodeGenerator.compileTime - ns) / 1e6}%.1f ms; final plans that " +
+        "differ from the cold refresh's: " + (if (diffs.isEmpty) "none" else diffs.mkString("; ")))
   }
 }

@@ -181,12 +181,12 @@ class DailyRunSpec extends AnyFunSuite {
     val sessionParts = spark.conf.get(partsKey)
     assert(spark.conf.get(aqeKey) == "true")
     spark.conf.set(partsKey, "7")
-    val jobs = try JobRecorder.jobsOf(spark) {
+    val jobs = try Telemetry.record(spark) {
       // with orders, so the day also reads the conditions table
       Daily.runDay(spark, conn, ws, java.sql.Date.valueOf(day), withOrders = true)
       assert(spark.conf.get(aqeKey) == "true", "AQE not restored after the day")
       assert(spark.conf.get(partsKey) == "7", "shuffle partitions not restored after the day")
-    } finally spark.conf.set(partsKey, sessionParts)
+    }.jobs finally spark.conf.set(partsKey, sessionParts)
     val seen = jobs.map(j => (j.id, j.stageNames.size,
       j.property("spark.sql.execution.id")
         .map(_ => (j.properties.getProperty(aqeKey), j.properties.getProperty(partsKey)))))

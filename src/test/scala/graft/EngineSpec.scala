@@ -20,28 +20,6 @@ class EngineSpec extends AnyFunSuite {
       .head().getString(0) == "hllo world")
   }
 
-  test("bucketed join plans without a shuffle exchange and matches plain join") {
-    val bucketed = operators.Bucketing.bucketedJoin(spark, sf).collect()
-    assert(operators.Bucketing.joinIsExchangeFree(spark),
-      "bucketed join should not need an exchange")
-    val li = sources.Tables.lineitem(spark, sf)
-    val o = sources.Tables.orders(spark, sf)
-    val plain = li.join(o, li("l_orderkey") === o("o_orderkey"))
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"),
-        (sum(floor(col("l_extendedprice") * 100.0 + 0.5).cast("long")).cast("double") / 100.0).as("total_price"))
-      .orderBy("o_orderstatus").collect()
-    assert(bucketed.map(_.toString).sameElements(plain.map(_.toString)))
-  }
-
-  test("salted join equals plain join") {
-    val li = sources.Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
-    val o = sources.Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
-    val plain = li.join(o, li("l_orderkey") === o("o_orderkey")).count()
-    val salted = operators.Skew.saltedJoin(li, o, "l_orderkey", "o_orderkey", 8).count()
-    assert(plain == salted)
-  }
-
   test("maybeCache persists at MEMORY_AND_DISK_SER; a second call changes nothing") {
     import org.apache.spark.storage.StorageLevel
     def entries = org.apache.spark.sql.execution.CacheEntries.count(spark)
@@ -57,6 +35,19 @@ class EngineSpec extends AnyFunSuite {
         assert(entries == before + 1)
       }
     } finally df.unpersist(true)
+  }
+
+  test("a whole-stage pipeline compiles once, whatever its codegen stage id") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    // Union is not whole-stage codegen'd, so each of its two identical
+    // children is a pipeline of its own, stages 1 and 2; stage 2 finds
+    // the class stage 1 compiled only if the class name leaves the id out
+    val p = spark.range(0, 1009).selectExpr("id * 7 + 3 AS x").filter("x % 5 = 1")
+    p.collect()
+    val ns = CodeGenerator.compileTime
+    val both = p.union(p)
+    both.collect()
+    assert(CodeGenerator.compileTime == ns, both.queryExecution.executedPlan.toString)
   }
 
   test("the SQL status store keeps at most one finished execution") {

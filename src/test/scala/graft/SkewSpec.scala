@@ -1,32 +1,41 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-
-import graft.operators.Skew
 
 class SkewSpec extends AnyFunSuite {
   import TestSpark._
 
-  test("salted join equals the plain join on a skewed key distribution") {
+  /** Deterministic OHLC bars with Zipf-length series: per-series bar
+    * counts follow 1/r (driver-computed — S values, planner-scale), rows
+    * come off `spark.range` joined to the broadcast (series, lo, hi)
+    * offset table, dates are contiguous from 2000-01-01 per series, and
+    * prices are hash-derived. The reference's per-symbol fan-out shape
+    * (daily_function.py:905) at production skew. */
+  private def zipfBars(spark: SparkSession, totalRows: Long, series: Int): DataFrame = {
     import spark.implicits._
-    val salts = 8
-    // 90% of the left rows pile on key 0 — the hot-key shape that stalls
-    // one reducer at scale.
-    val left = spark.range(0, 20000)
-      .select($"id", when($"id" % 10 === 0, $"id" % 37).otherwise(lit(0L)).as("k"))
-    val right = (0L until 37L).map(k => (k, s"dim_$k")).toDF("rk", "payload")
-    val plain = left.join(right, left("k") === right("rk"))
-      .select($"id", $"k", $"payload")
-    val salted = Skew.saltedJoin(left, right, "k", "rk", salts)
-      .select($"id", $"k", $"payload")
-    assert(salted.count() == plain.count())
-    assert(salted.exceptAll(plain).count() == 0 && plain.exceptAll(salted).count() == 0)
+    val weights = (1 to series).map(r => 1.0 / r)
+    val z = weights.sum
+    val counts = weights.map(w => math.max(30L, math.round(totalRows * w / z)))
+    val bounds = counts.zipWithIndex
+      .scanLeft((0L, 0L, 0L)) { case ((_, _, hi), (c, i)) => (i.toLong, hi, hi + c) }
+      .drop(1)
+    val boundsDf = bounds.toDF("series", "lo", "hi")
+    val price = (pmod(xxhash64($"id", lit("px")), lit(10000L)).cast("double") + 10000.0) / 100.0
+    spark.range(bounds.last._3)
+      .join(broadcast(boundsDf), $"id" >= $"lo" && $"id" < $"hi")
+      .select($"series".as("user_id"), ($"id" - $"lo").cast("int").as("i"),
+        price.as("close_pr"))
+      .select($"user_id",
+        date_add(lit(java.sql.Date.valueOf("2000-01-01")), $"i").as("d"),
+        $"close_pr".as("open_pr"), ($"close_pr" + 1.0).as("high_pr"),
+        ($"close_pr" - 1.0).as("low_pr"), $"close_pr", lit(1L).as("volume"))
   }
 
   test("zipfBars: Zipf series lengths, contiguous dates, chunked CCI equals window CCI") {
     import spark.implicits._
-    val bars = Skew.zipfBars(spark, 20000L, 20).cache()
+    val bars = zipfBars(spark, 20000L, 20).cache()
     val counts = bars.groupBy($"user_id").count().collect()
       .map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("count")).toMap
     assert(counts.size == 20)
@@ -48,17 +57,5 @@ class SkewSpec extends AnyFunSuite {
     assert(w.length == c.length && w.nonEmpty)
     w.zip(c).foreach { case (a, b) => assert(a == b, s"\n$a\n$b") }
     bars.unpersist()
-  }
-
-  test("the hot key's rows spread across all salt partitions") {
-    import spark.implicits._
-    val salts = 8
-    val left = spark.range(0, 20000)
-      .select($"id", when($"id" % 10 === 0, $"id" % 37).otherwise(lit(0L)).as("k"))
-    // same deterministic salt the join applies: hash of the row's columns
-    val saltOf = pmod(hash(left.columns.map(col).toSeq: _*), lit(salts))
-    val spread = left.filter($"k" === 0).select(saltOf.as("salt"))
-      .distinct().count()
-    assert(spread == salts, s"hot key only reached $spread of $salts salts")
   }
 }

@@ -306,7 +306,7 @@ class ZoneMapIntervalSpec extends AnyFunSuite {
     val built = Seq(ZM.zonemapLayout(spark, sf), ZM.zorderLayout(spark, sf),
       ZM.tsLayout(spark, sf))
     built.foreach(l => ZM.layouts.remove(l.path))
-    val jobs = JobRecorder.jobsOf(spark) {
+    val jobs = Telemetry.record(spark) {
       val tsWindow = ZM.eventsTsTable(spark, sf).filter(
         col("ts") >= lit(operators.CciPipeline.ChartFrom).cast("timestamp") &&
           col("ts") < lit(operators.CciPipeline.ChartUntil).cast("timestamp"))
@@ -315,7 +315,7 @@ class ZoneMapIntervalSpec extends AnyFunSuite {
         val (files, total) = listing(q)
         assert(files.nonEmpty && files.length < total, s"listed ${files.length}/$total")
       }
-    }
+    }.jobs
     assert(jobs.isEmpty,
       s"cold zone-map planning ran ${jobs.size} Spark job(s) — " +
         "metadata must come from footers, never a scan or a schema inference")
