@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.CciPipeline
 import graft.operators.CciPipeline.{Budget, BudgetFraction, BuyThresholds, FeeRate, GridConfig, TaxRate}
+import graft.plans.ScaleGate
 import graft.sources.{EventConnector, LocalFileEventConnector, Tables}
 
 /** The daily orchestrated run — the reference's actual *product*
@@ -179,10 +180,6 @@ object Daily {
     * `spark.read.parquet` runs a schema-inference job per read. */
   private def readPartition(spark: SparkSession, dir: String): DataFrame =
     Tables.readParquet(spark, dir)
-
-  private def stateAsOf(spark: SparkSession, ws: Workspace, s: java.sql.Date): DataFrame =
-    latestCommitted(spark, ws.stateDir, s).getOrElse(throw new IllegalArgumentException(
-      s"daily state: no committed state partition before $s — bootstrap first"))
 
   /** Bootstrap the workspace from the connector: one bulk fetch of
     * everything up to and including `cutoff` (the reference's initial
@@ -434,15 +431,18 @@ object Daily {
       withOrders: Boolean = false, withBalance: Boolean = false): DayDigest = {
     require(!withBalance || withOrders, "withBalance requires withOrders")
     // the whole day (delta chain + mode tail) runs under the small-day
-    // gate — see [[withDayAqe]]; bootstrap is the corpus-scale exception
-    withDayAqe(spark, ws, s) {
-      runDayBody(spark, conn, ws, s, cfg, withOrders, withBalance)
+    // gate — see [[withDayAqe]]; bootstrap is the corpus-scale exception.
+    // The prior state partition is read once: it sizes the gate and is
+    // the state the day folds into.
+    val prior = latestCommitted(spark, ws.stateDir, s)
+    withDayAqe(spark, prior) {
+      runDayBody(spark, conn, ws, s, cfg, withOrders, withBalance, prior)
     }
   }
 
   private def runDayBody(spark: SparkSession, conn: EventConnector, ws: Workspace,
       s: java.sql.Date, cfg: GridConfig,
-      withOrders: Boolean, withBalance: Boolean): DayDigest = {
+      withOrders: Boolean, withBalance: Boolean, prior: Option[DataFrame]): DayDigest = {
     import spark.implicits._
 
     // CHAIN RESUME: the day's committed bars/cci/state partitions are
@@ -465,7 +465,8 @@ object Daily {
       } finally deltaBars.unpersist()
     }
 
-    val state = GraftSession.maybeCache(stateAsOf(spark, ws, s))
+    val state = GraftSession.maybeCache(prior.getOrElse(throw new IllegalArgumentException(
+      s"daily state: no committed state partition before $s — bootstrap first")))
     try {
       // r21's watermark arithmetic against the state dimension: saved keys
       // resume after their stored watermark; keys new to the universe
@@ -521,10 +522,12 @@ object Daily {
     * 10-year corpus), so the gate is sized, not hard-off: a day whose
     * latest committed STATE partition (the loop's dimension-scale
     * anchor; the delta is the same order) is under [[DayScaleBytes]]
-    * (256 MB) runs with AQE off; any other day keeps the session's
-    * settings. Bootstrap always keeps the session's AQE — it is the one
-    * corpus-scale pass in the loop. Threshold sizing: SURVEY §5 "Sizing
-    * a real deployment".
+    * (256 MB) by its [[ScaleGate]] plan-stat size runs with AQE off; any
+    * other day keeps the session's settings. Like every scale gate it
+    * obeys [[ScaleGate.ForceConf]]: `arm` keeps the session's settings on
+    * every day, `off` always shrinks. Bootstrap always keeps the
+    * session's AQE — it is the one corpus-scale pass in the loop.
+    * Threshold sizing: SURVEY §5 "Sizing a real deployment".
     *
     * Round-16 (optimization, guide §2.2/§6): turning AQE off at delta
     * scale removed the adaptive-job ceremony but LEFT the session's
@@ -543,17 +546,12 @@ object Daily {
   private val DayScaleBytes = 256L << 20
   private val SmallDayPartitions = 4
 
-  /** Bytes of the latest committed state partition before `s`; none
-    * committed is unknown → keep the session's settings. */
-  private def latestStateBytes(spark: SparkSession, ws: Workspace,
-      s: java.sql.Date): Long =
-    latestCommittedPart(spark, ws.stateDir, s).fold(Long.MaxValue)(c =>
-      c.path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .listStatus(c.path).map(_.getLen).sum)
-
-  private def withDayAqe[T](spark: SparkSession, ws: Workspace,
-      s: java.sql.Date)(body: => T): T =
-    if (latestStateBytes(spark, ws, s) >= DayScaleBytes) body
+  /** Runs `body` under the small-day gate: unless [[ScaleGate]] arms on
+    * `prior`, the latest committed state partition before the day (none
+    * committed keeps the session's settings), AQE is off and shuffle
+    * partitions are [[SmallDayPartitions]]; both are restored after. */
+  private def withDayAqe[T](spark: SparkSession, prior: Option[DataFrame])(body: => T): T =
+    if (prior.forall(ScaleGate.armed(_, DayScaleBytes))) body
     else {
       val overrides = Seq("spark.sql.adaptive.enabled" -> "false",
         "spark.sql.shuffle.partitions" -> SmallDayPartitions.toString)

@@ -5,7 +5,6 @@ import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -184,7 +183,7 @@ object Features {
   private val lrMemo = new graft.SessionMemo[String,
     org.apache.spark.ml.classification.LogisticRegressionModel]
 
-  private def fittedWinModel(spark: SparkSession, dir: String) = {
+  private[graft] def fittedWinModel(spark: SparkSession, dir: String) = {
     val feats = graft.GraftSession.maybeCache(tradeFeatures(spark, dir))
     val model = lrMemo.getOrElseUpdate(spark, dir) {
       loadOrFit(spark, modelPath(spark, dir, Seq("events"), "win_lr"),
@@ -209,15 +208,6 @@ object Features {
     val scored = model.transform(feats)
     scored.select($"user_id", $"buy_date", $"label",
       element_at(vector_to_array($"probability"), 2).as("p_win"))
-  }
-
-  /** AUC of [[trainWinModel]] on its training grid (test hook). */
-  def winModelAuc(spark: SparkSession, dir: String): Double = {
-    val (model, feats) = fittedWinModel(spark, dir)
-    val scored = model.transform(feats)
-    new BinaryClassificationEvaluator()
-      .setLabelCol("label").setRawPredictionCol("rawPrediction")
-      .evaluate(scored)
   }
 
   /** The trained coarse quantizer, memoized per (session, dir, k): ml03 and

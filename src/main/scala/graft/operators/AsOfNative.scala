@@ -31,25 +31,11 @@ object AsOfNative {
     asofNativeFrom(Tables.events(spark, dir))
       .orderBy("user_id", "purchase_id")
 
-  private def purchasesOf(ev: DataFrame): DataFrame = {
+  private[graft] def purchasesOf(ev: DataFrame): DataFrame = {
     import ev.sparkSession.implicits._
     ev.filter($"event_type" === "purchase")
       .select($"user_id", $"event_id".as("purchase_id"), $"ts".as("purchase_ts"),
         $"value".as("purchase_value"))
-  }
-
-  /** Views deduped to one per (user_id, ts) by max event_id — the
-    * COMPOSED formulation needs this pre-aggregation (the window trick
-    * joins back on (user, ts), which must be unique); the native
-    * operator does NOT (the rightTieBreak ordering makes the merge's
-    * keep-last pick the max event_id per instant for free). */
-  private def dedupedViews(ev: DataFrame): DataFrame = {
-    import ev.sparkSession.implicits._
-    ev.filter($"event_type" === "view")
-      .groupBy($"user_id", $"ts")
-      .agg(max(struct($"event_id", $"value")).as("m"))
-      .select($"user_id".as("v_user_id"), $"ts".as("view_ts"),
-        $"m.event_id".as("view_id"), $"m.value".as("view_value"))
   }
 
   /** The native-operator core over any events frame (SQL/spec entry):
@@ -68,36 +54,6 @@ object AsOfNative {
         $"view_id", $"view_ts", $"view_value",
         (unix_micros($"purchase_ts") - unix_micros($"view_ts"))
           .as("view_to_purchase_us"))
-  }
-
-  /** The COMPOSED formulation of the same semantics (the plan the native
-    * operator replaces, q22's trick completed): union both inputs into
-    * one user-keyed stream, running-max window recovers the matched
-    * view ts, then an equi-join back on (user_id, ts) recovers the
-    * payload. Two passes over the combined stream + a second join — kept
-    * for AsOfJoinSpec's independent-equality gate; never a queries row. */
-  private[graft] def asofComposedFrom(ev: DataFrame): DataFrame = {
-    import ev.sparkSession.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val purchases = purchasesOf(ev)
-    val views = dedupedViews(ev)
-    // is_view DESC within equal ts: a view at exactly the purchase ts
-    // falls inside the ROWS frame (the native semantics are inclusive)
-    val w = Window.partitionBy($"user_id").orderBy($"ts", $"is_view".desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    purchases
-      .select($"user_id", $"purchase_id", $"purchase_ts".as("ts"), $"purchase_value")
-      .withColumn("is_view", lit(false))
-      .unionByName(views.select($"v_user_id".as("user_id"),
-        lit(null).cast("long").as("purchase_id"), $"view_ts".as("ts"),
-        lit(null).cast("double").as("purchase_value"))
-        .withColumn("is_view", lit(true)))
-      .withColumn("last_view_ts", max(when($"is_view", $"ts")).over(w))
-      .filter(!$"is_view")
-      .join(views, $"user_id" === $"v_user_id" && $"last_view_ts" === $"view_ts", "left")
-      .select($"user_id", $"purchase_id", $"ts".as("purchase_ts"), $"purchase_value",
-        $"view_id", $"view_ts", $"view_value",
-        (unix_micros($"ts") - unix_micros($"view_ts")).as("view_to_purchase_us"))
   }
 
   val q47Sql: String =

@@ -984,43 +984,6 @@ object TextAnalysis {
       out.toSeq
     }
 
-  /** The in-memory reference BPE (same tie-break), for spec parity. */
-  private[graft] def bpeReference(wordCounts: Map[String, Long],
-      numMerges: Int = BpeNumMerges): Seq[(Int, String, String, Long)] = {
-    var dict: Map[Vector[String], Long] =
-      wordCounts.groupMapReduce { case (w, _) => w.split("").toVector } { _._2 } { _ + _ }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rank = 1
-    var done = false
-    while (rank <= numMerges && !done) {
-      val pairCounts = scala.collection.mutable.Map.empty[(String, String), Long]
-      dict.foreach { case (seq, cnt) =>
-        seq.sliding(2).foreach {
-          case Vector(a, b) => pairCounts((a, b)) = pairCounts.getOrElse((a, b), 0L) + cnt
-          case _ => ()
-        }
-      }
-      val eligible = pairCounts.filter(_._2 >= BpeMinPairCount)
-      if (eligible.isEmpty) done = true
-      else {
-        val ((l, r), n) = eligible.minBy { case ((a, b), c) => (-c, a, b) }
-        out += ((rank, l, r, n))
-        dict = dict.groupMapReduce { case (seq, _) =>
-          val ns = scala.collection.mutable.ArrayBuffer.empty[String]
-          var i = 0
-          while (i < seq.length) {
-            if (i + 1 < seq.length && seq(i) == l && seq(i + 1) == r) {
-              ns += (l + r); i += 2
-            } else { ns += seq(i); i += 1 }
-          }
-          ns.toVector
-        } { _._2 } { _ + _ }
-        rank += 1
-      }
-    }
-    out.toSeq
-  }
-
   /** t14's trained merge table, memoized per (session, dir): t14's gated
     * row and t16's encode share one training run. The collected table is
     * dimension-scale by construction ([[BpeNumMerges]] rows; a production
@@ -1150,25 +1113,6 @@ object TextAnalysis {
       }
     }
   }
-
-  /** In-memory reference encoder (the spec's independent twin of
-    * [[bpeEncodeTokens]]): same tokenization, same rank-order rewrite. */
-  private[graft] def bpeEncodeReference(text: String,
-      merges: Seq[(String, String)]): Seq[String] =
-    text.split(" ").toSeq.filter(_.nonEmpty).flatMap { w =>
-      var seq: Seq[String] = w.split("").toSeq
-      merges.foreach { case (l, r) =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        var i = 0
-        while (i < seq.length) {
-          if (i + 1 < seq.length && seq(i) == l && seq(i + 1) == r) {
-            out += (l + r); i += 2
-          } else { out += seq(i); i += 1 }
-        }
-        seq = out.toSeq
-      }
-      seq
-    }
 
   /** Chunk window / stride in tokens (25% overlap) — the RAG-ingestion
     * convention of overlapping fixed-size windows. */

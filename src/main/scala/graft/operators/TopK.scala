@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.sources.Tables
 import graft.functions.catalyst.GraftColumns
@@ -60,18 +59,4 @@ object TopK {
        |      FROM events)
        |WHERE rn <= $K
        |ORDER BY event_type, rank""".stripMargin
-
-  /** The window formulation of q46 — the plan the aggregate replaces.
-    * Kept for the spec's row-for-row equality gate and the bench
-    * comparison; NOT a queries row (it is the same query). */
-  def windowTwin(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy($"event_type").orderBy($"value".desc, $"event_id"))
-        .cast("int"))
-      .filter($"rank" <= K)
-      .select($"event_type", $"rank", $"event_id", $"value")
-      .orderBy($"event_type", $"rank")
-  }
 }

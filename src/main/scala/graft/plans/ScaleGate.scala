@@ -6,8 +6,9 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The one size signal behind every scale-armed path (as-of time-split,
-  * range hot bins and bin width, ledger whale split, LSH member cap): the
-  * optimizer's plan-stat size of the frame. Each caller passes its own
+  * range hot bins and bin width, ledger whale split, LSH member cap, the
+  * daily loop's small-day gate): the optimizer's plan-stat size of the
+  * frame. Each caller passes its own
   * fixed byte threshold; one conf, [[ForceConf]], overrides them all:
   * `auto` (the default) compares the size with the threshold, `arm` arms
   * every gate and `off` keeps every gated operator on its plain plan.

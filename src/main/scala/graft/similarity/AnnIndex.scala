@@ -1,10 +1,7 @@
 package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.functions.{TextFunctions => F}
 
 /** s06: PERSISTED incremental ANN index — the serving artifact s03/s04/s05
   * only model in-session. A production vector store does not re-derive
@@ -17,13 +14,12 @@ import graft.functions.{TextFunctions => F}
   *   indexDir/vectors/     cell=<c>/...      — (vec_id, codes, v, norm),
   *                                             hash-partitioned BY CELL
   *
-  * Build trains both quantizers on a bounded ordered sample (the same
-  * deterministic seeded Lloyd as s05's codebooks — Similarity.lloyd) and
-  * encodes the corpus map-side. Serving reads `coarse` (tiny), ranks cells
-  * per query, and scans ONLY the probed cells' partitions (partition
-  * pruning on `cell`), ADC-scores the stored codes, then exact-cosine
-  * re-ranks the candidate pool — s01's arithmetic, so reported scores are
-  * exact. Append encodes a delta with the PERSISTED quantizers (no
+  * Build trains both quantizers on s05's bounded ordered sample (the
+  * same deterministic seeded Lloyd and codebook trainer) and encodes the
+  * corpus map-side. Serving reads `coarse` (tiny), ranks cells per query,
+  * and runs s05's ADC scan over ONLY the probed cells' partitions
+  * (partition pruning on `cell`), then the exact re-rank — s01's
+  * arithmetic, so reported scores are exact. Append encodes a delta with the PERSISTED quantizers (no
   * retrain — the d08 shape: work ∝ delta, never corpus) and appends its
   * cells' files; a committed append is indistinguishable from having
   * built with those rows present under the same quantizers, which the
@@ -35,27 +31,18 @@ import graft.functions.{TextFunctions => F}
   * driver (like s04/s05); recall vs s01 and the append/persistence
   * contracts are spec-asserted. */
 object AnnIndex {
-  import Similarity.{IvfCells, IvfProbe, PqSubspaces, PqCentroids, PqRerank,
-    PqTrainMax, PqTrainIters, TopK, lloyd, sqL2}
+  import Similarity.{IvfCells, IvfProbe, PqTrainIters, lloyd, nearest, pqCodes,
+    pqTrain, sqL2, trainSample, withNorm}
 
   /** Train coarse + PQ quantizers on a bounded ordered sample of the
     * frame and persist the full index. Overwrites indexDir. `frame` needs
     * (vec_id, v: array<double>). */
   def buildIndex(spark: SparkSession, frame: DataFrame, indexDir: String): Unit = {
     import spark.implicits._
-    val e = withNorm(frame).filter($"norm" > 0)
-    val sample: Array[Array[Double]] = e
-      .select($"vec_id", transform($"v", x => x / $"norm").as("vn"))
-      .orderBy($"vec_id").limit(PqTrainMax)
-      .select($"vn").as[Seq[Double]].collect().map(_.toArray)
-    require(sample.nonEmpty, "s06 buildIndex: no non-zero vectors to train on")
-    val dim = sample(0).length
-    val sub = dim / PqSubspaces
+    val e = withNorm(frame.select($"vec_id", $"v")).filter($"norm" > 0)
+    val sample = trainSample(e, "s06 buildIndex")
     val coarse = lloyd(sample, IvfCells, PqTrainIters)
-    val books = Array.tabulate(PqSubspaces) { m =>
-      lloyd(sample.map(v => java.util.Arrays.copyOfRange(v, m * sub, (m + 1) * sub)),
-        PqCentroids, PqTrainIters)
-    }
+    val books = pqTrain(sample)
     coarse.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cell", "cv")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/coarse")
@@ -75,7 +62,8 @@ object AnnIndex {
   def appendVectors(spark: SparkSession, delta: DataFrame, indexDir: String): Unit = {
     import spark.implicits._
     val (coarse, books) = loadQuantizers(spark, indexDir)
-    encode(spark, withNorm(delta).filter($"norm" > 0), coarse, books)
+    encode(spark, withNorm(delta.select($"vec_id", $"v")).filter($"norm" > 0),
+      coarse, books)
       .write.mode("append").partitionBy("cell").parquet(s"$indexDir/vectors")
   }
 
@@ -87,87 +75,19 @@ object AnnIndex {
       nProbe: Int = IvfProbe, excludeSelf: Boolean = false): DataFrame = {
     import spark.implicits._
     val (coarse, books) = loadQuantizers(spark, indexDir)
-    val qv = withNorm(queries).filter($"norm" > 0)
-    val queryBatch = Similarity.collectServeBatch(qv
-      .select($"vec_id", transform($"v", x => x / $"norm").as("vn"))
-      .as[(Long, Seq[Double])], "s06 topK")
-    val dim = coarse(0).length
-    queryBatch.find(_._2.length != dim).foreach { case (id, vn) =>
-      throw new IllegalArgumentException(
-        s"s06 topK: query vec_id=$id has dim ${vn.length}, index dim is $dim")
-    }
-    // duplicate ids in an untrusted batch would each probe and score,
-    // then merge under ONE query_id in the final window — a silently
-    // mixed top-k instead of an error (and probed.toMap below would
-    // drop all but one probe set)
-    require(queryBatch.map(_._1).distinct.length == queryBatch.length,
-      "s06 topK: duplicate vec_id in the query batch")
+    val qv = withNorm(queries.select($"vec_id", $"v"))
+    val batch = Similarity.serveBatch(qv, coarse(0).length, "s06 topK")
     // per-query probe set from the tiny centroid table (first-min ties)
-    val probed: Map[Long, Set[Int]] = queryBatch.map { case (id, qn) =>
-      id -> coarse.indices
-        .sortBy(c => (sqL2(qn, 0, coarse(c)), c)).take(nProbe).toSet
-    }.toMap
-    val allCells = probed.values.flatten.toSet.toSeq.sorted
+    val probed = batch.map { case (_, qn) =>
+      coarse.indices.sortBy(c => (sqL2(qn, 0, coarse(c)), c)).take(nProbe).toSet
+    }
     // the pruned scan: only probed cells' partitions are read
     val rows = spark.read.parquet(s"$indexDir/vectors")
-      .filter($"cell".isin(allCells: _*))
-    val bBooks = spark.sparkContext.broadcast(books)
-    val bQ = spark.sparkContext.broadcast(queryBatch)
-    val bProbed = spark.sparkContext.broadcast(probed)
-    // Per-partition BOUNDED top-k during scoring — the same size-
-    // (PqRerank·TopK) max-heap per query as pqTopKWith (Similarity),
-    // which exists precisely to avoid a full per-cell sort per query: a
-    // partition emits ≤ queries × R·K rows into the merge window, not
-    // |probed-cell rows| × queries (at 100 TB a hot probed cell would
-    // otherwise funnel its whole population through the window). The
-    // merged result is identical: each partition's per-query top-R·K is
-    // a superset of its contribution to the global top-R·K.
-    val keep = PqRerank * TopK
-    val scored = rows.select($"vec_id", $"cell", $"codes")
-      .as[(Long, Int, Seq[Int])]
-      .mapPartitions { it =>
-        val c = bBooks.value; val qs = bQ.value; val pr = bProbed.value
-        val luts = qs.map { case (_, q) =>
-          Array.tabulate(PqSubspaces)(m =>
-            Array.tabulate(c(m).length)(k => sqL2(q, m * c(m)(k).length, c(m)(k))))
-        }
-        val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-        val heaps = Array.fill(qs.length)(
-          new scala.collection.mutable.PriorityQueue[(Double, Long)]()(ord))
-        it.foreach { case (vid, cell, codes) =>
-          var qi = 0
-          while (qi < qs.length) {
-            if (pr(qs(qi)._1).contains(cell) &&
-                !(excludeSelf && qs(qi)._1 == vid)) {
-              var d2 = 0.0; var m = 0
-              while (m < PqSubspaces) { d2 += luts(qi)(m)(codes(m)); m += 1 }
-              val h = heaps(qi)
-              if (h.size < keep) h.enqueue((d2, vid))
-              else if (ord.lt((d2, vid), h.head)) { h.dequeue(); h.enqueue((d2, vid)) }
-            }
-            qi += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.iterator.map { case (d2, vid) => (qs(qi)._1, vid, d2) } }
-      }.toDF("query_id", "neighbor_id", "d2")
-    val wC = Window.partitionBy($"query_id").orderBy($"d2".asc, $"neighbor_id")
-    val cands = scored
-      .withColumn("crnk", row_number().over(wC))
-      .filter($"crnk" <= keep)
-      .select($"query_id", $"neighbor_id")
-    val corpus = rows.select($"vec_id".as("neighbor_id"), $"v".as("vn2"), $"norm".as("nn"))
-    val q = qv.select($"vec_id".as("query_id"), $"v".as("vq"), $"norm".as("nq"))
-    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id")
-    cands
-      .join(corpus, Seq("neighbor_id"))
-      .join(broadcast(q), Seq("query_id"))
-      // Similarity.cosine, not an inline copy: the byte-identical
-      // arithmetic is load-bearing for the exact-score parity contract
-      .withColumn("cosine", F.fr(Similarity.cosine($"vq", $"vn2", $"nq", $"nn"), 6))
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= TopK)
-      .select($"query_id", $"rnk", $"neighbor_id", $"cosine")
+      .filter($"cell".isin(probed.flatten.distinct.sorted.toSeq: _*))
+    Similarity.adcTopK(rows.select($"vec_id", $"cell", $"codes").as[(Long, Int, Seq[Int])],
+      rows.select($"vec_id".as("neighbor_id"), $"v".as("vn"), $"norm".as("nn")),
+      qv.select($"vec_id".as("query_id"), $"v".as("vq"), $"norm".as("nq")),
+      batch, spark.sparkContext.broadcast(books), Some(probed), excludeSelf)
       .orderBy($"query_id", $"rnk")
   }
 
@@ -186,12 +106,6 @@ object AnnIndex {
       .select($"vec_id", $"embedding".cast("array<double>").as("v")), indexDir)
     topK(spark, Similarity.pqQueryDefault(spark, dir), indexDir,
       excludeSelf = true)
-  }
-
-  private def withNorm(frame: DataFrame): DataFrame = {
-    import frame.sparkSession.implicits._
-    frame.select($"vec_id", $"v")
-      .withColumn("norm", sqrt(F.foldSum(transform($"v", x => x * x))))
   }
 
   private def loadQuantizers(spark: SparkSession, indexDir: String)
@@ -228,22 +142,7 @@ object AnnIndex {
           // cosines for such rows would be wrong with no error
           require(vn.length == cs(0).length,
             s"s06 encode: vec_id=$id has dim ${vn.length}, index dim is ${cs(0).length}")
-          var cell = 0; var bestD = Double.MaxValue; var c = 0
-          while (c < cs.length) {
-            val d = sqL2(vn, 0, cs(c))
-            if (d < bestD) { bestD = d; cell = c }
-            c += 1
-          }
-          val codes = Array.tabulate(PqSubspaces) { m =>
-            var best = 0; var bd = Double.MaxValue; var k = 0
-            while (k < bk(m).length) {
-              val d = sqL2(vn, m * bk(m)(0).length, bk(m)(k))
-              if (d < bd) { bd = d; best = k }
-              k += 1
-            }
-            best
-          }
-          (id, cell, codes.toSeq, v, norm)
+          (id, nearest(vn, 0, cs), pqCodes(vn, bk), v, norm)
         }
       }.toDF("vec_id", "cell", "codes", "v", "norm")
   }

@@ -1,10 +1,10 @@
 package graft.similarity
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => F, TextSql => S}
+import graft.functions.catalyst.GraftColumns
 import graft.sources.Tables
 
 /** Similarity search over the embedding column (SURVEY.md §2 s-rows).
@@ -47,27 +47,15 @@ object Similarity {
     * (s07 / [[Similarity.knnGraph]]). */
   val MaxServeBatch = 10000
 
-  /** Collect `queries` (vec_id, unit-vector) under the [[MaxServeBatch]]
-    * contract: the limit is pushed into the collect itself, so an
-    * oversized batch costs one extra row, not a driver OOM. */
-  private[similarity] def collectServeBatch(
-      qv: org.apache.spark.sql.Dataset[(Long, Seq[Double])],
-      caller: String): Array[(Long, Array[Double])] = {
-    val batch = qv.limit(MaxServeBatch + 1).collect()
-    require(batch.length <= MaxServeBatch,
-      s"$caller: query batch exceeds MaxServeBatch=$MaxServeBatch — the " +
-        "serving path collects queries to the driver by design; run " +
-        "corpus-scale query sets through the cell-keyed shuffle path " +
-        "(s07 knnGraph) instead")
-    batch.map { case (id, vn) => (id, vn.toArray) }
-  }
-
   private[similarity] def vecs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.embeddings(spark, dir)
-      .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
-      .withColumn("norm", sqrt(F.foldSum(transform($"v", x => x * x))))
+    withNorm(Tables.embeddings(spark, dir)
+      .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v")))
   }
+
+  /** `frame` plus `norm`, the L2 norm of its `v`. */
+  private[similarity] def withNorm(frame: DataFrame): DataFrame =
+    frame.withColumn("norm", sqrt(F.foldSum(transform(col("v"), x => x * x))))
 
   /** Per-pair cosine from the codegen dot product and the vectors'
     * precomputed norms (oracle arithmetic identical: sqrt of the same
@@ -86,29 +74,36 @@ object Similarity {
     val q = e.filter($"vec_id" % QueryStride === 0)
       .select($"vec_id".as("query_id"), $"v".as("vq"), $"norm".as("nq"))
     val c = e.select($"vec_id".as("neighbor_id"), $"v".as("vn"), $"norm".as("nn"))
-    // top-k through the bounded-heap aggregate, not a window: the cross
-    // join emits |queries|×|corpus| scored rows, and the row_number form
-    // shuffled ALL of them on query_id then fully sorted each partition.
-    // graft_topk's partial aggregation cuts each map task's output to ≤k
-    // rows per query BEFORE the exchange — at corpus scale the shuffle
-    // volume drops from |q|×|corpus| to |q|×k×tasks. The heap's
-    // (score DESC, id ASC) order is exactly the window's
-    // (cosine DESC, neighbor_id) total order; cosine is rounded before
-    // ranking so the oracle agrees bit-for-bit.
-    q.crossJoin(c)
-      .filter($"query_id" =!= $"neighbor_id")
+    exactTopK(q.crossJoin(c).filter($"query_id" =!= $"neighbor_id"))
+      .orderBy($"query_id", $"rnk")
+  }
+
+  /** The exact finish every top-k entry ends in (s01, s02, the s03/s07
+    * core, the s04/s07b core and the PQ re-rank): candidate pairs
+    * (query_id, neighbor_id, vq, vn, nq, nn) → (query_id, rnk,
+    * neighbor_id, cosine), the [[TopK]] best per query, unordered.
+    *
+    * Top-k runs through the bounded-heap aggregate, not a rank window:
+    * the window form shuffles every candidate on query_id and fully sorts
+    * each partition, where graft_topk's partial aggregation cuts each map
+    * task's output to ≤k rows per query BEFORE the exchange — at corpus
+    * scale the shuffle volume drops from the candidate count to
+    * |q|×k×tasks. The heap's (score DESC, id ASC) order is exactly the
+    * window's (cosine DESC, neighbor_id) total order; cosine is rounded
+    * before ranking so the DuckDB oracles agree bit-for-bit. Zero-norm
+    * vectors score null; the heap would skip them anyway, but they are
+    * filtered explicitly so heap ≡ window holds even when a query has
+    * fewer than TopK non-null candidates (the oracles filter too). */
+  private[similarity] def exactTopK(pairs: DataFrame): DataFrame = {
+    import pairs.sparkSession.implicits._
+    pairs
       .withColumn("cosine", F.fr(cosine($"vq", $"vn", $"nq", $"nn"), 6))
-      // zero-norm vectors score null; the heap would skip them anyway,
-      // but filter explicitly so agg ≡ window holds even when a query
-      // has fewer than TopK non-null candidates (oracle filters too)
       .filter($"cosine".isNotNull)
       .groupBy($"query_id")
-      .agg(graft.functions.catalyst.GraftColumns
-        .topk_by($"cosine", $"neighbor_id", TopK).as("top"))
+      .agg(GraftColumns.topk_by($"cosine", $"neighbor_id", TopK).as("top"))
       .select($"query_id", posexplode($"top").as(Seq("pos", "t")))
       .select($"query_id", ($"pos" + 1).cast("int").as("rnk"),
         $"t.id".as("neighbor_id"), $"t.score".as("cosine"))
-      .orderBy($"query_id", $"rnk")
   }
 
   val bruteForceTopKSql: String = {
@@ -156,7 +151,7 @@ object Similarity {
     * exact cosine top-k within probed cells. Unordered — callers add
     * their own final sort. s07 runs it with every vector as a query. */
   private def ivfProbedTopK(e: DataFrame,
-      isQuery: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
+      isQuery: Column => Column): DataFrame = {
     import e.sparkSession.implicits._
     val dims = e.select($"vec_id", $"label", posexplode($"v").as(Seq("dim", "dv")))
     val centroids = dims.groupBy($"label", $"dim")
@@ -202,18 +197,10 @@ object Similarity {
     // or |corpus| rows; candidates are born in the label join and
     // pipeline straight into the partial heap aggregate — never
     // materialized, never shuffled.
-    probes
+    exactTopK(probes
       .join(q, Seq("query_id"))
       .join(c, Seq("label"))
-      .filter($"query_id" =!= $"neighbor_id")
-      .withColumn("cosine", F.fr(cosine($"vq", $"vn", $"nq", $"nn"), 6))
-      // explicit, like s01: null (zero-norm) cosines out of BOTH forms
-      .filter($"cosine".isNotNull)
-      .groupBy($"query_id")
-      .agg(tk($"cosine", $"neighbor_id", TopK).as("top"))
-      .select($"query_id", posexplode($"top").as(Seq("pos", "t")))
-      .select($"query_id", ($"pos" + 1).cast("int").as("rnk"),
-        $"t.id".as("neighbor_id"), $"t.score".as("cosine"))
+      .filter($"query_id" =!= $"neighbor_id"))
       .join(e.select($"vec_id".as("neighbor_id"), $"label"), Seq("neighbor_id"))
       .select($"query_id", $"rnk", $"neighbor_id", $"label", $"cosine")
   }
@@ -359,15 +346,6 @@ object Similarity {
       .select($"query_id", $"neighbor_id").distinct()
     val q = e.select($"vec_id".as("query_id"), $"v".as("vq"), $"norm".as("nq"))
     val c = e.select($"vec_id".as("neighbor_id"), $"v".as("vn"), $"norm".as("nn"))
-    // top-k through the bounded-heap aggregate, not a rank window (the
-    // last ANN entry converted — round-11 swept the rest of the family):
-    // the candidate stream is bucket-bounded but still corpus-scale at a
-    // production query fraction, and row_number().over(partitionBy(qid))
-    // shuffles and whole-sorts ALL of it, where graft_topk's partial
-    // aggregation cuts each map task to ≤k rows per query BEFORE the
-    // exchange. Heap order (score DESC, id ASC) = the window's
-    // (cosine DESC, neighbor_id) total order; cosine is rounded before
-    // ranking so the DuckDB oracle agrees bit-for-bit.
     // Attach the CORPUS vectors first (round-15): the c-join is the
     // sort-merge at scale, and attaching q's vectors before it made the
     // sort run over ~1 KB rows (pair + query vector) — measured 6.2 GB
@@ -376,17 +354,9 @@ object Similarity {
     // then attaches on the join OUTPUT — broadcast-hash at any gate SF,
     // and at production query fractions the one unavoidable fat
     // exchange is the LAST, pipelined straight into the heap aggregate.
-    cand
+    exactTopK(cand
       .join(c, Seq("neighbor_id"))
-      .join(q, Seq("query_id"))
-      .withColumn("cosine", F.fr(cosine($"vq", $"vn", $"nq", $"nn"), 6))
-      .filter($"cosine".isNotNull) // zero-norm vectors, as in s01/s03
-      .groupBy($"query_id")
-      .agg(graft.functions.catalyst.GraftColumns
-        .topk_by($"cosine", $"neighbor_id", TopK).as("top"))
-      .select($"query_id", posexplode($"top").as(Seq("pos", "t")))
-      .select($"query_id", ($"pos" + 1).cast("int").as("rnk"),
-        $"t.id".as("neighbor_id"), $"t.score".as("cosine"))
+      .join(q, Seq("query_id")))
       .orderBy($"query_id", $"rnk")
   }
 
@@ -455,6 +425,18 @@ object Similarity {
 
   def ivfTrainedTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    trainedProbedTopK(spark, dir, IvfCells, _ % QueryStride === 0)
+      .orderBy($"query_id", $"rnk")
+  }
+
+  /** The trained-cell core over a query subset (`isQuery` applies to
+    * vec_id), as [[ivfProbedTopK]] is the label-cell one: `cells` KMeans
+    * centroids, each query probes its [[IvfProbe]] nearest by L2, exact
+    * finish within the probed cells. Unordered. s04 runs it on the stride
+    * queries, s07b with every vector as a query. */
+  private[graft] def trainedProbedTopK(spark: SparkSession, dir: String,
+      cells: Int, isQuery: Column => Column): DataFrame = {
+    import spark.implicits._
     import org.apache.spark.ml.functions.array_to_vector
     // cache the SHARED vecs plan (one CacheManager entry with s03/s05/
     // d09 — canonically identical) and add the ml features column OUTSIDE
@@ -464,7 +446,7 @@ object Similarity {
       .withColumn("features", array_to_vector($"v"))
     // One quantizer per (session, dir, k): shared with ml03 and memoized,
     // so a session running both pays a single KMeans fit.
-    val model = graft.ml.Features.fittedKmeans(spark, dir, IvfCells)
+    val model = graft.ml.Features.fittedKmeans(spark, dir, cells)
     val assigned = model.transform(e)
       .select($"vec_id", $"v", $"norm", $"prediction".as("cell"))
     // ||c||² precomputed ONCE per centroid on the driver (k values) —
@@ -475,24 +457,19 @@ object Similarity {
         (i, c.toArray, c.toArray.foldLeft(0.0)((a, x) => a + x * x)) })
       .toDF("cell", "cv", "cnorm2")
     // Both rank stages through the bounded-heap aggregate, not windows
-    // (round 16 — s03's ivfProbedTopK is the model). The old wTop window
-    // shuffled and whole-sorted the |q|·nProbe·N/k candidate stream on
-    // query_id — the operator class whose label-cell twin ENOSPC'd s07 at
-    // sf10 with 78 GB of sort spill. graft_topk's partial aggregation
-    // cuts each map task to ≤k rows per query BEFORE the exchange. The
-    // probe stage's input is broadcast-bounded (|q|·k rows), but it runs
-    // through the same heap for uniformity: heap key −score gives the
-    // window's (score ASC, cell ASC) order exactly — double negation is
-    // exact, and the heap's id-ASC tiebreak is the window's cell ASC.
-    val tk = graft.functions.catalyst.GraftColumns.topk_by _
-    val q = assigned.filter($"vec_id" % QueryStride === 0)
+    // (round 16 — s03's ivfProbedTopK is the model). The probe stage's
+    // input is broadcast-bounded (|q|·k rows), but it runs through the
+    // same heap for uniformity: heap key −score gives the window's
+    // (score ASC, cell ASC) order exactly — double negation is exact, and
+    // the heap's id-ASC tiebreak is the window's cell ASC. Score is L2
+    // (||c||² − 2·q·c; the ||q||² term is constant per query).
+    val q = assigned.filter(isQuery($"vec_id"))
       .select($"vec_id".as("query_id"), $"v".as("vq"), $"norm".as("nq"))
     val probes = q.select($"query_id", $"vq")
       .crossJoin(broadcast(centDf))
-      .withColumn("score", $"cnorm2" -
-        lit(2.0) * graft.functions.catalyst.GraftColumns.dot_f64($"vq", $"cv"))
+      .withColumn("score", $"cnorm2" - lit(2.0) * GraftColumns.dot_f64($"vq", $"cv"))
       .groupBy($"query_id")
-      .agg(tk(-$"score", $"cell".cast("long"), IvfProbe).as("cells"))
+      .agg(GraftColumns.topk_by(-$"score", $"cell".cast("long"), IvfProbe).as("cells"))
       .select($"query_id", explode($"cells.id").as("lbl"))
       .select($"query_id", $"lbl".cast("int").as("cell"))
     val members = assigned
@@ -501,18 +478,10 @@ object Similarity {
     // BEFORE the cell-member fan-out join, so candidates are born
     // adjacent to their partial heap aggregate and the fan-out stream is
     // never shuffled — probes⋈q is |q|·nProbe rows, members is |corpus|.
-    probes
+    exactTopK(probes
       .join(q, Seq("query_id"))
       .join(members, Seq("cell"))
-      .filter($"query_id" =!= $"neighbor_id")
-      .withColumn("cosine", F.fr(cosine($"vq", $"vn", $"nq", $"nn"), 6))
-      .filter($"cosine".isNotNull)
-      .groupBy($"query_id")
-      .agg(tk($"cosine", $"neighbor_id", TopK).as("top"))
-      .select($"query_id", posexplode($"top").as(Seq("pos", "t")))
-      .select($"query_id", ($"pos" + 1).cast("int").as("rnk"),
-        $"t.id".as("neighbor_id"), $"t.score".as("cosine"))
-      .orderBy($"query_id", $"rnk")
+      .filter($"query_id" =!= $"neighbor_id"))
   }
 
   // ---------------------------------------------------------------- d09
@@ -625,6 +594,25 @@ object Similarity {
   // with the session — no pinning; see graft.SessionMemo)
   private val pqCache = new graft.SessionMemo[String, Array[Array[Array[Double]]]]
 
+  /** s05's codebooks for the sf corpus, memoized per (session, dir). */
+  private def pqCodebooks(spark: SparkSession, dir: String)
+      : Array[Array[Array[Double]]] =
+    pqCache.getOrElseUpdate(spark, dir)(
+      pqTrain(trainSample(vecs(spark, dir), "pqCodebooks")))
+
+  /** The ordered training sample both PQ entries train on: the unit
+    * vectors of the first [[PqTrainMax]] non-zero rows by vec_id of a
+    * (vec_id, v, norm) frame. */
+  private[similarity] def trainSample(e: DataFrame,
+      caller: String): Array[Array[Double]] = {
+    import e.sparkSession.implicits._
+    val sample = unitVectors(e).orderBy($"vec_id").limit(PqTrainMax)
+      .select($"vn").as[Seq[Double]].collect().map(_.toArray)
+    require(sample.nonEmpty,
+      s"$caller: no non-zero vectors to train on (empty or all-zero corpus)")
+    sample
+  }
+
   /** Per-subspace codebooks (M × K × D/M doubles — planner-scale state,
     * like an IVF centroid table). PQ codebooks train on a BOUNDED sample
     * regardless of corpus size (the production pattern — the codebook is
@@ -633,21 +621,14 @@ object Similarity {
     * measured 8+ s where this driver-side seeded Lloyd on ≤ [[PqTrainMax]]
     * sampled vectors is sub-millisecond). Deterministic: ordered sample,
     * first-K init, first-min assignment. */
-  private def pqCodebooks(spark: SparkSession, dir: String, sub: Int)
-      : Array[Array[Array[Double]]] =
-    pqCache.getOrElseUpdate(spark, dir) {
-      import spark.implicits._
-      val sample: Array[Array[Double]] = vecs(spark, dir).filter($"norm" > 0)
-        .select($"vec_id", transform($"v", x => x / $"norm").as("vn"))
-        .orderBy($"vec_id").limit(PqTrainMax)
-        .select($"vn").as[Seq[Double]].collect().map(_.toArray)
-      require(sample.nonEmpty,
-        "pqCodebooks: no non-zero vectors to train on (empty or all-zero corpus)")
-      Array.tabulate(PqSubspaces) { m =>
-        val pts = sample.map(v => java.util.Arrays.copyOfRange(v, m * sub, (m + 1) * sub))
-        lloyd(pts, PqCentroids, PqTrainIters)
-      }
+  private[similarity] def pqTrain(sample: Array[Array[Double]])
+      : Array[Array[Array[Double]]] = {
+    val sub = sample(0).length / PqSubspaces
+    Array.tabulate(PqSubspaces) { m =>
+      lloyd(sample.map(v => java.util.Arrays.copyOfRange(v, m * sub, (m + 1) * sub)),
+        PqCentroids, PqTrainIters)
     }
+  }
 
   /** Deterministic seeded Lloyd on a driver-held sample (ordered input,
     * first-K init, first-min assignment, empty cluster keeps its
@@ -662,12 +643,7 @@ object Similarity {
       val sums = Array.fill(k)(new Array[Double](dim))
       val counts = new Array[Int](k)
       pts.foreach { p =>
-        var best = 0; var bestD = Double.MaxValue; var c = 0
-        while (c < k) {
-          val d = sqL2(p, 0, cent(c))
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
+        val best = nearest(p, 0, cent)
         counts(best) += 1
         var i = 0
         while (i < dim) { sums(best)(i) += p(i); i += 1 }
@@ -681,10 +657,128 @@ object Similarity {
     cent
   }
 
+  /** Index of the centroid nearest to `p`'s slice at `off` (first-min
+    * tiebreak) — the one assignment step of Lloyd, PQ encoding and the
+    * s06 coarse cell. */
+  private[similarity] def nearest(p: Array[Double], off: Int,
+      cents: Array[Array[Double]]): Int = {
+    var best = 0; var bestD = Double.MaxValue; var c = 0
+    while (c < cents.length) {
+      val d = sqL2(p, off, cents(c))
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** The PQ code of a unit vector: its nearest centroid per subspace. */
+  private[similarity] def pqCodes(vn: Array[Double],
+      books: Array[Array[Array[Double]]]): Seq[Int] =
+    Array.tabulate(PqSubspaces)(m => nearest(vn, m * books(m)(0).length, books(m))).toSeq
+
   private[similarity] def sqL2(a: Array[Double], off: Int, b: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < b.length) { val d = a(off + i) - b(i); s += d * d; i += 1 }
     s
+  }
+
+  /** (vec_id, vn): the unit vectors of a (vec_id, v, norm) frame's
+    * non-zero rows — what PQ trains on, encodes and scores. */
+  private[similarity] def unitVectors(e: DataFrame): DataFrame = {
+    import e.sparkSession.implicits._
+    e.filter($"norm" > 0).select($"vec_id", transform($"v", x => x / $"norm").as("vn"))
+  }
+
+  /** The serving request batch, collected under the [[MaxServeBatch]]
+    * contract (the limit is pushed into the collect itself, so an
+    * oversized batch costs one extra row, not a driver OOM) and checked:
+    * an external request table is untrusted — a short vector would throw
+    * AIOOBE inside executor tasks building the LUTs, a long one would
+    * silently ignore its tail, and duplicate ids would each build a heap
+    * and then merge under ONE query_id, a silently mixed top-k.
+    * `qv` is (vec_id, v, norm); the batch holds its unit vectors. */
+  private[similarity] def serveBatch(qv: DataFrame, dim: Int,
+      caller: String): Array[(Long, Array[Double])] = {
+    import qv.sparkSession.implicits._
+    val batch = unitVectors(qv).as[(Long, Seq[Double])]
+      .limit(MaxServeBatch + 1).collect()
+      .map { case (id, vn) => (id, vn.toArray) }
+    require(batch.length <= MaxServeBatch,
+      s"$caller: query batch exceeds MaxServeBatch=$MaxServeBatch — the " +
+        "serving path collects queries to the driver by design; run " +
+        "corpus-scale query sets through the cell-keyed shuffle path " +
+        "(s07 knnGraph) instead")
+    batch.find(_._2.length != dim).foreach { case (id, vn) =>
+      throw new IllegalArgumentException(
+        s"$caller: query vec_id=$id has dim ${vn.length}, corpus dim is $dim")
+    }
+    require(batch.map(_._1).distinct.length == batch.length,
+      s"$caller: duplicate vec_id in the query batch")
+    batch
+  }
+
+  /** The PQ serving scan shared by s05 and s06: ADC-score each code row
+    * against one M×K lookup table per query, keep the [[PqRerank]]·TopK
+    * nearest per query, and exact-finish them ([[exactTopK]]) against
+    * `corpus` (neighbor_id, vn, nn) and `queries` (query_id, vq, nq).
+    * `codes` holds (vec_id, cell, codes) rows; with `probed`, query i
+    * scores only the rows of its cells `probed(i)` (s06's pruned read),
+    * without it the cell is ignored. `excludeSelf` drops the pairs whose
+    * ids are equal. Unordered.
+    *
+    * Per-partition BOUNDED top-k during scoring: a size-(PqRerank·TopK)
+    * max-heap per query, so a partition emits ≤ queries × R·K candidate
+    * rows — not queries × partition-rows (at 100 TB a hot probed cell
+    * would otherwise funnel its whole population through the merge).
+    * The merged result is identical to a full sort: each partition's
+    * top-R·K is a superset of its contribution to the global top-R·K. */
+  private[similarity] def adcTopK(codes: Dataset[(Long, Int, Seq[Int])],
+      corpus: DataFrame, queries: DataFrame,
+      batch: Array[(Long, Array[Double])],
+      books: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]],
+      probed: Option[Array[Set[Int]]], excludeSelf: Boolean): DataFrame = {
+    val spark = codes.sparkSession
+    import spark.implicits._
+    val bQ = spark.sparkContext.broadcast(batch)
+    val bProbed = spark.sparkContext.broadcast(probed)
+    val keep = PqRerank * TopK
+    val scored = codes
+      .mapPartitions { it =>
+        val c = books.value; val qs = bQ.value; val pr = bProbed.value
+        // one LUT per query per partition: luts(q)(m)(k) = ||q_sub − cent||²
+        val luts = qs.map { case (_, q) =>
+          Array.tabulate(PqSubspaces)(m =>
+            Array.tabulate(c(m).length)(k => sqL2(q, m * c(m)(k).length, c(m)(k))))
+        }
+        // max-heap on (d2, neighbor_id) — the merge's (d2 asc,
+        // neighbor_id asc) order, so ties break identically
+        val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+        val heaps = Array.fill(qs.length)(
+          new scala.collection.mutable.PriorityQueue[(Double, Long)]()(ord))
+        it.foreach { case (vid, cell, codes) =>
+          var qi = 0
+          while (qi < qs.length) {
+            if (pr.forall(_(qi).contains(cell)) && !(excludeSelf && qs(qi)._1 == vid)) {
+              var d2 = 0.0; var m = 0
+              while (m < PqSubspaces) { d2 += luts(qi)(m)(codes(m)); m += 1 }
+              val h = heaps(qi)
+              if (h.size < keep) h.enqueue((d2, vid))
+              else if (ord.lt((d2, vid), h.head)) { h.dequeue(); h.enqueue((d2, vid)) }
+            }
+            qi += 1
+          }
+        }
+        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
+          h.iterator.map { case (d2, vid) => (qs(qi)._1, vid, d2) } }
+      }.toDF("query_id", "neighbor_id", "d2")
+    // merge the partitions' heaps: heap key −d2 keeps the smallest d2,
+    // id-ASC ties — the per-partition order exactly
+    val cands = scored.groupBy($"query_id")
+      .agg(GraftColumns.topk_by(-$"d2", $"neighbor_id", keep).as("c"))
+      .select($"query_id", explode($"c.id").as("neighbor_id"))
+    exactTopK(cands
+      .join(corpus, Seq("neighbor_id"))
+      .join(broadcast(queries), Seq("query_id")))
   }
 
   /** s05: product-quantization ANN — the compression layer of a production
@@ -758,102 +852,19 @@ object Similarity {
       excludeSelf: Boolean = false): DataFrame = {
     import spark.implicits._
     val e = graft.GraftSession.maybeCache(vecs(spark, dir))
-    val qv = queries
-      .select($"vec_id", $"v")
-      .withColumn("norm", sqrt(F.foldSum(transform($"v", x => x * x))))
     val dimRow = e.select(size($"v")).limit(1).collect()
     require(dimRow.nonEmpty, "pqTopKWith: empty embedding corpus")
-    val dim = dimRow.head.getInt(0)
-    val sub = dim / PqSubspaces
-    val cb = pqCodebooks(spark, dir, sub)
-    val bCb = spark.sparkContext.broadcast(cb)
-    val enc = e.filter($"norm" > 0)
-      .select($"vec_id", transform($"v", x => x / $"norm").as("vn"))
-      .as[(Long, Seq[Double])]
+    val bBooks = spark.sparkContext.broadcast(pqCodebooks(spark, dir))
+    val codes = unitVectors(e).as[(Long, Seq[Double])]
       .mapPartitions { it =>
-        val c = bCb.value
-        it.map { case (id, vnSeq) =>
-          val vn = vnSeq.toArray
-          val codes = Array.tabulate(PqSubspaces) { m =>
-            var best = 0; var bestD = Double.MaxValue; var k = 0
-            while (k < c(m).length) {
-              val d = sqL2(vn, m * c(m)(0).length, c(m)(k))
-              if (d < bestD) { bestD = d; best = k }   // first-min tiebreak
-              k += 1
-            }
-            best
-          }
-          (id, codes.toSeq)
-        }
+        val bk = bBooks.value
+        it.map { case (id, vn) => (id, 0, pqCodes(vn.toArray, bk)) } // one cell, unprobed
       }
-    val queryBatch = collectServeBatch(qv.filter($"norm" > 0)
-      .select($"vec_id", transform($"v", x => x / $"norm").as("vn"))
-      .as[(Long, Seq[Double])], "pqTopKWith")
-    // Dimension guard on the collected batch: an external request table is
-    // untrusted — a short vector would throw AIOOBE inside executor tasks
-    // mid-job building the LUTs, and a long one would silently ignore its
-    // tail and return wrong neighbors.
-    queryBatch.find(_._2.length != dim).foreach { case (id, vn) =>
-      throw new IllegalArgumentException(
-        s"pqTopKWith: query vec_id=$id has dim ${vn.length}, corpus dim is $dim")
-    }
-    // duplicate ids in an untrusted batch would each build a heap, then
-    // merge under ONE query_id in the final window — a silently mixed
-    // top-k instead of an error
-    require(queryBatch.map(_._1).distinct.length == queryBatch.length,
-      "pqTopKWith: duplicate vec_id in the query batch")
-    val bQ = spark.sparkContext.broadcast(queryBatch)
-    // Per-partition BOUNDED top-k during scoring: a size-(PqRerank·TopK)
-    // max-heap per query, so a partition emits ≤ queries × R·K candidate
-    // rows — not queries × partition-rows. The later global window then
-    // sorts ≤ partitions × R·K rows per query instead of the whole corpus
-    // (the round-7 judge's s05 scale flag: a full-corpus sort per query).
-    // The merged result is identical to the full sort: each partition's
-    // top-R·K is a superset of its contribution to the global top-R·K.
-    val keep = PqRerank * TopK
-    val scored = enc.mapPartitions { it =>
-      val c = bCb.value; val qs = bQ.value
-      // one LUT per query per partition: luts(q)(m)(k) = ||q_sub − cent||²
-      val luts = qs.map { case (_, q) =>
-        Array.tabulate(PqSubspaces)(m =>
-          Array.tabulate(c(m).length)(k => sqL2(q, m * c(m)(k).length, c(m)(k))))
-      }
-      // max-heap on (d2, neighbor_id) — same total order as the final
-      // window's (d2 asc, neighbor_id asc), so ties break identically
-      val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-      val heaps = Array.fill(qs.length)(
-        new scala.collection.mutable.PriorityQueue[(Double, Long)]()(ord))
-      it.foreach { case (vid, codes) =>
-        var qi = 0
-        while (qi < qs.length) {
-          if (!(excludeSelf && qs(qi)._1 == vid)) {
-            var d2 = 0.0; var m = 0
-            while (m < PqSubspaces) { d2 += luts(qi)(m)(codes(m)); m += 1 }
-            val h = heaps(qi)
-            if (h.size < keep) h.enqueue((d2, vid))
-            else if (ord.lt((d2, vid), h.head)) { h.dequeue(); h.enqueue((d2, vid)) }
-          }
-          qi += 1
-        }
-      }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.iterator.map { case (d2, vid) => (qs(qi)._1, vid, d2) } }
-    }.toDF("query_id", "neighbor_id", "d2")
-    val wC = Window.partitionBy($"query_id").orderBy($"d2".asc, $"neighbor_id")
-    val cands = scored
-      .withColumn("crnk", row_number().over(wC))
-      .filter($"crnk" <= keep)
-      .select($"query_id", $"neighbor_id")
-    val q = qv.select($"vec_id".as("query_id"), $"v".as("vq"), $"norm".as("nq"))
-    val c2 = e.select($"vec_id".as("neighbor_id"), $"v".as("vn2"), $"norm".as("nn"))
-    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id")
-    cands
-      .join(c2, Seq("neighbor_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("cosine", F.fr(cosine($"vq", $"vn2", $"nq", $"nn"), 6))
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= TopK)
-      .select($"query_id", $"rnk", $"neighbor_id", $"cosine")
+    val qv = withNorm(queries.select($"vec_id", $"v"))
+    val batch = serveBatch(qv, dimRow.head.getInt(0), "pqTopKWith")
+    adcTopK(codes, e.select($"vec_id".as("neighbor_id"), $"v".as("vn"), $"norm".as("nn")),
+      qv.select($"vec_id".as("query_id"), $"v".as("vq"), $"norm".as("nq")),
+      batch, bBooks, None, excludeSelf)
       .orderBy($"query_id", $"rnk")
   }
 
@@ -917,12 +928,17 @@ object Similarity {
     * the cell id plus a self-join of the k·N edge list on (dst, src) —
     * never an all-pairs product. Deterministic (quantized probe ranking,
     * rounded cosine, id tiebreaks) → oracle-checked exactly. */
-  def knnGraph(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val edges = ivfProbedTopK(
-      graft.GraftSession.maybeCache(vecs(spark, dir)), _ => lit(true))
-      .select($"query_id".as("vec_id"), $"rnk", $"neighbor_id", $"cosine")
-    val e = graft.GraftSession.maybeCache(edges)
+  def knnGraph(spark: SparkSession, dir: String): DataFrame =
+    withMutual(ivfProbedTopK(
+      graft.GraftSession.maybeCache(vecs(spark, dir)), _ => lit(true)))
+
+  /** A corpus-wide top-k as a graph: (vec_id, rnk, neighbor_id, cosine)
+    * edges plus `mutual` — edge (a, b) is mutual iff b also ranks a — by
+    * a self-join of the cached k·N edge list on (dst, src). */
+  private def withMutual(topk: DataFrame): DataFrame = {
+    import topk.sparkSession.implicits._
+    val e = graft.GraftSession.maybeCache(topk
+      .select($"query_id".as("vec_id"), $"rnk", $"neighbor_id", $"cosine"))
     val rev = e.select($"vec_id".as("r_dst"), $"neighbor_id".as("r_src"))
     e.join(rev, $"vec_id" === $"r_src" && $"neighbor_id" === $"r_dst", "left")
       .select($"vec_id", $"rnk", $"neighbor_id", $"cosine",
@@ -939,66 +955,17 @@ object Similarity {
     * N/k, candidate volume |q|·probes·N/k ∝ N^1.5 under k ∝ √N, and the
     * partial top-k aggregate's per-task group count (queries probing one
     * cell ≈ |q|·probes/k) stays inside the hash path that s07's fixed label
-    * cells overflow at 100×. Heap-first throughout — the probe ranking
-    * and the final top-k both run the k-bounded aggregate, never a rank
-    * window over a corpus-scale stream — and the query vectors attach
-    * BEFORE the cell-member join (the round-14 order) so candidates are
-    * born next to their partial heap and never materialize. Approximate
+    * cells overflow at 100×. It is s04's [[trainedProbedTopK]] core with
+    * every vector as a query, so it inherits that core's heap-first rank
+    * stages and its query-first join order. Approximate
     * by construction (trained centroids) → rows-only in the driver;
     * recall vs brute force and mutual-flag symmetry are spec-asserted. */
   /** Trained-cell count: size k ∝ √N as the corpus grows — sizing
     * recipe in SURVEY §5 "Sizing a real deployment". */
   val TrainedGraphCells = 16
 
-  def knnGraphTrained(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.ml.functions.array_to_vector
-    val e = graft.GraftSession.maybeCache(vecs(spark, dir))
-      .withColumn("features", array_to_vector($"v"))
-    val model = graft.ml.Features.fittedKmeans(spark, dir, TrainedGraphCells)
-    val assigned = graft.GraftSession.maybeCache(
-      model.transform(e).select($"vec_id", $"v", $"norm", $"prediction".as("cell")))
-    // ||c||² precomputed ONCE per centroid on the driver (k values):
-    // spelling it as a per-row higher-order fold re-ran k·|corpus| array
-    // traversals through the non-codegen ArrayTransform/ArrayAggregate
-    // path — measured as a visible slice of the sf10 probe ranking
-    val centDf = spark.createDataFrame(
-      model.clusterCenters.toSeq.zipWithIndex.map { case (c, i) =>
-        (i, c.toArray, c.toArray.foldLeft(0.0)((a, x) => a + x * x)) })
-      .toDF("ccell", "cv", "cnorm2") // "ccell": `assigned` carries "cell"
-    val tk = graft.functions.catalyst.GraftColumns.topk_by _
-    // probe ranking by L2 (||c||² − 2·q·c; the ||q||² term is constant
-    // per query) through the IvfProbe-bounded heap — negated because the
-    // heap keeps the LARGEST scores and smaller L2 is better
-    val probes = assigned
-      .crossJoin(broadcast(centDf))
-      .withColumn("score", $"cnorm2" -
-        lit(2.0) * graft.functions.catalyst.GraftColumns.dot_f64($"v", $"cv"))
-      .groupBy($"vec_id")
-      .agg(tk(-$"score", $"ccell".cast("long"), IvfProbe).as("cells"))
-      .select($"vec_id".as("query_id"), explode($"cells.id").as("pcell"))
-      .select($"query_id", $"pcell".cast("int").as("cell"))
-    val q = assigned.select($"vec_id".as("query_id"), $"v".as("vq"), $"norm".as("nq"))
-    val members = assigned.select($"cell", $"vec_id".as("neighbor_id"),
-      $"v".as("vn"), $"norm".as("nn"))
-    val edges = probes
-      .join(q, Seq("query_id"))
-      .join(members, Seq("cell"))
-      .filter($"query_id" =!= $"neighbor_id")
-      .withColumn("cosine", F.fr(cosine($"vq", $"vn", $"nq", $"nn"), 6))
-      .filter($"cosine".isNotNull)
-      .groupBy($"query_id")
-      .agg(tk($"cosine", $"neighbor_id", TopK).as("top"))
-      .select($"query_id", posexplode($"top").as(Seq("pos", "t")))
-      .select($"query_id".as("vec_id"), ($"pos" + 1).cast("int").as("rnk"),
-        $"t.id".as("neighbor_id"), $"t.score".as("cosine"))
-    val e2 = graft.GraftSession.maybeCache(edges)
-    val rev = e2.select($"vec_id".as("r_dst"), $"neighbor_id".as("r_src"))
-    e2.join(rev, $"vec_id" === $"r_src" && $"neighbor_id" === $"r_dst", "left")
-      .select($"vec_id", $"rnk", $"neighbor_id", $"cosine",
-        $"r_src".isNotNull.as("mutual"))
-      .orderBy($"vec_id", $"rnk")
-  }
+  def knnGraphTrained(spark: SparkSession, dir: String): DataFrame =
+    withMutual(trainedProbedTopK(spark, dir, TrainedGraphCells, _ => lit(true)))
 
   val knnGraphSql: String = {
     val dot = S.foldSum("list_transform(range(1, len(vq) + 1), i -> vq[i] * vn[i])")

@@ -100,7 +100,7 @@ class AsOfJoinSpec extends AnyFunSuite {
     // on (user_id, ts) recovers the payload — the two-pass plan the native
     // operator replaces.
     val ev = Tables.events(spark, sf)
-    val composed = AsOfNative.asofComposedFrom(ev)
+    val composed = ReferenceTwins.asofComposedFrom(ev)
     val native = AsOfNative.q47AsofNative(spark, sf)
     val cols = native.columns.map(col).toSeq
     assert(native.exceptAll(composed.select(cols: _*)).isEmpty &&

@@ -288,6 +288,17 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(hit.toDouble / total >= 0.8, s"recall ${hit.toDouble / total}")
   }
 
+  test("s04: the trained-cell core with every vector as a query, restricted to the stride queries, reproduces s04 exactly") {
+    // s07b's form of the core (every vector queries) at s04's cell count:
+    // a query's probes and candidates do not depend on the other queries
+    val S = similarity.Similarity
+    val graph = S.trainedProbedTopK(spark, sf, S.IvfCells, _ => lit(true))
+      .filter(col("query_id") % S.QueryStride === 0)
+    val s04 = S.ivfTrainedTopK(spark, sf)
+    assert(s04.count() > 0)
+    assert(graph.exceptAll(s04).count() == 0 && s04.exceptAll(graph).count() == 0)
+  }
+
   test("d07: pointer jumping converges 300-, 1k- and 10k-long chains in logarithmic rounds") {
     import TestSpark.spark.implicits._
     // worst-case shape for plain min-label propagation (needs ~n rounds);
@@ -1102,6 +1113,22 @@ class LlmOpsSpec extends AnyFunSuite {
       "vectors scan must carry a cell partition filter")
   }
 
+  test("s06: an index over the whole corpus probing every cell serves s05's rows exactly") {
+    import TestSpark.spark.implicits._
+    // same ordered training sample → same codebooks and codes; with every
+    // cell probed the pruned scan reads the whole corpus, so s06 is s05's
+    // ADC scan and re-rank over the same codes
+    val indexDir = java.nio.file.Files.createTempDirectory("graft_s06_all").toString
+    similarity.AnnIndex.buildIndex(spark, sources.Tables.embeddings(spark, sf)
+      .select($"vec_id", $"embedding".cast("array<double>").as("v")), indexDir)
+    val served = similarity.AnnIndex.topK(spark,
+      similarity.Similarity.pqQueryDefault(spark, sf), indexDir,
+      nProbe = similarity.Similarity.IvfCells, excludeSelf = true).collect().toSeq
+    val pq = similarity.Similarity.pqTopK(spark, sf).collect().toSeq
+    assert(served.nonEmpty)
+    assert(served == pq)
+  }
+
   test("serving paths refuse a query batch over MaxServeBatch, naming the s07 path") {
     import TestSpark.spark.implicits._
     // a corpus-sized "request" frame: the driver-collect contract must
@@ -1327,7 +1354,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val got = operators.TextAnalysis.bpeTrainFrom(docs)
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(4)))
     val wordCounts = Map("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L)
-    val want = operators.TextAnalysis.bpeReference(wordCounts)
+    val want = ReferenceTwins.bpeReference(wordCounts)
     assert(got.toSeq == want, s"got=${got.toSeq}\nwant=$want")
     // the classic first merge: 'e','s' (9 weighted occurrences)
     assert(got.head == ((1, "e", "s", 9L)))
@@ -1340,7 +1367,7 @@ class LlmOpsSpec extends AnyFunSuite {
       .filter(col("w") =!= "")
       .groupBy("w").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val want = operators.TextAnalysis.bpeReference(wordCounts)
+    val want = ReferenceTwins.bpeReference(wordCounts)
     val got = operators.TextAnalysis.bpeTrain(spark, sf)
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(4)))
     assert(got.toSeq == want)
@@ -1361,7 +1388,7 @@ class LlmOpsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getSeq[String](2)).toMap
     val texts = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     texts.foreach { case (id, text) =>
-      val want = operators.TextAnalysis.bpeEncodeReference(text, merges)
+      val want = ReferenceTwins.bpeEncodeReference(text, merges)
       assert(got(id) == want, s"doc $id: got=${got(id)} want=$want")
     }
     // merged symbols actually appear: the encode is non-vacuous
@@ -1380,7 +1407,7 @@ class LlmOpsSpec extends AnyFunSuite {
       .filter(col("doc_id").isin(sample.keys.toSeq: _*))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](2)).toMap
     sample.foreach { case (id, text) =>
-      assert(got(id) == operators.TextAnalysis.bpeEncodeReference(text, merges),
+      assert(got(id) == ReferenceTwins.bpeEncodeReference(text, merges),
         s"doc $id diverged")
     }
     // gated row: chars conserve (concatenated symbols == word chars),

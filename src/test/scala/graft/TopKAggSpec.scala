@@ -20,7 +20,7 @@ class TopKAggSpec extends AnyFunSuite {
 
   test("q46 equals its window twin row-for-row at sf0.001") {
     val agg = TopK.q46TopkPergroup(spark, sf).collect().toSeq
-    val win = TopK.windowTwin(spark, sf).collect().toSeq
+    val win = ReferenceTwins.topKWindowTwin(spark, sf).collect().toSeq
     assert(agg.nonEmpty)
     assert(agg == win)
   }
@@ -107,7 +107,7 @@ class TopKAggSpec extends AnyFunSuite {
     assert(plan.contains("ObjectHashAggregate"), plan.take(2000))
     assert(!plan.contains("Window"), plan.take(2000))
     // the twin really is the plan being replaced
-    val twin = TopK.windowTwin(spark, sf).queryExecution.executedPlan.toString
+    val twin = ReferenceTwins.topKWindowTwin(spark, sf).queryExecution.executedPlan.toString
     assert(twin.contains("Window"))
   }
 
